@@ -71,10 +71,7 @@ REPO = Path(__file__).resolve().parent
 if str(REPO) not in sys.path:
     sys.path.insert(0, str(REPO))
 
-from dieter___etl___monarchmoney_spark import registry  # noqa: E402
-from dieter___etl___monarchmoney_spark.operators.rank import (  # noqa: E402
-    release_pins as _release_rank_pins,
-)
+from dieter___etl___monarchmoney_spark import pins, registry  # noqa: E402
 from dieter___etl___monarchmoney_spark.session import get_spark  # noqa: E402
 
 
@@ -198,23 +195,8 @@ def main() -> None:
             t0 = time.perf_counter()
             queries[name](spark, sf_dir).count()
             tiebreak[name] = round(time.perf_counter() - t0, 4)
-        # drop this query's DataFrame/localCheckpoint refs so the
-        # ContextCleaner unpersists their blocks before the next query
-        # is timed — 272 queries in one JVM otherwise accumulate enough
-        # storage pressure to systematically slow the late-alphabet
-        # tail (same contamination class scale_check.py fixed; a run
-        # without this measured paged_source_roundtrip at 12.9 s on
-        # BOTH passes where a clean session reproduces ~2 s). Explicit
-        # persist() pins are NOT ContextCleaner-collectable (the
-        # CacheManager holds them by logical plan); the registry's
-        # @query wrapper clears the CacheManager at the ENTRY of every
-        # registered callable (registry.py), so query-internal pins
-        # never outlive the next registry call — each timed pass
-        # therefore starts cache-clean and rebuilds its own pins. The
-        # grouped-rank release hook (ADVICE r11 #2) covers the one gap
-        # the entry-clear can't: the LAST query's pins, which would
-        # otherwise still be resident while anchor_last is timed.
-        _release_rank_pins()
+        # free this query's pins now: the next registry call would, but anchor_last is not one
+        pins.release()
         gc.collect()
 
     anchor_last = _anchor_time(spark, sf_dir)

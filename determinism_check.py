@@ -62,10 +62,7 @@ from oracle_utils import normalize  # noqa: E402  (tests/oracle_utils.py)
 
 from bench import _round_number  # noqa: E402  — shared round inference
 
-from dieter___etl___monarchmoney_spark import registry  # noqa: E402
-from dieter___etl___monarchmoney_spark.operators.rank import (  # noqa: E402
-    release_pins as _release_rank_pins,
-)
+from dieter___etl___monarchmoney_spark import pins, registry  # noqa: E402
 from dieter___etl___monarchmoney_spark.session import get_spark  # noqa: E402
 
 #: every key is runtime-settable; values checked against a live session
@@ -113,7 +110,7 @@ def _run_pass(spark, queries, sf_dir: str, label: str) -> dict[str, tuple]:
             file=sys.stderr,
             flush=True,
         )
-        _release_rank_pins()
+        pins.release()
         gc.collect()
     return out
 

@@ -24,6 +24,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from dieter___etl___monarchmoney_spark.operators.budgets import budget_pipeline
+from dieter___etl___monarchmoney_spark.pins import scope
 from dieter___etl___monarchmoney_spark.sources.parquet import load_table
 from dieter___etl___monarchmoney_spark.sources.sinks import (
     read_sink,
@@ -65,9 +66,10 @@ def budgets_stage(spark: SparkSession, sf_dir: str, out_dir: str) -> int:
     and overwrite the budgets sink."""
     from dieter___etl___monarchmoney_spark.queries.budget import q_budget_pipeline_full
 
-    budgets = q_budget_pipeline_full(spark, sf_dir)
-    write_table(budgets, os.path.join(out_dir, "budgets"))
-    return budgets.count()
+    with scope():
+        budgets = q_budget_pipeline_full(spark, sf_dir)
+        write_table(budgets, os.path.join(out_dir, "budgets"))
+        return budgets.count()
 
 
 def transactions_stage(

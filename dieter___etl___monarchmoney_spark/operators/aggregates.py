@@ -19,6 +19,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from dieter___etl___monarchmoney_spark.functions.money import money_avg, money_sum
+from dieter___etl___monarchmoney_spark.pins import pin
 
 
 def _income(amount: Column) -> Column:
@@ -98,12 +99,9 @@ def cashflow_report(
     scan instead of four (the reference gets this for free because the
     remote server answers all four blocks from one request).
 
-    The pin is deliberately NOT released here — the returned frames
-    still read it, and Spark evicts LRU cache blocks under memory
-    pressure. Long-lived sessions issuing many reports can
-    ``spark.catalog.clearCache()`` between calls (same contract as
-    operators/prefix.py)."""
-    base = txns.persist()
+    The pin is NOT released here — the returned frames still read it;
+    ``pins.release()`` frees it once they have been consumed."""
+    base = pin(txns)
     base.count()
     report = {
         "byCategory": cashflow_by_key(base, category_col),

@@ -30,6 +30,7 @@ from dieter___etl___monarchmoney_spark.operators.windows import (
     remaining_amount,
     running_total,
 )
+from dieter___etl___monarchmoney_spark.pins import pin
 from dieter___etl___monarchmoney_spark.plans.contract import apply_column_contract
 
 #: budget sheet contract (_budget_headers_rows MonarchMoneyMain-v3.py:878-914)
@@ -138,7 +139,7 @@ def budget_pipeline(per_category_month: DataFrame) -> DataFrame:
     # cat feeds three output branches; persist AND materialize eagerly —
     # a lazy persist lets all three branches race an unpopulated cache
     # within the single output action and re-run the window pipeline
-    cat = budget_rows(per_category_month).persist()
+    cat = pin(budget_rows(per_category_month))
     cat.count()
     grp = _rollup_rows(cat, F.lit(""), GROUP_ORDER_GROUP, None)
     tot = _rollup_rows(cat, F.lit(""), GROUP_ORDER_TOTAL, "Totals")

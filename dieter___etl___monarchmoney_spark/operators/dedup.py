@@ -21,6 +21,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from dieter___etl___monarchmoney_spark.functions.text import fingerprint_md5, tokens
+from dieter___etl___monarchmoney_spark.pins import pin, scope
 
 #: MinHash parameters — k signatures in b bands of r rows (k = b·r).
 #: b=4, r=2: catches Jaccard ≳ 0.6 with good probability at tiny k —
@@ -307,9 +308,12 @@ def prefix_filter_jaccard_pairs(
     # into a scan-level Filter — measured ~5x the query at sf0.1 (same
     # trap ngram_jaccard_pairs documents). Empty-shingle docs simply
     # produce no rows downstream.
-    doc_sh = toks.select(
-        "doc_id", F.array_distinct(shingles_of(F.col("toks"), n)).alias("sh_arr")
-    ).persist()  # feeds frequency build, prefix build, and both verify sides
+    # pinned: feeds frequency build, prefix build, and both verify sides
+    doc_sh = pin(
+        toks.select(
+            "doc_id", F.array_distinct(shingles_of(F.col("toks"), n)).alias("sh_arr")
+        )
+    )
     exploded = doc_sh.select(
         "doc_id",
         F.size("sh_arr").alias("n_sh"),
@@ -437,55 +441,67 @@ def neardup_clusters(
     stays as the fallback for when it doesn't. Both paths compute the
     identical min-label fixpoint.
     """
-    edges = (
-        pairs.select(F.col("doc_a").alias("v"), F.col("doc_b").alias("u"))
-        .unionByName(pairs.select(F.col("doc_b").alias("v"), F.col("doc_a").alias("u")))
-        .persist()
-    )
     all_verts = vertices.select(F.col(id_col).alias("v"))
+    # the edge frame (and the distributed path's vertex seed) are read
+    # by every round and released on return: the labels the result
+    # reads are driver literals or a localCheckpoint
+    with scope():
+        edges = pin(
+            pairs.select(F.col("doc_a").alias("v"), F.col("doc_b").alias("u")).unionByName(
+                pairs.select(F.col("doc_b").alias("v"), F.col("doc_a").alias("u"))
+            )
+        )
+        if edges.count() <= 2 * driver_threshold:  # edges frame holds both directions
+            return _union_find_clusters(edges.collect(), all_verts, id_col)
+        labels = _propagate_min_labels(edges, max_iter)
+    # labels holds exactly the edge-touched vertices
+    singletons = all_verts.join(labels.select("v"), "v", "left_anti").select(
+        "v", F.col("v").alias("cluster_id")
+    )
+    return labels.unionByName(singletons).select(F.col("v").alias(id_col), "cluster_id")
 
-    if edges.count() <= 2 * driver_threshold:  # edges frame holds both directions
-        spark = vertices.sparkSession
-        parent: dict = {}
 
-        def find(x):
-            root = x
-            while parent.get(root, root) != root:
-                root = parent[root]
-            while parent.get(x, x) != x:  # path compression
-                parent[x], x = root, parent[x]
-            return root
+def _union_find_clusters(edge_rows: list, all_verts: DataFrame, id_col: str) -> DataFrame:
+    """The driver-sized path of :func:`neardup_clusters`: union-find over
+    the collected doubled edge list, whose ``v`` column covers every
+    endpoint, so one collect serves both the unions and the member set."""
+    spark = all_verts.sparkSession
+    parent: dict = {}
 
-        # ONE collect serves both the unions and the member set (the
-        # doubled edge list's `v` column covers every endpoint) — no
-        # distributed distinct, no second collect on the path chosen
-        # precisely because the data is driver-sized
-        edge_rows = edges.collect()
-        for r in edge_rows:
-            ra, rb = find(r["v"]), find(r["u"])
-            if ra != rb:
-                # union by MIN root so the representative IS the min label
-                if rb < ra:
-                    ra, rb = rb, ra
-                parent[rb] = ra
-        members = sorted({r["v"] for r in edge_rows})
-        rows = [(v, find(v)) for v in members]
-        edges.unpersist()
-        lbl = spark.createDataFrame(rows, ["v", "cluster_id"]) if rows else None
-        singletons = all_verts.join(
-            spark.createDataFrame([(v,) for v, _ in rows], ["v"])
-            if rows
-            else all_verts.limit(0),
-            "v",
-            "left_anti",
-        ).select("v", F.col("v").alias("cluster_id"))
-        out = singletons if lbl is None else lbl.unionByName(singletons)
-        return out.select(F.col("v").alias(id_col), "cluster_id")
+    def find(x):
+        root = x
+        while parent.get(root, root) != root:
+            root = parent[root]
+        while parent.get(x, x) != x:  # path compression
+            parent[x], x = root, parent[x]
+        return root
 
-    # distributed path only: the edge-touched vertex set seeds the loop
-    # and drives the singleton anti-join
-    edge_verts = edges.select("v").distinct().persist()
-    labels = edge_verts.select("v", F.col("v").alias("cluster_id"))
+    for r in edge_rows:
+        ra, rb = find(r["v"]), find(r["u"])
+        if ra != rb:
+            # union by MIN root so the representative IS the min label
+            if rb < ra:
+                ra, rb = rb, ra
+            parent[rb] = ra
+    members = sorted({r["v"] for r in edge_rows})
+    rows = [(v, find(v)) for v in members]
+    lbl = spark.createDataFrame(rows, ["v", "cluster_id"]) if rows else None
+    singletons = all_verts.join(
+        spark.createDataFrame([(v,) for v, _ in rows], ["v"])
+        if rows
+        else all_verts.limit(0),
+        "v",
+        "left_anti",
+    ).select("v", F.col("v").alias("cluster_id"))
+    out = singletons if lbl is None else lbl.unionByName(singletons)
+    return out.select(F.col("v").alias(id_col), "cluster_id")
+
+
+def _propagate_min_labels(edges: DataFrame, max_iter: int) -> DataFrame:
+    """The distributed path of :func:`neardup_clusters`: min-label
+    propagation over the edge-touched vertices, returned as a
+    localCheckpoint that no longer reads ``edges``."""
+    labels = pin(edges.select("v").distinct()).select("v", F.col("v").alias("cluster_id"))
 
     def _hop(lbl: DataFrame, with_flag: bool) -> DataFrame:
         nbr = edges.join(
@@ -521,14 +537,7 @@ def neardup_clusters(
         labels = new_labels.drop("chg")
         if not changed:
             break
-    # labels is localCheckpointed, so the cached edge frame is no longer
-    # reachable from the result — release it (edge_verts stays cached for
-    # the singleton anti-join below and is cheap to rebuild if evicted)
-    edges.unpersist()
-    singletons = all_verts.join(edge_verts, "v", "left_anti").select(
-        "v", F.col("v").alias("cluster_id")
-    )
-    return labels.unionByName(singletons).select(F.col("v").alias(id_col), "cluster_id")
+    return labels
 
 
 def simhash32(col: Column | str) -> Column:

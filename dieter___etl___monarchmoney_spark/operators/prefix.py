@@ -45,6 +45,8 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
+from dieter___etl___monarchmoney_spark.pins import pin
+
 _PID = "__prefix_pid"
 _LOCAL = "__prefix_local"
 
@@ -128,16 +130,10 @@ def distributed_prefix_sum(
         .orderBy(*keys)
         .rowsBetween(Window.unboundedPreceding, 0)
     )
-    local = (
-        ranged.withColumn(_LOCAL, F.sum(value).over(local_w))
-        # Pinned so the bucket totals the driver reads and the rows the
-        # offsets are joined back to come from the SAME evaluation. The
-        # pin is deliberately NOT released here: the returned DataFrame
-        # still reads from it, and Spark evicts LRU cache blocks under
-        # memory pressure anyway. Callers that loop over many prefix
-        # sums can spark.catalog.clearCache() between iterations.
-        .persist()
-    )
+    # Pinned so the bucket totals and the rows the offsets are joined
+    # back to come from the SAME evaluation. The returned DataFrame
+    # still reads the pin, so pins.release() frees it, not this call.
+    local = pin(ranged.withColumn(_LOCAL, F.sum(value).over(local_w)))
     # Bucket total = SUM(value), NOT max of the running prefix — with
     # negative values (running balances, deltas) the local prefix is
     # non-monotone and its max overstates the bucket total.
@@ -164,10 +160,9 @@ def distributed_prefix_sum(
         F.col(_PID),
         # the offset carries the aggregate's own type (bigint for
         # integral inputs, double/decimal otherwise) so the map-side
-        # add below neither truncates nor raises
-        F.coalesce(F.sum("t").over(w_off), F.lit(0).cast(t_type)).alias(
-            "__prefix_off"
-        ),
+        # add below neither truncates nor raises — cast back, because
+        # a SUM over the decimal totals widens the precision to 38
+        F.coalesce(F.sum("t").over(w_off), F.lit(0)).cast(t_type).alias("__prefix_off"),
     )
     return (
         local.join(F.broadcast(off_df), _PID)

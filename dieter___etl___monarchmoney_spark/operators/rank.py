@@ -64,79 +64,13 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import DoubleType, FloatType
 
+from dieter___etl___monarchmoney_spark.pins import checkpoint, pin
+
 _BKT = "__egr_bkt"
 _EDGES = "__egr_edges"
 _OFF = "__egr_off"
 _RNK = "__egr_rnk"
 _N = "__egr_n"
-
-#: inputs pinned by ``persist_input=True``, in pin order. The returned
-#: DataFrame lazily reads the pin, so the operator itself can never
-#: release it — but a harness that times many queries in one session
-#: (bench.py, scale_check.py) must, or the MEMORY_AND_DISK blocks
-#: accumulate across hundreds of queries (memory LRU-evicts; DISK
-#: blocks live until session end) and the leftover cache pressure
-#: skews later queries' timings. Call :func:`release_pins` after the
-#: consuming action completes. The refs are deliberately STRONG: a
-#: Spark SQL ``persist()`` registers the plan in the JVM CacheManager,
-#: which holds it until an explicit ``unpersist()`` / ``clearCache()``
-#: — dropping the Python wrapper never frees the blocks (ContextCleaner
-#: only reclaims raw RDDs/broadcasts whose JVM refs die, not
-#: CacheManager entries), so a weak registry's entries would die with
-#: the operator's local variable and make the hook a silent no-op.
-_PINS: list[DataFrame] = []
-
-
-def release_pins() -> int:
-    """Unpersist every pin registered since the last call — the
-    ``persist_input=True`` input pins AND the checkpointed edge pins —
-    returning how many were released. Call it AFTER the actions
-    consuming the returned DataFrames have run: releasing an INPUT pin
-    early is still correct (Spark recomputes, forfeiting the read-once
-    economy), but releasing an EDGE pin early drops checkpointed
-    blocks whose lineage is truncated, so a later action on the same
-    returned frame fails LOUDLY ("checkpoint block not found") — never
-    silently wrong; rebuild the frame instead. Safe across session
-    restarts: a pin left over from a stopped SparkSession is discarded,
-    never raised — a cleanup hook must not kill the sweep loop that
-    calls it between fresh-session scales."""
-    n = 0
-    while _PINS:
-        try:
-            _PINS.pop().unpersist()
-            n += 1
-        except Exception:
-            # stopped session / dead JVM handle — the blocks are gone
-            # with the session; nothing to release
-            continue
-    return n
-
-
-def _pin(df: DataFrame) -> DataFrame:
-    df = df.persist()
-    _PINS.append(df)
-    return df
-
-
-class _EdgePin:
-    """Deterministic releaser for a localCheckpointed edge frame. The
-    checkpoint's blocks are NOT CacheManager entries —
-    ``DataFrame.unpersist()`` is a silent no-op on them — and the
-    ContextCleaner only reclaims them after both the Python wrapper and
-    the JVM Dataset have been garbage collected, which is asynchronous.
-    A harness timing hundreds of queries in one JVM needs deterministic
-    release, so this unpersists the checkpointed RDD itself (the
-    ``LogicalRDD`` the eager localCheckpoint leaves as the frame's
-    entire plan)."""
-
-    __slots__ = ("_df",)
-
-    def __init__(self, df: DataFrame) -> None:
-        self._df = df
-
-    def unpersist(self) -> None:
-        self._df._jdf.queryExecution().analyzed().rdd().unpersist(False)
-
 
 def _key_col(key_col: str | Column) -> Column:
     return F.col(key_col) if isinstance(key_col, str) else key_col
@@ -160,30 +94,13 @@ def _nullsafe_broadcast_join(
     return d.join(F.broadcast(s), cond).select("__egr_l.*", *extra)
 
 
-def _pin_edges(edges: DataFrame) -> DataFrame:
-    """The correctness pin (module docstring): materialize the
-    K-bounded edge table ONCE, eagerly, with its lineage truncated —
-    every consumer reads the same checkpointed blocks and a
-    re-evaluation of the ``percentile_approx`` aggregate is impossible
-    by construction (block loss fails loudly, it never silently
-    recomputes). Chosen over the two alternatives by a round-13
-    interleaved A/B across the five rank-family queries (min-of-4,
-    one warm JVM, results proven identical): collect+createDataFrame
-    re-emit 5.25 s, persist()+count() 4.55 s (and its cache miss would
-    silently recompute — the exact hazard the pin exists to close),
-    localCheckpoint 4.00 s."""
-    pinned = edges.localCheckpoint(eager=True)
-    _PINS.append(_EdgePin(pinned))
-    return pinned
-
-
 def _bucketize(
     df: DataFrame, group_cols: list[str], key: Column, num_buckets: int
 ) -> DataFrame:
     """Append the explicit ``_BKT`` bucket-id column: K-bounded
     per-group ``percentile_approx`` edges of the numeric key (one
     map-side-combined aggregate, |groups| rows), PINNED by an eager
-    lineage-truncating ``localCheckpoint`` (:func:`_pin_edges`), then
+    lineage-truncating ``localCheckpoint`` (``pins.checkpoint``), then
     broadcast back (null-safely — NULL group keys rank as their own
     group, matching the window form), bucket = #edges strictly below
     the key. Equal keys always share a bucket; NULL keys land in
@@ -199,14 +116,20 @@ def _bucketize(
     sketch's compression threshold the two evaluations could cut
     different edges and desynchronize bucket ids between the passes.
     It is K-bounded by the module's low-cardinality-groups contract:
-    |groups| rows x ≤(num_buckets-1) key values."""
+    |groups| rows x ≤(num_buckets-1) key values. The checkpoint was
+    chosen over the two alternatives by a round-13 interleaved A/B
+    across the five rank-family queries (min-of-4, one warm JVM,
+    results proven identical): collect+createDataFrame re-emit 5.25 s,
+    persist()+count() 4.55 s (and its cache miss would silently
+    recompute — the exact hazard the pin exists to close),
+    localCheckpoint 4.00 s."""
     cuts = [i / num_buckets for i in range(1, num_buckets)]
     edges = df.groupBy(*group_cols).agg(
         F.percentile_approx(
             key, F.array(*[F.lit(c) for c in cuts]), F.lit(10_000)
         ).alias(_EDGES)
     )
-    pinned = _pin_edges(edges)
+    pinned = checkpoint(edges)
     return _nullsafe_broadcast_join(df, pinned, group_cols).withColumn(
         _BKT,
         F.coalesce(
@@ -225,7 +148,6 @@ def exact_group_rank(
     num_buckets: int = 32,
     rank_col: str = _RNK,
     n_col: str | None = None,
-    persist_input: bool = True,
 ) -> DataFrame:
     """Append ``rank_col`` = the exact 1-based ``ROW_NUMBER() OVER
     (PARTITION BY group_cols ORDER BY key_col [DESC], tie_cols)`` —
@@ -248,19 +170,14 @@ def exact_group_rank(
     bucket — the same behavior as the plain window, never worse.
 
     The plan reads the input three times (edge probe, cell counts,
-    ranking), so by default the input is pinned with ``persist()`` —
-    callers pass narrow (group, key, ties) projections, and the pin
-    keeps an expensive upstream (a scoring expression, a join) from
-    being recomputed per pass. The returned DataFrame still reads the
-    pin, so it is NOT released here; harnesses that run many queries
-    in one session call :func:`release_pins` after each consuming
-    action (bench.py does) so DISK-tier blocks never accumulate. Pass
-    ``persist_input=False`` when the input is already cached or when
-    re-scanning pushed-down parquet beats caching at the deployment's
-    scale.
+    ranking), so the input is pinned (``pins.pin``) — callers pass
+    narrow (group, key, ties) projections, and the pin keeps an
+    expensive upstream (a scoring expression, a join) from being
+    recomputed per pass. The returned DataFrame still reads the input
+    and edge pins, so they are released by ``pins.release()`` after
+    the consuming action, not here.
     """
-    if persist_input:
-        df = _pin(df)
+    df = pin(df)
     key = _key_col(key_col)
     order_key = key.asc() if ascending else key.desc()
     ties = [F.col(c) for c in tie_cols]
@@ -314,7 +231,6 @@ def exact_group_ntile(
     ascending: bool = True,
     num_buckets: int = 32,
     out_col: str = "ntile",
-    persist_input: bool = True,
 ) -> DataFrame:
     """Append ``out_col`` = ``NTILE(k) OVER (PARTITION BY group_cols
     ORDER BY key_col [DESC], tie_cols)`` as an INT, via
@@ -340,7 +256,6 @@ def exact_group_ntile(
         num_buckets=num_buckets,
         rank_col=_RNK,
         n_col=_N,
-        persist_input=persist_input,
     )
     # Integer-exact tile arithmetic (bigint `div`, no float division).
     # The ELSE branch's divisor (n div k) is zero only when n < k, in
@@ -366,7 +281,6 @@ def exact_group_prefix_sum(
     *,
     inclusive: bool = True,
     num_buckets: int = 32,
-    persist_input: bool = True,
 ) -> DataFrame:
     """Append ``out_col`` = the exact per-group running sum of
     ``value_col`` over the ascending (key_col, *tie_cols) order —
@@ -378,7 +292,7 @@ def exact_group_prefix_sum(
     the offsets kept distributed (a K-bounded broadcast table) rather
     than driver-materialized. ``(key_col, *tie_cols)`` must be a unique
     total order within each group; ``key_col`` must be numeric (it cuts
-    the buckets). Same pinned-edges determinism and persist contract
+    the buckets). Same pinned-edges determinism and input pin
     as :func:`exact_group_rank`.
 
     ``value_col`` must be an EXACT type (integral or decimal): the
@@ -400,8 +314,7 @@ def exact_group_prefix_sum(
             f"diverge in the last ulps. Quantize to decimal first "
             f"(see functions/money.py) or use an integral column."
         )
-    if persist_input:
-        df = _pin(df)
+    df = pin(df)
     key = _key_col(key_col)
     ties = [F.col(c) for c in tie_cols]
     value = F.col(value_col)

@@ -24,6 +24,8 @@ import numpy as np
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from dieter___etl___monarchmoney_spark.pins import pin
+
 
 def dot(a: Column, b: Column) -> Column:
     """Sequential-fold dot product (deterministic order)."""
@@ -344,11 +346,13 @@ def embedding_neardup_pairs(
     with_norm = vectors.select(
         F.col(id_col), F.col(vec_col), l2_norm(F.col(vec_col)).alias("_n")
     )
-    sig = with_norm.select(
-        F.col(id_col),
-        F.transform(F.col(vec_col), lambda x: x.cast("double") / F.col("_n")).alias("unit"),
-        lsh_signature(F.col(vec_col), planes).alias("bucket"),
-    ).persist()
+    sig = pin(
+        with_norm.select(
+            F.col(id_col),
+            F.transform(F.col(vec_col), lambda x: x.cast("double") / F.col("_n")).alias("unit"),
+            lsh_signature(F.col(vec_col), planes).alias("bucket"),
+        )
+    )
     sig.count()
     a = sig.select(F.col(id_col).alias("id_a"), F.col("unit").alias("unit_a"), "bucket")
     b = sig.select(F.col(id_col).alias("id_b"), F.col("unit").alias("unit_b"), "bucket")

@@ -87,9 +87,6 @@ from dieter___etl___monarchmoney_spark.queries import (  # noqa: F401
 #: (approx_distinct_validation, approx_vocab_sketch,
 #: percentile_sketch_validation) have no oracle row to refresh and
 #: stay out, as in every prior window.
-#: sessionize_tws_stream is NOT listed: google.protobuf is absent in
-#: this environment (no network, installs forbidden; re-checked at
-#: round-13 start), so it never registers — gate documented in README.
 _PRIORITY = (
     # (a) round-13 edits — values re-proven oracle-exact locally
     # (hash-exact at sf0.01 after each change), re-proven on the

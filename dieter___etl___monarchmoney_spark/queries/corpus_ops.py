@@ -24,6 +24,7 @@ from dieter___etl___monarchmoney_spark.operators.similarity import (
     embedding_neardup_pairs,
 )
 from dieter___etl___monarchmoney_spark.functions.text import tokens
+from dieter___etl___monarchmoney_spark.pins import pin, scope
 from dieter___etl___monarchmoney_spark.queries.llm_pipeline import (
     _bucket_sql,
     _dot_sql,
@@ -1184,14 +1185,16 @@ def oriented_triangle_counts(edges: DataFrame) -> DataFrame:
     rank_a = F.struct(F.col("deg_a").alias("d"), F.col("doc_a").alias("i"))
     rank_b = F.struct(F.col("deg_b").alias("d"), F.col("doc_b").alias("i"))
     a_first = rank_a < rank_b  # struct comparison = lexicographic (deg, id)
-    oriented = e.select(
-        F.when(a_first, F.col("doc_a")).otherwise(F.col("doc_b")).alias("src"),
-        F.when(a_first, F.col("doc_b")).otherwise(F.col("doc_a")).alias("dst"),
-        F.when(a_first, rank_b).otherwise(rank_a).alias("dst_rank"),
-        # the wedge+closure joins scan the oriented set three times;
-        # persist so the degree join doesn't re-run per alias (the
-        # edge SOURCE is already a cheap parquet scan)
-    ).persist()
+    # the wedge+closure joins scan the oriented set three times; pin it
+    # so the degree join doesn't re-run per alias (the edge SOURCE is
+    # already a cheap parquet scan)
+    oriented = pin(
+        e.select(
+            F.when(a_first, F.col("doc_a")).otherwise(F.col("doc_b")).alias("src"),
+            F.when(a_first, F.col("doc_b")).otherwise(F.col("doc_a")).alias("dst"),
+            F.when(a_first, rank_b).otherwise(rank_a).alias("dst_rank"),
+        )
+    )
     o1, o2, o3 = oriented.alias("o1"), oriented.alias("o2"), oriented.alias("o3")
     tri = (
         o1.join(
@@ -1291,11 +1294,10 @@ def q_containment_dedup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # pair intersections from the i<j combo explode (bounded by cap**2
     # per shingle). This is the shared posting table a production
     # pipeline materializes once for the whole dedup predicate family.
-    postings = (
+    postings = pin(
         sh.groupBy("shingle")
         .agg(F.sort_array(F.collect_list("doc_id")).alias("ids"))
         .filter(F.size("ids") <= 64)
-        .persist()
     )
     nsc = (
         postings.select(F.explode("ids").alias("doc_id"))
@@ -1434,10 +1436,8 @@ def shared_bpe_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     def build() -> DataFrame:
-        rules, final = bpe_learn(load_table(spark, "documents", sf_dir))
-        final.unpersist()
         return spark.createDataFrame(
-            rules,
+            bpe_learn(load_table(spark, "documents", sf_dir)),
             "merge_rank int, left_sym string, right_sym string, pair_count bigint",
         )
 
@@ -1446,12 +1446,10 @@ def shared_bpe_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def bpe_learn(docs: DataFrame, k_max: int = _BPE_K):
-    """Run the BPE learning loop of ``q_bpe_merge_rules`` and return
-    ``(rules, final_frame)`` where ``final_frame`` is the
-    sentinel-wrapped corpus AFTER all merges applied (persisted —
-    callers that don't consume it must unpersist). Shared with the
-    encode pass (wave5_ops) so learn and apply can never drift."""
+def bpe_learn(docs: DataFrame, k_max: int = _BPE_K) -> list[tuple[int, str, str, int]]:
+    """Run the BPE learning loop of ``q_bpe_merge_rules`` and return its
+    ``(merge_rank, left_sym, right_sym, pair_count)`` rules. Shared with
+    the encode pass (wave5_ops) so learn and apply can never drift."""
     toks = docs.select(
         "doc_id", F.array_remove(tokens("text"), "").alias("toks")
     )
@@ -1461,45 +1459,46 @@ def bpe_learn(docs: DataFrame, k_max: int = _BPE_K):
             F.lit(_S), F.array_join("toks", _S + _S), F.lit(_S)
         ).alias("s"),
     )
-    cur = wrapped.persist()
-    cached = [cur]
     rules = []
-    for k in range(1, k_max + 1):
-        arr = F.split(F.regexp_replace("s", "^\x1f+|\x1f+$", ""), "\x1f\x1f")
-        n = F.size(arr)
-        pairs = (
-            cur.select(
-                F.explode_outer(
-                    F.arrays_zip(
-                        F.slice(arr, 1, F.greatest(n - 1, F.lit(0))).alias("l"),
-                        F.slice(arr, 2, F.greatest(n - 1, F.lit(0))).alias("r"),
-                    )
-                ).alias("pr")
+    # each round's frame is read by the next round's pair count and
+    # rewrite; all of them are released once the rules are learned
+    with scope():
+        cur = pin(wrapped)
+        for k in range(1, k_max + 1):
+            arr = F.split(F.regexp_replace("s", "^\x1f+|\x1f+$", ""), "\x1f\x1f")
+            n = F.size(arr)
+            pairs = (
+                cur.select(
+                    F.explode_outer(
+                        F.arrays_zip(
+                            F.slice(arr, 1, F.greatest(n - 1, F.lit(0))).alias("l"),
+                            F.slice(arr, 2, F.greatest(n - 1, F.lit(0))).alias("r"),
+                        )
+                    ).alias("pr")
+                )
+                .filter(F.col("pr").isNotNull())
+                .select(F.col("pr.l").alias("l"), F.col("pr.r").alias("r"))
             )
-            .filter(F.col("pr").isNotNull())
-            .select(F.col("pr.l").alias("l"), F.col("pr.r").alias("r"))
-        )
-        top = (
-            pairs.groupBy("l", "r")
-            .agg(F.count(F.lit(1)).alias("cnt"))
-            .orderBy(F.col("cnt").desc(), "l", "r")
-            .limit(1)
-            .collect()
-        )
-        if not top:  # corpus of single-token docs: nothing left to merge
-            break
-        a, b, cnt = top[0].l, top[0].r, top[0].cnt
-        rules.append((k, a, b, int(cnt)))
-        cur = cur.select(
-            "doc_id",
-            F.replace(
-                F.col("s"), F.lit(_S + a + _S + _S + b + _S), F.lit(_S + a + b + _S)
-            ).alias("s"),
-        ).persist()
-        cached.append(cur)
-    for frame in cached[:-1]:
-        frame.unpersist()
-    return rules, cached[-1]
+            top = (
+                pairs.groupBy("l", "r")
+                .agg(F.count(F.lit(1)).alias("cnt"))
+                .orderBy(F.col("cnt").desc(), "l", "r")
+                .limit(1)
+                .collect()
+            )
+            if not top:  # corpus of single-token docs: nothing left to merge
+                break
+            a, b, cnt = top[0].l, top[0].r, top[0].cnt
+            rules.append((k, a, b, int(cnt)))
+            cur = pin(
+                cur.select(
+                    "doc_id",
+                    F.replace(
+                        F.col("s"), F.lit(_S + a + _S + _S + b + _S), F.lit(_S + a + b + _S)
+                    ).alias("s"),
+                )
+            )
+    return rules
 
 
 # --------------------------------------------------------------------------
@@ -1689,19 +1688,17 @@ def q_dup_graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     (`shared_jaccard_edges`), so the similarity join runs once per sf
     across the whole dup-graph family — the iteration loop scans
     parquet, not a recomputed similarity pipeline."""
-    edges = shared_jaccard_edges(spark, sf_dir).select("doc_a", "doc_b").persist()
+    edges = pin(shared_jaccard_edges(spark, sf_dir).select("doc_a", "doc_b"))
     sym = edges.select(
         F.col("doc_a").alias("src"), F.col("doc_b").alias("dst")
     ).unionAll(edges.select(F.col("doc_b").alias("src"), F.col("doc_a").alias("dst")))
-    vertices = sym.select(F.col("src").alias("node")).distinct().persist()
+    vertices = pin(sym.select(F.col("src").alias("node")).distinct())
     degrees = sym.groupBy(F.col("src").alias("node")).agg(
         F.count(F.lit(1)).alias("degree")
     )
     n_nodes = vertices.count()  # bounded: similarity-graph vertices only
     scores = vertices.select("node", (F.lit(1.0) / n_nodes).alias("score"))
-    messages_base = sym.join(
-        degrees.withColumnRenamed("node", "src"), "src"
-    ).persist()
+    messages_base = pin(sym.join(degrees.withColumnRenamed("node", "src"), "src"))
     for _ in range(_PR_ITERS):
         contrib = (
             messages_base.join(scores.withColumnRenamed("node", "src"), "src")

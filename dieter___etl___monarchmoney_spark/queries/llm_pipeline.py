@@ -51,6 +51,7 @@ from dieter___etl___monarchmoney_spark.operators.similarity import (
     embedding_neardup_pairs,
     lsh_ann_topk,
 )
+from dieter___etl___monarchmoney_spark.pins import pin, scope
 from dieter___etl___monarchmoney_spark.registry import query
 from dieter___etl___monarchmoney_spark.sources.parquet import load_table
 
@@ -937,13 +938,13 @@ def q_ann_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     qv = _query_vec(spark, sf_dir)
     # one scan scores every vector AND tags it with its bucket's
     # hamming distance to the query signature; pinned for the five
-    # TakeOrdered passes below. Safe to unpersist before returning —
+    # TakeOrdered passes below. Safe to release before returning —
     # every pass collect()s here and the returned frame is a
     # driver-built literal. Concurrent first readers of an unpopulated
     # cache are safe (BlockManager computes each partition once and
     # blocks the rest), so no eager count() is needed before fan-out.
-    scored = lsh_scored_candidates(vectors, qv, bits=6).persist()
-    try:
+    with scope():
+        scored = pin(lsh_scored_candidates(vectors, qv, bits=6))
         # jobs submitted from pool threads do not inherit the driver
         # thread's job group / description (thread-local in pinned-thread
         # mode), which breaks per-query job accounting
@@ -1001,8 +1002,6 @@ def q_ann_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
             for mp in radii:
                 hits = len(mp_f[mp].result() & exact)
                 rows.append((f"lsh_multiprobe{mp}", 10, hits, hits / 10.0))
-    finally:
-        scored.unpersist()
     return spark.createDataFrame(
         sorted(rows), "method string, k int, n_hits int, recall double"
     )

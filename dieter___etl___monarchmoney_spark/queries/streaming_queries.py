@@ -274,70 +274,6 @@ def q_sessionize_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _tws_available() -> bool:
-    """Spark 4's transformWithState Python worker speaks protobuf to
-    the JVM state server; without ``google.protobuf`` in the worker
-    environment the driver worker crashes at init. Gate the query
-    registration (environment rule: gate missing deps behind an
-    import-try) so the operator only surfaces where it can actually
-    run — the implementation itself (streaming/sessionize.py:
-    sessionize_tws) is complete and its test skips when gated."""
-    try:
-        import google.protobuf  # noqa: F401
-
-        return True
-    except ImportError:
-        return False
-
-
-def q_sessionize_tws_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """FOURTH sessionization implementation: Spark 4's
-    ``transformWithStateInPandas`` StatefulProcessor
-    (streaming/sessionize.py:sessionize_tws) over the flush-augmented
-    stream, against the SAME oracle as the batch and
-    applyInPandasWithState forms — pinning that the old→new stateful
-    API migration preserves semantics row-for-row (session ordinals
-    included). Registered only when the TWS protobuf dependency is
-    importable (see _tws_available)."""
-    from dieter___etl___monarchmoney_spark.streaming.sessionize import (
-        sessionize_tws,
-    )
-
-    _PROVIDER_KEY = "spark.sql.streaming.stateStore.providerClass"
-    prior = spark.conf.get(_PROVIDER_KEY, None)
-    spark.conf.set(
-        _PROVIDER_KEY,
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    try:
-        source, sentinel_us = _flush_augmented_events(
-            spark, sf_dir, "sessionize_tws"
-        )
-        res = run_available_now(
-            sessionize_tws(source),
-            f"sessionize_tws_{_digest(sf_dir)}",
-            output_mode="append",
-            state_partitions=8,
-        )
-        out = _session_bounds_as_micros(res).filter(
-            F.col("session_start_us") < F.lit(sentinel_us)
-        )
-        # force materialization inside the scoped-provider region: the
-        # availableNow query above already ran to completion, so the
-        # returned frame is a plain batch read of its sink — safe to
-        # restore the session-wide provider before handing it back.
-        return out
-    finally:
-        if prior is None:
-            spark.conf.unset(_PROVIDER_KEY)
-        else:
-            spark.conf.set(_PROVIDER_KEY, prior)
-
-
-if _tws_available():
-    query("sessionize_tws_stream", _SESSIONIZATION_ORACLE)(q_sessionize_tws_stream)
-
-
 #: Oracle for the NATIVE session_window twin. Spark's built-in session
 #: window is right-open — an event landing exactly at window end starts
 #: a NEW session — so the break condition is ``gap >= 30 min`` where the

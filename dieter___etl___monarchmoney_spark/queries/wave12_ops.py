@@ -19,6 +19,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from dieter___etl___monarchmoney_spark.pins import pin
 from dieter___etl___monarchmoney_spark.registry import query
 from dieter___etl___monarchmoney_spark.sources.parquet import load_table
 
@@ -118,15 +119,14 @@ def q_linkpred_adamic_adar(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     ba = baskets.select("cust", F.col("pk").alias("pa"))
     bb = baskets.select(F.col("cust").alias("cust2"), F.col("pk").alias("pb"))
-    edges = (
+    # three consumers (two wedge sides + the anti join); without the
+    # pin the projection re-runs per alias
+    edges = pin(
         ba.join(bb, (F.col("cust") == F.col("cust2")) & (F.col("pa") < F.col("pb")))
         .groupBy(F.col("pa").alias("doc_a"), F.col("pb").alias("doc_b"))
         .agg(F.count(F.lit(1)).alias("co"))
         .filter(F.col("co") >= _AA_MIN_CO)
         .select("doc_a", "doc_b")
-        # three consumers (two wedge sides + the anti join); without the
-        # pin the projection re-runs per alias
-        .persist()
     )
     sym = edges.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst")).unionAll(
         edges.select(F.col("doc_b").alias("src"), F.col("doc_a").alias("dst"))

@@ -16,6 +16,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from dieter___etl___monarchmoney_spark.pins import pin, scope
 from dieter___etl___monarchmoney_spark.registry import query
 from dieter___etl___monarchmoney_spark.sources.parquet import load_table
 
@@ -112,30 +113,32 @@ def q_logreg_train_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     checkpoint the long form once."""
     emb = load_table(spark, "embeddings", sf_dir)
     n = emb.count()  # bounded driver scalar
-    wide = emb.select(
-        "vec_id",
-        F.transform("embedding", lambda x: x.cast("double")).alias("xs"),
-        F.when(F.col("label") >= 5, 1.0).otherwise(0.0).alias("y"),
-    ).persist()
-    d = len(wide.select("xs").first()["xs"])  # O(dim)
-    long = wide.select(
-        "vec_id", "y", F.posexplode("xs").alias("j0", "x")
-    ).select("vec_id", "y", (F.col("j0") + 1).alias("j"), "x")
-
-    def margins(w: list[float]):
-        # long-form decimal SUM, not an array fold: Spark's decimal
-        # ADDITION widens (38,18)+(38,18) → (38,17) per step, but its
-        # decimal SUM aggregate keeps the full scale exactly like
-        # DuckDB's — so the aggregate mirrors the oracle bit-for-bit
-        w_arr = F.array(*[F.lit(float(v)) for v in w])
-        t = (F.col("x") * F.element_at(w_arr, F.col("j"))).cast(_DEC)
-        return (
-            long.select("vec_id", "y", t.alias("t"))
-            .groupBy("vec_id")
-            .agg(F.sum("t").cast("double").alias("m"), F.max("y").alias("y"))
+    with scope():
+        wide = pin(
+            emb.select(
+                "vec_id",
+                F.transform("embedding", lambda x: x.cast("double")).alias("xs"),
+                F.when(F.col("label") >= 5, 1.0).otherwise(0.0).alias("y"),
+            )
         )
+        d = len(wide.select("xs").first()["xs"])  # O(dim)
+        long = wide.select(
+            "vec_id", "y", F.posexplode("xs").alias("j0", "x")
+        ).select("vec_id", "y", (F.col("j0") + 1).alias("j"), "x")
 
-    try:
+        def margins(w: list[float]):
+            # long-form decimal SUM, not an array fold: Spark's decimal
+            # ADDITION widens (38,18)+(38,18) → (38,17) per step, but its
+            # decimal SUM aggregate keeps the full scale exactly like
+            # DuckDB's — so the aggregate mirrors the oracle bit-for-bit
+            w_arr = F.array(*[F.lit(float(v)) for v in w])
+            t = (F.col("x") * F.element_at(w_arr, F.col("j"))).cast(_DEC)
+            return (
+                long.select("vec_id", "y", t.alias("t"))
+                .groupBy("vec_id")
+                .agg(F.sum("t").cast("double").alias("m"), F.max("y").alias("y"))
+            )
+
         w = [0.0] * d
         for _ in range(_LR_ITERS):
             res = margins(w).select(
@@ -163,8 +166,6 @@ def q_logreg_train_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
             .collect()[0]
             .a
         )
-    finally:
-        wide.unpersist()
     # no explicit rounding on either side: the parity harness
     # normalizes floats to 9dp identically for both engines, and a
     # one-sided ROUND would reintroduce double-rounding asymmetry

@@ -16,6 +16,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from dieter___etl___monarchmoney_spark.pins import pin
 from dieter___etl___monarchmoney_spark.registry import query
 from dieter___etl___monarchmoney_spark.sources.parquet import load_table
 
@@ -194,11 +195,13 @@ def q_pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # 1.7 s — Catalyst analysis+codegen of the ~2k-node tree dwarfs the
     # interpreted per-row cost at any plausible codebook size (the
     # const_vec lesson from operators/similarity.py).
-    sub = emb.select(
-        "vec_id",
-        F.slice("v", 1, _PQ_D).alias("s0"),
-        F.slice("v", _PQ_D + 1, _PQ_D).alias("s1"),
-    ).persist()
+    sub = pin(
+        emb.select(
+            "vec_id",
+            F.slice("v", 1, _PQ_D).alias("s0"),
+            F.slice("v", _PQ_D + 1, _PQ_D).alias("s1"),
+        )
+    )
     # codebook init: first K vectors (K-bounded driver collect, the
     # same contract as ivf_ann_topk's centroid materialization)
     init = sub.orderBy("vec_id").limit(_PQ_K).collect()

@@ -14,6 +14,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from dieter___etl___monarchmoney_spark.pins import pin
 from dieter___etl___monarchmoney_spark.registry import query
 from dieter___etl___monarchmoney_spark.sources.parquet import load_table
 
@@ -204,16 +205,16 @@ def q_tfidf_cosine_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # persisted: tf feeds the df aggregate, the corpus-size scalar, AND
     # (through wt) the norm aggregate and both pair-join sides — the
     # tokenize/explode pipeline otherwise re-runs for each consumer
-    tf = words.groupBy("doc_id", "word").agg(
-        F.count(F.lit(1)).cast("bigint").alias("tf")
-    ).persist()
+    tf = pin(
+        words.groupBy("doc_id", "word").agg(F.count(F.lit(1)).cast("bigint").alias("tf"))
+    )
     df = tf.groupBy("word").agg(F.count(F.lit(1)).cast("bigint").alias("df"))
     nd = tf.agg(F.countDistinct("doc_id").cast("bigint").alias("n"))
     # persisted: the weighted-posting table feeds the norm aggregate
     # AND both sides of the pair self-join — without the cache the
     # tokenize/explode/aggregate pipeline upstream re-runs four times
     # (measured 9.6 s -> ~2 s at sf0.1)
-    wt = (
+    wt = pin(
         tf.join(F.broadcast(df.filter(F.col("df") <= _TFIDF_DF_CAP)), "word")
         .crossJoin(F.broadcast(nd))
         .select(
@@ -224,7 +225,6 @@ def q_tfidf_cosine_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
                 * F.log((F.col("n") + 1.0) / (F.col("df") + 1.0))
             ).alias("w"),
         )
-        .persist()
     )
     norms = wt.groupBy("doc_id").agg(
         F.sqrt(

@@ -13,6 +13,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from dieter___etl___monarchmoney_spark.pins import pin, scope
 from dieter___etl___monarchmoney_spark.queries.llm_pipeline import _dot_sql
 from dieter___etl___monarchmoney_spark.registry import query
 from dieter___etl___monarchmoney_spark.sources.parquet import load_table
@@ -218,75 +219,68 @@ def q_set_cover_greedy_selection(spark: SparkSession, sf_dir: str) -> DataFrame:
     # old explode().distinct() there is no full posting-table shuffle
     # anywhere in the query.
     tk = F.array_remove(F.split(F.lower(F.trim(F.col("text"))), r"\s+"), "")
-    sh_arr = (
-        docs.select("doc_id", tk.alias("tk"))
-        .select(
-            "doc_id", F.array_distinct(shingles_of(F.col("tk"), 3)).alias("sh")
-        )
-        .persist()
-    )
-    # exploded postings view — derived lazily from the CACHED array
-    # table, so each per-round broadcast join re-reads cache + a
-    # map-side explode, never the raw text
-    sh = sh_arr.select("doc_id", F.explode("sh").alias("shingle"))
-    # round-1 gains: size of the per-doc distinct shingle set — a
-    # map-only projection, no aggregate at all
-    gains = sh_arr.select(
-        "doc_id", F.size("sh").cast("bigint").alias("gain")
-    ).persist()
-    picked: list[tuple[int, int, int]] = []
-    picked_ids: list[int] = []
-    retired = [gains]
-    for rnd in range(1, _COVER_ROUNDS + 1):
-        # gain > 0 mirrors the oracle: a doc with zero uncovered
-        # shingles never appears in its per-round GROUP BY, so it can
-        # never be picked even as a tie-break winner
-        cand = gains.filter(F.col("gain") > 0)
-        if picked_ids:
-            cand = cand.filter(~F.col("doc_id").isin(picked_ids))
-        top = cand.orderBy(F.col("gain").desc(), "doc_id").limit(1).collect()
-        if not top:
-            break
-        doc_id, gain = top[0]["doc_id"], top[0]["gain"]
-        picked.append((rnd, doc_id, gain))
-        picked_ids.append(doc_id)
-        if rnd == _COVER_ROUNDS:
-            break
-        # shingles the winner covers for the FIRST time this round:
-        # its own postings minus everything previous picks covered —
-        # a small-small anti-join (≤ rnd documents' shingles total)
-        w_sh = sh.filter(F.col("doc_id") == doc_id).select("shingle")
-        if len(picked_ids) > 1:
-            prev_cov = (
-                sh.filter(F.col("doc_id").isin(picked_ids[:-1]))
-                .select("shingle")
-                .distinct()
+    # the postings array table and every round's gains frame are read
+    # only by later rounds; all are released once the picks are collected
+    with scope():
+        sh_arr = pin(
+            docs.select("doc_id", tk.alias("tk")).select(
+                "doc_id", F.array_distinct(shingles_of(F.col("tk"), 3)).alias("sh")
             )
-            new_sh = w_sh.join(prev_cov, "shingle", "left_anti")
-        else:
-            new_sh = w_sh
-        # residual update: one broadcast semi-join scan of the cached
-        # postings (only rows matching the winner's new shingles
-        # survive into the aggregate) — never a full re-aggregate
-        overlap = (
-            sh.join(F.broadcast(new_sh), "shingle")
-            .groupBy("doc_id")
-            .agg(F.count(F.lit(1)).cast("bigint").alias("__ov"))
         )
-        gains = (
-            gains.join(overlap, "doc_id", "left")
-            .select(
-                "doc_id",
-                (F.col("gain") - F.coalesce(F.col("__ov"), F.lit(0)))
-                .cast("bigint")
-                .alias("gain"),
+        # exploded postings view — derived lazily from the CACHED array
+        # table, so each per-round broadcast join re-reads cache + a
+        # map-side explode, never the raw text
+        sh = sh_arr.select("doc_id", F.explode("sh").alias("shingle"))
+        # round-1 gains: size of the per-doc distinct shingle set — a
+        # map-only projection, no aggregate at all
+        gains = pin(sh_arr.select("doc_id", F.size("sh").cast("bigint").alias("gain")))
+        picked: list[tuple[int, int, int]] = []
+        picked_ids: list[int] = []
+        for rnd in range(1, _COVER_ROUNDS + 1):
+            # gain > 0 mirrors the oracle: a doc with zero uncovered
+            # shingles never appears in its per-round GROUP BY, so it can
+            # never be picked even as a tie-break winner
+            cand = gains.filter(F.col("gain") > 0)
+            if picked_ids:
+                cand = cand.filter(~F.col("doc_id").isin(picked_ids))
+            top = cand.orderBy(F.col("gain").desc(), "doc_id").limit(1).collect()
+            if not top:
+                break
+            doc_id, gain = top[0]["doc_id"], top[0]["gain"]
+            picked.append((rnd, doc_id, gain))
+            picked_ids.append(doc_id)
+            if rnd == _COVER_ROUNDS:
+                break
+            # shingles the winner covers for the FIRST time this round:
+            # its own postings minus everything previous picks covered —
+            # a small-small anti-join (≤ rnd documents' shingles total)
+            w_sh = sh.filter(F.col("doc_id") == doc_id).select("shingle")
+            if len(picked_ids) > 1:
+                prev_cov = (
+                    sh.filter(F.col("doc_id").isin(picked_ids[:-1]))
+                    .select("shingle")
+                    .distinct()
+                )
+                new_sh = w_sh.join(prev_cov, "shingle", "left_anti")
+            else:
+                new_sh = w_sh
+            # residual update: one broadcast semi-join scan of the cached
+            # postings (only rows matching the winner's new shingles
+            # survive into the aggregate) — never a full re-aggregate
+            overlap = (
+                sh.join(F.broadcast(new_sh), "shingle")
+                .groupBy("doc_id")
+                .agg(F.count(F.lit(1)).cast("bigint").alias("__ov"))
             )
-            .persist()
-        )
-        retired.append(gains)
-    for g in retired:
-        g.unpersist()
-    sh_arr.unpersist()
+            gains = pin(
+                gains.join(overlap, "doc_id", "left")
+                .select(
+                    "doc_id",
+                    (F.col("gain") - F.coalesce(F.col("__ov"), F.lit(0)))
+                    .cast("bigint")
+                    .alias("gain"),
+                )
+            )
     return spark.createDataFrame(
         picked, "round bigint, doc_id bigint, gain bigint"
     ).orderBy("round")

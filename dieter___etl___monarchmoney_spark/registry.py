@@ -17,6 +17,8 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
+from dieter___etl___monarchmoney_spark import pins
+
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
 ORACLE_SQL: dict[str, str] = {}
 
@@ -25,31 +27,18 @@ def query(name: str, sql: str | None = None):
     """Register a driver-contract query; ``sql`` is the DuckDB oracle
     (None ⇒ non-SQL-expressible, rows-only check).
 
-    Each registered callable first drops caches left behind by PRIOR
-    queries: several operators persist() an intermediate that the
-    returned lazy frame still depends on (edge tables, posting lists,
-    covariance matrices), so they cannot unpersist before the caller
-    materializes the result. In a long-lived session running the whole
-    registry (driver rotation, bench — 168 queries × warm-up + timed
-    loop) those pins would otherwise accumulate into GC pressure that
-    slows every later query. Clearing at ENTRY is safe: by the time
-    query N+1 starts, query N's result has been materialized and
-    compared; at worst a re-collect recomputes.
-
-    LIBRARY CAVEAT: the entry-time ``clearCache()`` is a
-    driver-harness contract behavior. A caller composing registry
-    callables with their OWN cached tables will find those caches
-    dropped by every registry call — compose with the underlying
-    operator modules (operators/, functions/) instead, which never
-    touch session-global cache state."""
+    Several queries return a lazy frame that still reads an
+    intermediate they pinned (edge tables, posting lists, covariance
+    matrices). Each registered callable therefore first releases the
+    pins of the previous call (``pins.release()``): consume a
+    registry call's frame before the next call, or it recomputes (or,
+    for a checkpointed pin, fails). Caches the caller made are never
+    touched."""
 
     def deco(fn: Callable[[SparkSession, str], DataFrame]):
         @functools.wraps(fn)  # _reorder() keys on the copied __module__
         def wrapped(spark: SparkSession, sf_dir: str) -> DataFrame:
-            try:
-                spark.catalog.clearCache()
-            except Exception:
-                pass  # never let cache hygiene mask the query itself
+            pins.release()
             return fn(spark, sf_dir)
 
         QUERIES[name] = wrapped

@@ -21,6 +21,8 @@ import datetime as dt
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from dieter___etl___monarchmoney_spark.pins import pin, scope
+
 WATERMARK_KEY = "last_run_utc"
 
 
@@ -138,10 +140,10 @@ def overwrite_window_partitions(
         F.col(date_col) >= F.lit(window_start.isoformat())
     ).withColumn(PARTITION_COL, F.date_format(F.col(date_col), _PARTITION_FMT))
     # the window extract is read twice (write + replaced-partition
-    # manifest), so persist it: at scale a reload window is a sliver of
+    # manifest), so pin it: at scale a reload window is a sliver of
     # the table (a day/month of data), cheap to hold across the two uses.
-    windowed.persist()
-    try:
+    with scope():
+        windowed = pin(windowed)
         (
             windowed.write.mode("overwrite")
             .option("partitionOverwriteMode", "dynamic")
@@ -154,8 +156,6 @@ def overwrite_window_partitions(
         replaced = sorted(
             r[0] for r in windowed.select(PARTITION_COL).distinct().collect()
         )
-    finally:
-        windowed.unpersist()
     stale = [p for p in before if p >= part_start and p not in replaced]
     for p in stale:
         delete_path(spark, f"{sink_path}/{PARTITION_COL}={p}")

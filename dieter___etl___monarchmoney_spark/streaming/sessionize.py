@@ -120,84 +120,3 @@ def sessionize_stream(events: DataFrame, gap_minutes: int = 30) -> DataFrame:
             timeoutConf=GroupStateTimeout.EventTimeTimeout,
         )
     )
-
-
-def sessionize_tws(events: DataFrame, gap_minutes: int = 30) -> DataFrame:
-    """Streaming sessionization on Spark 4's ``transformWithState``
-    arbitrary-stateful-processing API (the StatefulProcessor
-    replacement for ``applyInPandasWithState``): identical semantics to
-    ``sessionize_stream`` — per-user open-session state, a gap beyond
-    ``gap_minutes`` closes and emits — expressed against the new
-    handle/ValueState surface. Closed sessions are emitted by arriving
-    rows (the registered callers feed a flush-sentinel source, so no
-    timer is needed to drain the tail; a live deployment would
-    ``registerTimer`` at end+gap exactly like the old API's
-    ``setTimeoutTimestamp``).
-
-    Scale note: TWS state lives in the RocksDB-capable state store
-    keyed per user with schema evolution and independent TTL per state
-    variable — the forward path for custom operators; keeping the old
-    twin alongside pins that the migration preserves semantics
-    row-for-row."""
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    # ns-exact gap test on ts_ns with the batch twin's (ts_ns,
-    # event_id) order — see sessionize_stream; emitted bounds truncate
-    # ns -> µs like the batch form's min/max over the µs ts column
-    gap_ns = gap_minutes * 60 * 1_000_000_000
-    cols = [f.name for f in SESSION_SCHEMA.fields]
-
-    class SessionProcessor(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._state = handle.getValueState(
-                "session", "start long, end long, n long, sid long"
-            )
-
-        def handleInputRows(self, key, rows, timer_values):
-            (user_id,) = key
-            parts = [pdf for pdf in rows]
-            pdf = pd.concat(parts).sort_values(["ts_ns", "event_id"])
-            if self._state.exists():
-                start_ns, end_ns, n, sid = self._state.get()
-            else:
-                start_ns = end_ns = None
-                n, sid = 0, 1  # first session is id 1 (batch-twin numbering)
-            out = []
-            for ts_ns in pdf["ts_ns"]:
-                ts_ns = int(ts_ns)
-                if end_ns is not None and ts_ns - end_ns > gap_ns:
-                    out.append(
-                        [
-                            user_id,
-                            sid,
-                            pd.Timestamp(start_ns // 1000, unit="us"),
-                            pd.Timestamp(end_ns // 1000, unit="us"),
-                            n,
-                        ]
-                    )
-                    sid += 1
-                    start_ns, n = ts_ns, 0
-                if start_ns is None:
-                    start_ns = ts_ns
-                end_ns = ts_ns
-                n += 1
-            self._state.update((start_ns, end_ns, n, sid))
-            if out:
-                yield pd.DataFrame(out, columns=cols)
-
-        def close(self) -> None:
-            pass
-
-    return (
-        events.withWatermark("ts", f"{gap_minutes} minutes")
-        .groupBy("user_id")
-        .transformWithStateInPandas(
-            statefulProcessor=SessionProcessor(),
-            outputStructType=SESSION_SCHEMA,
-            outputMode="Append",
-            timeMode="EventTime",
-        )
-    )

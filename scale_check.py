@@ -27,10 +27,7 @@ from pathlib import Path
 
 from pyspark.sql import functions as F
 
-from dieter___etl___monarchmoney_spark import registry
-from dieter___etl___monarchmoney_spark.operators.rank import (
-    release_pins as _release_rank_pins,
-)
+from dieter___etl___monarchmoney_spark import pins, registry
 from dieter___etl___monarchmoney_spark.session import get_spark
 
 #: the operators whose scale story SCALE.md stakes out
@@ -403,12 +400,10 @@ def main() -> None:
                         ),
                         flush=True,
                     )
-                    # drop the query's DataFrame/localCheckpoint refs so the
-                    # ContextCleaner unpersists their blocks before the next
-                    # query is timed (see fresh-session note above); explicit
-                    # grouped-rank persist() pins are not GC-collectable, so
-                    # release them through the operator's hook (ADVICE r11 #2)
-                    _release_rank_pins()
+                    # release the query's pins and drop its frame refs so
+                    # the ContextCleaner frees the rest before the next
+                    # query is timed (see fresh-session note above)
+                    pins.release()
                     gc.collect()
             finally:
                 spark.stop()

@@ -47,3 +47,14 @@ def test_full_lifecycle_idempotent(spark, tmp_path):
     assert m2["partitions"]["replaced"] == ["1998-06"]
     assert m2["partitions"]["cleared"] == []
     assert len(m2["partitions"]["kept"]) == len(parts) - 1
+
+
+def test_run_etl_leaves_nothing_cached(spark, tmp_path):
+    """The budgets stage's pinned category rows are released when the
+    stage ends, so a scheduled run leaves the session's cache empty."""
+    from dieter___etl___monarchmoney_spark import pins
+
+    pins.release()
+    spark.catalog.clearCache()
+    run_etl(spark, SF_SMOKE, str(tmp_path / "warehouse"), now=dt.datetime(1998, 6, 1))
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()

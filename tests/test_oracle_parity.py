@@ -5,25 +5,35 @@ from __future__ import annotations
 
 import pytest
 
-from dieter___etl___monarchmoney_spark import registry
+from dieter___etl___monarchmoney_spark import pins, registry
 from tests.conftest import SF_ORACLE
 from tests.oracle_utils import compare
 
 QUERIES, ORACLE_SQL = registry.load()
 
 
+def _assert_released(spark):
+    """Once its result is consumed, a query leaves nothing cached."""
+    pins.release()
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
 @pytest.mark.parametrize("name", sorted(ORACLE_SQL))
 def test_oracle_parity(name, spark, duck):
+    spark.catalog.clearCache()
     spark_df = QUERIES[name](spark, SF_ORACLE)
     duck_rel = duck.sql(ORACLE_SQL[name])
     compare(spark_df, duck_rel)
+    _assert_released(spark)
 
 
 @pytest.mark.parametrize("name", sorted(set(QUERIES) - set(ORACLE_SQL)))
 def test_rows_only(name, spark):
+    spark.catalog.clearCache()
     df = QUERIES[name](spark, SF_ORACLE)
     assert df.count() >= 0
     assert len(df.schema.fields) > 0
+    _assert_released(spark)
 
 
 def test_entry_smoke(spark):

@@ -45,8 +45,7 @@ heavy query run."""
 
 from __future__ import annotations
 
-from dieter___etl___monarchmoney_spark import registry
-from dieter___etl___monarchmoney_spark.operators.rank import release_pins
+from dieter___etl___monarchmoney_spark import pins, registry
 from tests.conftest import SF_SMOKE, formatted_plan as _plan
 
 QUERIES, _ = registry.load()
@@ -127,7 +126,7 @@ def test_no_cartesian_and_bnlj_only_where_sanctioned(spark):
             row_at_a_time.append(name)
         if "ArrowEvalPython" in plan or "MapInPandas" in plan:
             arrow.add(name)
-        release_pins()  # plan building registers pins; drop them
+        pins.release()  # plan building takes pins; drop them
     assert not single_part, (
         f"Exchange SinglePartition in {single_part} — a one-task funnel "
         f"stage (the pre-r11 grouped-NTILE shape); use two-phase top-k, "

@@ -303,47 +303,6 @@ def test_rank_exact_with_exchange_reuse_disabled(spark):
         spark.conf.set("spark.sql.exchange.reuse", reuse)
 
 
-def test_release_pins_releases_everything(spark):
-    """persist_input pins accumulate across queries in one session
-    unless released (ADVICE r11 #2): release_pins() unpersists every
-    pin since the last call and reports the count; a second call is a
-    no-op."""
-    from dieter___etl___monarchmoney_spark.operators.rank import release_pins
-
-    release_pins()  # drain pins left by earlier tests in this session
-    jsc = spark.sparkContext._jsc.sc()
-    base = len(jsc.getRDDStorageInfo())
-    df = _synthetic(spark, n=101)
-    exact_group_rank(df, ["g"], "key", ["rid"], rank_col="r").count()
-    exact_group_ntile(df, ["g"], "key", ["rid"], 4, out_col="t").count()
-    assert len(jsc.getRDDStorageInfo()) > base  # pins are live
-    assert release_pins() >= 2
-    assert release_pins() == 0
-    # the storage layer really let go of OUR blocks (other modules'
-    # session-lived caches, if any, are untouched)
-    assert len(jsc.getRDDStorageInfo()) <= base
-
-
-def test_release_pins_survives_stale_session_pins(spark):
-    """scale_check runs a FRESH session per scale: a pin orphaned by a
-    mid-loop failure outlives its session, and the next scale's cleanup
-    call must discard it, not crash the sweep."""
-    from dieter___etl___monarchmoney_spark.operators import rank as rank_mod
-
-    class _StalePin:
-        def unpersist(self):
-            raise RuntimeError("Cannot call methods on a stopped SparkContext")
-
-    rank_mod.release_pins()
-    rank_mod._PINS.append(_StalePin())
-    df = _synthetic(spark, n=59)
-    exact_group_rank(df, ["g"], "key", ["rid"], rank_col="r").count()
-    # both live pins (input persist + edge checkpoint) released, the
-    # stale one swallowed
-    assert rank_mod.release_pins() == 2
-    assert rank_mod._PINS == []
-
-
 def test_ranking_stage_parallelism_not_capped_at_group_count(spark):
     """The scale contract: the ranking window's hash partition key
     includes the bucket id, so the one data shuffle spreads

@@ -496,6 +496,16 @@ def test_distributed_prefix_sum_matches_window(spark):
         for r in distributed_prefix_sum(tiny, ["k"], "v", "c", num_ranges=8).collect()
     }
     assert got2 == {1: 5, 2: 12}
+    # decimal offsets keep the totals' type: local (28,6) + offset
+    # (28,6), not a SUM-over-window-widened (38,6)
+    from decimal import Decimal as D
+
+    from pyspark.sql.types import DecimalType
+
+    dec = spark.createDataFrame([(1, D("1.5")), (2, D("2.25"))], "k long, v decimal(18,6)")
+    out = distributed_prefix_sum(dec, ["k"], "v", "c", num_ranges=8)
+    assert out.schema["c"].dataType == DecimalType(29, 6)
+    assert {r.k: r.c for r in out.collect()} == {1: D("1.5"), 2: D("3.75")}
 
 
 def test_distributed_prefix_sum_negative_values(spark):

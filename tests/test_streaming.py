@@ -322,38 +322,6 @@ def test_checkpoint_resume_processes_only_delta(spark, tmp_path):
     assert out.select("event_id").distinct().count() == 15
 
 
-def test_tws_sessionizer_gate_and_parity(spark):
-    """transformWithState needs google.protobuf in the worker env; the
-    query must register exactly when the dep is importable, and when it
-    runs its sessions must equal the batch form's."""
-    from dieter___etl___monarchmoney_spark.queries.streaming_queries import (
-        _tws_available,
-        q_sessionize_tws_stream,
-    )
-    from dieter___etl___monarchmoney_spark.registry import load
-
-    QUERIES, ORACLES = load()
-    assert ("sessionize_tws_stream" in QUERIES) == _tws_available()
-    assert ("sessionize_tws_stream" in ORACLES) == _tws_available()
-    if not _tws_available():
-        import pytest
-
-        pytest.skip("google.protobuf not importable: TWS gated off")
-    got = q_sessionize_tws_stream(spark, SF_SMOKE)
-    want = sessionize_batch(load_table(spark, "events", SF_SMOKE)).select(
-        "user_id",
-        "session_id",
-        F.unix_micros("session_start").alias("session_start_us"),
-        F.unix_micros("session_end").alias("session_end_us"),
-        "n_events",
-    )
-    # bidirectional: a TWS run that drops sessions (or emits none) must
-    # fail, not just one that invents extra rows
-    assert got.exceptAll(want).count() == 0
-    assert want.exceptAll(got).count() == 0
-    assert got.count() == want.count()
-
-
 def test_foreachbatch_upsert_multi_batch(spark):
     """The foreachBatch upsert must really exercise the incremental
     path: the source is chunked to 4 files with maxFilesPerTrigger=1,

@@ -24,7 +24,7 @@ def test_edge_rank_closed_form_matches_exists():
     """The bigint closed-form predicate is the exists() lambda it
     replaced: ∃k∈[1,9]: rn = (k·n_s + 9) div 10 ⟺
     max(1, ceil((10·rn−9)/n_s)) ≤ min(9, floor(10·rn/n_s))."""
-    for n_s in range(1, 400):
+    for n_s in range(1, 801):
         for rn in range(1, n_s + 1):
             want = any(rn == (k * n_s + 9) // 10 for k in range(1, 10))
             lo = max(1, (10 * rn - 9 + n_s - 1) // n_s)

@@ -33,8 +33,7 @@ def test_bpe_encode_agrees_with_learned_rules(spark):
     from dieter___etl___monarchmoney_spark.sources.parquet import load_table
     from dieter___etl___monarchmoney_spark.queries.corpus_ops import bpe_learn
 
-    rules, final = bpe_learn(load_table(spark, "documents", SF_SMOKE))
-    final.unpersist()
+    rules = bpe_learn(load_table(spark, "documents", SF_SMOKE))
     total_applied = (
         QUERIES["bpe_encode_corpus"](spark, SF_SMOKE)
         .groupBy()

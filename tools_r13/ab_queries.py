@@ -22,10 +22,7 @@ from pathlib import Path
 REPO = Path(__file__).resolve().parent.parent
 sys.path.insert(0, str(REPO))
 
-from dieter___etl___monarchmoney_spark import registry  # noqa: E402
-from dieter___etl___monarchmoney_spark.operators.rank import (  # noqa: E402
-    release_pins,
-)
+from dieter___etl___monarchmoney_spark import pins, registry  # noqa: E402
 from dieter___etl___monarchmoney_spark.session import get_spark  # noqa: E402
 
 
@@ -40,7 +37,7 @@ def main() -> None:
     # one untimed warmup each
     for n in names:
         queries[n](spark, sf_dir).count()
-        release_pins()
+        pins.release()
     res: dict[str, list[float]] = {n: [] for n in names}
     for _ in range(rounds):
         for n in names:
@@ -48,7 +45,7 @@ def main() -> None:
             t0 = time.perf_counter()
             queries[n](spark, sf_dir).count()
             res[n].append(round(time.perf_counter() - t0, 4))
-            release_pins()
+            pins.release()
     out = {
         n: {
             "min": min(v),

@@ -19,7 +19,7 @@ sys.path.insert(0, str(REPO))
 import duckdb  # noqa: E402
 
 import __spark_entry__ as e  # noqa: E402
-from dieter___etl___monarchmoney_spark.operators.rank import release_pins  # noqa: E402
+from dieter___etl___monarchmoney_spark import pins  # noqa: E402
 from dieter___etl___monarchmoney_spark.session import get_spark  # noqa: E402
 
 TABLES = "region nation customer supplier part orders lineitem events documents embeddings".split()
@@ -74,7 +74,7 @@ def main() -> None:
         try:
             df = queries[name](spark, SF01)
             srows = [tuple(r) for r in df.collect()]
-            release_pins()
+            pins.release()
             if name in oracle:
                 rel = duck.sql(oracle[name])
                 drows = rel.fetchall()
