@@ -1,116 +1,57 @@
 #!/usr/bin/env python
-"""Benchmark harness: run every registered query at $SPARK_GRAFT_SF_DIR
+"""Benchmark: run every registered query at $SPARK_GRAFT_SF_DIR
 (default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS].
 
-Timing protocol (round 8, VERDICT r7 #1): every query runs TWICE —
-the first (cold) pass includes whole-stage-codegen compilation and
-page-cache warmup, the second is a steady-state run. The headline
-per-query number is the MIN of the two passes: measurement noise on
-this box is strictly additive (GC pauses, THP/page-cache compaction
-stalls land multi-second hits on whichever query is executing), so the
-minimum is the robust estimator of the plan's true cost — with it,
-back-to-back full runs reproduce within ~2% total where single-pass
-totals swung ±8% and individual heavy-tail numbers 2-6×. Both raw
-passes are archived (`cold`/`steady` dicts) so the estimator is
-auditable. The old `warmup_skip` set is gone — it timed exactly the
-heavy queries cold, which made BENCH_r07's tail unreproducible (+20%
-adjudicated as contention noise, not a plan regression).
+Timing protocol: every query runs twice (`harness.timed`). The first
+(cold) pass includes whole-stage-codegen compilation and page-cache
+warm-up, the second is steady state. The headline per-query number is
+the min of the passes: noise on a shared box is additive (GC pauses,
+page-cache and compaction stalls land multi-second hits on whichever
+query is running), so the minimum is the robust estimator of the plan's
+cost. A query whose two passes disagree by more than 1.5x immediately
+runs a third (tie-break) pass. Every raw pass is archived (`cold`,
+`steady`, `tiebreak` dicts) so the estimator is auditable.
 
-Round-9 additions (VERDICT r8 #2 — cross-BOX comparability, the one
-axis min-of-two can't absorb):
+Calibration anchor: a fixed registry-independent probe (groupBy-sum over
+the lineitem fact, the plan shape most of the suite reduces to) is timed
+before the first query and again after the last. Cross-run comparisons
+should normalize per-query times by the anchor ratio: two boxes whose
+anchors differ 2x are expected to differ ~2x on every query, and
+divergence beyond the anchor ratio is what indicts a plan. The first
+probe still pays page-cache/JIT warm-up that the query body amortizes,
+so anchor_first running above anchor_last is expected; the in-run
+degradation signal is the opposite (anchor_last >> anchor_first:
+eviction, thermal). The headline anchor is the min of the two.
 
-* TIE-BREAK third pass: a query whose two passes disagree >1.5x got
-  at least one contention-poisoned pass; it immediately runs a third,
-  and the headline is the min of all three. Raw third passes are
-  archived in the `tiebreak` dict so every surviving outlier carries
-  the evidence that BOTH of its other passes were slow (i.e. the cost
-  is real on this box, not estimator failure).
-* CALIBRATION ANCHOR: a fixed registry-independent probe (groupBy-sum
-  over the lineitem fact — scan + hash-agg, the plan shape most of
-  the suite reduces to) is timed min-of-two FIRST (before any query)
-  and again LAST. The detail JSON carries `anchor_first_sec`,
-  `anchor_last_sec`, and `anchor_sec` (their min). Cross-run
-  comparison should normalize per-query times by the anchor ratio:
-  two boxes whose anchors differ 2x are expected to differ ~2x on
-  every query — divergence BEYOND the anchor ratio is what indicts a
-  plan. NOTE on first-vs-last (round 11, with the lengthened probe):
-  anchor_first consistently runs ~1.5-1.8x anchor_last because the
-  FIRST probe still pays page-cache/JIT warm-up the 272-query body
-  then amortizes — that direction is benign and expected; the in-run
-  DEGRADATION flag is the opposite direction (anchor_last >>
-  anchor_first: eviction, thermal). The headline anchor is the min.
-
-Per-query history is archived per round: the detail JSON is written
-both to bench_detail.json (latest) and BENCH_DETAIL_r{N}.json, where N
-is inferred as 1 + the highest committed BENCH_r{N}.json — the file the
-driver writes AFTER this run. Committing the stamped file each round
-makes cross-round per-query diffs possible (r7's judge could not
-recover r6's semantic_dedup_clusters timing at all).
+The detail JSON is written to bench_detail.json (latest) and to
+BENCH_DETAIL_r{N}.json, N being 1 + the highest committed BENCH_r{N}.json,
+so per-query history survives across rounds.
 
 Stdout contract: line 1 is the full detail JSON ({"metric", "value",
 "unit", "queries", "cold", "steady", "tiebreak", "anchor_*_sec",
 "sf"}), and the LAST line is a short summary JSON without the
-per-query dicts — tail-truncation-proof for log collectors.
+per-query dicts, which survives a log collector that keeps only a tail.
 
-Each query is timed to full materialization (count on the result — the
-result sets are small aggregates/pages, so count ≈ collect cost without
+Each query is timed to full materialization (count on the result: the
+result sets are small aggregates/pages, so count ~ collect cost without
 driver transfer skew).
 """
 
 from __future__ import annotations
 
-import gc
 import json
 import os
-import re
-import sys
 import time
-from pathlib import Path
 
-REPO = Path(__file__).resolve().parent
-if str(REPO) not in sys.path:
-    sys.path.insert(0, str(REPO))
+import harness
+from dieter___etl___monarchmoney_spark import registry
 
-from dieter___etl___monarchmoney_spark import pins, registry  # noqa: E402
-from dieter___etl___monarchmoney_spark.session import get_spark  # noqa: E402
-
-
-def _round_number() -> int:
-    """1 + the highest BENCH_r{N}.json already recorded by the driver —
-    i.e. the round THIS run belongs to."""
-    best = 0
-    for p in REPO.glob("BENCH_r*.json"):
-        m = re.fullmatch(r"BENCH_r(\d+)\.json", p.name)
-        if m:
-            best = max(best, int(m.group(1)))
-    return best + 1
-
-
-#: passes disagreeing by more than this trigger the tie-break third pass
-_TIEBREAK_RATIO = 1.5
-
-_MEM_UNIT = {"k": 1024, "m": 1024**2, "g": 1024**3, "t": 1024**4}
-
-
-def _mem_bytes(s: str) -> int:
-    """JVM memory string ('24g', '512m', bare bytes) -> bytes; 0 when
-    unparseable so a weird value warns rather than crashes the bench."""
-    m = re.fullmatch(r"(\d+)\s*([kmgt]?)b?", str(s).strip().lower())
-    if not m:
-        return 0
-    return int(m.group(1)) * _MEM_UNIT.get(m.group(2), 1)
-
-
-#: scans per timed anchor pass — the round-11 probe lengthening
-#: (VERDICT r10 #2): the old single-scan ~0.2 s probe's own noise
-#: (0.186-0.292 across the four r10 runs) exceeded the ±4% cross-run
-#: spread of the raw totals, so it could flag a slow box but not
-#: normalize. Three back-to-back scans put one pass at ~1.2 s on this
-#: box, deep enough that min-of-three passes reproduces within a few
-#: percent. NOTE: this changes the anchor DEFINITION — anchor_sec
-#: values from BENCH_DETAIL_r10 and earlier are ~0.2 s single-scan
-#: numbers and must not be compared 1:1 against r11+ anchors (the
-#: detail JSON carries anchor_scans_per_pass so the era is explicit).
+#: scans per timed anchor pass: one ~0.2 s scan's own noise exceeded the
+#: cross-run spread of the totals, so it could flag a slow box but not
+#: normalize; three back-to-back scans make one pass deep enough that
+#: min-of-three passes reproduces within a few percent. Anchors taken
+#: with a different scan count are not comparable 1:1, so the detail
+#: JSON records it as anchor_scans_per_pass.
 _ANCHOR_SCANS = 3
 
 
@@ -148,31 +89,8 @@ def _anchor_time(spark, sf_dir: str) -> float:
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    m = re.search(r"sf([0-9.]+)", sf_dir)
-    sf = float(m.group(1)) if m else -1.0
-
-    # full-registry runs on local[32] need the big heap to avoid GC
-    # stalls (r8 reproducibility audit); the harness owns this tuning,
-    # not get_spark()'s library default (ADVICE r8). setdefault so an
-    # explicit caller override still wins.
-    os.environ.setdefault("SPARK_DRIVER_MEMORY", "24g")
-    spark = get_spark(app_name="bench")
-    spark.sparkContext.setLogLevel("ERROR")
-    # the env setdefault above only takes effect if THIS process
-    # launches the JVM; a pre-existing session (getOrCreate reuse —
-    # bench imported into a live interpreter) silently keeps its
-    # original heap and the GC-stall mitigation does not apply. Make
-    # that visible in the run log (stderr — stdout stays JSON-only).
-    live_mem = spark.sparkContext.getConf().get("spark.driver.memory", "1g")
-    want_mem = os.environ["SPARK_DRIVER_MEMORY"]
-    if _mem_bytes(live_mem) < _mem_bytes(want_mem):
-        print(
-            f"WARNING: reused SparkSession has spark.driver.memory="
-            f"{live_mem} < intended {want_mem}; full-registry timings "
-            f"may carry GC-stall noise (ADVICE r9)",
-            file=sys.stderr,
-            flush=True,
-        )
+    sf = harness.sf_of(sf_dir)
+    spark = harness.session("bench")
     queries, _ = registry.load()
 
     anchor_first = _anchor_time(spark, sf_dir)
@@ -180,39 +98,23 @@ def main() -> None:
     cold: dict[str, float] = {}
     steady: dict[str, float] = {}
     tiebreak: dict[str, float] = {}
-    for name in sorted(queries):
-        t0 = time.perf_counter()
-        queries[name](spark, sf_dir).count()
-        cold[name] = round(time.perf_counter() - t0, 4)
-        t0 = time.perf_counter()
-        queries[name](spark, sf_dir).count()
-        steady[name] = round(time.perf_counter() - t0, 4)
-        lo, hi = sorted((cold[name], steady[name]))
-        if hi > _TIEBREAK_RATIO * lo:
-            # one pass was contention-poisoned: immediately (cache
-            # still warm) run a third so the headline min rests on at
-            # least two agreeing observations
-            t0 = time.perf_counter()
-            queries[name](spark, sf_dir).count()
-            tiebreak[name] = round(time.perf_counter() - t0, 4)
-        # free this query's pins now: the next registry call would, but anchor_last is not one
-        pins.release()
-        gc.collect()
+    timings: dict[str, float] = {}
+
+    def measure(name: str) -> None:
+        dts = harness.timed(lambda: queries[name](spark, sf_dir).count())
+        cold[name], steady[name] = dts[:2]
+        if len(dts) > 2:
+            tiebreak[name] = dts[2]
+        timings[name] = min(dts)
+
+    # each query's pins are released after it, so anchor_last (not a
+    # registry call) starts from an empty cache
+    harness.run_each(sorted(queries), measure)
 
     anchor_last = _anchor_time(spark, sf_dir)
 
-    # headline = min of all passes (additive-noise-robust; see module
-    # docstring), raw passes archived alongside
-    timings = {
-        n: min(cold[n], steady[n], tiebreak.get(n, float("inf"))) for n in steady
-    }
-
     total = round(sum(timings.values()), 4)
     cold_total = round(sum(cold.values()), 4)
-    # Per-query detail FIRST (plus sidecar files): the detail line is
-    # ~9 KB and a log collector that keeps only a stdout tail would
-    # truncate its head, so the LAST line is a short summary that
-    # survives any tail window and stays machine-parseable.
     detail = {
         "metric": "total_query_wall_time",
         "value": total,
@@ -230,9 +132,12 @@ def main() -> None:
     }
     print(json.dumps(detail))
     blob = json.dumps(detail, indent=1)
-    for fname in ("bench_detail.json", f"BENCH_DETAIL_r{_round_number():02d}.json"):
+    for fname in (
+        "bench_detail.json",
+        f"BENCH_DETAIL_r{harness.round_number():02d}.json",
+    ):
         try:
-            (REPO / fname).write_text(blob)
+            (harness.REPO / fname).write_text(blob)
         except OSError:
             pass
     print(

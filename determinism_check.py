@@ -3,19 +3,17 @@
 contrasting PHYSICAL configurations and assert the driver-normalized
 result values are identical.
 
-Why this exists (round 12): the round-11 judge finding against
-operators/rank.py was an instance of a general class — a query whose
-RESULT depends on the physical plan (partition count, shuffle-fetch
-merge order, exchange/broadcast reuse, file-split boundaries) is
-correct at the checked layout and silently wrong at another, i.e.
-exactly the failure mode a 1000-executor 100 TB deployment would hit
-and sf0.01 oracle checks cannot. The oracle gate proves Spark ==
-DuckDB at ONE layout; this harness proves Spark == Spark across
-layouts, using the SAME normalization the oracle compare uses (sorted
-columns, order-insensitive rows, floats rounded exactly like
-tests/oracle_utils._norm_cell) so its sensitivity matches the
-driver's value hash — anything that flips here can flip the driver's
-hash on a re-partitioned rerun.
+Why this exists: a query whose RESULT depends on the physical plan
+(partition count, shuffle-fetch merge order, exchange/broadcast reuse,
+file-split boundaries) is correct at the checked layout and silently
+wrong at another, i.e. exactly the failure mode a 1000-executor 100 TB
+deployment would hit and sf0.01 oracle checks cannot. The oracle gate
+proves Spark == DuckDB at ONE layout; this audit proves Spark == Spark
+across layouts, using the SAME normalization the oracle compare uses
+(sorted columns, order-insensitive rows, floats rounded exactly like
+tests/oracle_utils._norm_cell) so its sensitivity matches the driver's
+value hash: anything that flips here can flip the driver's hash on a
+re-partitioned rerun.
 
 Config A approximates the driver (shuffle.partitions=32, AQE on,
 exchange reuse on, default file splits). Config B is adversarial on
@@ -32,38 +30,32 @@ one session; pass A runs the full registry first, then the confs flip
 and pass B reruns it (flipping per-query would let pass-A plan caches
 leak into pass B through reused DataFrames).
 
+Usage: python determinism_check.py [--queries a,b], reading the dataset
+named by $SPARK_GRAFT_SF_DIR (default: the sf0.01 test set).
+
 Stdout: one JSON line {"metric": "layout_determinism", "queries_total",
 "mismatches": [names...], "sf"}; per-query detail lands in
-DETERMINISM_r{N}.json (round inference shared with bench.py). A
-subset run (SPARK_GRAFT_ONLY) auto-suffixes its output file with
-"_subset" unless SPARK_GRAFT_DETERMINISM_OUT names one explicitly, so
-it can never clobber the committed full-registry report. Exit status
-is non-zero when any query mismatches or errors, so scripted gates
+DETERMINISM_r{N}.json (`harness.round_number`). A subset run
+(`--queries`) writes DETERMINISM_r{N}_subset.json instead, so it can
+never clobber the committed full-registry report. Exit status is
+non-zero when any query mismatches or errors, so scripted gates
 (`python determinism_check.py && ...`) actually gate.
 """
 
 from __future__ import annotations
 
-import gc
+import argparse
 import hashlib
 import json
 import os
-import re
 import sys
 import time
-from pathlib import Path
 
-REPO = Path(__file__).resolve().parent
-for p in (str(REPO), str(REPO / "tests")):
-    if p not in sys.path:
-        sys.path.insert(0, p)
+import harness
+from dieter___etl___monarchmoney_spark import registry
 
+sys.path.insert(0, str(harness.REPO / "tests"))
 from oracle_utils import normalize  # noqa: E402  (tests/oracle_utils.py)
-
-from bench import _round_number  # noqa: E402  — shared round inference
-
-from dieter___etl___monarchmoney_spark import pins, registry  # noqa: E402
-from dieter___etl___monarchmoney_spark.session import get_spark  # noqa: E402
 
 #: every key is runtime-settable; values checked against a live session
 _CONF_A = {
@@ -96,13 +88,13 @@ def _value_hash(pdf) -> tuple[int, str]:
     return len(norm), hashlib.md5(payload).hexdigest()
 
 
-def _run_pass(spark, queries, sf_dir: str, label: str) -> dict[str, tuple]:
+def _run_pass(spark, queries, names, sf_dir: str, label: str) -> dict[str, tuple]:
     out: dict[str, tuple] = {}
-    for name in sorted(queries):
+
+    def check(name: str) -> None:
         t0 = time.perf_counter()
         try:
-            pdf = queries[name](spark, sf_dir).toPandas()
-            out[name] = _value_hash(pdf)
+            out[name] = _value_hash(queries[name](spark, sf_dir).toPandas())
         except Exception as exc:  # noqa: BLE001 — record, keep auditing
             out[name] = (-1, f"ERROR: {type(exc).__name__}: {exc}")
         print(
@@ -110,39 +102,28 @@ def _run_pass(spark, queries, sf_dir: str, label: str) -> dict[str, tuple]:
             file=sys.stderr,
             flush=True,
         )
-        pins.release()
-        gc.collect()
+
+    harness.run_each(names, check)
     return out
 
 
 def main() -> None:
+    ap = argparse.ArgumentParser()
+    ap.add_argument(
+        "--queries", default="", help="comma-separated registry subset to audit"
+    )
+    args = ap.parse_args()
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-    m = re.search(r"sf([0-9.]+)", sf_dir)
-    sf = float(m.group(1)) if m else -1.0
-
-    os.environ.setdefault("SPARK_DRIVER_MEMORY", "24g")
-    spark = get_spark(app_name="determinism_check")
-    spark.sparkContext.setLogLevel("ERROR")
+    sf = harness.sf_of(sf_dir)
     queries, _ = registry.load()
-    only = os.environ.get("SPARK_GRAFT_ONLY")
-    if only:
-        keep = {s.strip() for s in only.split(",") if s.strip()}
-        unknown = sorted(keep - set(queries))
-        if unknown:
-            # a typo must not yield a green empty/partial audit
-            print(
-                f"ERROR: SPARK_GRAFT_ONLY names not in the registry: "
-                f"{unknown}",
-                file=sys.stderr,
-            )
-            sys.exit(2)
-        queries = {n: q for n, q in queries.items() if n in keep}
+    names = sorted(
+        harness.select(queries, args.queries.split(",")) if args.queries else queries
+    )
+    spark = harness.session("determinism_check")
 
     # capture the session's EFFECTIVE conf values up front and restore
-    # them unconditionally — the same discipline whose absence in the
-    # test-side conf probe leaked exchange.reuse=false suite-wide
-    # (SCALE.md round-12 adjudication); "restore _CONF_A" would leave
-    # a getOrCreate-shared session at 10 MiB broadcast / 32 shuffle
+    # them unconditionally: "restore _CONF_A" would leave a
+    # getOrCreate-shared session at 64 MiB broadcast / 32 shuffle
     # partitions instead of whatever the caller configured
     originals: dict[str, str | None] = {}
     for k in _CONF_A:
@@ -153,10 +134,10 @@ def main() -> None:
     try:
         for k, v in _CONF_A.items():
             spark.conf.set(k, v)
-        pass_a = _run_pass(spark, queries, sf_dir, "A")
+        pass_a = _run_pass(spark, queries, names, sf_dir, "A")
         for k, v in _CONF_B.items():
             spark.conf.set(k, v)
-        pass_b = _run_pass(spark, queries, sf_dir, "B")
+        pass_b = _run_pass(spark, queries, names, sf_dir, "B")
     finally:
         for k, v in originals.items():
             if v is None:
@@ -167,7 +148,7 @@ def main() -> None:
     detail: dict[str, dict] = {}
     mismatches: list[str] = []
     errors: list[str] = []
-    for name in sorted(queries):
+    for name in names:
         ra, ha = pass_a[name]
         rb, hb = pass_b[name]
         # an ERROR result can never count as a match — two passes
@@ -187,10 +168,6 @@ def main() -> None:
         elif not ok:
             mismatches.append(name)
 
-    rnd = _round_number()
-    # subset / re-runs must not clobber the committed full-registry
-    # report: SPARK_GRAFT_DETERMINISM_OUT overrides the output path
-    out_override = os.environ.get("SPARK_GRAFT_DETERMINISM_OUT")
     report = {
         "metric": "layout_determinism",
         "sf": sf,
@@ -203,13 +180,9 @@ def main() -> None:
         "errors": errors,
         "queries": detail,
     }
-    if out_override:
-        out_path = Path(out_override)
-    elif only:
-        # never let a subset run clobber the committed full report
-        out_path = REPO / f"DETERMINISM_r{rnd:02d}_subset.json"
-    else:
-        out_path = REPO / f"DETERMINISM_r{rnd:02d}.json"
+    suffix = "_subset" if args.queries else ""
+    rnd = harness.round_number()
+    out_path = harness.REPO / f"DETERMINISM_r{rnd:02d}{suffix}.json"
     out_path.write_text(json.dumps(report, indent=1, sort_keys=True) + "\n")
     summary = {
         "metric": "layout_determinism",

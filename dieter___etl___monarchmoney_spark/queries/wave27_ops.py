@@ -169,16 +169,20 @@ _KCORE_ROUNDS = 4
 
 def _kcore_round_sql(i: int) -> str:
     """One unrolled peel: degrees of e{i-1}, keep nodes with deg >= k,
-    keep edges with both endpoints kept."""
+    keep edges with both endpoints kept. Every round's CTEs are
+    MATERIALIZED: DuckDB inlines a plain CTE at each reference, and a
+    round reads the previous round's edges five times (once directly,
+    twice through each k{i} lookup), so inlined rounds multiply the
+    work instead of adding to it."""
     return f"""
-d{i} AS (
+d{i} AS MATERIALIZED (
     SELECT node, COUNT(*) AS c FROM (
         SELECT part_a AS node FROM e{i - 1}
         UNION ALL SELECT part_b FROM e{i - 1}
     ) GROUP BY node
 ),
-k{i} AS (SELECT node FROM d{i} WHERE c >= {_KCORE_K}),
-e{i} AS (
+k{i} AS MATERIALIZED (SELECT node FROM d{i} WHERE c >= {_KCORE_K}),
+e{i} AS MATERIALIZED (
     SELECT part_a, part_b FROM e{i - 1}
     WHERE part_a IN (SELECT node FROM k{i})
       AND part_b IN (SELECT node FROM k{i})
@@ -187,7 +191,7 @@ e{i} AS (
 
 _KCORE_SQL = (
     _COPURCHASE_EDGES_SQL
-    + ",\ne0 AS (SELECT part_a, part_b FROM edges),"
+    + ",\ne0 AS MATERIALIZED (SELECT part_a, part_b FROM edges),"
     + ",".join(_kcore_round_sql(i) for i in range(1, _KCORE_ROUNDS + 1))
     + f"""
 SELECT node AS part_id, CAST(COUNT(*) AS BIGINT) AS core_degree

@@ -58,15 +58,14 @@ def get_spark(
         # Python Data Source predicate pushdown (paged_json's
         # filterPushdown=true reader) — off upstream by default
         .config("spark.sql.python.filterPushdown.enabled", "true")
-        # Library default stays MODEST (ADVICE r8): a 24g Xmx default
-        # would OOM-kill get_spark() users on smaller hosts. The
-        # full-registry bench/scale harnesses — where an 8g heap under
-        # 32 concurrent tasks GC-stalled multi-second pauses onto
-        # random queries (the r8 reproducibility audit) — export
-        # SPARK_DRIVER_MEMORY=24g themselves (bench.py /
-        # scale_check.py); that tuning belongs to the harness, not the
-        # shared session factory. Cluster deployments size
-        # driver/executor memory explicitly.
+        # Library default stays MODEST: a 24g Xmx default would
+        # OOM-kill get_spark() users on smaller hosts. The
+        # full-registry harness scripts — where an 8g heap under 32
+        # concurrent tasks GC-stalled multi-second pauses onto random
+        # queries — get SPARK_DRIVER_MEMORY=24g from harness.session();
+        # that tuning belongs to the harness, not the shared session
+        # factory. Cluster deployments size driver/executor memory
+        # explicitly.
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
         .config("spark.ui.enabled", "false")
     )

@@ -17,18 +17,15 @@ Prints one JSON line per (scale, query) and a final summary of the
 from __future__ import annotations
 
 import argparse
-import gc
 import json
-import os
 import shutil
 import tempfile
-import time
 from pathlib import Path
 
 from pyspark.sql import functions as F
 
-from dieter___etl___monarchmoney_spark import pins, registry
-from dieter___etl___monarchmoney_spark.session import get_spark
+import harness
+from dieter___etl___monarchmoney_spark import registry
 
 #: the operators whose scale story SCALE.md stakes out
 QUERIES = (
@@ -317,6 +314,22 @@ def build_scaled_docs(spark, sf_dir: str, scale: int, out_dir: str) -> None:
         ).parquet(f"{out_dir}/{table}.parquet")
 
 
+def _measure(queries, spark, sf_dir: str, scale: int, name: str) -> float:
+    """Min-of-passes wall time of one sweep query (`harness.timed`);
+    prints the query's JSON line."""
+    run = SWEEP_OVERRIDES.get(name, lambda q, s, d: q[name](s, d))
+    rows: list[int] = []
+    dts = harness.timed(lambda: rows.append(run(queries, spark, sf_dir).count()))
+    print(
+        json.dumps(
+            {"scale": scale, "query": name, "sec": min(dts), "passes": dts,
+             "rows": rows[-1]}
+        ),
+        flush=True,
+    )
+    return min(dts)
+
+
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--scales", default="1,2,4")
@@ -330,81 +343,35 @@ def main() -> None:
     )
     args = ap.parse_args()
     scales = [int(s) for s in args.scales.split(",")]
-
-    # same big-heap tuning as bench.py (GC stalls under 32 local
-    # threads) — harness-owned, not a get_spark() default (ADVICE r8)
-    os.environ.setdefault("SPARK_DRIVER_MEMORY", "24g")
+    surface = QUERIES + EVENT_QUERIES + EMBED_QUERIES + LINEITEM_QUERIES
+    names = (
+        harness.select(surface, args.queries.split(",")) if args.queries else surface
+    )
     queries, _ = registry.load()
 
-    all_queries = QUERIES + EVENT_QUERIES + EMBED_QUERIES + LINEITEM_QUERIES
-    if args.queries:
-        wanted = [q.strip() for q in args.queries.split(",") if q.strip()]
-        unknown = [q for q in wanted if q not in all_queries]
-        if unknown:
-            raise SystemExit(f"not on the sweep surface: {unknown}")
-        all_queries = tuple(wanted)
-    results: dict[str, dict[int, float]] = {q: {} for q in all_queries}
+    results: dict[str, dict[int, float]] = {q: {} for q in names}
     root = Path(tempfile.mkdtemp(prefix="scale_check_"))
     try:
         for scale in scales:
-            # FRESH session per scale (round 9): ~60 queries back to
-            # back accumulate localCheckpoint blocks and shuffle files
-            # in one JVM; by the tail of a 3-scale run the storage
-            # pressure poisoned BOTH passes of whichever heavy query
-            # ran late (pca_top_component measured a 10x "growth" that
-            # a clean session reproduces at ~1.8). Each scale now
-            # starts from an empty block manager, so per-scale numbers
-            # are comparable by construction.
-            spark = get_spark(app_name=f"scale-check-x{scale}")
-            # try/finally (ADVICE r9): a failure in build_scaled_docs
-            # or any query must still stop this scale's session —
-            # otherwise the next scale's get_spark() getOrCreate-reuses
-            # the still-live contaminated JVM and the fresh-session-
-            # per-scale guarantee above silently evaporates.
+            # FRESH session per scale: ~60 queries back to back
+            # accumulate checkpoint blocks and shuffle files in one JVM,
+            # and by the tail of a multi-scale run the storage pressure
+            # poisoned both passes of whichever heavy query ran late
+            # (pca_top_component measured a 10x "growth" that a clean
+            # session reproduces at ~1.8). An empty block manager per
+            # scale keeps per-scale numbers comparable.
+            spark = harness.session(f"scale-check-x{scale}")
+            # a failure in build_scaled_docs or any query must still stop
+            # this session, or the next scale's getOrCreate reuses the
+            # contaminated JVM
             try:
-                spark.sparkContext.setLogLevel("ERROR")
                 out = str(root / f"x{scale}")
                 build_scaled_docs(spark, args.sf, scale, out)
-                for name in all_queries:
-                    # min of two timed passes: box stalls (GC, THP
-                    # compaction) land multi-second hits on whichever query
-                    # is running — additive noise, so the minimum is the
-                    # robust growth measurement (same estimator bench.py
-                    # uses; single-pass 4x ratios swung 2-25x run to run).
-                    # Round 9: same tie-break as bench.py — when the two
-                    # passes disagree >1.5x at least one was poisoned, so a
-                    # third runs immediately; an r9 sweep measured the
-                    # paged-source ratio at 5.3 from exactly one such pair
-                    # (solo re-measurement: 2.27)
-                    # `_n=name` binds eagerly (ADVICE r10): a late-bound
-                    # `name` would silently time the wrong query if the
-                    # callables were ever collected before being run
-                    run = SWEEP_OVERRIDES.get(
-                        name, lambda q, s, d, _n=name: q[_n](s, d)
-                    )
-                    dts = []
-                    for _ in range(2):
-                        t0 = time.time()
-                        n = run(queries, spark, out).count()
-                        dts.append(round(time.time() - t0, 2))
-                    if max(dts) > 1.5 * min(dts):
-                        t0 = time.time()
-                        n = run(queries, spark, out).count()
-                        dts.append(round(time.time() - t0, 2))
-                    dt = min(dts)
-                    results[name][scale] = dt
-                    print(
-                        json.dumps(
-                            {"scale": scale, "query": name, "sec": dt,
-                             "passes": dts, "rows": n}
-                        ),
-                        flush=True,
-                    )
-                    # release the query's pins and drop its frame refs so
-                    # the ContextCleaner frees the rest before the next
-                    # query is timed (see fresh-session note above)
-                    pins.release()
-                    gc.collect()
+
+                def sweep(name: str) -> None:
+                    results[name][scale] = _measure(queries, spark, out, scale, name)
+
+                harness.run_each(names, sweep)
             finally:
                 spark.stop()
         lo, hi = min(scales), max(scales)
@@ -413,7 +380,7 @@ def main() -> None:
                 "ratio": round(results[q][hi] / max(results[q][lo], 0.01), 2),
                 "ideal": float(hi // lo),
             }
-            for q in all_queries
+            for q in names
         }
         print(json.dumps({"growth_ratios": summary}), flush=True)
     finally:
