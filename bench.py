@@ -24,8 +24,10 @@ degradation signal is the opposite (anchor_last >> anchor_first:
 eviction, thermal). The headline anchor is the min of the two.
 
 The detail JSON is written to bench_detail.json (latest) and to
-BENCH_DETAIL_r{N}.json, N being 1 + the highest committed BENCH_r{N}.json,
-so per-query history survives across rounds.
+BENCH_DETAIL_r{N}.json, N being 1 + the highest round among the
+round-numbered files in the repo root (`harness.round_number`), so
+per-query history survives across rounds and no recorded file is
+overwritten.
 
 Stdout contract: line 1 is the full detail JSON ({"metric", "value",
 "unit", "queries", "cold", "steady", "tiebreak", "anchor_*_sec",

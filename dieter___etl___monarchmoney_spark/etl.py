@@ -23,8 +23,6 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from dieter___etl___monarchmoney_spark.operators.budgets import budget_pipeline
-from dieter___etl___monarchmoney_spark.pins import scope
 from dieter___etl___monarchmoney_spark.sources.parquet import load_table
 from dieter___etl___monarchmoney_spark.sources.sinks import (
     read_sink,
@@ -63,13 +61,14 @@ def accounts_stage(spark: SparkSession, sf_dir: str, out_dir: str) -> DataFrame:
 
 def budgets_stage(spark: SparkSession, sf_dir: str, out_dir: str) -> int:
     """§3.1 step 4: run the budget pipeline for the data's month range
-    and overwrite the budgets sink."""
+    and overwrite the budgets sink; returns the sink's row count, read
+    from the written parquet footers rather than by running the pipeline
+    again."""
     from dieter___etl___monarchmoney_spark.queries.budget import q_budget_pipeline_full
 
-    with scope():
-        budgets = q_budget_pipeline_full(spark, sf_dir)
-        write_table(budgets, os.path.join(out_dir, "budgets"))
-        return budgets.count()
+    path = os.path.join(out_dir, "budgets")
+    write_table(q_budget_pipeline_full(spark, sf_dir), path)
+    return read_sink(spark, path).count()
 
 
 def transactions_stage(

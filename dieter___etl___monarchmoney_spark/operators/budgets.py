@@ -8,8 +8,9 @@ category group's type, and computing a per-category cumulative actual.
 
 Spark shape: explode the monthly array (J3), broadcast-join the category
 and group dims (J2), window for cumulative/rollover (W1/W2), synthesize
-sentinel rows as shaped sub-frames unioned in (F17), enforce the column
-contract and (CategoryGroupName, CategoryName, Month) ordering (O2/O3).
+sentinel rows with one grouping-sets aggregate unioned in (F17), enforce
+the column contract and (CategoryGroupName, CategoryName, Month)
+ordering (O2/O3).
 
 Invariants carried from .DevContext/Budget_Specs.md:
 - ``DebitCreditFlag = 'Credit' ⇔ group type = 'income'`` (:92-109);
@@ -30,7 +31,6 @@ from dieter___etl___monarchmoney_spark.operators.windows import (
     remaining_amount,
     running_total,
 )
-from dieter___etl___monarchmoney_spark.pins import pin
 from dieter___etl___monarchmoney_spark.plans.contract import apply_column_contract
 
 #: budget sheet contract (_budget_headers_rows MonarchMoneyMain-v3.py:878-914)
@@ -101,33 +101,48 @@ def budget_rows(per_category_month: DataFrame) -> DataFrame:
     return df.withColumn("GroupOrder", F.lit(GROUP_ORDER_CATEGORY))
 
 
-def _rollup_rows(df: DataFrame, name_col, group_order: int, label: str | None) -> DataFrame:
-    """Shared shape for group-level and Totals sentinel rows (F17):
-    aggregate per month (× group when group-level), exact-decimal sums."""
+def _sentinel_rows(cat: DataFrame) -> DataFrame:
+    """Group-level (998) and per-month Totals (999) sentinel rows (F17)
+    from ONE grouping-sets aggregate over the category rows, keyed on
+    ``grouping(CategoryGroupName)``: the (Month, group) set gives the
+    group rows, the (Month) set the Totals rows. Exact-decimal sums."""
     def msum(c):
         return F.sum(F.col(c).cast(MONEY_DECIMAL)).cast("double")
 
-    keys = [F.col("Month")] + ([F.col("CategoryGroupName"), F.col("GroupType")] if label is None else [])
-    agg = df.groupBy(*keys).agg(
-        msum("PlannedAmount").alias("PlannedAmount"),
-        msum("ActualAmount").alias("ActualAmount"),
-        msum("RolloverAmount").alias("RolloverAmount"),
-        msum("RemainingAmount").alias("RemainingAmount"),
+    agg = cat.groupingSets(
+        [["Month", "CategoryGroupName", "GroupType"], ["Month"]],
+        "Month",
+        "CategoryGroupName",
+        "GroupType",
+    ).agg(
+        (F.grouping("CategoryGroupName") == 1).alias("is_total"),
+        *[
+            msum(c).alias(c)
+            for c in ("PlannedAmount", "ActualAmount", "RolloverAmount", "RemainingAmount")
+        ],
     )
-    if label is not None:
-        agg = agg.withColumn("CategoryGroupName", F.lit(label)).withColumn(
-            "GroupType", F.lit(None).cast("string")
-        )
-    return (
-        agg.withColumn("CategoryName", name_col)
-        .withColumn(
-            "DebitCreditFlag",
-            F.when(F.col("GroupType") == "income", "Credit").otherwise("Debit"),
-        )
-        .withColumn("GroupOrder", F.lit(group_order))
+    is_total = F.col("is_total")
+    return agg.select(
+        "Month",
+        F.when(is_total, F.lit("Totals")).otherwise(F.col("CategoryGroupName")).alias(
+            "CategoryGroupName"
+        ),
+        F.lit("").alias("CategoryName"),
+        # NULL on Totals rows: the grouping set drops GroupType
+        "GroupType",
+        F.when(F.col("GroupType") == "income", "Credit").otherwise("Debit").alias(
+            "DebitCreditFlag"
+        ),
+        "PlannedAmount",
+        "ActualAmount",
+        "RolloverAmount",
+        "RemainingAmount",
         # sentinel rows carry no running total (the reference leaves the
         # cell blank on group/total rows)
-        .withColumn("CumulativeActualAmount", F.lit(None).cast("double"))
+        F.lit(None).cast("double").alias("CumulativeActualAmount"),
+        F.when(is_total, F.lit(GROUP_ORDER_TOTAL))
+        .otherwise(F.lit(GROUP_ORDER_GROUP))
+        .alias("GroupOrder"),
     )
 
 
@@ -136,17 +151,11 @@ def budget_pipeline(per_category_month: DataFrame) -> DataFrame:
     998) + per-month Totals rows (999), contract-ordered and sorted by
     (CategoryGroupName, CategoryName, Month) with sentinels last
     (MonarchMoneyMain-v3.py:704-735, 793-869, 907-911)."""
-    # cat feeds three output branches; persist AND materialize eagerly —
-    # a lazy persist lets all three branches race an unpopulated cache
-    # within the single output action and re-run the window pipeline
-    cat = pin(budget_rows(per_category_month))
-    cat.count()
-    grp = _rollup_rows(cat, F.lit(""), GROUP_ORDER_GROUP, None)
-    tot = _rollup_rows(cat, F.lit(""), GROUP_ORDER_TOTAL, "Totals")
-    merged = (
-        cat.select(*BUDGET_PRIORITY)
-        .unionByName(grp.select(*BUDGET_PRIORITY), allowMissingColumns=False)
-        .unionByName(tot.select(*BUDGET_PRIORITY), allowMissingColumns=False)
-    )
+    # both branches read the category rows; nothing is cached: the
+    # aggregate branch needs no window column, so it plans down to the
+    # same category-month exchange the window branch reads, and AQE
+    # reuses that exchange, so the input is read once
+    cat = budget_rows(per_category_month)
+    merged = cat.select(*BUDGET_PRIORITY).unionByName(_sentinel_rows(cat))
     merged = apply_column_contract(merged, BUDGET_PRIORITY)
     return merged.orderBy("GroupOrder", "CategoryGroupName", "CategoryName", "Month")

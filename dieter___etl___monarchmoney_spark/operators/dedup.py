@@ -21,7 +21,8 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from dieter___etl___monarchmoney_spark.functions.text import fingerprint_md5, tokens
-from dieter___etl___monarchmoney_spark.pins import pin, scope
+from dieter___etl___monarchmoney_spark.pins import checkpoint, pin, scope
+from dieter___etl___monarchmoney_spark.sources.local import local_frame
 
 #: MinHash parameters — k signatures in b bands of r rows (k = b·r).
 #: b=4, r=2: catches Jaccard ≳ 0.6 with good probability at tiny k —
@@ -444,7 +445,8 @@ def neardup_clusters(
     all_verts = vertices.select(F.col(id_col).alias("v"))
     # the edge frame (and the distributed path's vertex seed) are read
     # by every round and released on return: the labels the result
-    # reads are driver literals or a localCheckpoint
+    # reads are a driver-built frame or a checkpoint recorded outside
+    # this scope
     with scope():
         edges = pin(
             pairs.select(F.col("doc_a").alias("v"), F.col("doc_b").alias("u")).unionByName(
@@ -484,17 +486,13 @@ def _union_find_clusters(edge_rows: list, all_verts: DataFrame, id_col: str) -> 
                 ra, rb = rb, ra
             parent[rb] = ra
     members = sorted({r["v"] for r in edge_rows})
-    rows = [(v, find(v)) for v in members]
-    lbl = spark.createDataFrame(rows, ["v", "cluster_id"]) if rows else None
-    singletons = all_verts.join(
-        spark.createDataFrame([(v,) for v, _ in rows], ["v"])
-        if rows
-        else all_verts.limit(0),
-        "v",
-        "left_anti",
-    ).select("v", F.col("v").alias("cluster_id"))
-    out = singletons if lbl is None else lbl.unionByName(singletons)
-    return out.select(F.col("v").alias(id_col), "cluster_id")
+    if not members:
+        return all_verts.select(F.col("v").alias(id_col), F.col("v").alias("cluster_id"))
+    lbl = local_frame(spark, {"v": members, "cluster_id": [find(v) for v in members]})
+    singletons = all_verts.join(lbl.select("v"), "v", "left_anti").select(
+        "v", F.col("v").alias("cluster_id")
+    )
+    return lbl.unionByName(singletons).select(F.col("v").alias(id_col), "cluster_id")
 
 
 def _propagate_min_labels(edges: DataFrame, max_iter: int) -> DataFrame:
@@ -532,7 +530,9 @@ def _propagate_min_labels(edges: DataFrame, max_iter: int) -> DataFrame:
         # (even if the first hop moved labels) — halves the number of
         # driver round-trips for the tiny-diameter graphs dedup produces
         new_labels = _hop(_hop(labels, with_flag=False), with_flag=True)
-        new_labels = new_labels.localCheckpoint()
+        # recorded outside neardup_clusters' edge scope: the last one
+        # is the labels the returned frame reads
+        new_labels = checkpoint(new_labels, outer=True)
         changed = new_labels.agg(F.sum("chg")).collect()[0][0]
         labels = new_labels.drop("chg")
         if not changed:

@@ -46,8 +46,9 @@ _unscoped: list[_Pin] = []
 _scopes: list[list[_Pin]] = []
 
 
-def _record(sc: SparkContext, free: Callable[[], object]) -> None:
-    (_scopes[-1] if _scopes else _unscoped).append(_Pin(sc, free))
+def _record(sc: SparkContext, free: Callable[[], object], outer: bool = False) -> None:
+    levels = [_unscoped, *_scopes]
+    levels[-2 if outer and _scopes else -1].append(_Pin(sc, free))
 
 
 def pin(df: DataFrame) -> DataFrame:
@@ -61,12 +62,16 @@ def pin(df: DataFrame) -> DataFrame:
     return df
 
 
-def checkpoint(df: DataFrame) -> DataFrame:
+def checkpoint(df: DataFrame, *, outer: bool = False) -> DataFrame:
     """An eager ``localCheckpoint`` of ``df``, recorded for release by
     its RDD id. Every consumer reads the same blocks and the lineage is
     gone, so nothing is ever silently recomputed: reading it after its
     release fails loudly. Raises at once if the checkpointed RDD cannot
-    be found, rather than leaking it."""
+    be found, rather than leaking it.
+
+    ``outer=True`` records it one level out (in the enclosing scope, or
+    for :func:`release`), so it outlives the innermost scope: for a loop
+    that runs inside a scope and returns its last checkpoint."""
     cp = df.localCheckpoint(eager=True)
     sc = cp.sparkSession.sparkContext
     # the eager checkpoint leaves a LogicalRDD over the checkpointed RDD
@@ -80,7 +85,7 @@ def checkpoint(df: DataFrame) -> DataFrame:
         if rdd is not None:
             rdd.unpersist(False)
 
-    _record(sc, free)
+    _record(sc, free, outer)
     return cp
 
 

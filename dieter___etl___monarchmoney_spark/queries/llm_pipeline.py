@@ -51,7 +51,7 @@ from dieter___etl___monarchmoney_spark.operators.similarity import (
     embedding_neardup_pairs,
     lsh_ann_topk,
 )
-from dieter___etl___monarchmoney_spark.pins import pin, scope
+from dieter___etl___monarchmoney_spark.pins import checkpoint, pin, scope
 from dieter___etl___monarchmoney_spark.registry import query
 from dieter___etl___monarchmoney_spark.sources.parquet import load_table
 
@@ -1227,9 +1227,11 @@ def q_pca_top_component(spark: SparkSession, sf_dir: str) -> DataFrame:
     # multiplicatively and the analyzer alone took ~14 s at 3
     # iterations; checkpointing the 1-row state keeps every plan
     # shallow (measured: the whole query drops to ~2 s at sf0.1).
-    state = cm_row.withColumn(
-        "v", F.expr(f"transform(sequence(1, {d}), i -> cast(0.125 as double))")
-    ).localCheckpoint()
+    state = checkpoint(
+        cm_row.withColumn(
+            "v", F.expr(f"transform(sequence(1, {d}), i -> cast(0.125 as double))")
+        )
+    )
     for _ in range(_PCA_ITERS):
         state = state.withColumn(
             "w",
@@ -1256,7 +1258,8 @@ def q_pca_top_component(spark: SparkSession, sf_dir: str) -> DataFrame:
                 as double))
                 """
             ),
-        ).withColumn("v", F.expr("transform(w, x -> x / nrm)")).localCheckpoint()
+        ).withColumn("v", F.expr("transform(w, x -> x / nrm)"))
+        state = checkpoint(state)
     return (
         state.select(F.posexplode_outer("v").alias("k0", "vj"), F.col("nrm"))
         .select(

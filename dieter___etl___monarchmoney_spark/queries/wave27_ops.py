@@ -22,6 +22,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from dieter___etl___monarchmoney_spark.pins import checkpoint
 from dieter___etl___monarchmoney_spark.registry import query
 from dieter___etl___monarchmoney_spark.sources.parquet import load_table
 
@@ -242,17 +243,16 @@ def q_copurchase_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     count, and a node peeled to degree 0 is killed (0 < k) next round
     exactly like its vanished oracle row. The oracle is the identical
     peel unrolled as chained CTEs.""".format(k=_KCORE_K, r=_KCORE_ROUNDS)
-    edges = _copurchase_edges(spark, sf_dir).localCheckpoint(eager=False)
-    deg = (
+    edges = checkpoint(_copurchase_edges(spark, sf_dir))
+    deg = checkpoint(
         edges.select(F.col("part_a").alias("node"))
         .unionAll(edges.select(F.col("part_b").alias("node")))
         .groupBy("node")
         .agg(F.count(F.lit(1)).alias("c"))
-        .localCheckpoint(eager=False)
     )
     for _ in range(_KCORE_ROUNDS):
         kill = deg.filter(F.col("c") < _KCORE_K).select("node")
-        marked = (
+        marked = checkpoint(
             edges.join(
                 kill.select(F.col("node").alias("part_a"), F.lit(True).alias("a_rm")),
                 "part_a",
@@ -263,7 +263,6 @@ def q_copurchase_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "part_b",
                 "left",
             )
-            .localCheckpoint(eager=False)
         )
         edges = marked.filter(
             F.col("a_rm").isNull() & F.col("b_rm").isNull()
@@ -274,7 +273,7 @@ def q_copurchase_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
             .groupBy("node")
             .agg(F.count(F.lit(1)).alias("d"))
         )
-        deg = (
+        deg = checkpoint(
             # survivors = NOT-killed; node is unique in deg so the
             # filter is the anti-join against kill, minus the join
             deg.filter(F.col("c") >= _KCORE_K)
@@ -283,7 +282,6 @@ def q_copurchase_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "node",
                 (F.col("c") - F.coalesce(F.col("d"), F.lit(0))).alias("c"),
             )
-            .localCheckpoint(eager=False)
         )
     return (
         edges.select(F.col("part_a").alias("part_id"))

@@ -22,6 +22,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from dieter___etl___monarchmoney_spark.pins import pin, scope
+from dieter___etl___monarchmoney_spark.sources.local import local_frame
 
 WATERMARK_KEY = "last_run_utc"
 
@@ -57,9 +58,7 @@ def read_watermark(spark: SparkSession, control_path: str) -> dt.datetime | None
 def write_watermark(spark: SparkSession, control_path: str, ts: dt.datetime) -> None:
     """T3 — advance the watermark post-commit
     (MonarchMoneyMain-v3.py:1336-1337)."""
-    spark.createDataFrame(
-        [(WATERMARK_KEY, ts.isoformat())], ["key", "value"]
-    ).coalesce(1).write.mode("overwrite").parquet(control_path)
+    _write_control(spark, control_path, ts.isoformat())
 
 
 def derive_window(
@@ -234,6 +233,13 @@ def run_incremental_load(
 def reset_control(spark: SparkSession, control_path: str) -> None:
     """K6 — clear_and_reset.py analog: blank the watermark so the next
     run backfills."""
-    spark.createDataFrame([(WATERMARK_KEY, "")], ["key", "value"]).coalesce(
+    _write_control(spark, control_path, "")
+
+
+def _write_control(spark: SparkSession, control_path: str, value: str) -> None:
+    """Overwrite the control table with the one watermark row, as one
+    file. The row is a JVM-local frame, so the write starts no Python
+    worker."""
+    local_frame(spark, {"key": [WATERMARK_KEY], "value": [value]}).coalesce(
         1
     ).write.mode("overwrite").parquet(control_path)

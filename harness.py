@@ -116,15 +116,17 @@ def run_each(names: Iterable[str], body: Callable[[str], object]) -> None:
         gc.collect()
 
 
-def round_number() -> int:
-    """1 + the highest BENCH_r{N}.json recorded so far, i.e. the round
-    this run belongs to."""
-    best = 0
-    for p in REPO.glob("BENCH_r*.json"):
-        m = re.fullmatch(r"BENCH_r(\d+)\.json", p.name)
-        if m:
-            best = max(best, int(m.group(1)))
-    return best + 1
+#: the round-numbered files: BENCH_r{N}.json results and what the
+#: harness scripts write (BENCH_DETAIL_r{N}.json, DETERMINISM_r{N}.json),
+#: with or without a suffix such as ``_subset``
+_ROUND_FILE = re.compile(r"(?:BENCH|BENCH_DETAIL|DETERMINISM)_r(\d+)(?:_\w+)?\.json")
+
+
+def round_number(root: Path = REPO) -> int:
+    """1 + the highest round N among the round-numbered files in
+    ``root``, so a run never overwrites an artifact already recorded."""
+    rounds = [int(m.group(1)) for p in root.iterdir() if (m := _ROUND_FILE.fullmatch(p.name))]
+    return max(rounds, default=0) + 1
 
 
 def sf_of(sf_dir: str) -> float:

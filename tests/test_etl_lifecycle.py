@@ -50,8 +50,9 @@ def test_full_lifecycle_idempotent(spark, tmp_path):
 
 
 def test_run_etl_leaves_nothing_cached(spark, tmp_path):
-    """The budgets stage's pinned category rows are released when the
-    stage ends, so a scheduled run leaves the session's cache empty."""
+    """The budgets stage caches nothing and the transactions stage
+    releases its pinned reload window when it ends, so a scheduled run
+    leaves the session's cache empty."""
     from dieter___etl___monarchmoney_spark import pins
 
     pins.release()

@@ -71,3 +71,20 @@ def test_select_rejects_unknown_and_keeps_order():
     assert harness.select(available, ["c", " a", ""]) == ["c", "a"]
     with pytest.raises(ValueError, match="nope"):
         harness.select(available, ["a", "nope"])
+
+
+def test_round_number_is_past_every_recorded_artifact(tmp_path):
+    """A run's round is past every round-numbered file the harness
+    scripts write, not only the BENCH_r{N}.json results, so a bench or
+    determinism run never overwrites a committed artifact."""
+    assert harness.round_number(tmp_path) == 1
+    (tmp_path / "BENCH_r13.json").write_text("{}")
+    (tmp_path / "BENCH_r13_c8.json").write_text("{}")
+    assert harness.round_number(tmp_path) == 14
+    (tmp_path / "BENCH_DETAIL_r14.json").write_text("{}")
+    assert harness.round_number(tmp_path) == 15
+    (tmp_path / "DETERMINISM_r15_subset.json").write_text("{}")
+    assert harness.round_number(tmp_path) == 16
+    (tmp_path / "SCALECHECK_r40.jsonl").write_text("")
+    (tmp_path / "OPTIMIZATION_r41.md").write_text("")
+    assert harness.round_number(tmp_path) == 16

@@ -31,6 +31,33 @@ def test_watermark_roundtrip(spark, tmp_path):
     assert read_watermark(spark, ctl) is None  # blank value -> backfill
 
 
+def test_control_rows_are_jvm_local(spark, tmp_path, monkeypatch):
+    """The watermark and reset writes plan their one row as a JVM-local
+    LocalRelation, not a LogicalRDD over a Python RDD (whose every
+    action starts a Python worker); the table keeps its schema, its
+    single file and its round trip."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    plans = []
+    write = DataFrameWriter.parquet
+
+    def spy(self, path, *args, **kwargs):
+        plans.append(self._df._jdf.queryExecution().analyzed().toString())
+        return write(self, path, *args, **kwargs)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", spy)
+    ctl = tmp_path / "control"
+    write_watermark(spark, str(ctl), NOW)
+    assert read_watermark(spark, str(ctl)) == NOW
+    assert spark.read.parquet(str(ctl)).schema.simpleString() == "struct<key:string,value:string>"
+    assert len(list(ctl.glob("*.parquet"))) == 1
+    reset_control(spark, str(ctl))
+    assert read_watermark(spark, str(ctl)) is None
+    assert len(plans) == 2
+    for plan in plans:
+        assert "LocalRelation" in plan and "LogicalRDD" not in plan, plan
+
+
 def test_corrupt_existing_control_raises_not_backfills(spark, tmp_path):
     # absence is an existence check, never an exception catch: a
     # transient/corrupt read on an EXISTING control must surface — the

@@ -13,9 +13,11 @@ QUERIES, ORACLE_SQL = registry.load()
 
 
 def _assert_released(spark):
-    """Once its result is consumed, a query leaves nothing cached."""
+    """Once its result is consumed, a query leaves nothing cached and no
+    checkpoint blocks (which the CacheManager does not see)."""
     pins.release()
     assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+    assert spark.sparkContext._jsc.getPersistentRDDs().isEmpty()
 
 
 @pytest.mark.parametrize("name", sorted(ORACLE_SQL))

@@ -92,8 +92,9 @@ def test_registry_call_keeps_callers_cache(spark):
 
 
 def test_cache_calls_only_in_pins():
-    """Every cache and release in the package goes through pins.py."""
-    banned = {"persist", "unpersist", "clearCache"}
+    """Every cache, checkpoint and release in the package goes through
+    pins.py."""
+    banned = {"persist", "unpersist", "clearCache", "localCheckpoint"}
     found = []
     for path in sorted(PACKAGE.rglob("*.py")):
         if path.name == "pins.py" and path.parent == PACKAGE:

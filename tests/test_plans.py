@@ -860,3 +860,18 @@ def test_aqe_skew_join_fires_on_skewed_data(spark):
                 conf.unset(k)
             else:
                 conf.set(k, v)
+
+
+def test_budget_pipeline_single_grouping_sets(spark):
+    """The budget sheet's group (998) and Totals (999) rows come from ONE
+    grouping-sets aggregate (one Expand) over uncached category rows, and
+    the run reads lineitem once: the aggregate branch reads the category
+    rows' category-month exchange through a ReusedExchange."""
+    df = QUERIES["budget_pipeline_full"](spark, SF_ORACLE)
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("Expand [") == 1
+    assert "InMemoryRelation" not in plan and "InMemoryTableScan" not in plan
+    df.collect()
+    final = df._jdf.queryExecution().executedPlan().finalPhysicalPlan().toString()
+    assert final.count("lineitem.parquet") == 1
+    assert "ReusedExchange" in final
