@@ -7,7 +7,7 @@ same semantics are a pure column-expression chain — JVM-side, inside
 whole-stage codegen, zero Python UDFs.
 
 Determinism helpers: Spark sums doubles in partition order, which is
-nondeterministic at scale; ``money_sum`` casts values to DECIMAL(18,6)
+nondeterministic at scale; ``money_sum`` casts values to ``MONEY_DECIMAL``
 before SUM (exact, order-independent) and back to DOUBLE after, so an
 oracle hash-match cannot flake (SURVEY.md §7.5). Scale 6 is used instead
 of 2 because money values here are exact ≤4dp reals carried as doubles:
@@ -22,6 +22,8 @@ from pyspark.sql import functions as F
 
 #: tie-free for ≤4dp money values; Spark widens the SUM to decimal(28,6)
 MONEY_DECIMAL = "decimal(18,6)"
+#: the same type in the oracle SQL's spelling
+MONEY_DECIMAL_SQL = MONEY_DECIMAL.upper()
 
 
 def clean_currency(col: Column | str) -> Column:
@@ -62,7 +64,7 @@ def money(col: Column | str) -> Column:
 def money_sum(col: Column | str, *, coalesce_zero: bool = False) -> Column:
     """Order-independent SUM of a 2dp money column, returned as DOUBLE.
 
-    DuckDB-oracle twin: ``CAST(SUM(CAST(x AS DECIMAL(18,6))) AS DOUBLE)``.
+    DuckDB-oracle twin: ``money_sum_sql``.
     ``coalesce_zero`` mirrors the reference's ``fillEmptyValues: true``
     (monarchmoney.py:2327) / ``float(... or 0)`` (F9).
     """
@@ -71,10 +73,15 @@ def money_sum(col: Column | str, *, coalesce_zero: bool = False) -> Column:
     return F.coalesce(s, F.lit(0.0)) if coalesce_zero else s
 
 
+def money_sum_sql(x: str) -> str:
+    """DuckDB-oracle twin of ``money_sum`` over the SQL expression ``x``."""
+    return f"CAST(SUM(CAST({x} AS {MONEY_DECIMAL_SQL})) AS DOUBLE)"
+
+
 def money_avg(col: Column | str) -> Column:
     """Deterministic AVG: exact decimal SUM cast to double, divided by count.
 
-    DuckDB twin: ``CAST(SUM(CAST(x AS DECIMAL(18,6))) AS DOUBLE) / COUNT(x)``.
+    DuckDB twin: ``money_sum_sql(x)`` divided by ``COUNT(x)``.
     """
     c = F.col(col) if isinstance(col, str) else col
     return F.sum(c.cast(MONEY_DECIMAL)).cast("double") / F.count(c)

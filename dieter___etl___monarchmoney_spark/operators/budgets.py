@@ -25,7 +25,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from dieter___etl___monarchmoney_spark.functions.money import MONEY_DECIMAL
+from dieter___etl___monarchmoney_spark.functions.money import money_sum
 from dieter___etl___monarchmoney_spark.operators.windows import (
     lag_over,
     remaining_amount,
@@ -107,7 +107,7 @@ def _sentinel_rows(cat: DataFrame) -> DataFrame:
     ``grouping(CategoryGroupName)``: the (Month, group) set gives the
     group rows, the (Month) set the Totals rows. Exact-decimal sums."""
     def msum(c):
-        return F.sum(F.col(c).cast(MONEY_DECIMAL)).cast("double")
+        return money_sum(F.col(c))
 
     agg = cat.groupingSets(
         [["Month", "CategoryGroupName", "GroupType"], ["Month"]],

@@ -1,15 +1,16 @@
-"""Driver-contract query definitions, grouped by SURVEY.md §2 section.
+"""Driver-contract query definitions, one module per operator family.
 
 Importing this package registers every query into
 ``dieter___etl___monarchmoney_spark.registry``.
 
 Registration order is deliberate: the grading driver evaluates queries
-in registry order with a ~50-query per-round budget, so the window is
-rotated every round to wherever correctness evidence is weakest. Since
-round 6 every registered query has a driver row (267/267 oracle-backed
-queries green), so the rotation now optimizes evidence FRESHNESS:
-queries whose implementation changed after their last green row come
-first, then the queries whose freshest green row is oldest.
+in registry order with a ~50-query budget, so the first 50 names are a
+correctness window. The window holds, in order: ``_PRIORITY`` (queries
+whose implementation changed since their last green driver row, then
+the queries whose freshest green row is oldest), then ``_FLAGSHIP``
+(headline operators re-confirmed in every window). Past the window the
+order is registration order, and the queries without a DuckDB oracle
+come last.
 """
 
 from dieter___etl___monarchmoney_spark import registry as _registry
@@ -27,172 +28,79 @@ from dieter___etl___monarchmoney_spark.queries import (  # noqa: F401
     curation,
     llm_pipeline,
     sketch_ops,
-    wave4_ops,
-    wave5_ops,
     olap,
     stats_ops,
-    wave6_ops,
     olap2,
-    wave7_ops,
-    wave8_ops,
-    wave9_ops,
-    wave10_ops,
-    wave11_ops,
-    wave12_ops,
-    wave13_ops,
-    wave14_ops,
-    wave15_ops,
-    wave16_ops,
-    wave17_ops,
-    wave18_ops,
-    wave19_ops,
-    wave20_ops,
-    wave21_ops,
-    wave22_ops,
-    wave23_ops,
-    wave24_ops,
-    wave25_ops,
-    wave26_ops,
-    wave27_ops,
-    wave28_ops,
-    wave29_ops,
-    wave30_ops,
-    wave31_ops,
-    wave32_ops,
-    wave33_ops,
-    wave34_ops,
-    wave35_ops,
+    lakehouse,
+    series_ops,
+    search_ops,
 )
 
-#: ROUND-13 ROTATION — evidence freshness (VERDICT r12 #8: rotate to
-#: the next-oldest cohort; every query edited in round 13 re-enters).
-#: 272 registered queries, 269 oracle-backed; the window re-proves
-#: (a) the 12 queries whose plan-affecting code changed THIS round —
-#: the five grouped-rank-family queries (operators/rank.py now pins
-#: its bucket-edge table with an eager lineage-truncating
-#: localCheckpoint instead of the driver collect), the two
-#: distributed-prefix-sum queries (operators/prefix.py computes its
-#: cumulative offsets in-engine instead of collect+re-emit),
-#: pq_adc_topk (persisted subspace frame + single fused Lloyd-mean
-#: job), simhash_hamming_pairs (hamming verify moved before the pair
-#: dedup), quantile_binning_features (size-gated distributed edge
-#: ranks + closed-form edge predicate), ann_recall_audit (probe
-#: threads now adopt the parent job group), and prefix_filter_jaccard
-#: (per-doc rarity prefix now a row_number window instead of
-#: collect+sort+re-explode) — then (b) the full 34-query cohort whose
-#: freshest green row is round 7, then (c) the 2 alphabetically-first
-#: round-8 queries as fillers. 12 + 36 + 2
-#: flagship = one full 50-slot window; after it lands no green row in
-#: the registry predates round 8. The three rows-only sketch queries
-#: (approx_distinct_validation, approx_vocab_sketch,
-#: percentile_sketch_validation) have no oracle row to refresh and
-#: stay out, as in every prior window.
+#: the correctness window's first block: (a) every query whose code
+#: changed since its last green driver row, then (b) the oldest-evidence
+#: cohort (freshest green row in the oldest CORRECTNESS_rNN.json),
+#: alphabetical within the cohort, until the window is full. Rotate it
+#: whenever (a) changes or (b) has been re-proven.
 _PRIORITY = (
-    # (a) round-13 edits — values re-proven oracle-exact locally
-    # (hash-exact at sf0.01 after each change), re-proven on the
-    # driver here
-    "source_quality_calibration",
+    # (a) changed since their last green row
+    "budget_pipeline_full",  # one grouping-sets aggregate, no pin
+    "copurchase_kcore",  # eager pins.checkpoint per peel round
+    "pca_top_component",  # pins.checkpoint per power iteration
+    "pq_adc_topk",  # pinned subspace frame
+    "bpe_merge_rules",  # bpe_learn returns only its rules
+    "neardup_clusters",  # JVM-local union-find labels
+    "fuzzy_entity_resolution",
+    "semantic_dedup_clusters",
+    "source_quality_calibration",  # operators/rank.py: edges by RDD id
     "quality_decile_assignment",
     "decile_lift_table",
     "doc_length_band_filter",
     "sequence_packing",
-    "pq_adc_topk",
-    "simhash_hamming_pairs",
-    "quantile_binning_features",
-    "ann_recall_audit",
+    "sequence_packing_plan",  # prefix sums now decimal(29,6)
     "signed_running_balance",
-    "sequence_packing_plan",
-    "prefix_filter_jaccard",
-    # (b) the round-7 cohort: freshest green row is round 7
-    # (recomputed from CORRECTNESS_r01-r12 at round-13 start)
-    "dedup_token_multiset",
-    "distinct_token_stats",
-    "dup_graph_pagerank",
-    "embedding_centroids_by_label",
-    "embedding_neardup_pairs",
-    "exact_dedup_removed",
-    "global_shuffle_assignment",
-    "incremental_dedup",
-    "language_balanced_sample",
-    "minhash_error_audit",
-    "monthly_merchant_dense_rank",
-    "multimodal_decode_fake",
-    "multimodal_feature_extract",
-    "multimodal_frame_sample",
-    "multimodal_resize",
-    "neardup_clusters",
-    "nearest_centroid_confusion",
-    "ngram_jaccard_pairs",
-    "pca_top_component",
-    "percentile_stats_by_lang",
-    "pii_redaction_audit",
-    "pipeline_stage_funnel",
-    "reconciliation_audit",
-    "running_total_by_category",
-    "simhash_buckets",
-    "similarity_graph_triangles",
-    "source_mixture_sample",
-    "term_relevance_topk",
-    "text_language_id",
-    "text_quality_scores",
-    "text_repetition_scores",
-    "text_token_stats",
-    "train_val_test_split",
-    "transactions_summary",
-    # (c) round-8-cohort fillers, oldest-first (alphabetical within
-    # the cohort, per VERDICT r8 #1)
-    "accounts_sorted_contract",
-    "asof_view_attribution",
+    # (b) oldest evidence: freshest green row is CORRECTNESS_r08
+    "bm25_doc_ranking",
+    "budget_totals_rollup",
+    "cashflow_by_merchant",
+    "cashflow_cube",
+    "category_group_chain_join",
+    "cdc_latest_state",
+    "conversion_funnel",
+    "corpus_stats_by_lang",
+    "daily_aggregate_snapshots",
+    "daily_type_share",
+    "doc_fingerprints",
+    "duplicated_ngram_fraction",
+    "event_transition_matrix",
+    "event_type_daily_pivot",
+    "ivf_ann_topk",
+    "json_field_extract",
+    "knn_batch_join",
+    "knn_label_noise_audit",
+    "monthly_rollup_by_type",
+    "moving_average_7d",
+    "multimodal_metadata",
+    "one_day_change",
+    "page_with_total_count",
+    "parent_child_self_join",
+    "part_metrics_unpivot",
+    "range_banded_join",
+    "recurring_forecast_diff",
+    "rollover_remaining",
+    "row_number_pagination",
+    "scd2_history",
+    "sessionization",
+    "sessionize_stream",
+    "skew_salted_cashflow",
 )
 
-#: re-confirm a rotating flagship slice inside the window (VERDICT r2
-#: #6). These sit AFTER the stale/oldest-evidence block so that if the
-#: driver budget lands below 50 the casualties are the freshest-risk
-#: re-confirms. Round-13 slice: semantic_dedup_clusters (this round's
-#: blocked-pair-family audit adjudicated its verify-dot form by
-#: measurement — the fresh driver row lands alongside that evidence)
-#: and trigram_substring_search (round 12's headline restructure,
-#: re-confirmed one round later).
+#: headline operators re-confirmed in every window, AFTER the
+#: changed/oldest block so that a driver budget below 50 drops these
+#: re-confirms first
 _FLAGSHIP = (
-    "semantic_dedup_clusters",
     "trigram_substring_search",
+    "pricing_summary_report",
 )
-
-#: queries added THIS round (round 13) — registry growth is frozen at
-#: ≤5 (VERDICT r5 #2); anything here rotates into _PRIORITY next round.
-#: (empty: round 13 is an optimization round — no new queries.)
-_AFTER_WINDOW: tuple = ()
-
-#: remaining slots (past the explicit window) go to modules whose
-#: latest green rows are oldest — after the r13 window lands the r7
-#: cohort is fully refreshed, so the round-8-green families lead the
-#: overflow tail (ranking kept from r12: the same modules hold the
-#: densest r8-era remainders).
-_MODULE_RANK = {
-    f"{__name__}.{m}": i
-    for i, m in enumerate(
-        (
-            # modules holding the bulk of the remaining r7-era rows
-            # (density of r7-cohort queries NOT in the r12 window)
-            "llm_pipeline",
-            "curation",
-            "analytics_ops",
-            "corpus_ops",
-            "budget",
-            "wave4_ops",
-            "wave15_ops",
-            # then the r8-green families
-            "relational",
-            "scale_ops",
-            "streaming_queries",
-            "core",
-            "filters",
-            "forecast_nested",
-            "wave16_ops",
-            "wave23_ops",
-        )
-    )
-}
 
 
 def _reorder() -> None:
@@ -200,20 +108,17 @@ def _reorder() -> None:
 
     def key(name: str) -> tuple:
         if name in _PRIORITY:
-            return (0, 0, _PRIORITY.index(name))
+            return (0, _PRIORITY.index(name))
         if name in _FLAGSHIP:
-            return (1, 0, _FLAGSHIP.index(name))
-        if name in _AFTER_WINDOW:
-            return (3, 0, _AFTER_WINDOW.index(name))
+            return (1, _FLAGSHIP.index(name))
         if name not in _registry.ORACLE_SQL:
             # Oracle-less self-validation audits (recall@k, sketch error
             # bounds): the driver can only record an `err: no_oracle` row
             # for these, never a green one — their accuracy claims are
             # pinned in unit tests instead. Sort them past every window
             # so CORRECTNESS files carry no red-looking by-design rows.
-            return (5, 0, reg_index[name])
-        mod = _registry.QUERIES[name].__module__
-        return (4, _MODULE_RANK.get(mod, 99), reg_index[name])
+            return (3, reg_index[name])
+        return (2, reg_index[name])
 
     order = sorted(_registry.QUERIES, key=key)
     for d in (_registry.QUERIES, _registry.ORACLE_SQL):

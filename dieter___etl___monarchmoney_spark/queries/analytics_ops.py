@@ -39,16 +39,17 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from dieter___etl___monarchmoney_spark.functions.money import MONEY_DECIMAL, money_sum
+from dieter___etl___monarchmoney_spark.functions.money import (
+    MONEY_DECIMAL,
+    MONEY_DECIMAL_SQL,
+    money_sum,
+    money_sum_sql,
+)
 from dieter___etl___monarchmoney_spark.registry import query
 from dieter___etl___monarchmoney_spark.sources.parquet import load_table
 from dieter___etl___monarchmoney_spark.sources.star_model import TRANSACTIONS_SQL
 
-_MSUM = f"CAST(SUM(CAST({{x}} AS {MONEY_DECIMAL})) AS DOUBLE)"
 
-
-def _msum(x: str) -> str:
-    return _MSUM.format(x=x)
 
 
 EVENT_TYPES = ["click", "error", "purchase", "signup", "view"]
@@ -60,7 +61,7 @@ EVENT_TYPES = ["click", "error", "purchase", "signup", "view"]
     WITH daily AS (
         SELECT CAST(ts AS DATE) AS date,
                date_diff('day', DATE '1970-01-01', CAST(ts AS DATE)) AS day_num,
-               SUM(CAST(value AS DECIMAL(18,6))) AS bal,
+               SUM(CAST(value AS {MONEY_DECIMAL_SQL})) AS bal,
                COUNT(*) AS n_points
         FROM events GROUP BY 1, 2
     )
@@ -107,7 +108,7 @@ def q_moving_average_7d(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 _PIVOT_COLS = ", ".join(
-    _msum("CASE WHEN event_type = '" + t + "' THEN value END") + " AS " + t
+    money_sum_sql("CASE WHEN event_type = '" + t + "' THEN value END") + " AS " + t
     for t in EVENT_TYPES
 )
 
@@ -387,7 +388,7 @@ def q_range_banded_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     f"""
     WITH m AS (
         SELECT CAST(DATE_TRUNC('month', txn_date) AS DATE) AS month,
-               merchant_id, {_msum('amount')} AS total
+               merchant_id, {money_sum_sql('amount')} AS total
         FROM ({TRANSACTIONS_SQL}) GROUP BY 1, 2
     )
     SELECT month, merchant_id, total, rnk
@@ -425,11 +426,11 @@ def q_monthly_merchant_dense_rank(spark: SparkSession, sf_dir: str) -> DataFrame
     )
 
 
-_ZSCORE_SQL = """
+_ZSCORE_SQL = f"""
 WITH stats AS (
     SELECT event_type,
            COUNT(*) AS n,
-           CAST(SUM(CAST(value AS DECIMAL(18,6))) AS DOUBLE) AS s1,
+           {money_sum_sql('value')} AS s1,
            CAST(SUM(CAST(value AS DECIMAL(38,12)) * CAST(value AS DECIMAL(38,12)))
                 AS DOUBLE) AS s2
     FROM events GROUP BY event_type
@@ -467,7 +468,7 @@ def q_value_outliers_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
     events = load_table(spark, "events", sf_dir)
     stats = events.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("n"),
-        F.sum(F.col("value").cast("decimal(18,6)")).cast("double").alias("s1"),
+        money_sum("value").alias("s1"),
         F.sum(
             F.col("value").cast("decimal(38,12)") * F.col("value").cast("decimal(38,12)")
         )
@@ -491,7 +492,7 @@ def q_value_outliers_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
     return scored.filter(F.abs(F.col("zscore")) > 3.0).orderBy("event_id")
 
 
-_TREND_SQL = """
+_TREND_SQL = f"""
 WITH pts AS (
     SELECT event_type,
            CAST(date_diff('day', DATE '1970-01-01', CAST(ts AS DATE)) AS BIGINT) AS x,
@@ -503,8 +504,8 @@ sums AS (
            COUNT(*) AS n,
            SUM(x) AS sx,
            CAST(SUM(x * x) AS BIGINT) AS sxx,
-           CAST(SUM(CAST(y AS DECIMAL(18,6))) AS DOUBLE) AS sy,
-           CAST(SUM(CAST(x AS DECIMAL(12,0)) * CAST(y AS DECIMAL(18,6))) AS DOUBLE) AS sxy,
+           {money_sum_sql('y')} AS sy,
+           CAST(SUM(CAST(x AS DECIMAL(12,0)) * CAST(y AS {MONEY_DECIMAL_SQL})) AS DOUBLE) AS sxy,
            CAST(SUM(CAST(y AS DECIMAL(38,12)) * CAST(y AS DECIMAL(38,12))) AS DOUBLE) AS syy
     FROM pts GROUP BY event_type
 )
@@ -527,7 +528,7 @@ def q_event_trend_regression(spark: SparkSession, sf_dir: str) -> DataFrame:
     that needs one aggregation pass and no iterative solver.
 
     Determinism contract: the x sums are exact BIGINTs, the y sums are
-    exact decimals (same DECIMAL(18,6) / (38,12) discipline as the
+    exact decimals (same MONEY_DECIMAL / decimal(38,12) discipline as the
     z-score stats), and the finishing arithmetic is IEEE-only on
     identical inputs, so both engines produce bit-identical
     coefficients. A constant-y group would zero the r² denominator —
@@ -551,8 +552,8 @@ def q_event_trend_regression(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).alias("n"),
         F.sum("x").alias("sx"),
         F.sum(F.col("x") * F.col("x")).cast("bigint").alias("sxx"),
-        F.sum(F.col("y").cast("decimal(18,6)")).cast("double").alias("sy"),
-        F.sum(F.col("x").cast("decimal(12,0)") * F.col("y").cast("decimal(18,6)"))
+        money_sum("y").alias("sy"),
+        F.sum(F.col("x").cast("decimal(12,0)") * F.col("y").cast(MONEY_DECIMAL))
         .cast("double")
         .alias("sxy"),
         F.sum(F.col("y").cast("decimal(38,12)") * F.col("y").cast("decimal(38,12)"))
@@ -650,7 +651,7 @@ def q_weekday_type_chi2(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_WINSOR_SQL = """
+_WINSOR_SQL = f"""
 WITH bounds AS (
     SELECT event_type,
            quantile_cont(value, 0.01) AS p01,
@@ -667,8 +668,8 @@ clipped AS (
 SELECT event_type,
        COUNT(*) AS n,
        p01, p99,
-       CAST(SUM(CAST(v AS DECIMAL(18,6))) AS DOUBLE) / COUNT(*) AS winsorized_mean,
-       CAST(SUM(CAST(value AS DECIMAL(18,6))) AS DOUBLE) / COUNT(*) AS raw_mean,
+       {money_sum_sql('v')} / COUNT(*) AS winsorized_mean,
+       {money_sum_sql('value')} / COUNT(*) AS raw_mean,
        CAST(SUM(CASE WHEN value < p01 OR value > p99 THEN 1 ELSE 0 END) AS BIGINT)
            AS n_clipped
 FROM clipped
@@ -711,11 +712,11 @@ def q_winsorized_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         clipped.groupBy("event_type", "p01", "p99")
         .agg(
             F.count(F.lit(1)).alias("n"),
-            (F.sum(F.col("v").cast("decimal(18,6)")).cast("double") / F.count(F.lit(1))).alias(
+            (money_sum("v") / F.count(F.lit(1))).alias(
                 "winsorized_mean"
             ),
             (
-                F.sum(F.col("value").cast("decimal(18,6)")).cast("double")
+                money_sum("value")
                 / F.count(F.lit(1))
             ).alias("raw_mean"),
             F.sum(
@@ -848,10 +849,10 @@ def q_user_activity_streaks(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_SERIES_CORR_SQL = """
+_SERIES_CORR_SQL = f"""
 WITH daily AS (
     SELECT CAST(ts AS DATE) AS d, event_type,
-           SUM(CAST(value AS DECIMAL(18,6))) AS total
+           SUM(CAST(value AS {MONEY_DECIMAL_SQL})) AS total
     FROM events GROUP BY d, event_type
 ),
 pairs AS (
@@ -894,7 +895,7 @@ def q_series_correlation_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     events = load_table(spark, "events", sf_dir)
     daily = events.groupBy(
         F.col("ts").cast("date").alias("d"), "event_type"
-    ).agg(F.sum(F.col("value").cast("decimal(18,6)")).alias("total"))
+    ).agg(F.sum(F.col("value").cast(MONEY_DECIMAL)).alias("total"))
     a = daily.select(
         F.col("d").alias("d"), F.col("event_type").alias("type_a"), F.col("total").alias("xa")
     )
@@ -941,7 +942,7 @@ types AS (SELECT DISTINCT event_type FROM events),
 daily AS (
     SELECT CAST(ts AS DATE) AS d, event_type,
            COUNT(*) AS n,
-           CAST(SUM(CAST(value AS DECIMAL(18,6))) AS DOUBLE) AS tv
+           {money_sum_sql('value')} AS tv
     FROM events WHERE value > {_GAP_THRESHOLD}
     GROUP BY CAST(ts AS DATE), event_type
 )
@@ -986,7 +987,7 @@ def q_calendar_gap_fill(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .agg(
             F.count(F.lit(1)).alias("n"),
-            F.sum(F.col("value").cast("decimal(18,6)")).cast("double").alias("tv"),
+            money_sum("value").alias("tv"),
         )
     )
     grid = spine.crossJoin(types)  # days x types — both sides tiny

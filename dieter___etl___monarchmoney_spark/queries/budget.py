@@ -9,7 +9,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from dieter___etl___monarchmoney_spark.functions.money import money_sum
+from dieter___etl___monarchmoney_spark.functions.money import (
+    MONEY_DECIMAL_SQL,
+    money_sum,
+    money_sum_sql,
+)
 from dieter___etl___monarchmoney_spark.operators.budgets import budget_pipeline
 from dieter___etl___monarchmoney_spark.registry import query
 from dieter___etl___monarchmoney_spark.sources.parquet import load_table
@@ -18,7 +22,6 @@ from dieter___etl___monarchmoney_spark.sources.star_model import (
     transactions,
 )
 
-_MSUM = "CAST(SUM(CAST({x} AS DECIMAL(18,6))) AS DOUBLE)"
 
 _INCOME_TYPES = "('ECONOMY', 'PROMO')"
 
@@ -31,7 +34,7 @@ WITH cat AS (
                AS GroupType,
            CAST(DATE_TRUNC('month', t.txn_date) AS DATE) AS Month,
            CAST(10000.0 AS DOUBLE) AS PlannedAmount,
-           {_MSUM.format(x='t.amount')} AS ActualAmount,
+           {money_sum_sql('t.amount')} AS ActualAmount,
            CAST(0.0 AS DOUBLE) AS RolloverAmount
     FROM ({TRANSACTIONS_SQL}) t
     JOIN part p ON t.category_id = p.p_partkey
@@ -43,7 +46,7 @@ catrows AS (
                AS DebitCreditFlag,
            PlannedAmount, ActualAmount, RolloverAmount,
            PlannedAmount + RolloverAmount - ActualAmount AS RemainingAmount,
-           CAST(SUM(CAST(ActualAmount AS DECIMAL(18,6)))
+           CAST(SUM(CAST(ActualAmount AS {MONEY_DECIMAL_SQL}))
                 OVER (PARTITION BY category_id ORDER BY Month
                       ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
                 AS DOUBLE) AS CumulativeActualAmount,
@@ -54,10 +57,10 @@ grprows AS (
     SELECT Month, CategoryGroupName, '' AS CategoryName, GroupType,
            CASE WHEN GroupType = 'income' THEN 'Credit' ELSE 'Debit' END
                AS DebitCreditFlag,
-           {_MSUM.format(x='PlannedAmount')} AS PlannedAmount,
-           {_MSUM.format(x='ActualAmount')} AS ActualAmount,
-           {_MSUM.format(x='RolloverAmount')} AS RolloverAmount,
-           {_MSUM.format(x='RemainingAmount')} AS RemainingAmount,
+           {money_sum_sql('PlannedAmount')} AS PlannedAmount,
+           {money_sum_sql('ActualAmount')} AS ActualAmount,
+           {money_sum_sql('RolloverAmount')} AS RolloverAmount,
+           {money_sum_sql('RemainingAmount')} AS RemainingAmount,
            CAST(NULL AS DOUBLE) AS CumulativeActualAmount,
            998 AS GroupOrder
     FROM catrows GROUP BY Month, CategoryGroupName, GroupType
@@ -66,10 +69,10 @@ totrows AS (
     SELECT Month, 'Totals' AS CategoryGroupName, '' AS CategoryName,
            CAST(NULL AS VARCHAR) AS GroupType,
            'Debit' AS DebitCreditFlag,
-           {_MSUM.format(x='PlannedAmount')} AS PlannedAmount,
-           {_MSUM.format(x='ActualAmount')} AS ActualAmount,
-           {_MSUM.format(x='RolloverAmount')} AS RolloverAmount,
-           {_MSUM.format(x='RemainingAmount')} AS RemainingAmount,
+           {money_sum_sql('PlannedAmount')} AS PlannedAmount,
+           {money_sum_sql('ActualAmount')} AS ActualAmount,
+           {money_sum_sql('RolloverAmount')} AS RolloverAmount,
+           {money_sum_sql('RemainingAmount')} AS RemainingAmount,
            CAST(NULL AS DOUBLE) AS CumulativeActualAmount,
            999 AS GroupOrder
     FROM catrows GROUP BY Month

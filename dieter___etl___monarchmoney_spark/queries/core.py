@@ -10,6 +10,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from dieter___etl___monarchmoney_spark.functions.money import money_sum_sql
 from dieter___etl___monarchmoney_spark.operators.aggregates import (
     cashflow_by_key,
     cashflow_summary,
@@ -25,24 +26,20 @@ from dieter___etl___monarchmoney_spark.sources.star_model import (
     transactions_with_account,
 )
 
-_MONEY_SUM = "CAST(SUM(CAST({x} AS DECIMAL(18,6))) AS DOUBLE)"
 
-
-def _msum(x: str) -> str:
-    return _MONEY_SUM.format(x=x)
 
 
 @query(
     "transactions_summary",
     f"""
     SELECT
-        {_msum('amount')} / COUNT(amount) AS avg,
+        {money_sum_sql('amount')} / COUNT(amount) AS avg,
         COUNT(*) AS count,
         MAX(amount) AS max,
         MIN(CASE WHEN amount < 0 THEN amount END) AS maxExpense,
-        {_msum('amount')} AS sum,
-        COALESCE({_msum('CASE WHEN amount > 0 THEN amount END')}, 0.0) AS sumIncome,
-        COALESCE({_msum('CASE WHEN amount < 0 THEN amount END')}, 0.0) AS sumExpense,
+        {money_sum_sql('amount')} AS sum,
+        COALESCE({money_sum_sql('CASE WHEN amount > 0 THEN amount END')}, 0.0) AS sumIncome,
+        COALESCE({money_sum_sql('CASE WHEN amount < 0 THEN amount END')}, 0.0) AS sumExpense,
         MIN(txn_date) AS first,
         MAX(txn_date) AS last
     FROM ({TRANSACTIONS_SQL})
@@ -57,9 +54,9 @@ def q_transactions_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     "cashflow_by_category_group",
     f"""
     SELECT p.p_type AS category_group,
-           {_msum('t.amount')} AS sum,
-           COALESCE({_msum('CASE WHEN t.amount > 0 THEN t.amount END')}, 0.0) AS sumIncome,
-           COALESCE({_msum('CASE WHEN t.amount < 0 THEN t.amount END')}, 0.0) AS sumExpense,
+           {money_sum_sql('t.amount')} AS sum,
+           COALESCE({money_sum_sql('CASE WHEN t.amount > 0 THEN t.amount END')}, 0.0) AS sumIncome,
+           COALESCE({money_sum_sql('CASE WHEN t.amount < 0 THEN t.amount END')}, 0.0) AS sumExpense,
            COUNT(*) AS txn_count
     FROM ({TRANSACTIONS_SQL}) t
     JOIN part p ON t.category_id = p.p_partkey
@@ -86,9 +83,9 @@ def q_cashflow_by_category_group(spark: SparkSession, sf_dir: str) -> DataFrame:
                 THEN (sumIncome + sumExpense) / sumIncome END AS savingsRate
     FROM (
         SELECT
-            COALESCE({_msum('CASE WHEN amount > 0 THEN amount END')}, 0.0) AS sumIncome,
-            COALESCE({_msum('CASE WHEN amount < 0 THEN amount END')}, 0.0) AS sumExpense,
-            COALESCE({_msum('amount')}, 0.0) AS sum,
+            COALESCE({money_sum_sql('CASE WHEN amount > 0 THEN amount END')}, 0.0) AS sumIncome,
+            COALESCE({money_sum_sql('CASE WHEN amount < 0 THEN amount END')}, 0.0) AS sumExpense,
+            COALESCE({money_sum_sql('amount')}, 0.0) AS sum,
             COUNT(*) AS count
         FROM ({TRANSACTIONS_SQL})
     )

@@ -6,6 +6,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from dieter___etl___monarchmoney_spark.functions.money import money_sum, money_sum_sql
 from dieter___etl___monarchmoney_spark.operators.normalize import flatten_transactions
 from dieter___etl___monarchmoney_spark.registry import query
 from dieter___etl___monarchmoney_spark.sources.parquet import load_table
@@ -14,7 +15,6 @@ from dieter___etl___monarchmoney_spark.sources.star_model import (
     transactions_with_account,
 )
 
-_MSUM = "CAST(SUM(CAST({x} AS DECIMAL(18,6))) AS DOUBLE)"
 
 
 @query(
@@ -22,7 +22,7 @@ _MSUM = "CAST(SUM(CAST({x} AS DECIMAL(18,6))) AS DOUBLE)"
     f"""
     WITH expected AS (
         SELECT user_id, event_type,
-               {_MSUM.format(x='value')} / COUNT(value) AS expected
+               {money_sum_sql('value')} / COUNT(value) AS expected
         FROM events
         WHERE CAST(ts AS DATE) < DATE '2024-01-15'
         GROUP BY user_id, event_type
@@ -47,7 +47,7 @@ def q_recurring_forecast_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     hist = events.filter(F.col("ts").cast("date") < F.lit("2024-01-15"))
     expected = hist.groupBy("user_id", "event_type").agg(
         (
-            F.sum(F.col("value").cast("decimal(18,6)")).cast("double")
+            money_sum("value")
             / F.count("value")
         ).alias("expected")
     )

@@ -41,7 +41,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from dieter___etl___monarchmoney_spark.functions.money import money_sum
+from dieter___etl___monarchmoney_spark.functions.money import money_sum, money_sum_sql
 from dieter___etl___monarchmoney_spark.functions.nested import unwrap_connection
 from dieter___etl___monarchmoney_spark.registry import query
 from dieter___etl___monarchmoney_spark.sources.parquet import load_table
@@ -58,7 +58,7 @@ WITH txns AS ({TRANSACTIONS_WITH_ACCOUNT_SQL}),
 daily AS (
     SELECT account_id, category_id, txn_date,
            SUM(quantity) AS day_qty,
-           CAST(SUM(CAST(amount AS DECIMAL(18,6))) AS DOUBLE) AS day_basis
+           {money_sum_sql('amount')} AS day_basis
     FROM txns
     WHERE account_id IN (1, 2, 3, 4, 5, 6, 7, 8)
     GROUP BY account_id, category_id, txn_date

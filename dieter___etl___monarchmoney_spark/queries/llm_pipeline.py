@@ -1,6 +1,7 @@
 """LLM training-data pipeline queries over ``documents`` and
 ``embeddings``: text analysis, dedup (exact → MinHash LSH), similarity
-search, multimodal plumbing.
+search, multimodal plumbing, and the Python/Arrow lanes (pandas UDAF,
+Arrow scalar UDF, mapInArrow), each pinned equal to a JVM twin.
 
 Oracle-checked wherever DuckDB can express the same computation — which
 is almost everything: md5 signatures and list folds cover the text and
@@ -18,8 +19,13 @@ in tests/test_llm_pipeline.py.
 
 from __future__ import annotations
 
+import math
+
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+from pyspark.sql.functions import pandas_udf
 
 from dieter___etl___monarchmoney_spark.functions.text import (
     BPE_PATTERN,
@@ -1466,3 +1472,245 @@ def q_feature_hashing_vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("doc_id")
     )
+
+
+# ==========================================================================
+# The Python and Arrow lanes
+# ==========================================================================
+
+# --------------------------------------------------------------------------
+# Grouped-aggregate pandas UDF: exact order-statistic quartiles
+# --------------------------------------------------------------------------
+
+#: quartile convention used on BOTH engines: over the ascending sorted
+#: multiset, q_p = value at index floor(p * (n-1)) — pure SELECTION, no
+#: interpolation, no summation: deterministic for any engine order.
+_QUARTILE_SQL = """
+WITH r AS (
+    SELECT l_returnflag,
+           l_quantity AS q,
+           ROW_NUMBER() OVER (PARTITION BY l_returnflag ORDER BY l_quantity)
+               - 1 AS i,
+           COUNT(*) OVER (PARTITION BY l_returnflag) AS n
+    FROM lineitem
+)
+SELECT l_returnflag,
+       CAST(MAX(n) AS BIGINT) AS n_lines,
+       MAX(CASE WHEN i = CAST(FLOOR(0.25 * (n - 1)) AS BIGINT)
+                THEN q END) AS q1,
+       MAX(CASE WHEN i = CAST(FLOOR(0.75 * (n - 1)) AS BIGINT)
+                THEN q END) AS q3,
+       MAX(CASE WHEN i = CAST(FLOOR(0.75 * (n - 1)) AS BIGINT) THEN q END)
+         - MAX(CASE WHEN i = CAST(FLOOR(0.25 * (n - 1)) AS BIGINT) THEN q END)
+           AS iqr
+FROM r
+GROUP BY l_returnflag
+ORDER BY l_returnflag
+"""
+
+
+def _quartile_udaf(p: float):
+    """Series->scalar pandas UDAF for the exact order statistic at
+    fraction ``p``. Built lazily: pandas_udf parses its DDL return
+    type against the ACTIVE session, so creating it at import time
+    would require a SparkContext before any query runs."""
+
+    def stat(v: pd.Series) -> float:
+        a = v.to_numpy().copy()
+        a.sort()
+        return float(a[math.floor(p * (len(a) - 1))])
+
+    return pandas_udf(stat, "double")
+
+
+@query("returnflag_quantity_iqr", _QUARTILE_SQL)
+def q_returnflag_quantity_iqr(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Grouped-aggregate pandas UDF (the vectorized UDAF path): exact
+    q1/q3/IQR of line quantity per return flag. Arrow ships each
+    group's column to Python as ONE Series; the UDAF sorts and SELECTS
+    — order statistics involve no accumulation, so the result is
+    deterministic whatever partition order feeds the group.
+
+    JVM twin: the same quartiles are expressible with a row_number
+    window + conditional aggregate (exactly what the oracle runs) or
+    approx_percentile(accuracy→exact); the unit test pins UDAF ==
+    window-twin equality. This query exists to exercise and measure
+    the Series->scalar Arrow lane, not because Python is required.
+
+    Scale shape: Spark evaluates grouped-agg pandas UDFs with a full
+    shuffle of the group's rows to one task — groups here are 3 flags,
+    i.e. the degenerate-cardinality case where that is acceptable; for
+    high-cardinality keys keep quantiles in approx_percentile or the
+    two-phase window form (doc_length_band_filter). n_lines and the
+    quantity order stats are exact integers in double carriers."""
+    li = load_table(spark, "lineitem", sf_dir)
+    # Spark refuses to mix grouped-agg pandas UDFs with JVM aggregates
+    # in one agg() ([INVALID_PANDAS_UDF_PLACEMENT]), so the row count
+    # rides the same Arrow lane as a len() UDAF (the Series->scalar
+    # type hints are what make pandas_udf infer GROUPED_AGG)
+    def _n(v: pd.Series) -> float:
+        return float(len(v))
+
+    n_udaf = pandas_udf(_n, "double")
+    agg = li.groupBy("l_returnflag").agg(
+        n_udaf("l_quantity").alias("n_d"),
+        _quartile_udaf(0.25)("l_quantity").alias("q1"),
+        _quartile_udaf(0.75)("l_quantity").alias("q3"),
+    ).withColumn("n_lines", F.col("n_d").cast("bigint"))
+    return agg.select(
+        "l_returnflag",
+        "n_lines",
+        "q1",
+        "q3",
+        (F.col("q3") - F.col("q1")).alias("iqr"),
+    ).orderBy("l_returnflag")
+
+
+# --------------------------------------------------------------------------
+# Arrow-optimized scalar Python UDF: text normalization
+# --------------------------------------------------------------------------
+
+_NORM_SQL = """
+SELECT doc_id,
+       md5(trim(regexp_replace(
+           regexp_replace(lower(text), '[^a-z0-9 ]+', ' ', 'g'),
+           ' +', ' ', 'g'))) AS norm_md5,
+       CAST(length(trim(regexp_replace(
+           regexp_replace(lower(text), '[^a-z0-9 ]+', ' ', 'g'),
+           ' +', ' ', 'g'))) AS BIGINT) AS norm_len
+FROM documents
+ORDER BY doc_id
+"""
+
+
+def _normalize(s: str | None) -> str | None:
+    import re
+
+    if s is None:  # NULL passthrough: the JVM twin's lower(NULL) is NULL
+        return None
+    s = re.sub(r"[^a-z0-9 ]+", " ", s.lower())
+    return re.sub(r" +", " ", s).strip()
+
+
+@query("arrow_udf_text_normalize", _NORM_SQL)
+def q_arrow_udf_text_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Arrow-optimized scalar Python UDF (``useArrow=True``): the
+    canonical text-normalization chain (lowercase, strip
+    non-alphanumerics, collapse runs of spaces, trim), returning an
+    md5 + length so the full normalized text never inflates the
+    result. Arrow batches replace per-row pickling — the documented
+    ~N× lane over a classic ``@udf`` — while the semantics stay pure
+    string-to-string.
+
+    JVM twin: lower/regexp_replace/trim column expressions compute the
+    IDENTICAL result (the oracle is that twin in DuckDB SQL; the unit
+    test pins the Spark built-in form equal to the UDF form). The hot
+    path in this repo always uses the built-ins
+    (functions/text.py); this query is the measured exception lane.
+
+    Scale shape: embarrassingly parallel map, no shuffle; cost is the
+    Arrow serialization boundary itself, which is the thing being
+    demonstrated. The md5 is computed JVM-side AFTER the UDF returns
+    (one hash of an already-normalized string)."""
+    arrow_norm = F.udf(_normalize, T.StringType(), useArrow=True)
+    docs = load_table(spark, "documents", sf_dir)
+    return (
+        docs.select("doc_id", arrow_norm(F.col("text")).alias("norm"))
+        .select(
+            "doc_id",
+            F.md5("norm").alias("norm_md5"),
+            F.length("norm").cast("bigint").alias("norm_len"),
+        )
+        .orderBy("doc_id")
+    )
+
+
+# --------------------------------------------------------------------------
+# mapInArrow: zero-copy embedding range audit
+# --------------------------------------------------------------------------
+
+_CLIP = 0.45
+
+_RANGE_AUDIT_SQL = f"""
+SELECT vec_id,
+       CAST(len(embedding) AS INT) AS n_dims,
+       CAST(len(list_filter(embedding,
+                x -> isnan(CAST(x AS DOUBLE)) OR NOT isfinite(CAST(x AS DOUBLE))))
+            AS INT) AS n_nonfinite,
+       CAST(len(list_filter(embedding, x -> abs(CAST(x AS DOUBLE)) >= {_CLIP}))
+            AS INT) AS n_clipped,
+       CAST(list_min(embedding) AS DOUBLE) AS vmin,
+       CAST(list_max(embedding) AS DOUBLE) AS vmax
+FROM embeddings
+ORDER BY vec_id
+"""
+
+
+def _range_audit_batches(it):
+    import numpy as np
+    import pyarrow as pa
+
+    for batch in it:
+        vec_id = batch.column("vec_id")
+        emb = batch.column("embedding")
+        if isinstance(emb, pa.ChunkedArray):  # pragma: no cover
+            emb = emb.combine_chunks()
+        # zero-copy Arrow buffers -> numpy views; float32 -> float64 is
+        # value-exact, comparisons/selection involve no accumulation
+        offs = emb.offsets.to_numpy(zero_copy_only=False)
+        flat = emb.values.to_numpy(zero_copy_only=False).astype(np.float64)
+        n = len(vec_id)
+        n_dims = (offs[1:] - offs[:-1]).astype(np.int32)
+        nonfinite = ~np.isfinite(flat)
+        # NaN ordering contract: Spark SQL and DuckDB both treat NaN as
+        # GREATER than every number — so abs(NaN) >= clip is TRUE, min
+        # skips NaN, max returns NaN. numpy's default comparisons say
+        # False/propagate instead; mirror the engines explicitly
+        # (verified against both: see tests' injected-pathology case).
+        clipped = (np.abs(flat) >= _CLIP) | np.isnan(flat)
+        # per-row segment reductions over the flattened values
+        seg = np.repeat(np.arange(n), n_dims)
+        n_nonfinite = np.bincount(seg, weights=nonfinite, minlength=n).astype(np.int32)
+        n_clipped = np.bincount(seg, weights=clipped, minlength=n).astype(np.int32)
+        vmin = np.fmin.reduceat(flat, offs[:-1])      # NaN-skipping min
+        vmax = np.maximum.reduceat(flat, offs[:-1])   # NaN-propagating max
+        yield pa.RecordBatch.from_arrays(
+            [
+                vec_id,
+                pa.array(n_dims, pa.int32()),
+                pa.array(n_nonfinite, pa.int32()),
+                pa.array(n_clipped, pa.int32()),
+                pa.array(vmin, pa.float64()),
+                pa.array(vmax, pa.float64()),
+            ],
+            ["vec_id", "n_dims", "n_nonfinite", "n_clipped", "vmin", "vmax"],
+        )
+
+
+@query("embedding_range_audit", _RANGE_AUDIT_SQL)
+def q_embedding_range_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """``mapInArrow``: per-vector data-quality audit (dimension count,
+    non-finite count, near-clip count at |x| >= 0.45, exact min/max)
+    computed directly on Arrow RecordBatches — no pandas object layer
+    at all: list offsets and the flattened float buffer map to numpy
+    VIEWS, per-row stats come from segment reductions
+    (bincount/reduceat). This is the preferred lane for numeric batch
+    kernels over array columns when even pandas Series overhead
+    matters (the embedding decode/feature family at 100 TB).
+
+    JVM twin: every stat is expressible with F.filter/F.array_min/
+    F.array_max higher-order functions (the oracle runs that twin in
+    DuckDB; the unit test pins the Spark HOF form equal). All stats
+    are counts and selections — float32→float64 widening is
+    value-exact and nothing is summed, so batch boundaries cannot
+    change any output bit.
+
+    Scale shape: embarrassingly parallel scan; output is 6 narrow
+    columns per vector regardless of dimension — the audit SHRINKS
+    data, so it belongs before any shuffle in a pipeline."""
+    emb = load_table(spark, "embeddings", sf_dir).select("vec_id", "embedding")
+    out_schema = (
+        "vec_id long, n_dims int, n_nonfinite int, n_clipped int, "
+        "vmin double, vmax double"
+    )
+    return emb.mapInArrow(_range_audit_batches, out_schema).orderBy("vec_id")

@@ -18,7 +18,7 @@ driver table is load-bearing in at least one registered query.
 
 Determinism: per-row money expressions ((1−disc)/( 1+tax) products)
 are fixed-shape double arithmetic — identical operand doubles and
-operation order in both engines — then quantized to DECIMAL(18,6) for
+operation order in both engines — then quantized to MONEY_DECIMAL for
 the order-independent SUM (functions/money.py pattern); averages
 divide the exact decimal sum by the exact count.
 """
@@ -28,6 +28,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from dieter___etl___monarchmoney_spark.functions.money import (
+    MONEY_DECIMAL,
+    MONEY_DECIMAL_SQL,
+    money_sum,
+    money_sum_sql,
+)
 from dieter___etl___monarchmoney_spark.registry import query
 from dieter___etl___monarchmoney_spark.sources.parquet import load_table
 
@@ -35,18 +41,18 @@ _CUTOFF = "2001-09-02"
 
 _Q1_SQL = f"""
 SELECT l_returnflag, l_linestatus,
-       CAST(SUM(CAST(l_quantity AS DECIMAL(18,6))) AS DOUBLE) AS sum_qty,
-       CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,6))) AS DOUBLE)
+       {money_sum_sql('l_quantity')} AS sum_qty,
+       {money_sum_sql('l_extendedprice')}
            AS sum_base_price,
-       CAST(SUM(CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(18,6)))
+       CAST(SUM(CAST(l_extendedprice * (1 - l_discount) AS {MONEY_DECIMAL_SQL}))
             AS DOUBLE) AS sum_disc_price,
        CAST(SUM(CAST(l_extendedprice * (1 - l_discount) * (1 + l_tax)
-                     AS DECIMAL(18,6))) AS DOUBLE) AS sum_charge,
-       CAST(SUM(CAST(l_quantity AS DECIMAL(18,6))) AS DOUBLE) / COUNT(*)
+                     AS {MONEY_DECIMAL_SQL})) AS DOUBLE) AS sum_charge,
+       {money_sum_sql('l_quantity')} / COUNT(*)
            AS avg_qty,
-       CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,6))) AS DOUBLE) / COUNT(*)
+       {money_sum_sql('l_extendedprice')} / COUNT(*)
            AS avg_price,
-       CAST(SUM(CAST(l_discount AS DECIMAL(18,6))) AS DOUBLE) / COUNT(*)
+       {money_sum_sql('l_discount')} / COUNT(*)
            AS avg_disc,
        COUNT(*) AS count_order
 FROM lineitem
@@ -61,7 +67,7 @@ def q_pricing_summary_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q1 shape: the pricing summary report — the canonical
     scan-heavy aggregate (8 aggregates over one filtered scan, 4 output
     groups). TPC-H's disc_price/charge money products run as fixed-shape
-    double arithmetic per row and quantize to DECIMAL(18,6) for the
+    double arithmetic per row and quantize to MONEY_DECIMAL for the
     order-independent sums, so the report hashes identically under any
     partitioning.
 
@@ -72,7 +78,7 @@ def q_pricing_summary_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     cells no matter how many billions of rows the fact has. This is the
     shape Spark was built to saturate I/O on."""
     li = load_table(spark, "lineitem", sf_dir)
-    dec = lambda c: c.cast("decimal(18,6)")  # noqa: E731
+    dec = lambda c: c.cast(MONEY_DECIMAL)  # noqa: E731
     disc_price = F.col("l_extendedprice") * (1 - F.col("l_discount"))
     charge = disc_price * (1 + F.col("l_tax"))
     return (
@@ -98,9 +104,9 @@ def q_pricing_summary_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_Q5_SQL = """
+_Q5_SQL = f"""
 SELECT r.r_name, n.n_name,
-       CAST(SUM(CAST(l.l_extendedprice * (1 - l.l_discount) AS DECIMAL(18,6)))
+       CAST(SUM(CAST(l.l_extendedprice * (1 - l.l_discount) AS {MONEY_DECIMAL_SQL}))
             AS DOUBLE) AS revenue,
        COUNT(*) AS n_lineitems,
        COUNT(DISTINCT o.o_orderkey) AS n_orders
@@ -127,7 +133,7 @@ def q_regional_revenue_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     left to AQE/threshold (dim-sized here, and at 100 TB a large
     customer dim correctly degrades to a shuffle join on the already-
     shuffled custkey side). Revenue uses the per-row double product +
-    DECIMAL(18,6) sum pattern, so the rollup hashes identically under
+    MONEY_DECIMAL sum pattern, so the rollup hashes identically under
     any join order AQE picks."""
     li = load_table(spark, "lineitem", sf_dir).select(
         "l_orderkey", "l_extendedprice", "l_discount"
@@ -146,7 +152,7 @@ def q_regional_revenue_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(F.broadcast(region), F.col("n_regionkey") == F.col("r_regionkey"))
         .groupBy("r_name", "n_name")
         .agg(
-            F.sum(revenue_row.cast("decimal(18,6)")).cast("double").alias("revenue"),
+            money_sum(revenue_row).alias("revenue"),
             F.count(F.lit(1)).alias("n_lineitems"),
             F.countDistinct("o_orderkey").alias("n_orders"),
         )
@@ -158,7 +164,7 @@ _Q3_DATE = "1998-06-30"
 
 _Q3_SQL = f"""
 SELECT l.l_orderkey,
-       CAST(SUM(CAST(l.l_extendedprice * (1 - l.l_discount) AS DECIMAL(18,6)))
+       CAST(SUM(CAST(l.l_extendedprice * (1 - l.l_discount) AS {MONEY_DECIMAL_SQL}))
             AS DOUBLE) AS revenue,
        CAST(o.o_orderdate AS DATE) AS o_orderdate,
        o.o_orderpriority
@@ -213,7 +219,7 @@ def q_shipping_priority_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("o_orderdate").cast("date").alias("o_orderdate"),
             "o_orderpriority",
         )
-        .agg(F.sum(revenue_row.cast("decimal(18,6)")).cast("double").alias("revenue"))
+        .agg(money_sum(revenue_row).alias("revenue"))
         .select("l_orderkey", "revenue", "o_orderdate", "o_orderpriority")
         .orderBy(F.col("revenue").desc(), "l_orderkey")
         .limit(10)
@@ -225,10 +231,10 @@ _Q18_MIN_QTY = 150
 _Q18_SQL = f"""
 WITH big AS (
     SELECT l_orderkey,
-           CAST(SUM(CAST(l_quantity AS DECIMAL(18,6))) AS DOUBLE) AS total_qty
+           {money_sum_sql('l_quantity')} AS total_qty
     FROM lineitem
     GROUP BY l_orderkey
-    HAVING SUM(CAST(l_quantity AS DECIMAL(18,6))) > {_Q18_MIN_QTY}
+    HAVING SUM(CAST(l_quantity AS {MONEY_DECIMAL_SQL})) > {_Q18_MIN_QTY}
 )
 SELECT c.c_name, c.c_custkey, o.o_orderkey,
        CAST(o.o_orderdate AS DATE) AS o_orderdate,
@@ -259,7 +265,7 @@ def q_large_volume_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     big = (
         li.groupBy("l_orderkey")
         .agg(
-            F.sum(F.col("l_quantity").cast("decimal(18,6)")).alias("qty_dec")
+            F.sum(F.col("l_quantity").cast(MONEY_DECIMAL)).alias("qty_dec")
         )
         .filter(F.col("qty_dec") > _Q18_MIN_QTY)
         .select("l_orderkey", F.col("qty_dec").cast("double").alias("total_qty"))
@@ -284,8 +290,8 @@ def q_large_volume_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_Q6_SQL = """
-SELECT CAST(SUM(CAST(l_extendedprice * l_discount AS DECIMAL(18,6)))
+_Q6_SQL = f"""
+SELECT CAST(SUM(CAST(l_extendedprice * l_discount AS {MONEY_DECIMAL_SQL}))
             AS DOUBLE) AS revenue_delta,
        COUNT(*) AS n_lineitems
 FROM lineitem
@@ -306,7 +312,7 @@ def q_forecast_revenue_change(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: at 100 TB this is I/O-bound by construction — the
     aggregate exchanges one partial row per task. Revenue uses the
-    fixed-shape double product quantized to DECIMAL(18,6) before the
+    fixed-shape double product quantized to MONEY_DECIMAL before the
     order-independent SUM."""
     li = load_table(spark, "lineitem", sf_dir)
     sd = F.col("l_shipdate").cast("date")
@@ -319,19 +325,16 @@ def q_forecast_revenue_change(spark: SparkSession, sf_dir: str) -> DataFrame:
             & (F.col("l_quantity") < 24)
         )
         .agg(
-            F.sum(
-                (F.col("l_extendedprice") * F.col("l_discount")).cast("decimal(18,6)")
-            )
-            .cast("double")
+            money_sum(F.col("l_extendedprice") * F.col("l_discount"))
             .alias("revenue_delta"),
             F.count(F.lit(1)).alias("n_lineitems"),
         )
     )
 
 
-_Q10_SQL = """
+_Q10_SQL = f"""
 SELECT c.c_custkey, c.c_name, n.n_name,
-       CAST(SUM(CAST(l.l_extendedprice * (1 - l.l_discount) AS DECIMAL(18,6)))
+       CAST(SUM(CAST(l.l_extendedprice * (1 - l.l_discount) AS {MONEY_DECIMAL_SQL}))
             AS DOUBLE) AS revenue,
        COUNT(*) AS n_items
 FROM customer c
@@ -385,7 +388,7 @@ def q_returned_items_ranking(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(F.broadcast(nation), F.col("c_nationkey") == F.col("n_nationkey"))
         .groupBy("c_custkey", "c_name", "n_name")
         .agg(
-            F.sum(revenue_row.cast("decimal(18,6)")).cast("double").alias("revenue"),
+            money_sum(revenue_row).alias("revenue"),
             F.count(F.lit(1)).alias("n_items"),
         )
         .orderBy(F.col("revenue").desc(), "c_custkey")

@@ -1,6 +1,7 @@
 """Relational coverage: joins (J1-J6), windows (W1-W5), sorts/top-k
 (O1-O7), rollups & grouping sets (A4-A8), watermark merge (J4/U1/T2),
-scalar-function surfaces (F1/F3/F6/F15).
+scalar-function surfaces (F1/F3/F6/F15), and the signed running
+balance over the two-phase distributed prefix sum.
 
 Every query is registered with a DuckDB-oracle SQL twin; money sums use
 the exact-decimal pattern (functions/money.py) including *inside window
@@ -12,11 +13,15 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from dieter___etl___monarchmoney_spark.functions.money import clean_currency, money_sum
-from dieter___etl___monarchmoney_spark.operators.aggregates import cashflow_by_key
-from dieter___etl___monarchmoney_spark.operators.transactions import (
-    transactions_query,
+from dieter___etl___monarchmoney_spark.functions.money import (
+    MONEY_DECIMAL,
+    MONEY_DECIMAL_SQL,
+    clean_currency,
+    money_sum,
+    money_sum_sql,
 )
+from dieter___etl___monarchmoney_spark.operators.aggregates import cashflow_by_key
+from dieter___etl___monarchmoney_spark.operators.transactions import transactions_query
 from dieter___etl___monarchmoney_spark.operators.windows import (
     lag_over,
     remaining_amount,
@@ -32,12 +37,6 @@ from dieter___etl___monarchmoney_spark.sources.star_model import (
 )
 from dieter___etl___monarchmoney_spark.streaming.incremental import replace_window_merge
 
-_MSUM = "CAST(SUM(CAST({x} AS DECIMAL(18,6))) AS DOUBLE)"
-
-
-def _msum(x: str) -> str:
-    return _MSUM.format(x=x)
-
 
 # --------------------------------------------------------------------------
 # Joins
@@ -48,7 +47,7 @@ def _msum(x: str) -> str:
     "account_enrichment_join",
     f"""
     SELECT t.account_id, c.c_name AS account_name,
-           {_msum('t.amount')} AS sum, COUNT(*) AS txn_count
+           {money_sum_sql('t.amount')} AS sum, COUNT(*) AS txn_count
     FROM ({TRANSACTIONS_WITH_ACCOUNT_SQL}) t
     JOIN customer c ON t.account_id = c.c_custkey
     GROUP BY t.account_id, c.c_name
@@ -78,7 +77,7 @@ def q_account_enrichment_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "category_group_chain_join",
     f"""
-    SELECT r.r_name AS region_name, {_msum('c.c_acctbal')} AS total_balance,
+    SELECT r.r_name AS region_name, {money_sum_sql('c.c_acctbal')} AS total_balance,
            COUNT(*) AS n_accounts
     FROM customer c
     JOIN nation n ON c.c_nationkey = n.n_nationkey
@@ -108,7 +107,7 @@ def q_category_group_chain_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     "parent_child_self_join",
     f"""
     SELECT p.txn_id AS parent_id, p.amount AS parent_amount,
-           COUNT(c.txn_id) AS n_children, {_msum('c.amount')} AS children_sum
+           COUNT(c.txn_id) AS n_children, {money_sum_sql('c.amount')} AS children_sum
     FROM ({TRANSACTIONS_SQL}) p
     LEFT JOIN ({TRANSACTIONS_SQL}) c
       ON c.order_id = p.order_id AND c.txn_id <> p.txn_id
@@ -182,7 +181,7 @@ def q_watermark_replace_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _MONTHLY_ACTUALS_SQL = f"""
     SELECT merchant_id, CAST(DATE_TRUNC('month', txn_date) AS DATE) AS month,
-           {_msum('amount')} AS actual
+           {money_sum_sql('amount')} AS actual
     FROM ({TRANSACTIONS_SQL})
     GROUP BY merchant_id, CAST(DATE_TRUNC('month', txn_date) AS DATE)
 """
@@ -199,7 +198,7 @@ def _monthly_actuals(spark: SparkSession, sf_dir: str) -> DataFrame:
     "running_total_by_category",
     f"""
     SELECT merchant_id, month, actual,
-           CAST(SUM(CAST(actual AS DECIMAL(18,6)))
+           CAST(SUM(CAST(actual AS {MONEY_DECIMAL_SQL}))
                 OVER (PARTITION BY merchant_id ORDER BY month
                       ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
                 AS DOUBLE) AS cumulative
@@ -222,7 +221,7 @@ def q_running_total(spark: SparkSession, sf_dir: str) -> DataFrame:
     rem AS (
         SELECT merchant_id, month, actual,
                CAST(50000.0 AS DOUBLE) AS planned,  -- bare 50000.0 is DECIMAL in DuckDB
-               CAST(SUM(CAST(50000.0 - actual AS DECIMAL(18,6)))
+               CAST(SUM(CAST(50000.0 - actual AS {MONEY_DECIMAL_SQL}))
                     OVER (PARTITION BY merchant_id ORDER BY month
                           ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
                     AS DOUBLE) AS remaining
@@ -392,7 +391,7 @@ def q_accounts_sorted_contract(spark: SparkSession, sf_dir: str) -> DataFrame:
     "monthly_rollup_by_type",
     f"""
     SELECT CAST(DATE_TRUNC('month', ts) AS DATE) AS period, event_type,
-           {_msum('value')} AS total_value, COUNT(*) AS n_points
+           {money_sum_sql('value')} AS total_value, COUNT(*) AS n_points
     FROM events
     GROUP BY CAST(DATE_TRUNC('month', ts) AS DATE), event_type
     """,
@@ -410,7 +409,7 @@ def q_monthly_rollup_by_type(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "daily_aggregate_snapshots",
     f"""
-    SELECT CAST(ts AS DATE) AS date, {_msum('value')} AS balance,
+    SELECT CAST(ts AS DATE) AS date, {money_sum_sql('value')} AS balance,
            COUNT(*) AS n_points
     FROM events
     GROUP BY CAST(ts AS DATE)
@@ -429,8 +428,8 @@ def q_daily_aggregate_snapshots(spark: SparkSession, sf_dir: str) -> DataFrame:
     "budget_totals_rollup",
     f"""
     SELECT CAST(DATE_TRUNC('month', txn_date) AS DATE) AS month, returnflag,
-           COALESCE({_msum('CASE WHEN amount > 0 THEN amount END')}, 0.0) AS income,
-           COALESCE({_msum('CASE WHEN amount < 0 THEN amount END')}, 0.0) AS expenses,
+           COALESCE({money_sum_sql('CASE WHEN amount > 0 THEN amount END')}, 0.0) AS income,
+           COALESCE({money_sum_sql('CASE WHEN amount < 0 THEN amount END')}, 0.0) AS expenses,
            COUNT(*) AS n
     FROM ({TRANSACTIONS_SQL})
     GROUP BY ROLLUP (CAST(DATE_TRUNC('month', txn_date) AS DATE), returnflag)
@@ -460,7 +459,7 @@ def q_budget_totals_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "currency_clean_roundtrip",
     f"""
-    SELECT {_msum("(CASE WHEN returnflag = 'R' THEN -1.0 ELSE 1.0 END)"
+    SELECT {money_sum_sql("(CASE WHEN returnflag = 'R' THEN -1.0 ELSE 1.0 END)"
                   " * (quantity + 0.25)")} AS cleaned_sum,
            COUNT(*) AS n
     FROM ({TRANSACTIONS_SQL})
@@ -521,10 +520,10 @@ def q_date_functions_surface(spark: SparkSession, sf_dir: str) -> DataFrame:
     "cashflow_by_merchant",
     f"""
     SELECT s.s_name AS merchant_name,
-           {_msum('t.amount')} AS sum,
-           COALESCE({_msum('CASE WHEN t.amount > 0 THEN t.amount END')}, 0.0)
+           {money_sum_sql('t.amount')} AS sum,
+           COALESCE({money_sum_sql('CASE WHEN t.amount > 0 THEN t.amount END')}, 0.0)
                AS sumIncome,
-           COALESCE({_msum('CASE WHEN t.amount < 0 THEN t.amount END')}, 0.0)
+           COALESCE({money_sum_sql('CASE WHEN t.amount < 0 THEN t.amount END')}, 0.0)
                AS sumExpense,
            COUNT(*) AS txn_count
     FROM ({TRANSACTIONS_SQL}) t
@@ -548,7 +547,7 @@ def q_cashflow_by_merchant(spark: SparkSession, sf_dir: str) -> DataFrame:
     "cashflow_cube",
     f"""
     SELECT CAST(DATE_TRUNC('month', txn_date) AS DATE) AS month, returnflag,
-           {_msum('amount')} AS total, COUNT(*) AS n,
+           {money_sum_sql('amount')} AS total, COUNT(*) AS n,
            GROUPING(CAST(DATE_TRUNC('month', txn_date) AS DATE), returnflag) AS gid
     FROM ({TRANSACTIONS_SQL})
     GROUP BY CUBE (CAST(DATE_TRUNC('month', txn_date) AS DATE), returnflag)
@@ -593,9 +592,9 @@ def q_cashflow_cube(spark: SparkSession, sf_dir: str) -> DataFrame:
                 WHEN GROUPING(grp) = 0 THEN grp
                 WHEN GROUPING(merch) = 0 THEN merch
                 ELSE '(all)' END AS key,
-           {_msum('amount')} AS sum_amount,
-           COALESCE({_msum('CASE WHEN amount > 0 THEN amount END')}, 0.0) AS sum_income,
-           COALESCE({_msum('CASE WHEN amount < 0 THEN amount END')}, 0.0) AS sum_expense,
+           {money_sum_sql('amount')} AS sum_amount,
+           COALESCE({money_sum_sql('CASE WHEN amount > 0 THEN amount END')}, 0.0) AS sum_income,
+           COALESCE({money_sum_sql('CASE WHEN amount < 0 THEN amount END')}, 0.0) AS sum_expense,
            COUNT(*) AS n
     FROM base
     GROUP BY GROUPING SETS ((cat), (grp), (merch), ())
@@ -666,17 +665,17 @@ def q_cashflow_report_all(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Join/set-op completeness: FULL OUTER reconciliation and INTERSECT
 # --------------------------------------------------------------------------
 
-_FULL_OUTER_SQL = """
+_FULL_OUTER_SQL = f"""
 WITH booked AS (
     SELECT CAST(o_orderdate AS DATE) AS d,
-           CAST(SUM(CAST(o_totalprice AS DECIMAL(18,6))) AS DOUBLE)
+           {money_sum_sql('o_totalprice')}
                AS booked_total,
            COUNT(*) AS n_orders
     FROM orders GROUP BY CAST(o_orderdate AS DATE)
 ),
 shipped AS (
     SELECT CAST(l_shipdate AS DATE) AS d,
-           CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,6))) AS DOUBLE)
+           {money_sum_sql('l_extendedprice')}
                AS shipped_total,
            COUNT(*) AS n_shipments
     FROM lineitem GROUP BY CAST(l_shipdate AS DATE)
@@ -761,3 +760,63 @@ def q_retained_users_intersect(spark: SparkSession, sf_dir: str) -> DataFrame:
     first = events.filter(F.col("ts") < split).select("user_id")
     second = events.filter(F.col("ts") >= split).select("user_id")
     return first.intersect(second).orderBy("user_id")
+
+
+# ==========================================================================
+# Signed running balance
+# ==========================================================================
+
+#: exact-decimal signed amount — double summation order differs between
+#: a range-partitioned two-phase scan and the oracle's single
+#: sequential window, so the amount MUST be an order-independent
+#: decimal (the money_sum contract, functions/money.py) for the
+#: running balance to match bit-for-bit.
+_AMOUNT_SQL = f"""CASE WHEN event_type = 'purchase'
+         THEN CAST(value AS {MONEY_DECIMAL_SQL})
+         ELSE -CAST(value AS {MONEY_DECIMAL_SQL}) END"""
+
+_BALANCE_SQL = f"""
+SELECT event_id,
+       CAST(SUM({_AMOUNT_SQL}) OVER (
+           ORDER BY ts, event_id
+           ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW
+       ) AS DOUBLE) AS balance
+FROM events
+ORDER BY event_id
+"""
+
+
+@query("signed_running_balance", _BALANCE_SQL)
+def q_signed_running_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Global running balance over the event stream — purchases
+    credit, every other event type debits — ordered by (ts, event_id).
+
+    Scale shape: the oracle's ``SUM() OVER (ORDER BY …)`` is the
+    classic single-reducer scale-killer (one global sort partition);
+    the Spark side runs ``distributed_prefix_sum`` instead — range
+    shuffle + per-partition window + P-row driver offsets
+    (operators/prefix.py) — so the plan is P-way parallel at any
+    scale. Signed amounts are the point: partition totals are
+    SUM(amount), not max-of-prefix, and the amount is exact decimal so
+    the two-phase addition order can't drift from the oracle's
+    sequential one."""
+    from dieter___etl___monarchmoney_spark.operators.prefix import (
+        distributed_prefix_sum,
+    )
+
+    ev = load_table(spark, "events", sf_dir).select(
+        "event_id",
+        "ts",
+        F.when(
+            F.col("event_type") == "purchase",
+            F.col("value").cast(MONEY_DECIMAL),
+        )
+        .otherwise(-F.col("value").cast(MONEY_DECIMAL))
+        .alias("amount"),
+    )
+    out = distributed_prefix_sum(
+        ev, ["ts", "event_id"], "amount", "balance", num_ranges=32
+    )
+    return out.select(
+        "event_id", F.col("balance").cast("double").alias("balance")
+    ).orderBy("event_id")

@@ -13,7 +13,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from dieter___etl___monarchmoney_spark.functions.money import money_sum
+from dieter___etl___monarchmoney_spark.functions.money import (
+    MONEY_DECIMAL,
+    money_sum,
+    money_sum_sql,
+)
 from dieter___etl___monarchmoney_spark.functions.text import fingerprint_md5, rolling_hash
 from dieter___etl___monarchmoney_spark.operators.similarity import ivf_ann_topk
 from dieter___etl___monarchmoney_spark.registry import query
@@ -25,7 +29,6 @@ from dieter___etl___monarchmoney_spark.sources.star_model import (
 
 _TOKS_SQL = r"list_filter(string_split_regex(lower(trim(text)), '\s+'), t -> t <> '')"
 
-_MSUM = "CAST(SUM(CAST({x} AS DECIMAL(18,6))) AS DOUBLE)"
 
 
 @query(
@@ -109,7 +112,7 @@ _GSETS_SQL = f"""
     SELECT CAST(DATE_TRUNC('month', t.txn_date) AS DATE) AS month_key,
            COALESCE(p.p_type, 'ALL') AS group_name,
            CAST(GROUPING(p.p_type) AS INT) AS is_total_row,
-           {_MSUM.format(x='t.amount')} AS actual_sum,
+           {money_sum_sql('t.amount')} AS actual_sum,
            COUNT(*) AS n_txns
     FROM ({TRANSACTIONS_SQL}) t
     JOIN part p ON t.category_id = p.p_partkey
@@ -249,7 +252,7 @@ def q_ivf_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     "skew_salted_cashflow",
     f"""
     SELECT returnflag AS "key",
-           {_MSUM.format(x='amount')} AS sum,
+           {money_sum_sql('amount')} AS sum,
            COUNT(*) AS count
     FROM ({TRANSACTIONS_SQL})
     GROUP BY returnflag
@@ -478,10 +481,10 @@ def q_part_metrics_unpivot(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "daily_type_share",
-    """
+    f"""
     WITH daily AS (
         SELECT CAST(ts AS DATE) AS date, event_type,
-               CAST(SUM(CAST(value AS DECIMAL(18,6))) AS DOUBLE) AS type_value
+               {money_sum_sql('value')} AS type_value
         FROM events
         GROUP BY CAST(ts AS DATE), event_type
     )
@@ -506,7 +509,7 @@ def q_daily_type_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     daily = ev.groupBy(
         F.col("ts").cast("date").alias("date"), "event_type"
     ).agg(
-        F.sum(F.col("value").cast("decimal(18,6)")).cast("double").alias("type_value")
+        money_sum("value").alias("type_value")
     )
     # the window must sum the DECIMAL-exact per-type values the same way
     # the oracle does: SUM(double) over a day's handful of type rows is
@@ -621,11 +624,11 @@ def q_table_checksum(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Incremental aggregate maintenance: merge materialized partials + delta
 # --------------------------------------------------------------------------
 
-_INC_MERGE_SQL = """
+_INC_MERGE_SQL = f"""
 SELECT CAST(ts AS DATE) AS event_date, event_type,
        COUNT(*) AS n_events,
-       CAST(SUM(CAST(value AS DECIMAL(18,6))) AS DOUBLE) AS total_value,
-       CAST(SUM(CAST(value AS DECIMAL(18,6))) AS DOUBLE) / COUNT(*) AS avg_value
+       {money_sum_sql('value')} AS total_value,
+       {money_sum_sql('value')} / COUNT(*) AS avg_value
 FROM events
 GROUP BY event_date, event_type
 ORDER BY event_date, event_type
@@ -642,7 +645,7 @@ def q_incremental_agg_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle is the full recompute, so parity PROVES merge == recompute.
 
     Mergeable-state rules: COUNT merges by +, SUM merges by + (kept as
-    DECIMAL(18,6) through the merge so neither the partial nor the
+    MONEY_DECIMAL through the merge so neither the partial nor the
     merge order can flake a hash), AVG is NOT mergeable and is derived
     from the merged sum/count at the end — the same discipline the
     sketch family (hll/countmin) applies to its registers.
@@ -660,7 +663,7 @@ def q_incremental_agg_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     dated = events.crossJoin(F.broadcast(cutoff)).select(
         F.col("ts").cast("date").alias("event_date"),
         "event_type",
-        F.col("value").cast("decimal(18,6)").alias("v"),
+        F.col("value").cast(MONEY_DECIMAL).alias("v"),
         (F.col("ts").cast("date") < F.col("cut")).alias("is_history"),
     )
 

@@ -1,0 +1,1535 @@
+"""Time-series and funnel operators over the events series: change
+points and seasonality, autocorrelation, ordered funnels, forecasting
+(seasonal-naive backtest, Holt), session dwell, graph link prediction
+and rank surfaces. Money sums go through ``functions/money.py`` so the
+oracle hashes cannot flake on summation order.
+"""
+
+from __future__ import annotations
+
+from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import functions as F
+
+from dieter___etl___monarchmoney_spark.functions.money import (
+    MONEY_DECIMAL,
+    MONEY_DECIMAL_SQL,
+    money_sum,
+    money_sum_sql,
+)
+from dieter___etl___monarchmoney_spark.pins import pin
+from dieter___etl___monarchmoney_spark.queries.llm_pipeline import _CLUSTERS_SQL
+from dieter___etl___monarchmoney_spark.queries.streaming_queries import (
+    _SESSIONIZATION_ORACLE,
+)
+from dieter___etl___monarchmoney_spark.registry import query
+from dieter___etl___monarchmoney_spark.sources.parquet import load_table
+from dieter___etl___monarchmoney_spark.streaming.sessionize import sessionize_batch
+
+
+# ==========================================================================
+# Sketches and change points
+# ==========================================================================
+
+# --------------------------------------------------------------------------
+# KMV (k-minimum-values) set similarity between event-type audiences
+# --------------------------------------------------------------------------
+
+#: LCG constants (glibc): applied twice for mixing. 1103515245 * (2^31-1)
+#: ≈ 2.4e18 < 2^63-1, so the arithmetic never overflows BIGINT in either
+#: engine — overflow behavior is the classic cross-engine trap for
+#: hash-sketch parity.
+_KMV_A, _KMV_B, _KMV_M = 1103515245, 12345, 2147483648
+_KMV_K = 128
+
+_KMV_SQL = f"""
+WITH du AS (SELECT DISTINCT event_type, user_id FROM events),
+h AS (
+    SELECT DISTINCT event_type,
+           (({_KMV_A} * (({_KMV_A} * user_id + {_KMV_B}) % {_KMV_M})
+             + {_KMV_B}) % {_KMV_M}) AS h
+    FROM du
+),
+sk AS (
+    SELECT event_type, h FROM (
+        SELECT event_type, h,
+               ROW_NUMBER() OVER (PARTITION BY event_type ORDER BY h) AS r
+        FROM h
+    ) WHERE r <= {_KMV_K}
+),
+types AS (SELECT DISTINCT event_type FROM du),
+pairs AS (
+    SELECT a.event_type AS type_a, b.event_type AS type_b
+    FROM types a JOIN types b ON a.event_type < b.event_type
+),
+merged AS (
+    SELECT p.type_a, p.type_b, s.h,
+           MAX(CASE WHEN s.event_type = p.type_a THEN 1 ELSE 0 END) AS in_a,
+           MAX(CASE WHEN s.event_type = p.type_b THEN 1 ELSE 0 END) AS in_b
+    FROM pairs p
+    JOIN sk s ON s.event_type IN (p.type_a, p.type_b)
+    GROUP BY p.type_a, p.type_b, s.h
+),
+ranked AS (
+    SELECT type_a, type_b, in_a, in_b,
+           ROW_NUMBER() OVER (PARTITION BY type_a, type_b ORDER BY h) AS r,
+           COUNT(*) OVER (PARTITION BY type_a, type_b) AS n_merged
+    FROM merged
+),
+est AS (
+    SELECT type_a, type_b,
+           CAST(SUM(CASE WHEN r <= {_KMV_K} AND in_a = 1 AND in_b = 1
+                         THEN 1 ELSE 0 END) AS DOUBLE)
+             / CAST(LEAST(MAX(n_merged), {_KMV_K}) AS DOUBLE) AS est_jaccard
+    FROM ranked GROUP BY type_a, type_b
+),
+exact AS (
+    SELECT a.event_type AS type_a, b.event_type AS type_b,
+           CAST(COUNT(CASE WHEN a.user_id = b.user_id THEN 1 END) AS BIGINT)
+               AS n_inter
+    FROM du a JOIN du b
+      ON a.user_id = b.user_id AND a.event_type < b.event_type
+    GROUP BY a.event_type, b.event_type
+),
+sizes AS (SELECT event_type, COUNT(*) AS n FROM du GROUP BY event_type)
+SELECT e.type_a, e.type_b, est.est_jaccard,
+       CAST(e.n_inter AS DOUBLE)
+         / CAST(sa.n + sb.n - e.n_inter AS DOUBLE) AS exact_jaccard,
+       e.n_inter, (sa.n + sb.n - e.n_inter) AS n_union
+FROM exact e
+JOIN est ON est.type_a = e.type_a AND est.type_b = e.type_b
+JOIN sizes sa ON sa.event_type = e.type_a
+JOIN sizes sb ON sb.event_type = e.type_b
+ORDER BY e.type_a, e.type_b
+"""
+
+
+@query("kmv_set_similarity", _KMV_SQL)
+def q_kmv_set_similarity(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """KMV (k-minimum-values / bottom-k) sketch Jaccard between the
+    distinct-user audiences of every event-type pair, alongside the
+    exact Jaccard — the distributed-systems workhorse for "how similar
+    are these two huge sets" without materializing either (Beyer et al.,
+    SIGMOD'07 "On synopses for distinct-value estimation").
+
+    Determinism: the hash is an explicit two-round LCG over BIGINT —
+    identical integer arithmetic in Spark and DuckDB (no engine hash()
+    involved, no overflow) — so the sketch, and therefore the ESTIMATE
+    itself, is bit-reproducible and oracle-checkable, not just
+    approximately right.
+
+    Scale shape: per-type sketches are a distinct + window-top-k whose
+    state is ≤k rows per type (the window partitions by type — at 100 TB
+    the distinct does the heavy shuffle and the sketch output is KB);
+    everything after operates on #types·k rows on one node's worth of
+    data. Exact Jaccard (the audit side) is the only fact-sized join —
+    drop it in production and the sketch path alone remains."""
+    events = load_table(spark, "events", sf_dir)
+    du = events.select("event_type", "user_id").distinct()
+    h1 = (F.lit(_KMV_A) * F.col("user_id") + F.lit(_KMV_B)) % F.lit(_KMV_M)
+    h2 = (F.lit(_KMV_A) * h1 + F.lit(_KMV_B)) % F.lit(_KMV_M)
+    hashed = du.select("event_type", h2.alias("h")).distinct()
+    w = Window.partitionBy("event_type").orderBy("h")
+    sk = (
+        hashed.withColumn("r", F.row_number().over(w))
+        .filter(F.col("r") <= _KMV_K)
+        .select("event_type", "h")
+    )
+    types = du.select("event_type").distinct()
+    pairs = (
+        types.alias("a")
+        .join(
+            types.alias("b"),
+            F.col("a.event_type") < F.col("b.event_type"),
+        )
+        .select(
+            F.col("a.event_type").alias("type_a"),
+            F.col("b.event_type").alias("type_b"),
+        )
+    )
+    merged = (
+        F.broadcast(pairs)
+        .join(
+            sk,
+            (sk.event_type == F.col("type_a")) | (sk.event_type == F.col("type_b")),
+        )
+        .groupBy("type_a", "type_b", "h")
+        .agg(
+            F.max(
+                F.when(F.col("event_type") == F.col("type_a"), 1).otherwise(0)
+            ).alias("in_a"),
+            F.max(
+                F.when(F.col("event_type") == F.col("type_b"), 1).otherwise(0)
+            ).alias("in_b"),
+        )
+    )
+    wp = Window.partitionBy("type_a", "type_b").orderBy("h")
+    wall = Window.partitionBy("type_a", "type_b")
+    est = (
+        merged.withColumn("r", F.row_number().over(wp))
+        .withColumn("n_merged", F.count(F.lit(1)).over(wall))
+        .groupBy("type_a", "type_b")
+        .agg(
+            (
+                F.sum(
+                    F.when(
+                        (F.col("r") <= _KMV_K)
+                        & (F.col("in_a") == 1)
+                        & (F.col("in_b") == 1),
+                        1,
+                    ).otherwise(0)
+                ).cast("double")
+                / F.least(F.max("n_merged"), F.lit(_KMV_K)).cast("double")
+            ).alias("est_jaccard")
+        )
+    )
+    exact = (
+        du.alias("x")
+        .join(
+            du.alias("y"),
+            (F.col("x.user_id") == F.col("y.user_id"))
+            & (F.col("x.event_type") < F.col("y.event_type")),
+        )
+        .groupBy(
+            F.col("x.event_type").alias("type_a"),
+            F.col("y.event_type").alias("type_b"),
+        )
+        .agg(F.count(F.lit(1)).alias("n_inter"))
+    )
+    sizes = du.groupBy("event_type").agg(F.count(F.lit(1)).alias("n"))
+    sa = sizes.select(F.col("event_type").alias("type_a"), F.col("n").alias("na"))
+    sb = sizes.select(F.col("event_type").alias("type_b"), F.col("n").alias("nb"))
+    return (
+        exact.join(est, ["type_a", "type_b"])
+        .join(F.broadcast(sa), "type_a")
+        .join(F.broadcast(sb), "type_b")
+        .select(
+            "type_a",
+            "type_b",
+            "est_jaccard",
+            (
+                F.col("n_inter").cast("double")
+                / (F.col("na") + F.col("nb") - F.col("n_inter")).cast("double")
+            ).alias("exact_jaccard"),
+            "n_inter",
+            (F.col("na") + F.col("nb") - F.col("n_inter")).alias("n_union"),
+        )
+        .orderBy("type_a", "type_b")
+    )
+
+
+# --------------------------------------------------------------------------
+# CUSUM changepoint scan over the daily value series
+# --------------------------------------------------------------------------
+
+_CUSUM_SQL = f"""
+WITH daily AS (
+    SELECT CAST(ts AS DATE) AS d,
+           CAST(SUM(CAST(value AS {MONEY_DECIMAL_SQL})) AS DECIMAL(38,6)) AS v
+    FROM events GROUP BY CAST(ts AS DATE)
+),
+tot AS (
+    SELECT CAST(SUM(v) AS DECIMAL(38,6)) AS total,
+           COUNT(*) AS n
+    FROM daily
+),
+cum AS (
+    SELECT d,
+           CAST(SUM(v) OVER (ORDER BY d
+                ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
+                AS DECIMAL(38,6)) AS c,
+           CAST(ROW_NUMBER() OVER (ORDER BY d) AS BIGINT) AS t
+    FROM daily
+)
+SELECT d AS changepoint_date,
+       CAST(CAST(n AS DECIMAL(38,6)) * c
+            - CAST(t AS DECIMAL(38,6)) * total AS DOUBLE)
+         / CAST(n AS DOUBLE) AS cusum
+FROM cum, tot
+ORDER BY ABS(CAST(CAST(n AS DECIMAL(38,6)) * c
+                  - CAST(t AS DECIMAL(38,6)) * total AS DOUBLE)
+             / CAST(n AS DOUBLE)) DESC, d
+LIMIT 10
+"""
+
+
+@query("cusum_changepoint", _CUSUM_SQL)
+def q_cusum_changepoint(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """CUSUM changepoint scan: for the daily event-value series, the
+    cumulative sum of deviations from the global mean, S_t = Σ_{i≤t}
+    (v_i − μ); the date maximizing |S_t| is the classic single-
+    changepoint estimate (Page 1954 / binary-segmentation step 1). Top
+    10 candidate dates by |S_t|.
+
+    Determinism: the textbook form subtracts a MEAN — a division whose
+    rounding would infect every partial sum. Rewritten scale-free as
+    S_t = (n·C_t − t·Total)/n with C_t/Total exact DECIMAL(38,6) sums
+    and n, t integers: the numerator is EXACT integer×decimal
+    arithmetic in both engines, and the single double division per row
+    is fixed-shape. DECIMAL(38,6) gives 32 integer digits — n·C_t at
+    100 TB scale (n≈10⁴ days × 10¹³ total) still fits with 10 digits
+    to spare.
+
+    Scale shape: the fact collapses to one row per day in a map-side-
+    combinable aggregate; the cumulative window runs over the
+    day-cardinality series (thousands of rows — single partition by
+    design, and correctly so: the series IS driver-scale). The top-10
+    is a TakeOrderedAndProject with a date tie-break."""
+    events = load_table(spark, "events", sf_dir)
+    daily = (
+        events.groupBy(F.col("ts").cast("date").alias("d"))
+        .agg(
+            F.sum(F.col("value").cast(MONEY_DECIMAL))
+            .cast("decimal(38,6)")
+            .alias("v")
+        )
+    )
+    tot = daily.agg(
+        F.sum("v").cast("decimal(38,6)").alias("total"),
+        F.count(F.lit(1)).alias("n"),
+    )
+    wcum = Window.orderBy("d").rowsBetween(Window.unboundedPreceding, 0)
+    cum = daily.select(
+        "d",
+        F.sum("v").over(wcum).cast("decimal(38,6)").alias("c"),
+        F.row_number().over(Window.orderBy("d")).cast("long").alias("t"),
+    )
+    cusum = (
+        F.col("n").cast("decimal(38,6)") * F.col("c")
+        - F.col("t").cast("decimal(38,6)") * F.col("total")
+    ).cast("double") / F.col("n").cast("double")
+    return (
+        cum.crossJoin(F.broadcast(tot))
+        .select(F.col("d").alias("changepoint_date"), cusum.alias("cusum"))
+        .orderBy(F.abs(F.col("cusum")).desc(), "changepoint_date")
+        .limit(10)
+    )
+
+
+# --------------------------------------------------------------------------
+# Day-of-week seasonal decomposition of the daily activity series
+# --------------------------------------------------------------------------
+
+_DOW_SQL = """
+WITH daily AS (
+    SELECT CAST(ts AS DATE) AS d, COUNT(*) AS n_events
+    FROM events GROUP BY CAST(ts AS DATE)
+),
+keyed AS (
+    SELECT d, n_events,
+           (CAST(d AS DATE) - DATE '1970-01-01') % 7 AS dow
+    FROM daily
+),
+season AS (
+    SELECT dow,
+           CAST(SUM(n_events) AS DOUBLE) / COUNT(*) AS dow_mean,
+           COUNT(*) AS n_days
+    FROM keyed GROUP BY dow
+)
+SELECT k.d, k.dow, k.n_events, s.dow_mean,
+       CAST(k.n_events AS DOUBLE) - s.dow_mean AS residual
+FROM keyed k JOIN season s ON s.dow = k.dow
+ORDER BY ABS(CAST(k.n_events AS DOUBLE) - s.dow_mean) DESC, k.d
+LIMIT 15
+"""
+
+
+@query("seasonal_dow_decompose", _DOW_SQL)
+def q_seasonal_dow_decompose(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Day-of-week seasonal decomposition: the daily event-count series
+    split into a per-weekday baseline (the seasonal component) and a
+    residual; the top-15 |residual| days are the calendar anomalies
+    that survive weekday seasonality — the first honest step of any
+    traffic-anomaly monitor (naive z-scores flag every weekend).
+
+    Determinism: day-of-week is epoch-day mod 7 — pure integer
+    arithmetic, immune to engine dayofweek()/locale conventions
+    (Sunday=0 vs 1 vs 7). Counts are integers; the baseline is exact
+    integer sum / count in one fixed-shape double division.
+
+    Scale shape: fact → day-cardinality aggregate (map-side
+    combinable); the seasonal join is 7 rows broadcast back onto the
+    day series. Nothing fact-sized survives the first aggregate."""
+    events = load_table(spark, "events", sf_dir)
+    daily = events.groupBy(F.col("ts").cast("date").alias("d")).agg(
+        F.count(F.lit(1)).alias("n_events")
+    )
+    keyed = daily.select(
+        "d",
+        "n_events",
+        (F.datediff(F.col("d"), F.lit("1970-01-01").cast("date")) % 7)
+        .cast("long")
+        .alias("dow"),
+    )
+    season = keyed.groupBy("dow").agg(
+        (F.sum("n_events").cast("double") / F.count(F.lit(1))).alias("dow_mean"),
+        F.count(F.lit(1)).alias("n_days"),
+    )
+    residual = F.col("n_events").cast("double") - F.col("dow_mean")
+    return (
+        keyed.join(F.broadcast(season.select("dow", "dow_mean")), "dow")
+        .select("d", "dow", "n_events", "dow_mean", residual.alias("residual"))
+        .orderBy(F.abs(residual).desc(), "d")
+        .limit(15)
+    )
+
+
+# --------------------------------------------------------------------------
+# Per-source document-length band filter (exact order-statistic cutoffs)
+# --------------------------------------------------------------------------
+
+_BAND_LO, _BAND_HI = 0.05, 0.95
+
+_BAND_SQL = f"""
+WITH ranked AS (
+    SELECT source, n_chars,
+           ROW_NUMBER() OVER (PARTITION BY source
+                              ORDER BY n_chars, doc_id) AS r,
+           COUNT(*) OVER (PARTITION BY source) AS n
+    FROM documents
+),
+cuts AS (
+    SELECT source,
+           MAX(CASE WHEN r = CAST(FLOOR({_BAND_LO} * (n - 1)) AS BIGINT) + 1
+                    THEN n_chars END) AS lo_chars,
+           MAX(CASE WHEN r = CAST(FLOOR({_BAND_HI} * (n - 1)) AS BIGINT) + 1
+                    THEN n_chars END) AS hi_chars
+    FROM ranked GROUP BY source
+)
+SELECT d.source,
+       COUNT(*) AS n_kept,
+       CAST(SUM(d.n_chars) AS BIGINT) AS kept_chars,
+       c.lo_chars, c.hi_chars
+FROM documents d JOIN cuts c ON c.source = d.source
+WHERE d.n_chars >= c.lo_chars AND d.n_chars <= c.hi_chars
+GROUP BY d.source, c.lo_chars, c.hi_chars
+ORDER BY d.source
+"""
+
+
+@query("doc_length_band_filter", _BAND_SQL)
+def q_doc_length_band_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Per-source length-band curation: keep documents whose character
+    length falls inside the source's own [p5, p95] band — the standard
+    "drop truncated fragments and concatenation blobs per domain" rule
+    (C4/RefinedWeb-style length filtering, made source-relative so a
+    code-heavy source isn't judged by a news source's lengths).
+
+    Determinism: cutoffs are EXACT order statistics — the value at rank
+    floor(q·(n−1))+1 under the total order (n_chars, doc_id) — not an
+    interpolated percentile, so both engines pick the same concrete
+    document's length as the threshold (interpolation formulas are the
+    classic cross-engine divergence; rank selection cannot diverge).
+
+    Scale shape (round 11, VERDICT r10 #1's class fix): the exact rank
+    comes from the two-phase bucketed row_number (operators/rank.py —
+    per-source percentile_approx edges, local ranks in |sources| x 32
+    cells, broadcast offsets; the group size rides the same K-bounded
+    cell-count table), replacing the per-source full-membership window
+    whose single task was this query's own documented 100 TB cost.
+    Cutoffs stay one row per source joined back as a broadcast; the
+    filter+aggregate is one more scan."""
+    from dieter___etl___monarchmoney_spark.operators.rank import exact_group_rank
+
+    docs = load_table(spark, "documents", sf_dir).select(
+        "source", "doc_id", "n_chars"
+    )
+    ranked = exact_group_rank(
+        docs, ["source"], "n_chars", ["doc_id"], rank_col="r", n_col="n"
+    ).select("source", "n_chars", "r", "n")
+    lo_rank = F.floor(F.lit(_BAND_LO) * (F.col("n") - 1)).cast("long") + 1
+    hi_rank = F.floor(F.lit(_BAND_HI) * (F.col("n") - 1)).cast("long") + 1
+    cuts = ranked.groupBy("source").agg(
+        F.max(F.when(F.col("r") == lo_rank, F.col("n_chars"))).alias("lo_chars"),
+        F.max(F.when(F.col("r") == hi_rank, F.col("n_chars"))).alias("hi_chars"),
+    )
+    return (
+        docs.join(F.broadcast(cuts), "source")
+        .filter(
+            (F.col("n_chars") >= F.col("lo_chars"))
+            & (F.col("n_chars") <= F.col("hi_chars"))
+        )
+        .groupBy("source", "lo_chars", "hi_chars")
+        .agg(
+            F.count(F.lit(1)).alias("n_kept"),
+            F.sum("n_chars").alias("kept_chars"),
+        )
+        .select("source", "n_kept", "kept_chars", "lo_chars", "hi_chars")
+        .orderBy("source")
+    )
+
+
+# ==========================================================================
+# Graph, series, funnel and rank surfaces
+# ==========================================================================
+
+_DEC18 = "decimal(38,18)"
+
+
+# --------------------------------------------------------------------------
+# Adamic-Adar link prediction over the near-dup similarity graph
+# --------------------------------------------------------------------------
+
+_AA_TOPK = 50
+_AA_TYPE = "PROMO"  # one product line keeps the projection graph sparse
+_AA_MIN_CO = 3      # support threshold: >=3 shared customers per edge
+
+_ADAMIC_ADAR_SQL = f"""
+WITH baskets AS (
+    SELECT DISTINCT o_custkey AS cust, l_partkey AS pk
+    FROM lineitem
+    JOIN orders ON o_orderkey = l_orderkey
+    JOIN part ON p_partkey = l_partkey
+    WHERE p_type = '{_AA_TYPE}'
+),
+edges AS (
+    SELECT a.pk AS doc_a, b.pk AS doc_b
+    FROM baskets a JOIN baskets b ON a.cust = b.cust AND a.pk < b.pk
+    GROUP BY 1, 2
+    HAVING COUNT(*) >= {_AA_MIN_CO}
+),
+sym AS (
+    SELECT doc_a AS src, doc_b AS dst FROM edges
+    UNION ALL
+    SELECT doc_b AS src, doc_a AS dst FROM edges
+),
+deg AS (SELECT src AS node, COUNT(*) AS degree FROM sym GROUP BY src),
+wedges AS (
+    SELECT e1.dst AS a, e2.dst AS b, e1.src AS w
+    FROM sym e1 JOIN sym e2 ON e1.src = e2.src AND e1.dst < e2.dst
+),
+scored AS (
+    SELECT a, b,
+           COUNT(*) AS n_common,
+           CAST(SUM(CAST(1.0 / LN(CAST(d.degree AS DOUBLE))
+                         AS DECIMAL(38,18))) AS DOUBLE) AS aa_score
+    FROM wedges JOIN deg d ON d.node = w
+    GROUP BY a, b
+),
+novel AS (
+    SELECT s.a, s.b, s.n_common, s.aa_score
+    FROM scored s
+    LEFT JOIN edges e ON e.doc_a = s.a AND e.doc_b = s.b
+    WHERE e.doc_a IS NULL
+)
+SELECT a AS part_a, b AS part_b, CAST(n_common AS BIGINT) AS n_common,
+       ROUND(aa_score, 9) AS aa_score
+FROM novel
+ORDER BY aa_score DESC, part_a, part_b
+LIMIT {_AA_TOPK}
+"""
+
+
+@query("linkpred_adamic_adar", _ADAMIC_ADAR_SQL)
+def q_linkpred_adamic_adar(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Link prediction on the co-purchase graph: parts of one product
+    line are linked when at least _AA_MIN_CO customers bought both; for
+    every NON-edge pair at distance 2, the Adamic-Adar score
+    Σ_w 1/ln(deg(w)) over common neighbors w ranks the likeliest
+    missing edges — the recommender-adjacent graph primitive. (The
+    near-dup graph is the WRONG substrate for this op: exact-copy
+    clusters are cliques, so its distance-2 non-edge set is provably
+    empty — link prediction needs open wedges, which co-purchase
+    projections have in abundance.)
+
+    Scale shape: the bipartite projection aggregates per-customer
+    baskets — cost Σ basket² bounded by restricting to one product
+    line (at 100 TB: cap basket size or sample heavy customers, the
+    same guard as doc_freq_cap); the support threshold (HAVING >= 3)
+    prunes the edge list BEFORE any graph step. Wedges then enumerate
+    by a self-equi-join of the symmetrized edges on the shared vertex
+    — Σ deg², the triangle-counting budget. Known edges drop via a
+    broadcast anti join. Every common neighbor has degree >= 2 by
+    construction, so ln(deg) >= ln 2 and the 1/ln term is finite;
+    per-wedge terms quantize to DECIMAL(38,18) before the SUM so
+    aggregation order cannot flake the hash; top-k ties break on
+    (part_a, part_b)."""
+    li = load_table(spark, "lineitem", sf_dir).select("l_orderkey", "l_partkey")
+    orders = load_table(spark, "orders", sf_dir).select("o_orderkey", "o_custkey")
+    promo = (
+        load_table(spark, "part", sf_dir)
+        .filter(F.col("p_type") == _AA_TYPE)
+        .select("p_partkey")
+    )
+    baskets = (
+        li.join(F.broadcast(promo), F.col("p_partkey") == F.col("l_partkey"), "left_semi")
+        .join(orders, F.col("o_orderkey") == F.col("l_orderkey"))
+        .select(F.col("o_custkey").alias("cust"), F.col("l_partkey").alias("pk"))
+        .distinct()
+    )
+    ba = baskets.select("cust", F.col("pk").alias("pa"))
+    bb = baskets.select(F.col("cust").alias("cust2"), F.col("pk").alias("pb"))
+    # three consumers (two wedge sides + the anti join); without the
+    # pin the projection re-runs per alias
+    edges = pin(
+        ba.join(bb, (F.col("cust") == F.col("cust2")) & (F.col("pa") < F.col("pb")))
+        .groupBy(F.col("pa").alias("doc_a"), F.col("pb").alias("doc_b"))
+        .agg(F.count(F.lit(1)).alias("co"))
+        .filter(F.col("co") >= _AA_MIN_CO)
+        .select("doc_a", "doc_b")
+    )
+    sym = edges.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst")).unionAll(
+        edges.select(F.col("doc_b").alias("src"), F.col("doc_a").alias("dst"))
+    )
+    deg = sym.groupBy(F.col("src").alias("node")).agg(
+        F.count(F.lit(1)).alias("degree")
+    )
+    e1 = sym.select(F.col("src").alias("w"), F.col("dst").alias("a"))
+    e2 = sym.select(F.col("src").alias("w2"), F.col("dst").alias("b"))
+    wedges = e1.join(e2, (F.col("w") == F.col("w2")) & (F.col("a") < F.col("b")))
+    scored = (
+        wedges.join(F.broadcast(deg), F.col("node") == F.col("w"))
+        .select(
+            "a",
+            "b",
+            (F.lit(1.0) / F.log(F.col("degree").cast("double")))
+            .cast(_DEC18)
+            .alias("t"),
+        )
+        .groupBy("a", "b")
+        .agg(
+            F.count(F.lit(1)).alias("n_common"),
+            F.sum("t").cast("double").alias("aa"),
+        )
+    )
+    novel = scored.join(
+        F.broadcast(edges),
+        (F.col("doc_a") == F.col("a")) & (F.col("doc_b") == F.col("b")),
+        "left_anti",
+    )
+    return (
+        novel.select(
+            F.col("a").alias("part_a"),
+            F.col("b").alias("part_b"),
+            F.col("n_common").cast("bigint").alias("n_common"),
+            F.round("aa", 9).alias("aa_score"),
+        )
+        .orderBy(F.col("aa_score").desc(), "part_a", "part_b")
+        .limit(_AA_TOPK)
+    )
+
+
+# --------------------------------------------------------------------------
+# Autocorrelation of the hourly value series
+# --------------------------------------------------------------------------
+
+_ACF_LAGS = (1, 2, 3, 6, 12, 24)
+
+_ACF_SQL = f"""
+WITH hourly AS (
+    SELECT CAST(epoch_us(ts) // 3600000000 AS BIGINT) AS h,
+           {money_sum_sql('value')} AS x
+    FROM events GROUP BY 1
+),
+m AS (
+    SELECT CAST(SUM(CAST(x AS DECIMAL(38,12))) AS DOUBLE) / COUNT(*) AS mean,
+           CAST(SUM(CAST((x - (SELECT CAST(SUM(CAST(x AS DECIMAL(38,12)))
+                                        AS DOUBLE) / COUNT(*) FROM hourly))
+                         * (x - (SELECT CAST(SUM(CAST(x AS DECIMAL(38,12)))
+                                        AS DOUBLE) / COUNT(*) FROM hourly))
+                         AS DECIMAL(38,12))) AS DOUBLE) AS ss
+    FROM hourly
+),
+lags AS (SELECT unnest([{', '.join(str(k) for k in _ACF_LAGS)}]) AS lag),
+pairs AS (
+    SELECT l.lag,
+           (a.x - m.mean) * (b.x - m.mean) AS p
+    FROM hourly a
+    JOIN lags l ON TRUE
+    JOIN hourly b ON b.h = a.h + l.lag
+    CROSS JOIN m
+),
+num AS (
+    SELECT lag,
+           CAST(SUM(CAST(p AS DECIMAL(38,12))) AS DOUBLE) AS sp,
+           COUNT(*) AS n_pairs
+    FROM pairs GROUP BY lag
+)
+SELECT CAST(lag AS INT) AS lag,
+       ROUND(sp / (SELECT ss FROM m), 9) AS acf,
+       CAST(n_pairs AS BIGINT) AS n_pairs
+FROM num
+ORDER BY lag
+"""
+
+
+@query("hourly_value_acf", _ACF_SQL)
+def q_hourly_value_acf(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Autocorrelation of the hourly total-value series at lags
+    {1,2,3,6,12,24} — the seasonality detector that tells a pipeline
+    whether daily periodicity exists BEFORE fitting anything
+    (seasonal_dow_decompose's upstream question).
+
+    Lag alignment is by HOUR ARITHMETIC (epoch-hour + k), not by row
+    offset: a LAG window over existing rows would silently misalign
+    across gaps in the series, and gap behavior must be identical on
+    both engines. Pairs outside the observed range simply drop, and
+    n_pairs reports the support per lag.
+
+    Scale shape: the fact collapses to an hour-cardinality series in
+    one map-side-combinable exact-decimal aggregate; everything after
+    (mean, centered sum of squares, the per-lag products) runs on
+    |hours| rows — a frame that stays sketch-sized at any fact scale
+    (one year ≈ 8,760 rows). The lag join is an equi-join on h+k
+    against the broadcast-small series itself; mean and ss ride along
+    as a broadcast 1-row frame. All sums quantize to decimals; the
+    acf ratio divides two exact doubles identically on both engines."""
+    ev = load_table(spark, "events", sf_dir)
+    hourly = (
+        ev.select(
+            (F.unix_micros("ts") / F.lit(3_600_000_000)).cast("bigint").alias("h"),
+            F.col("value").cast(MONEY_DECIMAL).alias("v"),
+        )
+        .groupBy("h")
+        .agg(F.sum("v").cast("double").alias("x"))
+    )
+    stats = hourly.agg(
+        (F.sum(F.col("x").cast("decimal(38,12)")).cast("double") / F.count(F.lit(1))).alias(
+            "mean"
+        )
+    )
+    centered = hourly.crossJoin(F.broadcast(stats)).select(
+        "h", "x", (F.col("x") - F.col("mean")).alias("c"), "mean"
+    )
+    ss = centered.agg(
+        F.sum((F.col("c") * F.col("c")).cast("decimal(38,12)"))
+        .cast("double")
+        .alias("ss")
+    )
+    lags = spark.range(1).select(
+        F.explode(F.array(*[F.lit(k) for k in _ACF_LAGS])).alias("lag")
+    )
+    a = centered.select("h", F.col("c").alias("ca"))
+    b = centered.select(F.col("h").alias("hb"), F.col("c").alias("cb"))
+    pairs = (
+        a.crossJoin(F.broadcast(lags))
+        .join(b, F.col("hb") == F.col("h") + F.col("lag"))
+        .select("lag", (F.col("ca") * F.col("cb")).cast("decimal(38,12)").alias("p"))
+    )
+    num = pairs.groupBy("lag").agg(
+        F.sum("p").cast("double").alias("sp"), F.count(F.lit(1)).alias("n_pairs")
+    )
+    return (
+        num.crossJoin(F.broadcast(ss))
+        .select(
+            F.col("lag").cast("int").alias("lag"),
+            F.round(F.col("sp") / F.col("ss"), 9).alias("acf"),
+            F.col("n_pairs").cast("bigint").alias("n_pairs"),
+        )
+        .orderBy("lag")
+    )
+
+
+# --------------------------------------------------------------------------
+# Ordered conversion funnel: signup -> first view after -> first purchase after
+# --------------------------------------------------------------------------
+
+_FUNNEL_SQL = """
+WITH s AS (
+    SELECT user_id, MIN(ts) AS t_signup
+    FROM events WHERE event_type = 'signup' GROUP BY user_id
+),
+v AS (
+    SELECT e.user_id, MIN(e.ts) AS t_view
+    FROM events e JOIN s ON s.user_id = e.user_id
+    WHERE e.event_type = 'view' AND e.ts >= s.t_signup
+    GROUP BY e.user_id
+),
+p AS (
+    SELECT e.user_id, MIN(e.ts) AS t_purchase
+    FROM events e JOIN v ON v.user_id = e.user_id
+    WHERE e.event_type = 'purchase' AND e.ts >= v.t_view
+    GROUP BY e.user_id
+)
+SELECT (SELECT COUNT(DISTINCT user_id) FROM events) AS n_users,
+       (SELECT COUNT(*) FROM s) AS n_signup,
+       (SELECT COUNT(*) FROM v) AS n_view_after,
+       (SELECT COUNT(*) FROM p) AS n_purchase_after,
+       CAST((SELECT COUNT(*) FROM v) AS DOUBLE)
+           / (SELECT COUNT(*) FROM s) AS view_rate,
+       CAST((SELECT COUNT(*) FROM p) AS DOUBLE)
+           / NULLIF((SELECT COUNT(*) FROM v), 0) AS purchase_rate
+"""
+
+
+@query("funnel_conversion_steps", _FUNNEL_SQL)
+def q_funnel_conversion_steps(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """ORDERED conversion funnel: signup, then the first view AT OR
+    AFTER the signup, then the first purchase AT OR AFTER that view —
+    the sequencing constraint is what distinguishes a funnel from
+    three independent counts (a purchase before the user's first
+    qualifying view must NOT count, even if both event types exist).
+
+    Scale shape: three aggregates and two joins, ALL keyed on user_id
+    — one co-partitioned shuffle key throughout, so after the first
+    exchange the funnel steps are narrow per-user reductions (each
+    stage's frame is user-cardinality, strictly shrinking down the
+    funnel). This is the two-pass generalization of
+    conversion_lag_quantiles' single conditional aggregate, needed
+    because step N's cutoff depends on step N-1's result. Counts are
+    exact integers; the two rates divide exact integers as doubles."""
+    ev = load_table(spark, "events", sf_dir)
+    s = (
+        ev.filter(F.col("event_type") == "signup")
+        .groupBy("user_id")
+        .agg(F.min("ts").alias("t_signup"))
+    )
+    v = (
+        ev.filter(F.col("event_type") == "view")
+        .join(s, "user_id")
+        .filter(F.col("ts") >= F.col("t_signup"))
+        .groupBy("user_id")
+        .agg(F.min("ts").alias("t_view"))
+    )
+    p = (
+        ev.filter(F.col("event_type") == "purchase")
+        .join(v, "user_id")
+        .filter(F.col("ts") >= F.col("t_view"))
+        .groupBy("user_id")
+        .agg(F.min("ts").alias("t_purchase"))
+    )
+    n_users = ev.agg(F.countDistinct("user_id").alias("n_users"))
+    counts = (
+        n_users.crossJoin(F.broadcast(s.agg(F.count(F.lit(1)).alias("n_signup"))))
+        .crossJoin(F.broadcast(v.agg(F.count(F.lit(1)).alias("n_view_after"))))
+        .crossJoin(F.broadcast(p.agg(F.count(F.lit(1)).alias("n_purchase_after"))))
+    )
+    return counts.select(
+        "n_users",
+        "n_signup",
+        "n_view_after",
+        "n_purchase_after",
+        (F.col("n_view_after").cast("double") / F.col("n_signup")).alias("view_rate"),
+        (
+            F.col("n_purchase_after").cast("double")
+            / F.nullif(F.col("n_view_after"), F.lit(0))
+        ).alias("purchase_rate"),
+    )
+
+
+# --------------------------------------------------------------------------
+# Analytic-rank surface: percent_rank / cume_dist / ntile in one window
+# --------------------------------------------------------------------------
+
+_RANK_SURFACE_SQL = """
+SELECT c_custkey,
+       c_mktsegment,
+       c_acctbal,
+       ROUND(PERCENT_RANK() OVER w, 9) AS pct_rank,
+       ROUND(CUME_DIST() OVER w, 9) AS cume,
+       CAST(NTILE(4) OVER w AS INT) AS quartile
+FROM customer
+WINDOW w AS (PARTITION BY c_mktsegment ORDER BY c_acctbal, c_custkey)
+ORDER BY c_mktsegment, c_acctbal, c_custkey
+"""
+
+
+@query("customer_balance_rank_surface", _RANK_SURFACE_SQL)
+def q_customer_balance_rank_surface(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The remaining analytic-rank surface in ONE window pass:
+    percent_rank, cume_dist, and ntile(4) over account balance within
+    each market segment (row_number/rank/dense_rank/lag/lead are
+    exercised elsewhere — this closes the rank-function family).
+
+    The window orders by (c_acctbal, c_custkey): the unique tie-break
+    inside the ORDER BY matters here more than anywhere else, because
+    percent_rank/cume_dist assign EQUAL values to peers — without the
+    key, tied balances would be engine-order-dependent in ntile (which
+    splits peers) even though the other two are tie-stable.
+
+    Scale shape: one hash partition by segment, one sort per
+    partition, all three functions evaluated in the same window
+    operator (one pass, no extra exchange); at 100 TB the segment key
+    is low-cardinality but each partition streams — rank functions
+    carry O(1) state. Output is the full ranked table, the shape a
+    curation pipeline persists as a feature column."""
+    cust = load_table(spark, "customer", sf_dir)
+    w = Window.partitionBy("c_mktsegment").orderBy("c_acctbal", "c_custkey")
+    return (
+        cust.select(
+            "c_custkey",
+            "c_mktsegment",
+            "c_acctbal",
+            F.round(F.percent_rank().over(w), 9).alias("pct_rank"),
+            F.round(F.cume_dist().over(w), 9).alias("cume"),
+            F.ntile(4).over(w).cast("int").alias("quartile"),
+        )
+        .orderBy("c_mktsegment", "c_acctbal", "c_custkey")
+    )
+
+
+# ==========================================================================
+# Evaluation compositions
+# ==========================================================================
+
+# --------------------------------------------------------------------------
+# Seasonal-naive backtest (WAPE per event type)
+# --------------------------------------------------------------------------
+
+_LAG_DAYS = 7
+
+_BACKTEST_SQL = f"""
+WITH daily AS (
+    SELECT event_type, CAST(ts AS DATE) AS d,
+           {money_sum_sql('value')} AS v
+    FROM events GROUP BY 1, 2
+),
+paired AS (
+    SELECT a.event_type, a.d, a.v, f.v AS fcast
+    FROM daily a
+    JOIN daily f ON f.event_type = a.event_type
+                AND f.d = a.d - INTERVAL {_LAG_DAYS} DAY
+)
+SELECT event_type,
+       CAST(COUNT(*) AS BIGINT) AS n_days,
+       {money_sum_sql('ABS(v - fcast)')}
+           AS total_abs_err,
+       {money_sum_sql('ABS(v)')} AS total_abs_actual,
+       {money_sum_sql('ABS(v - fcast)')}
+         / {money_sum_sql('ABS(v)')} AS wape
+FROM paired
+GROUP BY event_type
+ORDER BY event_type
+"""
+
+
+@query("seasonal_naive_backtest", _BACKTEST_SQL)
+def q_seasonal_naive_backtest(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Seasonal-naive backtest: predict each day's per-type total with
+    the value {LAG} days earlier, scored with WAPE (Σ|err| / Σ|actual|
+    — the ratio of two exact-decimal sums, robust where per-day MAPE
+    divides by near-zero days). This is the baseline every forecasting
+    model must beat, and the evaluation loop for the weekly
+    seasonality hourly_value_acf detects.
+
+    Lag alignment is by DATE ARITHMETIC (d - {LAG} days), not row
+    offset — the same gap-safety contract as the ACF. At 100 TB the
+    fact collapses to a (type, day) frame in one aggregate before any
+    pairing; the self-join keys on (type, day), both sides
+    day-cardinality."""
+    ev = load_table(spark, "events", sf_dir)
+    daily = (
+        ev.groupBy("event_type", F.col("ts").cast("date").alias("d"))
+        .agg(money_sum("value").alias("v"))
+    )
+    fc = daily.select(
+        F.col("event_type").alias("et2"),
+        F.date_add(F.col("d"), _LAG_DAYS).alias("d2"),
+        F.col("v").alias("fcast"),
+    )
+    paired = daily.join(
+        fc, (F.col("et2") == F.col("event_type")) & (F.col("d2") == F.col("d"))
+    )
+    err = F.abs(F.col("v") - F.col("fcast")).cast(MONEY_DECIMAL)
+    act = F.abs(F.col("v")).cast(MONEY_DECIMAL)
+    return (
+        paired.groupBy("event_type")
+        .agg(
+            F.count(F.lit(1)).cast("bigint").alias("n_days"),
+            F.sum(err).cast("double").alias("total_abs_err"),
+            F.sum(act).cast("double").alias("total_abs_actual"),
+        )
+        .select(
+            "event_type",
+            "n_days",
+            "total_abs_err",
+            "total_abs_actual",
+            (F.col("total_abs_err") / F.col("total_abs_actual")).alias("wape"),
+        )
+        .orderBy("event_type")
+    )
+
+
+# --------------------------------------------------------------------------
+# Session dwell metrics (composed over the sessionization operator)
+# --------------------------------------------------------------------------
+
+_DWELL_SQL = f"""
+WITH sessions AS (
+    SELECT * FROM ({_SESSIONIZATION_ORACLE}) s
+),
+dur AS (
+    SELECT session_end_us - session_start_us AS dwell_us, n_events,
+           ROW_NUMBER() OVER (ORDER BY session_end_us - session_start_us)
+               - 1 AS i,
+           COUNT(*) OVER () AS n
+    FROM sessions
+)
+SELECT CAST(MAX(n) AS BIGINT) AS n_sessions,
+       CAST(SUM(CASE WHEN n_events = 1 THEN 1 ELSE 0 END) AS DOUBLE)
+         / MAX(n) AS bounce_rate,
+       MAX(CASE WHEN i = CAST(FLOOR(0.50 * (n - 1)) AS BIGINT)
+                THEN dwell_us END) AS p50_dwell_us,
+       MAX(CASE WHEN i = CAST(FLOOR(0.90 * (n - 1)) AS BIGINT)
+                THEN dwell_us END) AS p90_dwell_us
+FROM dur
+"""
+
+
+@query("session_dwell_metrics", _DWELL_SQL)
+def q_session_dwell_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The product metrics ON TOP of sessionization: session count,
+    bounce rate (single-event sessions), and exact p50/p90 dwell time
+    — computed from the SAME sessionize_batch operator the driver
+    checks directly, so this row re-validates the session semantics
+    through a second, aggregated lens (its oracle embeds the full
+    sessionization oracle as a subquery).
+
+    Dwell percentiles use the repo's order-statistic convention
+    (value at floor(p·(n-1)) of the sorted multiset — selection, no
+    interpolation) on integer microsecond durations: deterministic
+    regardless of tie order. Scale shape: the session frame is already
+    the user-shuffled aggregate; the global order statistic runs on
+    session-cardinality data (one single-partition window over an
+    aggregated frame — the documented post-aggregate exception)."""
+    sessions = sessionize_batch(load_table(spark, "events", sf_dir)).select(
+        (
+            F.unix_micros("session_end") - F.unix_micros("session_start")
+        ).alias("dwell_us"),
+        "n_events",
+    )
+    w = Window.orderBy("dwell_us")
+    ranked = sessions.select(
+        "dwell_us",
+        "n_events",
+        (F.row_number().over(w) - 1).alias("i"),
+        F.count(F.lit(1)).over(Window.partitionBy()).alias("n"),
+    )
+    return ranked.agg(
+        F.max("n").cast("bigint").alias("n_sessions"),
+        (
+            F.sum(F.when(F.col("n_events") == 1, 1).otherwise(0)).cast("double")
+            / F.max("n")
+        ).alias("bounce_rate"),
+        F.max(
+            F.when(F.col("i") == F.floor(0.50 * (F.col("n") - 1)), F.col("dwell_us"))
+        ).alias("p50_dwell_us"),
+        F.max(
+            F.when(F.col("i") == F.floor(0.90 * (F.col("n") - 1)), F.col("dwell_us"))
+        ).alias("p90_dwell_us"),
+    )
+
+
+# --------------------------------------------------------------------------
+# Dup-component size distribution (composed over connected components)
+# --------------------------------------------------------------------------
+
+_COMPONENT_DIST_SQL = f"""
+WITH assigned AS ({_CLUSTERS_SQL}),
+sizes AS (
+    SELECT cluster_id, COUNT(*) AS cluster_size
+    FROM assigned GROUP BY cluster_id
+),
+meta AS (
+    SELECT CAST(MAX(cluster_size) AS DOUBLE) AS giant,
+           CAST(SUM(cluster_size) AS DOUBLE) AS total
+    FROM sizes
+)
+SELECT CAST(s.cluster_size AS BIGINT) AS cluster_size,
+       CAST(COUNT(*) AS BIGINT) AS n_clusters,
+       m.giant / m.total AS giant_share
+FROM sizes s CROSS JOIN meta m
+GROUP BY s.cluster_size, m.giant, m.total
+ORDER BY cluster_size
+"""
+
+
+@query("component_size_distribution", _COMPONENT_DIST_SQL)
+def q_component_size_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The dedup sanity check run BEFORE trusting any dedup pass: the
+    cluster-size histogram of the near-dup connected components plus
+    the giant-component share (largest component / corpus). A healthy
+    near-dup graph is dominated by size-1..3 components; a large giant
+    share means the similarity threshold or banding collapsed the
+    corpus and the survivor step would delete real data. Composes the
+    SAME clusters operator the driver checks directly (oracle embeds
+    its oracle), re-validating component semantics through the
+    histogram lens.
+
+    Scale shape: sizes is a cluster-cardinality aggregate of the
+    assignment; the histogram re-aggregates sizes (≤ max-size groups);
+    giant/total ride along as a broadcast 1-row frame. Integer counts
+    and a ratio of two exact integers — nothing to quantize. Candidate
+    pairs come from the shared materialized MinHash table (the fourth
+    consumer), so the audit never re-pays the signature+banding pass
+    it is auditing."""
+    from dieter___etl___monarchmoney_spark.operators.dedup import (
+        neardup_clusters,
+    )
+    from dieter___etl___monarchmoney_spark.queries.llm_pipeline import (
+        shared_minhash_pairs,
+    )
+
+    docs = load_table(spark, "documents", sf_dir)
+    pairs = shared_minhash_pairs(spark, sf_dir)
+    assigned = neardup_clusters(docs, pairs, "doc_id")
+    sizes = assigned.groupBy("cluster_id").agg(
+        F.count(F.lit(1)).alias("cluster_size")
+    )
+    meta = sizes.agg(
+        F.max("cluster_size").cast("double").alias("giant"),
+        F.sum("cluster_size").cast("double").alias("total"),
+    )
+    return (
+        sizes.crossJoin(F.broadcast(meta))
+        .groupBy("cluster_size", "giant", "total")
+        .agg(F.count(F.lit(1)).cast("bigint").alias("n_clusters"))
+        .select(
+            F.col("cluster_size").cast("bigint").alias("cluster_size"),
+            "n_clusters",
+            (F.col("giant") / F.col("total")).alias("giant_share"),
+        )
+        .orderBy("cluster_size")
+    )
+
+
+# ==========================================================================
+# Classify, forecast, report and attribute
+# ==========================================================================
+
+_FTOKS_SQL = r"list_filter(string_split_regex(lower(trim(text)), '\s+'), t -> t <> '')"
+
+# --------------------------------------------------------------------------
+# Naive-Bayes language classifier + confusion matrix
+# --------------------------------------------------------------------------
+
+_NB_SQL = rf"""
+WITH words AS (
+    SELECT doc_id, lang, unnest({_FTOKS_SQL}) AS word FROM documents
+),
+dwc AS (
+    SELECT doc_id, lang AS true_lang, word, CAST(COUNT(*) AS BIGINT) AS c_dw
+    FROM words GROUP BY 1, 2, 3
+),
+lw AS (SELECT lang, word, CAST(COUNT(*) AS BIGINT) AS c_lw FROM words GROUP BY 1, 2),
+lt AS (SELECT lang, CAST(COUNT(*) AS BIGINT) AS n_l FROM words GROUP BY 1),
+vocab AS (SELECT CAST(COUNT(DISTINCT word) AS BIGINT) AS v FROM words),
+ld AS (SELECT lang, CAST(COUNT(*) AS BIGINT) AS n_docs FROM documents GROUP BY 1),
+tot AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_total FROM documents),
+scored AS (
+    SELECT d.doc_id, d.true_lang, lt.lang AS cand,
+           CAST(SUM(CAST(d.c_dw * ln(
+                    CAST(COALESCE(lw.c_lw, 0) + 1 AS DOUBLE)
+                    / (lt.n_l + vocab.v)) AS DECIMAL(38,18))) AS DOUBLE)
+           + ln(CAST(ld.n_docs AS DOUBLE) / tot.n_total) AS score
+    FROM dwc d
+    CROSS JOIN lt
+    CROSS JOIN vocab
+    JOIN ld ON ld.lang = lt.lang
+    CROSS JOIN tot
+    LEFT JOIN lw ON lw.lang = lt.lang AND lw.word = d.word
+    GROUP BY d.doc_id, d.true_lang, lt.lang, ld.n_docs, tot.n_total
+),
+pred AS (
+    SELECT doc_id, true_lang, cand AS pred_lang
+    FROM (
+        SELECT doc_id, true_lang, cand,
+               row_number() OVER (PARTITION BY doc_id
+                                  ORDER BY score DESC, cand) AS rn
+        FROM scored
+    ) WHERE rn = 1
+)
+SELECT true_lang, pred_lang, CAST(COUNT(*) AS BIGINT) AS n_docs
+FROM pred GROUP BY 1, 2 ORDER BY 1, 2
+"""
+
+
+@query("naive_bayes_lang_confusion", _NB_SQL)
+def q_naive_bayes_lang_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Multinomial naive Bayes trained on the documents table (add-1
+    smoothing, log-space) and resubstitution-scored, reported as a
+    (true language, predicted language) confusion matrix — the
+    classical supervised check of the heuristic `text_language_id`.
+
+    The entire train+score loop is aggregates and joins: per-(lang,
+    word) counts are the model (vocabulary-sized), scoring joins each
+    document's (word, count) vector against all |langs| candidate
+    rows (a dimension-sized cross), and each log-likelihood term
+    quantizes to DECIMAL(38,18) before the per-(doc, candidate) sum —
+    so the argmax is order-proof and the oracle reproduces it exactly
+    (transcendentals agree bit-for-bit between engines per the
+    determinism contract). No per-row UDF, no driver-side model
+    object — at 100 TB the model stays a broadcast table."""
+    docs = load_table(spark, "documents", sf_dir)
+    words = docs.select(
+        "doc_id",
+        "lang",
+        F.explode(
+            F.array_remove(F.split(F.lower(F.trim(F.col("text"))), r"\s+"), "")
+        ).alias("word"),
+    )
+    dwc = words.groupBy(
+        "doc_id", F.col("lang").alias("true_lang"), "word"
+    ).agg(F.count(F.lit(1)).cast("bigint").alias("c_dw"))
+    lw = words.groupBy("lang", "word").agg(
+        F.count(F.lit(1)).cast("bigint").alias("c_lw")
+    )
+    lt = words.groupBy("lang").agg(F.count(F.lit(1)).cast("bigint").alias("n_l"))
+    vocab = words.agg(F.countDistinct("word").cast("bigint").alias("v"))
+    ld = docs.groupBy("lang").agg(F.count(F.lit(1)).cast("bigint").alias("n_docs"))
+    tot = docs.agg(F.count(F.lit(1)).cast("bigint").alias("n_total"))
+    cand = (
+        lt.join(ld, "lang")
+        .crossJoin(F.broadcast(vocab))
+        .crossJoin(F.broadcast(tot))
+        .select(F.col("lang").alias("cand"), "n_l", "n_docs", "v", "n_total")
+    )
+    pairs = dwc.crossJoin(F.broadcast(cand)).join(
+        lw.select(
+            F.col("lang").alias("cand"), F.col("word"), F.col("c_lw")
+        ),
+        ["cand", "word"],
+        "left",
+    )
+    term = (
+        F.col("c_dw")
+        * F.log(
+            (F.coalesce(F.col("c_lw"), F.lit(0)) + 1).cast("double")
+            / (F.col("n_l") + F.col("v"))
+        )
+    ).cast("decimal(38,18)")
+    scored = pairs.groupBy(
+        "doc_id", "true_lang", "cand", "n_docs", "n_total"
+    ).agg(
+        (
+            F.sum(term).cast("double")
+            + F.log(F.col("n_docs").cast("double") / F.col("n_total"))
+        ).alias("score")
+    )
+    pred = (
+        scored.withColumn(
+            "rn",
+            F.row_number().over(
+                Window.partitionBy("doc_id").orderBy(
+                    F.col("score").desc(), F.col("cand")
+                )
+            ),
+        )
+        .filter(F.col("rn") == 1)
+        .select("true_lang", F.col("cand").alias("pred_lang"))
+    )
+    return (
+        pred.groupBy("true_lang", "pred_lang")
+        .agg(F.count(F.lit(1)).cast("bigint").alias("n_docs"))
+        .orderBy("true_lang", "pred_lang")
+    )
+
+
+# --------------------------------------------------------------------------
+# Holt linear (double-exponential) smoothing as an order-pinned fold
+# --------------------------------------------------------------------------
+
+_HOLT_ALPHA = 0.5
+_HOLT_BETA = 0.3
+
+_HOLT_SQL = f"""
+WITH daily AS (
+    SELECT event_type, CAST(ts AS DATE) AS day,
+           {money_sum_sql('value')} AS y
+    FROM events GROUP BY 1, 2
+),
+ser AS (
+    SELECT event_type, list(y ORDER BY day) AS ys FROM daily GROUP BY 1
+),
+folded AS (
+    -- accumulator is a 2-element [level, trend] LIST, not a struct:
+    -- DuckDB 1.0's list_reduce evaluates struct_pack fields against a
+    -- sequentially-mutated accumulator (field b's expression sees the
+    -- already-updated l), silently corrupting the recurrence; list
+    -- literals evaluate their elements against the unmutated acc.
+    SELECT event_type,
+           list_reduce(
+               list_transform(ys, y -> [CAST(y AS DOUBLE), CAST(0.0 AS DOUBLE)]),
+               (acc, e) -> [
+                   {_HOLT_ALPHA} * e[1]
+                        + {1 - _HOLT_ALPHA} * (acc[1] + acc[2]),
+                   {_HOLT_BETA} * (({_HOLT_ALPHA} * e[1]
+                        + {1 - _HOLT_ALPHA} * (acc[1] + acc[2])) - acc[1])
+                        + {1 - _HOLT_BETA} * acc[2]]) AS st
+    FROM ser
+)
+SELECT event_type,
+       ROUND(st[1], 9) AS level_final,
+       ROUND(st[2], 9) AS trend_final,
+       ROUND(st[1] + 7 * st[2], 9) AS forecast_7d
+FROM folded ORDER BY event_type
+"""
+
+
+@query("holt_linear_forecast", _HOLT_SQL)
+def q_holt_linear_forecast(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Holt's linear (double-exponential) smoothing over each event
+    type's daily-volume series, with a 7-step-ahead forecast — the
+    trend-aware sibling of `ewma_smoothing` (level only) and
+    `seasonal_naive_backtest`. Semantics: l₁=y₁, b₁=0, then
+    l=αy+(1−α)(l+b), b=β(l−l_prev)+(1−β)b with α={a}, β={b}.
+
+    The recurrence is inherently sequential IN TIME but the series is
+    per-key and day-grained — so each key's 30-point array folds in
+    one task (array_sort + F.aggregate left fold), while keys
+    parallelize. That is the 100 TB shape: millions of series, each
+    tiny. Both engines run the IDENTICAL op sequence (the l-update
+    expression inlined twice, same literal order), so the fold is
+    bit-reproducible; daily inputs route through DECIMAL sums
+    first.""".format(a=_HOLT_ALPHA, b=_HOLT_BETA)
+    events = load_table(spark, "events", sf_dir)
+    daily = events.groupBy("event_type", F.to_date("ts").alias("day")).agg(
+        money_sum("value").alias("y")
+    )
+    ser = daily.groupBy("event_type").agg(
+        F.array_sort(F.collect_list(F.struct("day", "y"))).alias("arr")
+    )
+    ys = F.transform(F.col("arr"), lambda s: s["y"])
+    a, na = F.lit(_HOLT_ALPHA), F.lit(1 - _HOLT_ALPHA)
+    b, nb = F.lit(_HOLT_BETA), F.lit(1 - _HOLT_BETA)
+
+    def step(acc, y):
+        l_new = a * y + na * (acc["l"] + acc["b"])
+        l_new2 = a * y + na * (acc["l"] + acc["b"])
+        return F.struct(
+            l_new.alias("l"),
+            (b * (l_new2 - acc["l"]) + nb * acc["b"]).alias("b"),
+        )
+
+    init = F.struct(
+        F.element_at(ys, 1).alias("l"), F.lit(0.0).alias("b")
+    )
+    folded = F.when(
+        F.size(ys) > 1,
+        F.aggregate(F.slice(ys, 2, F.size(ys) - 1), init, step),
+    ).otherwise(init)
+    return (
+        ser.select("event_type", folded.alias("st"))
+        .select(
+            "event_type",
+            F.round(F.col("st")["l"], 9).alias("level_final"),
+            F.round(F.col("st")["b"], 9).alias("trend_final"),
+            F.round(F.col("st")["l"] + 7 * F.col("st")["b"], 9).alias(
+                "forecast_7d"
+            ),
+        )
+        .orderBy("event_type")
+    )
+
+
+# --------------------------------------------------------------------------
+# Top-N + OTHER reporting rollup
+# --------------------------------------------------------------------------
+
+_TOPN_OTHERS_SQL = f"""
+WITH ranked AS (
+    SELECT c_nationkey, c_custkey, c_acctbal,
+           row_number() OVER (PARTITION BY c_nationkey
+                              ORDER BY c_acctbal DESC, c_custkey) AS rk
+    FROM customer
+)
+SELECT c_nationkey, CAST(c_custkey AS VARCHAR) AS member,
+       ROUND(c_acctbal, 9) AS balance, CAST(rk AS BIGINT) AS rnk
+FROM ranked WHERE rk <= 3
+UNION ALL
+SELECT c_nationkey, 'OTHER' AS member,
+       ROUND({money_sum_sql('c_acctbal')}, 9)
+           AS balance,
+       CAST(4 AS BIGINT) AS rnk
+FROM ranked WHERE rk > 3 GROUP BY c_nationkey
+ORDER BY c_nationkey, rnk, member
+"""
+
+
+@query("topn_with_others_rollup", _TOPN_OTHERS_SQL)
+def q_topn_with_others_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The standard reporting rollup: each nation's top-3 customers by
+    balance as individual rows plus one OTHER row aggregating the
+    rest — the shape every dashboard's 'top N + other' pie/limit view
+    needs, here as one window + one conditional aggregate.
+
+    The rank window partitions by nation (never global); the OTHER
+    aggregate quantizes balances to DECIMAL before summing so the
+    long-tail sum is order-exact. At scale the same plan holds: the
+    window shuffles once on the group key and the OTHER branch is a
+    partial-agg of the same shuffled pass."""
+    ranked = load_table(spark, "customer", sf_dir).select(
+        "c_nationkey",
+        "c_custkey",
+        "c_acctbal",
+        F.row_number()
+        .over(
+            Window.partitionBy("c_nationkey").orderBy(
+                F.col("c_acctbal").desc(), F.col("c_custkey")
+            )
+        )
+        .alias("rk"),
+    )
+    top = ranked.filter(F.col("rk") <= 3).select(
+        "c_nationkey",
+        F.col("c_custkey").cast("string").alias("member"),
+        F.round("c_acctbal", 9).alias("balance"),
+        F.col("rk").cast("bigint").alias("rnk"),
+    )
+    others = (
+        ranked.filter(F.col("rk") > 3)
+        .groupBy("c_nationkey")
+        .agg(
+            F.round(
+                money_sum("c_acctbal"), 9
+            ).alias("balance")
+        )
+        .select(
+            "c_nationkey",
+            F.lit("OTHER").alias("member"),
+            "balance",
+            F.lit(4).cast("bigint").alias("rnk"),
+        )
+    )
+    return top.unionByName(others).orderBy("c_nationkey", "rnk", "member")
+
+
+# --------------------------------------------------------------------------
+# Hierarchical share-of-parent revenue report
+# --------------------------------------------------------------------------
+
+_HIERARCHY_SQL = f"""
+WITH nat_rev AS (
+    SELECT r.r_name AS region_name, n.n_name AS nation_name,
+           {money_sum_sql('o.o_totalprice')}
+               AS nation_rev
+    FROM orders o
+    JOIN customer c ON c.c_custkey = o.o_custkey
+    JOIN nation n ON n.n_nationkey = c.c_nationkey
+    JOIN region r ON r.r_regionkey = n.n_regionkey
+    GROUP BY 1, 2
+)
+SELECT region_name, nation_name,
+       nation_rev,
+       ROUND(nation_rev / SUM(nation_rev)
+                 OVER (PARTITION BY region_name), 9) AS share_of_region,
+       ROUND(nation_rev / SUM(nation_rev) OVER (), 9) AS share_of_total
+FROM nat_rev ORDER BY region_name, nation_name
+"""
+
+
+@query("hierarchy_share_report", _HIERARCHY_SQL)
+def q_hierarchy_share_report(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Percent-of-parent roll-up across the region → nation hierarchy:
+    each nation's revenue, its share of its region, and its share of
+    the total. The share windows run over the 25-row AGGREGATE (a
+    dimension-sized frame — the one place an unpartitioned window is
+    legitimate, because its input can never be data-sized); the only
+    fact-sized work is the one revenue aggregate behind broadcast dim
+    joins, DECIMAL-pooled so the shares are order-exact."""
+    o = load_table(spark, "orders", sf_dir)
+    c = load_table(spark, "customer", sf_dir)
+    n = load_table(spark, "nation", sf_dir)
+    r = load_table(spark, "region", sf_dir)
+    nat_rev = (
+        o.join(c, o.o_custkey == c.c_custkey)
+        .join(F.broadcast(n), c.c_nationkey == n.n_nationkey)
+        .join(F.broadcast(r), n.n_regionkey == r.r_regionkey)
+        .groupBy(
+            F.col("r_name").alias("region_name"),
+            F.col("n_name").alias("nation_name"),
+        )
+        .agg(
+            money_sum("o_totalprice")
+            .alias("nr")
+        )
+    )
+    w_region = Window.partitionBy("region_name")
+    w_all = Window.partitionBy()
+    # no in-query ROUND on the 1e8-magnitude revenue: rounding a double
+    # at 9 fractional digits past its significand is engine-divergent
+    # (multiply-round-divide precision differs); the harness's uniform
+    # 9dp normalization handles display instead. Shares are ≤1, safe.
+    return nat_rev.select(
+        "region_name",
+        "nation_name",
+        F.col("nr").alias("nation_rev"),
+        F.round(F.col("nr") / F.sum("nr").over(w_region), 9).alias(
+            "share_of_region"
+        ),
+        F.round(F.col("nr") / F.sum("nr").over(w_all), 9).alias("share_of_total"),
+    ).orderBy("region_name", "nation_name")
+
+
+# --------------------------------------------------------------------------
+# Linear multi-touch conversion attribution
+# --------------------------------------------------------------------------
+
+_ATTRIB_SQL = """
+WITH p AS (
+    SELECT event_id AS p_id, user_id, ts AS p_ts
+    FROM events WHERE event_type = 'purchase'
+),
+j AS (
+    SELECT p.p_id, t.event_type AS channel
+    FROM p
+    LEFT JOIN events t
+      ON t.user_id = p.user_id
+     AND t.event_type IN ('view', 'click')
+     AND t.ts <= p.p_ts
+     AND t.ts > p.p_ts - INTERVAL 7 DAY
+),
+credited AS (
+    SELECT COALESCE(channel, 'direct') AS channel,
+           CAST(CASE WHEN channel IS NULL THEN 1.0
+                ELSE 1.0 / (COUNT(channel) OVER (PARTITION BY p_id))
+                END AS DECIMAL(38,18)) AS credit
+    FROM j
+)
+SELECT channel,
+       ROUND(CAST(SUM(credit) AS DOUBLE), 9) AS attributed_conversions,
+       CAST(COUNT(*) AS BIGINT) AS n_touches
+FROM credited GROUP BY channel ORDER BY channel
+"""
+
+
+@query("linear_touch_attribution", _ATTRIB_SQL)
+def q_linear_touch_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Linear multi-touch attribution: every purchase distributes one
+    unit of conversion credit equally across the user's view/click
+    touches in the preceding 7 days; purchases with no touches credit
+    a 'direct' channel. The classic marketing-analytics operator the
+    reference's cashflow attribution is a special case of.
+
+    Scale shape: the touch join is user-keyed equi + time-range
+    residual (per-user event counts are bounded, so fan-out is
+    per-user² at worst, never cross-user); the per-purchase touch
+    count is a window over the join result partitioned by purchase
+    id. Credits (1/n, exact doubles) quantize to DECIMAL(38,18)
+    before the channel sum, so attribution totals are
+    aggregation-order-proof."""
+    events = load_table(spark, "events", sf_dir)
+    p = events.filter(F.col("event_type") == "purchase").select(
+        F.col("event_id").alias("p_id"),
+        F.col("user_id").alias("p_user"),
+        F.col("ts").alias("p_ts"),
+    )
+    t = events.filter(F.col("event_type").isin("view", "click")).select(
+        F.col("user_id").alias("t_user"),
+        F.col("ts").alias("t_ts"),
+        F.col("event_type").alias("channel"),
+    )
+    j = p.join(
+        t,
+        (F.col("t_user") == F.col("p_user"))
+        & (F.col("t_ts") <= F.col("p_ts"))
+        & (F.col("t_ts") > F.col("p_ts") - F.expr("INTERVAL 7 DAYS")),
+        "left",
+    ).select("p_id", "channel")
+    wcnt = Window.partitionBy("p_id")
+    credited = j.select(
+        F.coalesce(F.col("channel"), F.lit("direct")).alias("channel"),
+        F.when(F.col("channel").isNull(), F.lit(1.0))
+        .otherwise(F.lit(1.0) / F.count("channel").over(wcnt))
+        .cast("decimal(38,18)")
+        .alias("credit"),
+    )
+    return (
+        credited.groupBy("channel")
+        .agg(
+            F.round(F.sum("credit").cast("double"), 9).alias(
+                "attributed_conversions"
+            ),
+            F.count(F.lit(1)).cast("bigint").alias("n_touches"),
+        )
+        .orderBy("channel")
+    )

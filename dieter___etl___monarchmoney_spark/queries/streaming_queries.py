@@ -10,11 +10,16 @@ import tempfile
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-
+from dieter___etl___monarchmoney_spark.functions.money import money_sum_sql
 from dieter___etl___monarchmoney_spark.registry import query
-from dieter___etl___monarchmoney_spark.sources.parquet import load_table, sf_tag
+from dieter___etl___monarchmoney_spark.sources.parquet import (
+    _normalize_event_time,
+    load_table,
+    sf_tag,
+)
 from dieter___etl___monarchmoney_spark.streaming.sessionize import sessionize_batch
 from dieter___etl___monarchmoney_spark.streaming.stream_reader import (
+    EVENTS_RAW_SCHEMA,
     daily_rollup_stream,
     dedup_stream,
     read_events_stream,
@@ -22,15 +27,11 @@ from dieter___etl___monarchmoney_spark.streaming.stream_reader import (
 )
 
 
-def _digest(sf_dir: str) -> str:
-    return sf_tag(sf_dir)  # shared helper: sources/parquet.py
-
-
 @query(
     "streaming_daily_rollup",
-    """
+    f"""
     SELECT CAST(ts AS DATE) AS date, event_type,
-           CAST(SUM(CAST(value AS DECIMAL(18,6))) AS DOUBLE) AS total_value,
+           {money_sum_sql('value')} AS total_value,
            COUNT(*) AS n_events
     FROM events
     GROUP BY CAST(ts AS DATE), event_type
@@ -44,7 +45,7 @@ def q_streaming_daily_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     computes the same answer."""
     stream = daily_rollup_stream(read_events_stream(spark, sf_dir))
     return run_available_now(
-        stream, f"daily_rollup_{_digest(sf_dir)}", state_partitions=8
+        stream, f"daily_rollup_{sf_tag(sf_dir)}", state_partitions=8
     )
 
 
@@ -125,7 +126,7 @@ def q_streaming_event_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream = dedup_stream(read_events_stream(spark, sf_dir))
     return run_available_now(
         stream,
-        f"event_dedup_{_digest(sf_dir)}",
+        f"event_dedup_{sf_tag(sf_dir)}",
         output_mode="append",
         state_partitions=8,
     )
@@ -133,9 +134,9 @@ def q_streaming_event_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "streaming_enriched_rollup",
-    """
+    f"""
     SELECT CAST(e.ts AS DATE) AS date, n.n_name AS nation,
-           CAST(SUM(CAST(e.value AS DECIMAL(18,6))) AS DOUBLE) AS total_value,
+           {money_sum_sql('e.value')} AS total_value,
            COUNT(*) AS n_events
     FROM events e
     JOIN customer c ON e.user_id = c.c_custkey
@@ -161,7 +162,7 @@ def q_streaming_enriched_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select("c_custkey", F.col("n_name").alias("nation"))
     stream = enriched_rollup_stream(read_events_stream(spark, sf_dir), dim)
     return run_available_now(
-        stream, f"enriched_rollup_{_digest(sf_dir)}", state_partitions=8
+        stream, f"enriched_rollup_{sf_tag(sf_dir)}", state_partitions=8
     )
 
 
@@ -196,7 +197,7 @@ def q_streaming_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream = interval_join_stream(purchases, views, minutes=10)
     return run_available_now(
         stream,
-        f"interval_join_{_digest(sf_dir)}",
+        f"interval_join_{sf_tag(sf_dir)}",
         output_mode="append",
         # two stateful join sides x fixed per-store overhead: 8 stores
         # beat 32 by ~4x at test SF; production sizes to cores/query
@@ -204,14 +205,17 @@ def q_streaming_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _flush_augmented_events(spark: SparkSession, sf_dir: str, tag: str):
-    """Events stream unioned with one flush-sentinel event per user, 30
-    days past the global max event time. Returns ``(stream,
-    sentinel_us)``: the sentinel's >30-min gap closes every real session
-    in-stream, and the caller drops anything starting at/after
-    ``sentinel_us``. At scale this is the standard end-of-log
-    flush-marker pattern; a live deployment never flushes and relies on
-    timeouts/watermark instead."""
+def _flush_augmented_events(spark: SparkSession, sf_dir: str, tag: str, sentinels):
+    """Events stream unioned with flush-sentinel events 30 days past the
+    global max event time. ``sentinels(events, sentinel_ts)`` builds the
+    sentinel rows in the raw events schema; they are written once to a
+    per-``tag`` temp directory and streamed back. Returns ``(stream,
+    sentinel_us)``: the sentinels push the watermark past every real
+    event, so stateful operators close and emit their tail, and the
+    caller drops any output at/after ``sentinel_us`` or with a sentinel
+    id. At scale this is the standard end-of-log flush-marker pattern;
+    a live deployment never flushes and relies on timeouts/watermark
+    instead."""
     events = load_table(spark, "events", sf_dir)
     row = events.agg(
         F.max("ts").alias("max_ts"), F.unix_micros(F.max("ts")).alias("max_us")
@@ -219,11 +223,19 @@ def _flush_augmented_events(spark: SparkSession, sf_dir: str, tag: str):
     sentinel_ts = row["max_ts"] + dt.timedelta(days=30)
     sentinel_us = row["max_us"] + 30 * 86_400 * 1_000_000
 
-    sent_dir = os.path.join(
-        tempfile.gettempdir(), f"{tag}_flush_{_digest(sf_dir)}"
-    )
+    sent_dir = os.path.join(tempfile.gettempdir(), f"{tag}_flush_{sf_tag(sf_dir)}")
     shutil.rmtree(sent_dir, ignore_errors=True)
-    sentinels = events.select("user_id").distinct().select(
+    sentinels(events, sentinel_ts).write.parquet(sent_dir)
+
+    flush = _normalize_event_time(
+        spark.readStream.schema(EVENTS_RAW_SCHEMA).parquet(sent_dir)
+    )
+    return read_events_stream(spark, sf_dir).unionByName(flush), sentinel_us
+
+
+def _per_user_sentinels(events: DataFrame, sentinel_ts) -> DataFrame:
+    """One sentinel per user: its >30-min gap closes every real session."""
+    return events.select("user_id").distinct().select(
         F.lit(-1).cast("long").alias("event_id"),
         F.lit(sentinel_ts).cast("timestamp_ntz").alias("ts"),
         "user_id",
@@ -231,20 +243,30 @@ def _flush_augmented_events(spark: SparkSession, sf_dir: str, tag: str):
         F.lit(0.0).alias("value"),
         F.lit(None).cast("string").alias("props"),
     )
-    sentinels.write.parquet(sent_dir)
 
-    from dieter___etl___monarchmoney_spark.sources.parquet import (
-        _normalize_event_time,
+
+def _per_type_sentinels(events: DataFrame, sentinel_ts) -> DataFrame:
+    """One sentinel per event_type (user 0): triggers each group's emit."""
+    return events.select("event_type").distinct().select(
+        F.lit(-1).cast("long").alias("event_id"),
+        F.lit(sentinel_ts).cast("timestamp_ntz").alias("ts"),
+        F.lit(0).cast("long").alias("user_id"),
+        "event_type",
+        F.lit(0.0).alias("value"),
+        F.lit(None).cast("string").alias("props"),
     )
-    from dieter___etl___monarchmoney_spark.streaming.stream_reader import (
+
+
+def _join_sentinels(events: DataFrame, sentinel_ts) -> DataFrame:
+    """One purchase and one view at user −1: they pass both join sides'
+    filters and push BOTH sides' watermarks."""
+    return events.sparkSession.createDataFrame(
+        [
+            (-1, sentinel_ts, -1, "purchase", 0.0, None),
+            (-2, sentinel_ts, -1, "view", 0.0, None),
+        ],
         EVENTS_RAW_SCHEMA,
     )
-
-    real = read_events_stream(spark, sf_dir)
-    flush = _normalize_event_time(
-        spark.readStream.schema(EVENTS_RAW_SCHEMA).parquet(sent_dir)
-    )
-    return real.unionByName(flush), sentinel_us
 
 
 @query("sessionize_stream", _SESSIONIZATION_ORACLE)
@@ -262,10 +284,12 @@ def q_sessionize_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         sessionize_stream,
     )
 
-    source, sentinel_us = _flush_augmented_events(spark, sf_dir, "sessionize")
+    source, sentinel_us = _flush_augmented_events(
+        spark, sf_dir, "sessionize", _per_user_sentinels
+    )
     res = run_available_now(
         sessionize_stream(source),
-        f"sessionize_stream_{_digest(sf_dir)}",
+        f"sessionize_stream_{sf_tag(sf_dir)}",
         output_mode="append",
         state_partitions=8,
     )
@@ -319,7 +343,7 @@ def q_sessionize_native_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     timeout does. The custom twin remains the template for session
     logic the built-in can't express (e.g. counter-carrying state)."""
     source, sentinel_us = _flush_augmented_events(
-        spark, sf_dir, "sessionize_native"
+        spark, sf_dir, "sessionize_native", _per_user_sentinels
     )
     agg = (
         source.withWatermark("ts", "30 minutes")
@@ -338,7 +362,7 @@ def q_sessionize_native_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     res = run_available_now(
         agg,
-        f"sessionize_native_{_digest(sf_dir)}",
+        f"sessionize_native_{sf_tag(sf_dir)}",
         output_mode="append",
         state_partitions=8,
     )
@@ -375,40 +399,17 @@ def q_streaming_left_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     filter; sentinels can't touch real rows (user −1, far-future
     bounds). Timestamps surface as epoch-micros BIGINTs — the
     hash-robust convention sessionization established."""
-    events = load_table(spark, "events", sf_dir)
-    max_ts = events.agg(F.max("ts").alias("m")).first()["m"]
-    sentinel_ts = max_ts + dt.timedelta(days=30)
-
-    from dieter___etl___monarchmoney_spark.sources.parquet import (
-        _normalize_event_time,
-    )
     from dieter___etl___monarchmoney_spark.streaming.stream_reader import (
-        EVENTS_RAW_SCHEMA,
         interval_join_stream,
     )
 
-    sent_dir = os.path.join(
-        tempfile.gettempdir(), f"left_join_flush_{_digest(sf_dir)}"
-    )
-    shutil.rmtree(sent_dir, ignore_errors=True)
-    spark.createDataFrame(
-        [
-            (-1, sentinel_ts, -1, "purchase", 0.0, None),
-            (-2, sentinel_ts, -1, "view", 0.0, None),
-        ],
-        EVENTS_RAW_SCHEMA,
-    ).write.parquet(sent_dir)
-
-    flush = _normalize_event_time(
-        spark.readStream.schema(EVENTS_RAW_SCHEMA).parquet(sent_dir)
-    )
-    ev = read_events_stream(spark, sf_dir).unionByName(flush)
+    ev, _ = _flush_augmented_events(spark, sf_dir, "left_join", _join_sentinels)
     purchases = ev.filter(F.col("event_type") == "purchase")
     views = ev.filter(F.col("event_type") == "view")
     stream = interval_join_stream(purchases, views, minutes=10, how="leftOuter")
     res = run_available_now(
         stream,
-        f"left_join_{_digest(sf_dir)}",
+        f"left_join_{sf_tag(sf_dir)}",
         output_mode="append",
         state_partitions=8,
     )
@@ -444,40 +445,17 @@ def q_streaming_full_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     interval join (the oracle). Flush sentinels (one far-future
     purchase + view at user −1) advance both watermarks so tail rows
     emit; sentinel rows are dropped on BOTH id columns."""
-    events = load_table(spark, "events", sf_dir)
-    max_ts = events.agg(F.max("ts").alias("m")).first()["m"]
-    sentinel_ts = max_ts + dt.timedelta(days=30)
-
-    from dieter___etl___monarchmoney_spark.sources.parquet import (
-        _normalize_event_time,
-    )
     from dieter___etl___monarchmoney_spark.streaming.stream_reader import (
-        EVENTS_RAW_SCHEMA,
         interval_join_stream,
     )
 
-    sent_dir = os.path.join(
-        tempfile.gettempdir(), f"full_outer_flush_{_digest(sf_dir)}"
-    )
-    shutil.rmtree(sent_dir, ignore_errors=True)
-    spark.createDataFrame(
-        [
-            (-1, sentinel_ts, -1, "purchase", 0.0, None),
-            (-2, sentinel_ts, -1, "view", 0.0, None),
-        ],
-        EVENTS_RAW_SCHEMA,
-    ).write.parquet(sent_dir)
-
-    flush = _normalize_event_time(
-        spark.readStream.schema(EVENTS_RAW_SCHEMA).parquet(sent_dir)
-    )
-    ev = read_events_stream(spark, sf_dir).unionByName(flush)
+    ev, _ = _flush_augmented_events(spark, sf_dir, "full_outer", _join_sentinels)
     purchases = ev.filter(F.col("event_type") == "purchase")
     views = ev.filter(F.col("event_type") == "view")
     stream = interval_join_stream(purchases, views, minutes=10, how="fullOuter")
     res = run_available_now(
         stream,
-        f"full_outer_join_{_digest(sf_dir)}",
+        f"full_outer_join_{sf_tag(sf_dir)}",
         output_mode="append",
         state_partitions=8,
     )
@@ -495,14 +473,14 @@ def q_streaming_full_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "streaming_sliding_rollup",
-    """
+    f"""
     WITH starts AS (
         SELECT event_type, value,
                unnest([CAST(ts AS DATE), CAST(ts AS DATE) - 1]) AS win_start
         FROM events
     )
     SELECT win_start, event_type,
-           CAST(SUM(CAST(value AS DECIMAL(18,6))) AS DOUBLE) AS total_value,
+           {money_sum_sql('value')} AS total_value,
            COUNT(*) AS n_events
     FROM starts
     GROUP BY win_start, event_type
@@ -530,12 +508,12 @@ def q_streaming_sliding_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     stream = sliding_rollup_stream(read_events_stream(spark, sf_dir))
     return run_available_now(
-        stream, f"sliding_rollup_{_digest(sf_dir)}", state_partitions=8
+        stream, f"sliding_rollup_{sf_tag(sf_dir)}", state_partitions=8
     )
 
 
 def _ewma_stream_oracle() -> str:
-    from dieter___etl___monarchmoney_spark.queries.wave5_ops import _EWMA_SQL
+    from dieter___etl___monarchmoney_spark.queries.stats_ops import _EWMA_SQL
 
     return _EWMA_SQL
 
@@ -544,14 +522,14 @@ def _ewma_stream_oracle() -> str:
 def q_ewma_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The applyInPandasWithState EWMA (streaming/ewma_stream.py) run
     availableNow against the SAME recursive-CTE oracle as the batch
-    fold (wave5_ops ewma_smoothing) — two independent implementations
+    fold (stats_ops ewma_smoothing) — two independent implementations
     of a recursive statistic, one windowless fold and one stateful
     stream, must produce identical smoothed series. Next to
     sessionize_stream this is the second custom stateful operator
     family: sessions carry interval state, this carries an exact
     integer accumulator plus the float recurrence — and the
     exact-decimal discipline survives the Arrow round trip (the fn
-    reproduces Spark's double→DECIMAL(18,6) cast and F.round(…, 9)
+    reproduces Spark's double→MONEY_DECIMAL cast and F.round(…, 9)
     digit for digit).
 
     Flush uses the shared end-of-log sentinel pattern: one marker per
@@ -559,38 +537,13 @@ def q_ewma_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     markers are never accumulated. A live deployment instead emits
     closed days from the event-time timeout path with state bounded by
     the watermark's calendar horizon."""
-    events = load_table(spark, "events", sf_dir)
-    max_ts = events.agg(F.max("ts").alias("m")).first()["m"]
-    sentinel_ts = max_ts + dt.timedelta(days=30)
-
-    sent_dir = os.path.join(tempfile.gettempdir(), f"ewma_flush_{_digest(sf_dir)}")
-    shutil.rmtree(sent_dir, ignore_errors=True)
-    sentinels = events.select("event_type").distinct().select(
-        F.lit(-1).cast("long").alias("event_id"),
-        F.lit(sentinel_ts).cast("timestamp_ntz").alias("ts"),
-        F.lit(0).cast("long").alias("user_id"),
-        "event_type",
-        F.lit(0.0).alias("value"),
-        F.lit(None).cast("string").alias("props"),
-    )
-    sentinels.write.parquet(sent_dir)
-
-    from dieter___etl___monarchmoney_spark.sources.parquet import (
-        _normalize_event_time,
-    )
     from dieter___etl___monarchmoney_spark.streaming.ewma_stream import ewma_stream
-    from dieter___etl___monarchmoney_spark.streaming.stream_reader import (
-        EVENTS_RAW_SCHEMA,
-    )
 
-    real = read_events_stream(spark, sf_dir)
-    flush = _normalize_event_time(
-        spark.readStream.schema(EVENTS_RAW_SCHEMA).parquet(sent_dir)
-    )
-    out = ewma_stream(real.unionByName(flush))
+    source, _ = _flush_augmented_events(spark, sf_dir, "ewma", _per_type_sentinels)
+    out = ewma_stream(source)
     return run_available_now(
         out,
-        f"ewma_stream_{_digest(sf_dir)}",
+        f"ewma_stream_{sf_tag(sf_dir)}",
         output_mode="append",
         state_partitions=8,
     )
@@ -616,8 +569,8 @@ def q_streaming_sink_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     from dieter___etl___monarchmoney_spark.sources.paged_source import register
 
     register(spark)
-    out = os.path.join(tempfile.gettempdir(), f"stream_sink_{_digest(sf_dir)}")
-    cp = os.path.join(tempfile.gettempdir(), f"stream_sink_cp_{_digest(sf_dir)}")
+    out = os.path.join(tempfile.gettempdir(), f"stream_sink_{sf_tag(sf_dir)}")
+    cp = os.path.join(tempfile.gettempdir(), f"stream_sink_cp_{sf_tag(sf_dir)}")
     for d in (out, cp):
         shutil.rmtree(d, ignore_errors=True)
     os.makedirs(out, exist_ok=True)
@@ -677,7 +630,7 @@ def q_streaming_upsert_foreachbatch(spark: SparkSession, sf_dir: str) -> DataFra
     api.py save() limitation) — the merge itself shuffles on the state
     key, and a partitioned/bucketed state dir (or Delta MERGE) bounds
     the rewrite to touched buckets at 100 TB."""
-    root = os.path.join(tempfile.gettempdir(), f"upsert_fb_{_digest(sf_dir)}")
+    root = os.path.join(tempfile.gettempdir(), f"upsert_fb_{sf_tag(sf_dir)}")
     shutil.rmtree(root, ignore_errors=True)
     src = os.path.join(root, "src")
     cp = os.path.join(root, "cp")

@@ -36,7 +36,7 @@ def query(name: str, sql: str | None = None):
     touched."""
 
     def deco(fn: Callable[[SparkSession, str], DataFrame]):
-        @functools.wraps(fn)  # _reorder() keys on the copied __module__
+        @functools.wraps(fn)  # keep the query's name, module and docstring
         def wrapped(spark: SparkSession, sf_dir: str) -> DataFrame:
             pins.release()
             return fn(spark, sf_dir)

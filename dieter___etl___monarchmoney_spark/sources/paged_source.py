@@ -273,6 +273,33 @@ def register(spark) -> None:
             raise
 
 
+def export_documents(spark, sf_dir: str, prefix: str) -> str:
+    """Write the ``documents`` projection (doc_id, lang, n_chars) through
+    this package's sink into ``<tmp>/<prefix>_<sf_tag>/documents.jsonl``
+    and return that payload path. The export runs on the executors
+    (two-phase commit, no driver collect). Each caller passes its own
+    ``prefix``, so one query's payload is never overwritten while another
+    query's lazy frame still reads it."""
+    import os
+    import tempfile
+
+    from dieter___etl___monarchmoney_spark.sources.parquet import load_table, sf_tag
+
+    register(spark)
+    payload_dir = os.path.join(tempfile.gettempdir(), f"{prefix}_{sf_tag(sf_dir)}")
+    os.makedirs(payload_dir, exist_ok=True)
+    payload = os.path.join(payload_dir, "documents.jsonl")
+    (
+        load_table(spark, "documents", sf_dir)
+        .select("doc_id", "lang", "n_chars")
+        .write.format("paged_json")
+        .mode("overwrite")
+        .option("path", payload)
+        .save()
+    )
+    return payload
+
+
 # --------------------------------------------------------------------------
 # Writer side: the reference's truncate+overwrite sheet sink (K1) as a
 # Python DataSource WRITER with a real commit protocol

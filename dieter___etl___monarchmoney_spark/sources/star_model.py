@@ -29,7 +29,7 @@ Determinism (SURVEY.md §7.5 "float vs decimal"): ``amount`` stays an
 UNROUNDED double — IEEE-754 scalar arithmetic is bit-identical across
 engines, whereas per-row ROUND(x, 2) is not (2dp×2dp products are exact
 4dp reals, i.e. half-cent ties, and Spark/DuckDB break ties differently).
-Aggregates cast to DECIMAL(18,6) before SUM (exact at 4dp, no tie) and
+Aggregates cast to MONEY_DECIMAL before SUM (exact at 4dp, no tie) and
 back to DOUBLE after, so neither rounding rules nor partial-aggregation
 order can perturb the result hash.
 """

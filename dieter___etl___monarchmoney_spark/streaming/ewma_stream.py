@@ -3,14 +3,14 @@
 family next to sessionization: sessions carry interval state, this
 carries an accumulator + recurrence state).
 
-Semantics are identical to the batch fold (queries/wave5_ops
+Semantics are identical to the batch fold (queries/stats_ops
 ``ewma_smoothing``): per event_type, daily means smoothed by
 eₜ = α·xₜ + (1−α)·eₜ₋₁ with e₁ = x₁. The streaming form accumulates
 per-day exact sums in grouped state and replays the recurrence when the
 group flushes (end-of-log sentinel or event-time timeout).
 
 Exactness through the Arrow boundary: the batch side sums
-``CAST(value AS DECIMAL(18,6))`` exactly; this side accumulates integer
+``CAST(value AS MONEY_DECIMAL)`` exactly; this side accumulates integer
 micro-units obtained via ``Decimal(repr(v)).quantize(1e-6, HALF_UP)``
 — the same shortest-representation + half-up rule as Spark's
 double→decimal cast — so the streamed daily means are bit-identical to
@@ -50,7 +50,7 @@ _NANO9 = Decimal("1e-9")
 
 def _value_micros(v: float) -> int:
     """value → exact integer micro-units, matching Spark's
-    CAST(double AS DECIMAL(18,6)) (shortest decimal repr, HALF_UP)."""
+    CAST(double AS MONEY_DECIMAL) (shortest decimal repr, HALF_UP)."""
     return int(Decimal(repr(v)).quantize(_MICRO, ROUND_HALF_UP).scaleb(6))
 
 

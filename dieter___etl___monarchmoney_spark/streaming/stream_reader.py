@@ -12,6 +12,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from dieter___etl___monarchmoney_spark.functions.money import money_sum
+
 #: events schema as stored — ``ts`` is ``timestamp[us]`` without UTC
 #: adjustment, which Spark 4 reads as TIMESTAMP_NTZ (see sources/parquet.py)
 EVENTS_RAW_SCHEMA = T.StructType(
@@ -51,7 +53,7 @@ def daily_rollup_stream(events: DataFrame, watermark: str = "1 day") -> DataFram
         events.withWatermark("ts", watermark)
         .groupBy(F.window("ts", "1 day").alias("w"), "event_type")
         .agg(
-            F.sum(F.col("value").cast("decimal(18,6)")).cast("double").alias("total_value"),
+            money_sum("value").alias("total_value"),
             F.count(F.lit(1)).alias("n_events"),
         )
         .select(
@@ -197,7 +199,7 @@ def enriched_rollup_stream(
         joined.withWatermark("ts", watermark)
         .groupBy(F.window("ts", "1 day").alias("w"), "nation")
         .agg(
-            F.sum(F.col("value").cast("decimal(18,6)")).cast("double").alias("total_value"),
+            money_sum("value").alias("total_value"),
             F.count(F.lit(1)).alias("n_events"),
         )
         .select(
@@ -220,7 +222,7 @@ def sliding_rollup_stream(events: DataFrame, watermark: str = "1 day") -> DataFr
         events.withWatermark("ts", watermark)
         .groupBy(F.window("ts", "2 days", "1 day").alias("w"), "event_type")
         .agg(
-            F.sum(F.col("value").cast("decimal(18,6)")).cast("double").alias("total_value"),
+            money_sum("value").alias("total_value"),
             F.count(F.lit(1)).alias("n_events"),
         )
         .select(

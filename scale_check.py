@@ -56,35 +56,35 @@ QUERIES = (
     "dup_graph_pagerank",
     # blocked-match + components over the replicated part catalog
     "fuzzy_entity_resolution",
-    # wave 4: within-doc dedup (doc-local keys), sketch error audit
+    # corpus audits: within-doc dedup (doc-local keys), sketch error audit
     # (candidate-bounded exact Jaccard), JS divergence (vocab x sources
     # self-join), cross-source calibration (broadcast inequality join)
     "intra_doc_dedup",
     "minhash_error_audit",
     "source_divergence_matrix",
     "source_quality_calibration",
-    # wave 5: learn-K-merges (K pair-count shuffles) + scan-local apply
+    # BPE encode: learn-K-merges (K pair-count shuffles) + scan-local apply
     "bpe_encode_corpus",
-    # wave 6: banded SimHash pair search (block-keyed self-join,
+    # banded SimHash pair search (block-keyed self-join,
     # Σbucket² with a degenerate-bucket cap) + bigram/unigram PMI
     # (two count shuffles + vocabulary-keyed joins)
     "simhash_hamming_pairs",
     "pmi_collocations",
-    # wave 7 (round 4): per-source length-band curation — the rank
+    # per-source length-band curation — the rank
     # window partitions by source, so replication must scale linearly
     "doc_length_band_filter",
-    # waves 13/15 (round 4): the Arrow scalar-UDF lane (per-row map —
+    # the Arrow scalar-UDF lane (per-row map —
     # must be exactly linear) and the stage funnel (the curation chain
     # plus conditional sums — must cost the same as the chain)
     "arrow_udf_text_normalize",
     "pipeline_stage_funnel",
-    # waves 26-27 (round 5): the skyline sweep (per-lang windows must
+    # the skyline sweep (per-lang windows must
     # keep it linear), the per-source entropy aggregate, and the
     # two-phase prefix-sum packing plan (range shuffle + P-row offsets)
     "pareto_quality_frontier",
     "token_entropy_by_source",
     "sequence_packing_plan",
-    # waves 28-33 (round 5): the bigram inverted-index similarity join
+    # search operators: the bigram inverted-index similarity join
     # (Σposting², df-capped), vocabulary-coverage stats (top-K broadcast),
     # the aggregate-only classifier, and the trigram-index search
     "tfidf_cosine_pairs",
@@ -124,13 +124,13 @@ EVENT_QUERIES = (
     "user_activity_streaks",
     "conversion_lag_quantiles",
     "rolling_distinct_users_7d",
-    # wave 27 (round 5): partition-grained checksum validation must be
+    # partition-grained checksum validation must be
     # a pure two-scan aggregate (linear), and the rank-correlation
     # panel's cost is the daily aggregate (linear) + a days×types²
     # pair join that data growth must NOT inflate
     "partition_checksum_diff",
     "spearman_daily_correlation",
-    # wave 16 (round 5): the grouped-map Arrow lane — per-user Arrow
+    # the grouped-map Arrow lane — per-user Arrow
     # batches, so linear user growth must give linear wall time
     "event_transition_matrix",
     # round 7: the two-phase distributed prefix sum on signed inputs —
@@ -200,7 +200,7 @@ def _kcore_sweep_variant(queries, spark, sf_dir: str):
     the DataFrame bakes the constant in at CONSTRUCTION (every
     F.lit/filter referencing _KCORE_K runs while building the plan);
     evaluation after restore replays the built plan."""
-    from dieter___etl___monarchmoney_spark.queries import wave27_ops as w
+    from dieter___etl___monarchmoney_spark.queries import lakehouse as w
 
     old = w._KCORE_K
     w._KCORE_K = 2

@@ -1,0 +1,36 @@
+"""Guard: each shared decision is spelled in one module only."""
+
+from __future__ import annotations
+
+import re
+from pathlib import Path
+
+import dieter___etl___monarchmoney_spark as pkg
+
+PACKAGE = Path(pkg.__file__).parent
+
+
+def _hits(pattern: str) -> list[str]:
+    rx = re.compile(pattern, re.IGNORECASE)
+    return [
+        f"{path.relative_to(PACKAGE)}:{n}"
+        for path in sorted(PACKAGE.rglob("*.py"))
+        for n, line in enumerate(path.read_text().splitlines(), 1)
+        if rx.search(line)
+    ]
+
+
+def test_each_decision_has_one_owner():
+    """Queries live in operator-family modules, the money decimal is
+    named only in functions/money.py, and the per-dataset temp tag is
+    computed only in sources/parquet.py."""
+    rounds = sorted(p.name for p in (PACKAGE / "queries").glob("wave*"))
+    assert not rounds, f"round-named query modules: {rounds}"
+    money = [
+        h for h in _hits(r"decimal\(18,\s*6\)") if not h.startswith("functions/money.py:")
+    ]
+    assert not money, f"money decimal spelled outside functions/money.py: {money}"
+    tags = [
+        h for h in _hits(r"md5\(sf_dir") if not h.startswith("sources/parquet.py:")
+    ]
+    assert not tags, f"sf tag computed outside sources/parquet.py: {tags}"

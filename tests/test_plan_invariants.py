@@ -99,7 +99,7 @@ BNLJ_ONE_ROW_BROADCAST = {
 #: the sanctioned §2.10 exercisers (source read, round 12): the two
 #: Arrow scalar/UDTF lanes and the four multimodal mapInPandas stubs
 ARROW_LANE_QUERIES = {
-    "arrow_udf_text_normalize",  # ArrowEvalPython — wave16_ops.py
+    "arrow_udf_text_normalize",  # ArrowEvalPython — queries/llm_pipeline.py
     "udtf_chunk_explode",  # ArrowEvalPython — UDTF lane
     "multimodal_decode_fake",  # MapInPandas — operators/multimodal.py
     "multimodal_feature_extract",  # MapInPandas

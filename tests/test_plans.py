@@ -659,7 +659,7 @@ def test_bucketed_join_no_exchange(spark):
     serves really plans shuffle-free: bucketed+sorted tables on the
     same key/count must SortMergeJoin with ZERO Exchange and ZERO Sort
     on either input."""
-    from dieter___etl___monarchmoney_spark.queries.wave8_ops import (
+    from dieter___etl___monarchmoney_spark.queries.olap2 import (
         bucketed_join,
         bucketed_tables,
     )

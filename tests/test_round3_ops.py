@@ -182,18 +182,19 @@ def test_chi2_expected_totals_match_observed(spark):
 def test_rotation_lists_name_real_queries():
     """A typo in the registry rotation tuples would silently fall back
     to default ordering and waste the driver's evaluation window."""
-    from dieter___etl___monarchmoney_spark.queries import (
-        _AFTER_WINDOW,
-        _FLAGSHIP,
-        _PRIORITY,
-    )
+    from dieter___etl___monarchmoney_spark.queries import _FLAGSHIP, _PRIORITY
 
-    for name in (*_PRIORITY, *_FLAGSHIP, *_AFTER_WINDOW):
+    for name in (*_PRIORITY, *_FLAGSHIP):
         assert name in QUERIES, f"rotation names unknown query {name!r}"
-    # the never-driver-checked queries must occupy the first positions
+    # the window is _PRIORITY then _FLAGSHIP, with no name twice
     order = list(QUERIES)
-    expected = [n for n in _PRIORITY if n in QUERIES]
-    assert order[: len(expected)] == expected
+    window = [*_PRIORITY, *_FLAGSHIP]
+    assert len(set(window)) == len(window)
+    assert order[: len(window)] == window
+    # past the window: registration order, oracle-less queries last
+    rest = order[len(window):]
+    oracle_less = [n for n in rest if n not in ORACLE_SQL]
+    assert oracle_less and rest[-len(oracle_less):] == oracle_less
 
 
 def test_percentile_sketch_within_tolerance(spark):

@@ -35,7 +35,8 @@ def test_disjunctive_prefilter_is_lossless(spark):
     """The derived single-side prefilters (part-side brand/size
     disjunction, lineitem quantity hull) must not change the result:
     compare against the naive unfiltered-join + full-OR form."""
-    from dieter___etl___monarchmoney_spark.queries import wave11_ops as w
+    from dieter___etl___monarchmoney_spark.functions.money import money_sum
+    from dieter___etl___monarchmoney_spark.queries import olap2 as w
 
     got = QUERIES["disjunctive_promo_revenue"](spark, SF_SMOKE).collect()[0]
     li = load_table(spark, "lineitem", SF_SMOKE)
@@ -59,7 +60,7 @@ def test_disjunctive_prefilter_is_lossless(spark):
         li.join(part, F.col("p_partkey") == F.col("l_partkey"))
         .filter(b12 | b23 | b3)
         .agg(
-            w._dsum(w._rev()).alias("revenue"),
+            money_sum(w._rev()).alias("revenue"),
             F.count(F.lit(1)).alias("n_lines"),
         )
         .collect()[0]
@@ -85,7 +86,7 @@ def test_dominant_supplier_share_exceeds_half(spark):
     """Dominance is mutually exclusive: for any part, at most ONE
     supplier can ship > 50% of its total — re-derive the shares and
     check the threshold truly binds."""
-    from dieter___etl___monarchmoney_spark.queries.wave11_ops import (
+    from dieter___etl___monarchmoney_spark.queries.olap2 import (
         _Q20_PREFIX,
         _Q20_YEAR_END,
         _Q20_YEAR_START,
@@ -188,7 +189,7 @@ def test_asof_matches_per_user_scan(spark):
 def test_nation_trade_flows_symmetric_directions(spark):
     """Both trade directions must appear with the SAME schema and only
     the two configured nations may occur."""
-    from dieter___etl___monarchmoney_spark.queries.wave11_ops import _Q7_A, _Q7_B
+    from dieter___etl___monarchmoney_spark.queries.olap2 import _Q7_A, _Q7_B
 
     rows = QUERIES["nation_trade_flows"](spark, SF_ORACLE).collect()
     assert rows
@@ -200,7 +201,7 @@ def test_nation_trade_flows_symmetric_directions(spark):
 def test_important_part_stock_threshold_binds(spark):
     """Every returned part's value must exceed the fraction of the
     slice total, and the slice total must dominate every part value."""
-    from dieter___etl___monarchmoney_spark.queries.wave11_ops import _Q11_FRACTION
+    from dieter___etl___monarchmoney_spark.queries.olap2 import _Q11_FRACTION
 
     rows = QUERIES["important_part_stock"](spark, SF_ORACLE).collect()
     assert rows

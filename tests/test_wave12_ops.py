@@ -19,7 +19,7 @@ QUERIES, ORACLE_SQL = registry.load()
 
 
 def test_linkpred_returns_only_nonedges(duck, spark):
-    from dieter___etl___monarchmoney_spark.queries.wave12_ops import (
+    from dieter___etl___monarchmoney_spark.queries.series_ops import (
         _AA_MIN_CO,
         _AA_TYPE,
     )

@@ -73,7 +73,7 @@ def test_arrow_udf_equals_builtin_twin(spark):
 
 def test_map_in_arrow_equals_hof_twin(spark):
     got = QUERIES["embedding_range_audit"](spark, SF_ORACLE)
-    from dieter___etl___monarchmoney_spark.queries.wave13_ops import _CLIP
+    from dieter___etl___monarchmoney_spark.queries.llm_pipeline import _CLIP
 
     emb = load_table(spark, "embeddings", SF_ORACLE)
     d = F.transform("embedding", lambda x: x.cast("double"))
@@ -166,7 +166,7 @@ def test_transition_matrix_equals_grouped_map_twin(spark):
     applyInPandas lane — the wave-13 twin discipline with the roles
     swapped since round 8 (the JVM form is benched; the Arrow lane
     stays covered HERE)."""
-    from dieter___etl___monarchmoney_spark.queries.wave16_ops import (
+    from dieter___etl___monarchmoney_spark.queries.search_ops import (
         transition_matrix_grouped_map,
     )
 

@@ -6,15 +6,15 @@ move an oracle hash."""
 
 from __future__ import annotations
 
-from dieter___etl___monarchmoney_spark.queries import wave25_ops
+from dieter___etl___monarchmoney_spark.queries import curation
 from tests.conftest import SF_ORACLE
 
 
 def test_edge_gate_paths_identical(spark, monkeypatch):
-    q = wave25_ops.q_quantile_binning_features
+    q = curation.q_quantile_binning_features
     normal = sorted(tuple(r) for r in q(spark, SF_ORACLE).collect())
     # force the 100 TB path: every input is "over" a 0-byte gate
-    monkeypatch.setattr(wave25_ops, "_EDGE_GATE_BYTES", 0)
+    monkeypatch.setattr(curation, "_EDGE_GATE_BYTES", 0)
     capped = sorted(tuple(r) for r in q(spark, SF_ORACLE).collect())
     assert capped == normal
     assert len(normal) > 0
@@ -35,10 +35,10 @@ def test_edge_rank_closed_form_matches_exists():
 def test_input_bytes_probe(tmp_path):
     f = tmp_path / "t.parquet"
     f.write_bytes(b"x" * 123)
-    assert wave25_ops._input_bytes(str(tmp_path), "t") == 123
+    assert curation._input_bytes(str(tmp_path), "t") == 123
     d = tmp_path / "d.parquet"
     d.mkdir()
     (d / "part-0.parquet").write_bytes(b"x" * 10)
     (d / "part-1.parquet").write_bytes(b"y" * 5)
-    assert wave25_ops._input_bytes(str(tmp_path), "d") == 15
-    assert wave25_ops._input_bytes(str(tmp_path), "missing") == 0
+    assert curation._input_bytes(str(tmp_path), "d") == 15
+    assert curation._input_bytes(str(tmp_path), "missing") == 0

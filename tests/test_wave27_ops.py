@@ -14,7 +14,7 @@ def test_kcore_peel_on_toy_graph(spark):
     """K4 survives a 3-core peel (every vertex degree 3); a triangle
     (degrees 2) and a pendant vertex hanging off the K4 are peeled.
     The pendant's removal must NOT drag K4 vertices below threshold."""
-    import dieter___etl___monarchmoney_spark.queries.wave27_ops as w27
+    import dieter___etl___monarchmoney_spark.queries.lakehouse as w27
 
     edges = [
         # K4 on 1..4
@@ -45,7 +45,7 @@ def test_checksum_delta_equals_dropped_row_hashes(spark):
     row hashes of exactly the rows the replica predicate drops — the
     repair contract: the delta identifies the missing content, not
     just its count."""
-    from dieter___etl___monarchmoney_spark.queries.wave27_ops import (
+    from dieter___etl___monarchmoney_spark.queries.lakehouse import (
         _row_hash,
         q_partition_checksum_diff,
     )
@@ -70,7 +70,7 @@ def test_checksum_delta_equals_dropped_row_hashes(spark):
 
 
 def test_spearman_is_bounded_and_symmetric_in_ranks(spark):
-    from dieter___etl___monarchmoney_spark.queries.wave27_ops import (
+    from dieter___etl___monarchmoney_spark.queries.lakehouse import (
         q_spearman_daily_correlation,
     )
 
@@ -85,7 +85,7 @@ def test_fk_audit_orphans_match_direct_count(spark):
     """customer->nation orphans vs the corrupted replica must equal
     the direct count of customers whose nation key is a multiple of
     13 (the dropped parent keys)."""
-    from dieter___etl___monarchmoney_spark.queries.wave27_ops import (
+    from dieter___etl___monarchmoney_spark.queries.lakehouse import (
         q_fk_integrity_audit,
     )
     from dieter___etl___monarchmoney_spark.sources.parquet import load_table
@@ -115,7 +115,7 @@ def test_sweep_kcore_variant_restores_constant_and_bakes_at_construction(spark):
     is already restored to 3 before any action runs — i.e. every
     filter/literal referencing _KCORE_K bakes in while building, and
     the registry query's k=3 semantics are untouched afterwards."""
-    import dieter___etl___monarchmoney_spark.queries.wave27_ops as w27
+    import dieter___etl___monarchmoney_spark.queries.lakehouse as w27
     from scale_check import _kcore_sweep_variant
 
     from dieter___etl___monarchmoney_spark import registry

@@ -13,7 +13,7 @@ from tests.conftest import SF_ORACLE
 
 
 def _wm(spark, rows):
-    from dieter___etl___monarchmoney_spark.queries.wave28_ops import (
+    from dieter___etl___monarchmoney_spark.queries.search_ops import (
         two_phase_weighted_median,
     )
 
@@ -53,7 +53,7 @@ def test_weighted_median_bucket_edge(spark):
 
 
 def test_pq_codes_bounded_and_sorted(spark):
-    from dieter___etl___monarchmoney_spark.queries.wave28_ops import (
+    from dieter___etl___monarchmoney_spark.queries.search_ops import (
         _PQ_K,
         q_pq_adc_topk,
     )
@@ -73,7 +73,7 @@ def test_trigram_candidates_are_superset_of_matches(spark):
     """The candidate set (all pattern trigrams present) must contain
     every true substring match — losslessness, checked directly rather
     than through the oracle."""
-    from dieter___etl___monarchmoney_spark.queries.wave28_ops import (
+    from dieter___etl___monarchmoney_spark.queries.search_ops import (
         _SEARCH_PAT,
         q_trigram_substring_search,
     )

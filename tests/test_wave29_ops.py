@@ -14,7 +14,7 @@ def test_holt_fold_matches_python_reference(spark, duck):
     implementation on the real daily series — catches any silent
     change in fold op order (this is what exposed DuckDB's struct
     list_reduce mutation bug; see the oracle's comment)."""
-    from dieter___etl___monarchmoney_spark.queries.wave29_ops import (
+    from dieter___etl___monarchmoney_spark.queries.series_ops import (
         _HOLT_ALPHA,
         _HOLT_BETA,
         q_holt_linear_forecast,
@@ -47,7 +47,7 @@ def test_attribution_credit_conserved(spark):
     exactly — linear attribution conserves credit by construction."""
     from decimal import Decimal
 
-    from dieter___etl___monarchmoney_spark.queries.wave29_ops import (
+    from dieter___etl___monarchmoney_spark.queries.series_ops import (
         q_linear_touch_attribution,
     )
     from dieter___etl___monarchmoney_spark.sources.parquet import load_table
@@ -65,7 +65,7 @@ def test_attribution_credit_conserved(spark):
 
 
 def test_nb_confusion_totals_match_doc_count(spark):
-    from dieter___etl___monarchmoney_spark.queries.wave29_ops import (
+    from dieter___etl___monarchmoney_spark.queries.series_ops import (
         q_naive_bayes_lang_confusion,
     )
     from dieter___etl___monarchmoney_spark.sources.parquet import load_table

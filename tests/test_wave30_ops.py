@@ -9,7 +9,7 @@ from tests.conftest import SF_ORACLE
 
 
 def test_km_survival_monotone_and_bounded(spark):
-    from dieter___etl___monarchmoney_spark.queries.wave30_ops import (
+    from dieter___etl___monarchmoney_spark.queries.stats_ops import (
         q_kaplan_meier_churn,
     )
 
@@ -29,7 +29,7 @@ def test_km_survival_monotone_and_bounded(spark):
 def test_burstiness_matches_numpy_reference(spark):
     import math
 
-    from dieter___etl___monarchmoney_spark.queries.wave30_ops import (
+    from dieter___etl___monarchmoney_spark.queries.stats_ops import (
         q_interarrival_burstiness,
     )
     from dieter___etl___monarchmoney_spark.sources.parquet import load_table
@@ -68,7 +68,7 @@ def test_theil_sen_picks_exact_median_rank(spark, duck):
     """n_pairs for a 30-day series is C(30,2)=435 per type, and the
     reported slope must be the rank-218 slope under the pinned
     order."""
-    from dieter___etl___monarchmoney_spark.queries.wave30_ops import (
+    from dieter___etl___monarchmoney_spark.queries.stats_ops import (
         q_theil_sen_trend,
     )
 

@@ -15,7 +15,7 @@ def test_bitemporal_excludes_unarrived_and_future_valid(spark):
     plain valid-time-only winner — proving the transaction-time axis
     actually changes answers (a late-arriving newer event is
     invisible at T)."""
-    from dieter___etl___monarchmoney_spark.queries.wave31_ops import (
+    from dieter___etl___monarchmoney_spark.queries.lakehouse import (
         _AS_AT_TX,
         _AS_OF_VALID,
         q_bitemporal_as_of_as_at,
@@ -66,7 +66,7 @@ def test_bitemporal_excludes_unarrived_and_future_valid(spark):
 
 
 def test_retention_conserves_rows(spark):
-    from dieter___etl___monarchmoney_spark.queries.wave31_ops import (
+    from dieter___etl___monarchmoney_spark.queries.lakehouse import (
         q_retention_policy_prune,
     )
     from dieter___etl___monarchmoney_spark.sources.parquet import load_table
@@ -81,7 +81,7 @@ def test_set_cover_gains_non_increasing_and_novel(spark, duck):
     """Greedy gains must be non-increasing across rounds, doc ids
     unique, and the first pick must be the doc with the most distinct
     shingles (independently computed)."""
-    from dieter___etl___monarchmoney_spark.queries.wave33_ops import (
+    from dieter___etl___monarchmoney_spark.queries.search_ops import (
         q_set_cover_greedy_selection,
     )
 
@@ -107,7 +107,7 @@ def test_set_cover_gains_non_increasing_and_novel(spark, duck):
 
 
 def test_rrf_orders_by_fused_score(spark):
-    from dieter___etl___monarchmoney_spark.queries.wave33_ops import (
+    from dieter___etl___monarchmoney_spark.queries.search_ops import (
         _RRF_K,
         q_reciprocal_rank_fusion,
     )

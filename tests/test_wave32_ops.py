@@ -15,7 +15,7 @@ def test_percentile_bridge_equals_naive_window(spark):
     pick on the real fact at sf0.01 — the same cross-algorithm check
     the oracle performs, run engine-internally so a DuckDB quirk can
     never mask a Spark regression."""
-    from dieter___etl___monarchmoney_spark.queries.wave32_ops import (
+    from dieter___etl___monarchmoney_spark.queries.stats_ops import (
         _PCTS,
         q_percentile_bridge_exact,
     )
@@ -51,7 +51,7 @@ def test_percentile_bridge_equals_naive_window(spark):
 
 
 def test_nearest_asof_prefers_closer_and_respects_tolerance(spark):
-    from dieter___etl___monarchmoney_spark.queries.wave32_ops import (
+    from dieter___etl___monarchmoney_spark.queries.stats_ops import (
         _NEAREST_TOL_HOURS,
         q_asof_nearest_tolerance,
     )
@@ -70,7 +70,7 @@ def test_stump_split_is_argmin_over_histogram(spark, duck):
     """The reported split must strictly beat (or tie at lower bucket)
     every other candidate's weighted Gini, recomputed independently
     in DuckDB."""
-    from dieter___etl___monarchmoney_spark.queries.wave32_ops import (
+    from dieter___etl___monarchmoney_spark.queries.stats_ops import (
         q_decision_stump_split,
     )
 

@@ -11,7 +11,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from dieter___etl___monarchmoney_spark import registry
-from dieter___etl___monarchmoney_spark.queries.wave4_ops import (
+from dieter___etl___monarchmoney_spark.queries.corpus_ops import (
     intra_doc_segment_dedup,
 )
 from tests.conftest import SF_SMOKE
