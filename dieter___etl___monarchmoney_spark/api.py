@@ -27,7 +27,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from dieter___etl___monarchmoney_spark.operators.aggregates import (
-    cashflow_by_key,
     cashflow_report,
     cashflow_summary,
     monthly_rollup,
@@ -45,7 +44,7 @@ from dieter___etl___monarchmoney_spark.operators.transactions import (
     point_lookup,
     transactions_query,
 )
-from dieter___etl___monarchmoney_spark.sources.sinks import read_sink, write_table
+from dieter___etl___monarchmoney_spark.sources.sinks import read_sink
 
 
 class FinanceWarehouse:

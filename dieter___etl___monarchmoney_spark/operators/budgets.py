@@ -27,7 +27,6 @@ from pyspark.sql import functions as F
 
 from dieter___etl___monarchmoney_spark.functions.money import money_sum
 from dieter___etl___monarchmoney_spark.operators.windows import (
-    lag_over,
     remaining_amount,
     running_total,
 )

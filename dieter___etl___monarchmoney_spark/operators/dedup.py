@@ -20,6 +20,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from dieter___etl___monarchmoney_spark.functions.literals import const_vec
 from dieter___etl___monarchmoney_spark.functions.text import fingerprint_md5, tokens
 from dieter___etl___monarchmoney_spark.pins import checkpoint, pin, scope
 from dieter___etl___monarchmoney_spark.sources.local import local_frame
@@ -737,7 +738,8 @@ def bloom_might_contain(
     words: list, key_col: str, m_bits: int = 1 << 14, k: int = 3
 ) -> Column:
     """Membership probe against a :func:`bloom_build` filter shipped as
-    ONE array literal (plan size O(W), independent of build-side rows):
+    one array literal (one round trip to build, one folded literal in
+    the plan; plan size O(W), independent of build-side rows):
     true iff every seeded hash position's bit is set. False positives
     possible — callers follow with an exact join on survivors; false
     negatives impossible — the pre-filter only shrinks the exact join's
@@ -754,7 +756,7 @@ def bloom_might_contain(
             f"silently reads past the array (false negatives)"
         )
     c = F.col(key_col)
-    lit_words = F.lit([int(w) for w in words])
+    lit_words = const_vec(words)
     cond: Column | None = None
     for i in range(k):
         pos = F.pmod(F.xxhash64(c, F.lit(i)), F.lit(m_bits))

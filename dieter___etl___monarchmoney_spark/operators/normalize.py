@@ -12,10 +12,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from dieter___etl___monarchmoney_spark.functions.dates import (
-    format_timestamp,
-    parse_iso_timestamp,
-)
+from dieter___etl___monarchmoney_spark.functions.dates import parse_iso_timestamp
 from dieter___etl___monarchmoney_spark.functions.money import clean_currency
 from dieter___etl___monarchmoney_spark.functions.nested import (
     TXN_BREAKOUTS,

@@ -45,6 +45,7 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
+from dieter___etl___monarchmoney_spark.functions.literals import const_vec
 from dieter___etl___monarchmoney_spark.pins import pin
 
 _PID = "__prefix_pid"
@@ -110,11 +111,11 @@ def distributed_prefix_sum(
     # (every `NULL > cut` is false), matching ASC NULLS FIRST order.
     cuts = [i / num_ranges for i in range(1, num_ranges)]
     row = df.select(
-        F.percentile_approx(bkey, F.array(*[F.lit(c) for c in cuts]), F.lit(10_000)).alias("b")
+        F.percentile_approx(bkey, const_vec(cuts), F.lit(10_000)).alias("b")
     ).first()
     bounds = sorted(set(row["b"])) if row is not None and row["b"] is not None else []
     if bounds:
-        bounds_arr = F.array(*[F.lit(float(b)) for b in bounds])
+        bounds_arr = const_vec([float(b) for b in bounds])
         bucket = F.size(F.filter(bounds_arr, lambda b: bkey > b))
     else:
         bucket = F.lit(0)

@@ -64,6 +64,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import DoubleType, FloatType
 
+from dieter___etl___monarchmoney_spark.functions.literals import const_vec
 from dieter___etl___monarchmoney_spark.pins import checkpoint, pin
 
 _BKT = "__egr_bkt"
@@ -125,9 +126,7 @@ def _bucketize(
     localCheckpoint 4.00 s."""
     cuts = [i / num_buckets for i in range(1, num_buckets)]
     edges = df.groupBy(*group_cols).agg(
-        F.percentile_approx(
-            key, F.array(*[F.lit(c) for c in cuts]), F.lit(10_000)
-        ).alias(_EDGES)
+        F.percentile_approx(key, const_vec(cuts), F.lit(10_000)).alias(_EDGES)
     )
     pinned = checkpoint(edges)
     return _nullsafe_broadcast_join(df, pinned, group_cols).withColumn(

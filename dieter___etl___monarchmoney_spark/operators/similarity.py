@@ -13,7 +13,11 @@
   text; never materializes n² pairs).
 
 Dot products fold left-to-right (F.aggregate) so the oracle
-(DuckDB list_reduce, same order) produces bit-identical doubles.
+(DuckDB list_reduce, same order) produces bit-identical doubles. Query
+vectors, hyperplanes and centroids enter the plan through
+``functions/literals.py`` (one JVM round trip, one folded literal each)
+and are consumed by higher-order functions, so plan size and build time
+do not grow with ``dim``, ``bits`` or the number of centroids.
 """
 
 from __future__ import annotations
@@ -24,6 +28,7 @@ import numpy as np
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from dieter___etl___monarchmoney_spark.functions.literals import const_mat, const_vec
 from dieter___etl___monarchmoney_spark.pins import pin
 
 
@@ -34,21 +39,6 @@ def dot(a: Column, b: Column) -> Column:
         F.lit(0.0),
         lambda acc, x: acc + x,
     )
-
-
-def const_vec(values: Sequence[float]) -> Column:
-    """A constant vector as ONE array literal. ``F.array(*[F.lit(x)…])``
-    builds dim expression nodes; a 64-dim query times b planes makes
-    Catalyst analysis + codegen the dominant cost on probe queries. One
-    ``Literal(ArrayType)`` node keeps the plan O(1) in dim."""
-    return F.lit([float(x) for x in values])
-
-
-def const_mat(rows: Sequence[Sequence[float]]) -> Column:
-    """A constant matrix (hyperplanes, centroids) as ONE nested array
-    literal — paired with higher-order functions so the per-row logic is
-    a single lambda, never unrolled per plane/centroid."""
-    return F.lit([[float(x) for x in r] for r in rows])
 
 
 def l2_norm(a: Column) -> Column:
@@ -86,13 +76,14 @@ def _hyperplanes(dim: int, bits: int, seed: int = 42) -> np.ndarray:
 def lsh_signature(vec: Column, planes: np.ndarray) -> Column:
     """Sign-bit signature: bit i = 1 iff vec · plane_i > 0.
 
-    Planes ride along as ONE nested-array literal and the per-plane dot
-    is a higher-order-function lambda, so plan size is independent of
-    ``bits`` (the unrolled per-plane form made Catalyst analysis +
-    codegen ~4× the runtime of the scan itself). ``shiftleft`` needs a
-    literal shift, so bit weights come from a 2^i lookup array."""
+    Planes ride along as one nested-array literal (one round trip, one
+    folded literal) and the per-plane dot is a higher-order-function
+    lambda, so plan size is independent of ``bits`` (the unrolled
+    per-plane form made Catalyst analysis + codegen ~4× the runtime of
+    the scan itself). ``shiftleft`` needs a literal shift, so bit
+    weights come from a 2^i lookup array."""
     planes_lit = const_mat(planes)
-    weights = F.lit([1 << i for i in range(len(planes))])
+    weights = const_vec([1 << i for i in range(len(planes))])
     bits = F.transform(
         planes_lit,
         lambda p, i: F.when(dot(vec, p) > 0, F.element_at(weights, i + F.lit(1))).otherwise(

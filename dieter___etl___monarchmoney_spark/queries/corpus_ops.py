@@ -17,6 +17,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from dieter___etl___monarchmoney_spark.functions.literals import const_vec
 from dieter___etl___monarchmoney_spark.functions.text import quality_score, tokens
 from dieter___etl___monarchmoney_spark.operators.dedup import (
     minhash_signatures,
@@ -2793,7 +2794,7 @@ def q_psi_value_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
         ev.filter(F.col("ts") < split)
         .agg(
             F.percentile(
-                "value", F.array(*[F.lit(p / 10.0) for p in range(1, 10)])
+                "value", const_vec([p / 10.0 for p in range(1, 10)])
             ).alias("es")
         )
     )

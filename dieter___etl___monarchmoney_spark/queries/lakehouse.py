@@ -392,12 +392,10 @@ def q_recursive_referral_depth(spark: SparkSession, sf_dir: str) -> DataFrame:
     (rows with anc > 1), so total work is O(users · depth) with no
     shuffle until the final per-user aggregate. The frontier never
     explodes: the halving tree has out-degree 1 upward."""
-    users = (
-        load_table(spark, "events", sf_dir).select("user_id").distinct()
+    users = load_table(spark, "events", sf_dir).select("user_id").distinct()
+    return spark.sql(
+        _RECURSIVE_SQL_BODY.replace("FROM users", "FROM {users}", 1), users=users
     )
-    view = f"users_{sf_tag(sf_dir)}"
-    users.createOrReplaceTempView(view)
-    return spark.sql(_RECURSIVE_SQL_BODY.replace("FROM users", f"FROM {view}", 1))
 
 
 # --------------------------------------------------------------------------
@@ -436,15 +434,14 @@ def q_lateral_best_line_per_order(spark: SparkSession, sf_dir: str) -> DataFrame
     registry-wide). The same query via the DataFrame API is the
     max(struct) pattern (cdc_latest_state); LATERAL earns its place as
     the SQL-surface twin users migrate with."""
-    tag = sf_tag(sf_dir)
-    load_table(spark, "orders", sf_dir).createOrReplaceTempView(f"orders_{tag}")
-    load_table(spark, "lineitem", sf_dir).createOrReplaceTempView(
-        f"lineitem_{tag}"
+    sql = _LATERAL_BODY.replace("FROM orders o", "FROM {orders} o").replace(
+        "FROM lineitem", "FROM {lineitem}"
     )
-    sql = _LATERAL_BODY.replace("FROM orders o", f"FROM orders_{tag} o").replace(
-        "FROM lineitem", f"FROM lineitem_{tag}"
+    return spark.sql(
+        sql,
+        orders=load_table(spark, "orders", sf_dir),
+        lineitem=load_table(spark, "lineitem", sf_dir),
     )
-    return spark.sql(sql)
 
 
 # --------------------------------------------------------------------------
@@ -549,18 +546,18 @@ def q_parameterized_sql_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: identical to the literal form — Catalyst folds the
     bound constants before optimization, so pushdown/pruning see plain
     literals (the parameter marker costs nothing at the scan)."""
-    load_table(spark, "events", sf_dir).createOrReplaceTempView("events_p17")
     return spark.sql(
         f"""
         SELECT user_id,
                CAST(COUNT(*) AS BIGINT) AS n_big_purchases,
                {money_sum_sql('value')} AS total_value
-        FROM events_p17
+        FROM {{events}}
         WHERE event_type = :etype AND value >= :minv
         GROUP BY user_id
         ORDER BY user_id
         """,
         args={"etype": _PARAM_ETYPE, "minv": _PARAM_MINV},
+        events=load_table(spark, "events", sf_dir),
     )
 
 
@@ -1483,8 +1480,8 @@ def q_udtf_chunk_explode(spark: SparkSession, sf_dir: str) -> DataFrame:
     a LATERAL join — the fourth sanctioned Python lane (the
     table-function API the scalar/grouped Arrow lanes don't cover),
     Arrow-batched (ArrowEvalPythonUDTF — the plan-hygiene test pins
-    that no row-pickling BatchEvalPython node appears), registered
-    once per session and invoked per input row. Output is (doc_id,
+    that no row-pickling BatchEvalPython node appears), called
+    without registration and invoked per input row. Output is (doc_id,
     chunk_id, n_tokens, md5 fingerprint), so the hash certifies the
     UDTF's row fan-out AND its chunk contents against the pure-SQL
     twin.
@@ -1522,14 +1519,13 @@ def q_udtf_chunk_explode(spark: SparkSession, sf_dir: str) -> DataFrame:
     # useArrow=True on the decorator (resolved at DECORATION time, so a
     # session conf set later in this function would not take): the plan
     # node is ArrowEvalPythonUDTF, not the row-pickling BatchEval form —
-    # pinned by test_whole_registry_plan_hygiene
-    spark.udtf.register("wave31_chunker", ChunkUDTF)
-    docs = load_table(spark, "documents", sf_dir).select("doc_id", "text")
-    docs.createOrReplaceTempView("wave31_chunk_docs")
-    return spark.sql(
-        """SELECT d.doc_id, c.chunk_id, c.n_tokens, c.chunk_fp
-           FROM wave31_chunk_docs d, LATERAL wave31_chunker(d.text) c
-           ORDER BY d.doc_id, c.chunk_id"""
+    # pinned by test_whole_registry_plan_hygiene. Called directly in a
+    # DataFrame lateral join, it leaves no name in the caller's session.
+    docs = load_table(spark, "documents", sf_dir).select("doc_id", "text").alias("d")
+    return (
+        docs.lateralJoin(ChunkUDTF(F.col("d.text").outer()).alias("c"))
+        .select("d.doc_id", "c.chunk_id", "c.n_tokens", "c.chunk_fp")
+        .orderBy("doc_id", "chunk_id")
     )
 
 

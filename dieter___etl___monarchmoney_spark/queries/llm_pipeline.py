@@ -27,6 +27,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.functions import pandas_udf
 
+from dieter___etl___monarchmoney_spark.functions.literals import const_mat, const_vec
 from dieter___etl___monarchmoney_spark.functions.text import (
     BPE_PATTERN,
     STOPWORDS,
@@ -643,16 +644,15 @@ def q_nearest_centroid_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: centroids are computed in-engine (the map-side-combined
     aggregate from embedding_centroids_by_label), and the tiny
-    labels x dims result ships back into the plan as ONE nested-array
-    literal evaluated by higher-order functions — so the assignment pass
-    is a single scan with zero joins and zero shuffles before the final
+    labels x dims result ships back into the plan as one nested-array
+    literal (one round trip, one folded literal) evaluated by
+    higher-order functions — so the assignment pass is a single scan
+    with zero joins and zero shuffles before the final
     |labels|^2-row aggregate. Centroids are rounded to 6dp (see
     embedding_centroids_by_label); distances stay unrounded — argmin
     only flips if two centroids are equidistant to ~1e-15, far inside
     the rounding determinism margin.
     """
-    from dieter___etl___monarchmoney_spark.operators.similarity import const_mat
-
     vectors = load_table(spark, "embeddings", sf_dir)
     ex = vectors.select("label", F.posexplode("embedding").alias("pos0", "v"))
     cent_flat = ex.groupBy("label", "pos0").agg(
@@ -678,7 +678,7 @@ def q_nearest_centroid_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # first index of the min → ties to the lowest label (labels sorted)
     idx = F.array_position(d2s, F.array_min(d2s)).cast("int")
-    assigned = F.element_at(F.lit(labels), idx)
+    assigned = F.element_at(const_vec(labels), idx)
     return (
         vectors.select(F.col("label").alias("true_label"), assigned.alias("assigned_label"))
         .groupBy("true_label", "assigned_label")

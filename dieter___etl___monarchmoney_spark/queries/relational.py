@@ -24,7 +24,6 @@ from dieter___etl___monarchmoney_spark.operators.aggregates import cashflow_by_k
 from dieter___etl___monarchmoney_spark.operators.transactions import transactions_query
 from dieter___etl___monarchmoney_spark.operators.windows import (
     lag_over,
-    remaining_amount,
     running_total,
 )
 from dieter___etl___monarchmoney_spark.registry import query

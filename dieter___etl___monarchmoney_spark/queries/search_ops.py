@@ -12,6 +12,7 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from dieter___etl___monarchmoney_spark.functions.literals import const_mat, const_vec
 from dieter___etl___monarchmoney_spark.functions.money import (
     MONEY_DECIMAL,
     MONEY_DECIMAL_SQL,
@@ -378,7 +379,7 @@ def q_logreg_train_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
             # ADDITION widens (38,18)+(38,18) → (38,17) per step, but its
             # decimal SUM aggregate keeps the full scale exactly like
             # DuckDB's — so the aggregate mirrors the oracle bit-for-bit
-            w_arr = F.array(*[F.lit(float(v)) for v in w])
+            w_arr = const_vec([float(v) for v in w])
             t = (F.col("x") * F.element_at(w_arr, F.col("j"))).cast(_DEC18)
             return (
                 long.select("vec_id", "y", t.alias("t"))
@@ -626,7 +627,7 @@ def q_knn_label_noise_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("label").alias("own_label"),
             F.col("bucket").alias("qb"),
         )
-        .withColumn("_mask", F.explode(F.lit(masks)))
+        .withColumn("_mask", F.explode(const_vec(masks)))
         .select(
             "query_id",
             "qv",
@@ -795,27 +796,24 @@ LIMIT 10
 """
 
 
-def _l2sq_col(vec: Column, cent: list[float]) -> Column:
-    """Spark twin of _l2sq_sql: left-fold squared L2 against a centroid
-    literal — zip_with preserves position order, aggregate folds left,
-    so the IEEE op sequence matches DuckDB's list_reduce exactly."""
-    carr = F.array(*[F.lit(float(c)) for c in cent])
-    return F.aggregate(
-        F.zip_with(vec, carr, lambda x, y: (x - y) * (x - y)),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-
-
 def _pq_code(vec: Column, cents: list[list[float]]) -> Column:
-    """argmin codeword: array_min over (dist, k) structs — struct
-    comparison is lexicographic, so equal distances tie-break on k."""
+    """argmin codeword as ONE higher-order expression over the codebook
+    literal, so its plan does not grow with K: per codeword, the Spark
+    twin of _l2sq_sql (zip_with keeps position order, aggregate folds
+    left, so the IEEE op sequence matches DuckDB's list_reduce exactly),
+    then array_min over (d, k) structs — struct comparison is
+    lexicographic, so equal distances tie-break on the lowest k."""
     return F.array_min(
-        F.array(
-            *[
-                F.struct(_l2sq_col(vec, c).alias("d"), F.lit(k).alias("k"))
-                for k, c in enumerate(cents)
-            ]
+        F.transform(
+            const_mat(cents),
+            lambda c, k: F.struct(
+                F.aggregate(
+                    F.zip_with(vec, c, lambda x, y: (x - y) * (x - y)),
+                    F.lit(0.0),
+                    lambda acc, x: acc + x,
+                ).alias("d"),
+                k.alias("k"),
+            ),
         )
     )["k"]
 
@@ -858,12 +856,12 @@ def q_pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Lloyd-mean aggregate, AND the final assignment scan — without the
     # pin each of those passes re-reads the parquet and re-runs the
     # slice/cast projection (round 13; the init TakeOrdered computes
-    # every partition, so it doubles as the cache fill). The argmin
-    # folds stay HOFs on purpose: unrolling the K x D fold chain into
-    # codegen'd element_at arithmetic was A/B-measured at 5.6 s vs
-    # 1.7 s — Catalyst analysis+codegen of the ~2k-node tree dwarfs the
-    # interpreted per-row cost at any plausible codebook size (the
-    # const_vec lesson from operators/similarity.py).
+    # every partition, so it doubles as the cache fill). The argmin is
+    # one transform over the codebook literal, so its plan does not grow
+    # with K: analysis and codegen of a K-sized plan dwarf the
+    # interpreted per-row cost at any plausible codebook size (the K x D
+    # fold chain unrolled into codegen'd element_at arithmetic was
+    # A/B-measured at 5.6 s vs 1.7 s in round 13).
     sub = pin(
         emb.select(
             "vec_id",
@@ -944,9 +942,9 @@ def q_pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     q1 = [float(x) for x in qrow["s1"]]
     lut0 = [_py_l2sq(q0, c) for c in refined[0]]
     lut1 = [_py_l2sq(q1, c) for c in refined[1]]
-    score = F.element_at(
-        F.array(*[F.lit(d) for d in lut0]), F.col("code0") + 1
-    ) + F.element_at(F.array(*[F.lit(d) for d in lut1]), F.col("code1") + 1)
+    score = F.element_at(const_vec(lut0), F.col("code0") + 1) + F.element_at(
+        const_vec(lut1), F.col("code1") + 1
+    )
     return (
         a1.select(
             "vec_id",

@@ -10,6 +10,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from dieter___etl___monarchmoney_spark.functions.literals import const_vec
 from dieter___etl___monarchmoney_spark.functions.money import (
     MONEY_DECIMAL,
     MONEY_DECIMAL_SQL,
@@ -696,7 +697,7 @@ def q_hourly_value_acf(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("ss")
     )
     lags = spark.range(1).select(
-        F.explode(F.array(*[F.lit(k) for k in _ACF_LAGS])).alias("lag")
+        F.explode(const_vec(_ACF_LAGS)).alias("lag")
     )
     a = centered.select("h", F.col("c").alias("ca"))
     b = centered.select(F.col("h").alias("hb"), F.col("c").alias("cb"))

@@ -27,6 +27,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from dieter___etl___monarchmoney_spark.functions.literals import const_vec
 from dieter___etl___monarchmoney_spark.registry import query
 from dieter___etl___monarchmoney_spark.sources.parquet import load_table
 
@@ -253,7 +254,7 @@ def q_countmin_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     fanned = exact.withColumn(
-        "r", F.explode(F.array(*[F.lit(i) for i in range(_CM_DEPTH)]))
+        "r", F.explode(const_vec(range(_CM_DEPTH)))
     )
     sketch = (
         fanned.withColumn("bucket", bucket(F.col("r"), F.col("word")))
@@ -262,7 +263,7 @@ def q_countmin_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     top_words = exact.orderBy(F.col("exact_cnt").desc(), "word").limit(_CM_TOPK)
     probes = top_words.withColumn(
-        "r", F.explode(F.array(*[F.lit(i) for i in range(_CM_DEPTH)]))
+        "r", F.explode(const_vec(range(_CM_DEPTH)))
     ).withColumn("bucket", bucket(F.col("r"), F.col("word")))
     probed = F.broadcast(probes).join(sketch, ["r", "bucket"])
     return (

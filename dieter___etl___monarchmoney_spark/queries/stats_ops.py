@@ -37,6 +37,7 @@ import math
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from dieter___etl___monarchmoney_spark.functions.literals import const_vec
 from dieter___etl___monarchmoney_spark.functions.money import (
     MONEY_DECIMAL,
     MONEY_DECIMAL_SQL,
@@ -1358,7 +1359,7 @@ def q_percentile_bridge_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).withColumn("bucket", F.floor(F.col("price") / F.lit(_PCT_BUCKET)))
     sized = li.groupBy("flag").agg(F.count(F.lit(1)).cast("bigint").alias("n"))
     pcts = spark.range(1).select(
-        F.explode(F.array(*[F.lit(p) for p in _PCTS])).alias("pct")
+        F.explode(const_vec(_PCTS)).alias("pct")
     )
     targets = sized.crossJoin(F.broadcast(pcts)).select(
         "flag",

@@ -84,7 +84,9 @@ def run_available_now(
     join at demo scale runs ~4× faster at 8 stores than 32, while a
     production deployment sizes it to cluster cores ÷ queries. The conf
     is set scoped — saved and restored around the run, never leaked
-    into the session."""
+    into the session. Likewise the temp view the memory sink registers
+    under ``name`` is dropped once the result frame is analysed: the
+    frame holds the sink itself, not the name."""
     spark = stream_df.sparkSession
     old = spark.conf.get("spark.sql.shuffle.partitions")
     if state_partitions is not None:
@@ -101,7 +103,9 @@ def run_available_now(
     finally:
         if state_partitions is not None:
             spark.conf.set("spark.sql.shuffle.partitions", old)
-    return spark.table(name)
+    result = spark.table(name)
+    spark.catalog.dropTempView(name)
+    return result
 
 
 def dedup_stream(events: DataFrame, watermark: str = "1 day") -> DataFrame:

@@ -20,10 +20,16 @@ def _hits(pattern: str) -> list[str]:
     ]
 
 
+#: per-element array literals that stay: string elements and per-element
+#: casts, one site per module
+STRING_OR_CAST_ARRAYS = ["api.py", "functions/text.py", "operators/transactions.py"]
+
+
 def test_each_decision_has_one_owner():
     """Queries live in operator-family modules, the money decimal is
-    named only in functions/money.py, and the per-dataset temp tag is
-    computed only in sources/parquet.py."""
+    named only in functions/money.py, the per-dataset temp tag is
+    computed only in sources/parquet.py, and numeric array literals are
+    built only by functions/literals.py."""
     rounds = sorted(p.name for p in (PACKAGE / "queries").glob("wave*"))
     assert not rounds, f"round-named query modules: {rounds}"
     money = [
@@ -34,3 +40,11 @@ def test_each_decision_has_one_owner():
         h for h in _hits(r"md5\(sf_dir") if not h.startswith("sources/parquet.py:")
     ]
     assert not tags, f"sf tag computed outside sources/parquet.py: {tags}"
+    arrays = [
+        h.split(":")[0]
+        for h in _hits(r"F\.lit\(\[|F\.array\(\*\[F\.lit\(")
+        if not h.startswith("functions/literals.py:")
+    ]
+    assert arrays == STRING_OR_CAST_ARRAYS, (
+        f"per-element array literals outside functions/literals.py: {arrays}"
+    )
