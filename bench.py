@@ -42,11 +42,11 @@ driver transfer skew).
 from __future__ import annotations
 
 import json
-import os
 import time
 
 import harness
 from dieter___etl___monarchmoney_spark import registry
+from dieter___etl___monarchmoney_spark.sources.parquet import DEFAULT_SF_DIR
 
 #: scans per timed anchor pass: one ~0.2 s scan's own noise exceeded the
 #: cross-run spread of the totals, so it could flag a slow box but not
@@ -90,7 +90,7 @@ def _anchor_time(spark, sf_dir: str) -> float:
 
 
 def main() -> None:
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    sf_dir = DEFAULT_SF_DIR
     sf = harness.sf_of(sf_dir)
     spark = harness.session("bench")
     queries, _ = registry.load()

@@ -9,10 +9,12 @@ Stages (reference step numbers in parens):
 4. extract (6): filtered scan of the transactions fact — Catalyst
    replaces the reference's pagination loop.
 5. transform (7): flatten/normalize + loadedAtUtc.
-6. merge (8): keep rows before the window, replace the window.
-7. load (9): overwrite sink (date-partitioned at scale).
-8. commit watermark (10): write control — after the sink write, same
+6. merge + load (8-9): keep the partitions before the window, overwrite
+   the window's month partitions.
+7. commit watermark (10): write control — after the sink write, same
    non-atomicity and same idempotence argument as the reference.
+
+Steps 3-7 are ``streaming.incremental.run_incremental_load``.
 """
 
 from __future__ import annotations
@@ -30,13 +32,7 @@ from dieter___etl___monarchmoney_spark.sources.sinks import (
     write_table,
 )
 from dieter___etl___monarchmoney_spark.sources.star_model import transactions_with_account
-from dieter___etl___monarchmoney_spark.streaming.incremental import (
-    derive_window,
-    month_floor,
-    overwrite_window_partitions,
-    read_watermark,
-    write_watermark,
-)
+from dieter___etl___monarchmoney_spark.streaming.incremental import run_incremental_load
 
 
 def accounts_stage(spark: SparkSession, sf_dir: str, out_dir: str) -> DataFrame:
@@ -79,37 +75,32 @@ def transactions_stage(
     accounts_dim: DataFrame,
     backfill_days: int = 3650,
 ) -> dict:
-    """§3.1 steps 5-10: watermark → window → extract → transform →
-    keep/replace merge → load → commit."""
-    control = os.path.join(out_dir, "control")
+    """§3.1 steps 5-10: the enriched, load-stamped transactions fact
+    through the one incremental-load lifecycle
+    (:func:`run_incremental_load`: watermark → window → partition
+    overwrite → commit), plus the sink's row count."""
     sink = os.path.join(out_dir, "transactions")
-    wm = read_watermark(spark, control)
-    start, end = derive_window(wm, now, backfill_days=backfill_days)
-    # the sink is month-partitioned, so the reload window widens to the
-    # watermark's month: the boundary partition is re-extracted whole
-    # and the merge becomes a partition overwrite — pre-window
-    # partitions are never read, listed, or rewritten (T2 at scale).
-    part_start = month_floor(start)
-
-    fresh = transactions_with_account(spark, sf_dir).filter(
-        (F.col("txn_date") >= F.lit(part_start.isoformat()))
-        & (F.col("txn_date") <= F.lit(end.date().isoformat()))
-    )
-    # J1 enrichment + F16 load stamp
+    # J1 enrichment + F16 load stamp. The stamp is ``now``: the reload
+    # window always ends there (derive_window). The window filter is
+    # applied by the lifecycle and pushed below the join by Catalyst.
     dim = F.broadcast(accounts_dim.withColumnRenamed("id", "account_id"))
-    fresh = fresh.join(dim, "account_id", "left").withColumnRenamed(
-        "displayName", "AccDispName"
+    source = (
+        transactions_with_account(spark, sf_dir)
+        .join(dim, "account_id", "left")
+        .withColumnRenamed("displayName", "AccDispName")
     )
-    fresh = snapshot_with_metadata(fresh, end.strftime("%Y-%m-%d %H:%M:%S"))
-
-    partitions = overwrite_window_partitions(fresh, sink, "txn_date", part_start)
-    write_watermark(spark, control, end)
-    return {
-        "window_start": start.isoformat(),
-        "partition_start": part_start.isoformat(),
-        "partitions": partitions,
-        "rows": read_sink(spark, sink).count(),
-    }
+    source = snapshot_with_metadata(source, now.strftime("%Y-%m-%d %H:%M:%S"))
+    manifest = run_incremental_load(
+        spark,
+        source=source,
+        sink_path=sink,
+        control_path=os.path.join(out_dir, "control"),
+        date_col="txn_date",
+        now=now,
+        backfill_days=backfill_days,
+    )
+    manifest["rows"] = read_sink(spark, sink).count()
+    return manifest
 
 
 def run_etl(

@@ -12,6 +12,10 @@ from pyspark.sql import functions as F
 
 from dieter___etl___monarchmoney_spark.functions.money import money_sum_sql
 from dieter___etl___monarchmoney_spark.registry import query
+from dieter___etl___monarchmoney_spark.sources.materialize import (
+    current_table_dir,
+    point_current,
+)
 from dieter___etl___monarchmoney_spark.sources.parquet import (
     _normalize_event_time,
     load_table,
@@ -44,9 +48,7 @@ def q_streaming_daily_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     the oracle is the plain GROUP BY — proving the streaming path
     computes the same answer."""
     stream = daily_rollup_stream(read_events_stream(spark, sf_dir))
-    return run_available_now(
-        stream, f"daily_rollup_{sf_tag(sf_dir)}", state_partitions=8
-    )
+    return run_available_now(stream, f"daily_rollup_{sf_tag(sf_dir)}")
 
 
 #: Shared oracle for batch + streaming sessionization. Session bounds
@@ -128,7 +130,6 @@ def q_streaming_event_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         stream,
         f"event_dedup_{sf_tag(sf_dir)}",
         output_mode="append",
-        state_partitions=8,
     )
 
 
@@ -161,9 +162,7 @@ def q_streaming_enriched_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
         nation, customer.c_nationkey == nation.n_nationkey
     ).select("c_custkey", F.col("n_name").alias("nation"))
     stream = enriched_rollup_stream(read_events_stream(spark, sf_dir), dim)
-    return run_available_now(
-        stream, f"enriched_rollup_{sf_tag(sf_dir)}", state_partitions=8
-    )
+    return run_available_now(stream, f"enriched_rollup_{sf_tag(sf_dir)}")
 
 
 @query(
@@ -199,9 +198,6 @@ def q_streaming_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         stream,
         f"interval_join_{sf_tag(sf_dir)}",
         output_mode="append",
-        # two stateful join sides x fixed per-store overhead: 8 stores
-        # beat 32 by ~4x at test SF; production sizes to cores/query
-        state_partitions=8,
     )
 
 
@@ -291,7 +287,6 @@ def q_sessionize_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         sessionize_stream(source),
         f"sessionize_stream_{sf_tag(sf_dir)}",
         output_mode="append",
-        state_partitions=8,
     )
     return _session_bounds_as_micros(res).filter(
         F.col("session_start_us") < F.lit(sentinel_us)
@@ -364,7 +359,6 @@ def q_sessionize_native_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         agg,
         f"sessionize_native_{sf_tag(sf_dir)}",
         output_mode="append",
-        state_partitions=8,
     )
     return res.filter(F.col("session_start_us") < F.lit(sentinel_us))
 
@@ -411,7 +405,6 @@ def q_streaming_left_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         stream,
         f"left_join_{sf_tag(sf_dir)}",
         output_mode="append",
-        state_partitions=8,
     )
     return res.filter(F.col("purchase_id") >= 0).select(
         "purchase_id",
@@ -457,7 +450,6 @@ def q_streaming_full_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         stream,
         f"full_outer_join_{sf_tag(sf_dir)}",
         output_mode="append",
-        state_partitions=8,
     )
     return res.filter(
         (F.col("purchase_id").isNull() | (F.col("purchase_id") >= 0))
@@ -507,9 +499,7 @@ def q_streaming_sliding_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     stream = sliding_rollup_stream(read_events_stream(spark, sf_dir))
-    return run_available_now(
-        stream, f"sliding_rollup_{sf_tag(sf_dir)}", state_partitions=8
-    )
+    return run_available_now(stream, f"sliding_rollup_{sf_tag(sf_dir)}")
 
 
 def _ewma_stream_oracle() -> str:
@@ -545,7 +535,6 @@ def q_ewma_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         out,
         f"ewma_stream_{sf_tag(sf_dir)}",
         output_mode="append",
-        state_partitions=8,
     )
 
 
@@ -616,8 +605,9 @@ def q_streaming_upsert_foreachbatch(spark: SparkSession, sf_dir: str) -> DataFra
     micro-batches: each batch reduces itself to its latest row per
     (user_id, event_type) — max(struct(ts_ns, event_id, …)), the same
     partial-aggregable compaction as cdc_latest_state — then merges
-    with the current state and commits a NEW state version by
-    atomically repointing a CURRENT pointer file (os.replace — the
+    with the current state and commits a NEW state version through
+    the versioned-table pointer of ``sources/materialize.py``
+    (``point_current`` writes, ``current_table_dir`` resolves — the
     single commit point; the prior version outlives the commit, so a
     crash at any instant leaves a complete committed state). The
     final state must equal the BATCH latest-per-key oracle
@@ -634,22 +624,6 @@ def q_streaming_upsert_foreachbatch(spark: SparkSession, sf_dir: str) -> DataFra
     shutil.rmtree(root, ignore_errors=True)
     src = os.path.join(root, "src")
     cp = os.path.join(root, "cp")
-    cur_ptr = os.path.join(root, "CURRENT")
-
-    def _state_dir() -> str | None:
-        """Resolve the committed state version via the pointer file —
-        the ONLY commit point (os.replace of a one-line file is atomic
-        on POSIX), so a crash at any instant leaves either the prior
-        pointer or the new one, never a missing/half state. (The
-        previous delete-then-rename swap had a window where NO state
-        dir existed while the checkpoint already recorded the batch —
-        a crash there silently dropped committed keys.)"""
-        if not os.path.exists(cur_ptr):
-            return None
-        with open(cur_ptr) as fh:
-            d = os.path.join(root, fh.read().strip())
-        return d if os.path.isdir(d) else None
-
     ev = load_table(spark, "events", sf_dir).select(
         "event_id", "user_id", "event_type", "ts", "ts_ns", "value"
     )
@@ -679,28 +653,26 @@ def q_streaming_upsert_foreachbatch(spark: SparkSession, sf_dir: str) -> DataFra
     def _merge(batch: DataFrame, epoch_id: int) -> None:
         latest = _latest(batch)
         sess = batch.sparkSession
-        sd = _state_dir()
+        sd = current_table_dir(root)
         if sd is not None:
             merged = _latest(sess.read.parquet(sd).unionByName(latest))
         else:
             merged = latest
-        # MVCC commit: write the new version fully, then atomically
-        # repoint CURRENT (os.replace). The prior version stays on disk
+        # MVCC commit: write the new version fully, then repoint
+        # CURRENT (point_current). The prior version stays on disk
         # until AFTER the commit — readers and crash-recovery always
         # see a complete committed state. Epoch ids are stable across
         # checkpoint replays, so a replayed batch overwrites its own
         # version dir idempotently.
-        new_dir = os.path.join(root, f"state_v{epoch_id}")
+        version = f"state_v{epoch_id}"
+        new_dir = os.path.join(root, version)
         shutil.rmtree(new_dir, ignore_errors=True)
         merged.write.mode("overwrite").parquet(new_dir)
-        tmp = cur_ptr + ".tmp"
-        with open(tmp, "w") as fh:
-            fh.write(os.path.basename(new_dir))
-        os.replace(tmp, cur_ptr)
-        # prune superseded versions — best effort: failure leaves
-        # garbage directories, never corruption
+        point_current(root, version)
+        # one writer, so superseded versions are pruned at once — best
+        # effort: failure leaves garbage directories, never corruption
         for d in os.listdir(root):
-            if d.startswith("state_v") and d != os.path.basename(new_dir):
+            if d.startswith("state_v") and d != version:
                 shutil.rmtree(os.path.join(root, d), ignore_errors=True)
 
     stream = (
@@ -716,7 +688,7 @@ def q_streaming_upsert_foreachbatch(spark: SparkSession, sf_dir: str) -> DataFra
         .start()
     )
     qh.awaitTermination()
-    final = _state_dir()
+    final = current_table_dir(root)
     assert final is not None, "stream committed no batches"
     return spark.read.parquet(final).select(
         "user_id",

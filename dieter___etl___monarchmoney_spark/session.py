@@ -79,7 +79,7 @@ def ship_package(spark: SparkSession) -> str:
     host harness whose cwd is outside the repo).
 
     The two custom connectors don't need this (their ``register()``
-    ships classes by value through PySpark's vendored cloudpickle);
+    ships classes by value through :func:`register_data_source`);
     every OTHER Python lane — Arrow/Pandas UDFs, ``mapInPandas``,
     ``applyInPandas(WithState)`` — pickles its closures BY REFERENCE,
     so workers must import the package by name. ``get_spark()`` covers
@@ -133,3 +133,36 @@ def ship_package(spark: SparkSession) -> str:
             raise
     spark.sparkContext.addPyFile(zip_path)
     return zip_path
+
+
+def register_data_source(spark: SparkSession, source_cls, *modules) -> None:
+    """Register a Python ``DataSource`` with ``spark``, idempotently,
+    shipping ``modules`` (the source's own module and any module its
+    tasks call into) to Python workers BY VALUE.
+
+    A by-reference pickle would require this package on every worker's
+    import path, which a host harness driving an arbitrary cwd/session
+    may not provide. The registration MUST target PySpark's VENDORED
+    cloudpickle (``pyspark.cloudpickle`` — the module
+    ``pyspark.serializers`` actually dumps with); registering only the
+    standalone ``cloudpickle`` package is a no-op for Spark's serializer
+    (found live: a bare session launched from a cwd outside the repo
+    failed worker-side with ModuleNotFoundError despite the standalone
+    registration). The standalone registration is kept for any
+    non-Spark pickle path. A source already registered in this session
+    is not an error."""
+    from pyspark import cloudpickle as _spark_cloudpickle
+
+    for mod in modules:
+        _spark_cloudpickle.register_pickle_by_value(mod)
+        try:
+            import cloudpickle
+
+            cloudpickle.register_pickle_by_value(mod)
+        except ImportError:
+            pass  # standalone cloudpickle is optional; Spark uses vendored
+    try:
+        spark.dataSource.register(source_cls)
+    except Exception as exc:  # already registered in this session
+        if "already" not in str(exc).lower():
+            raise

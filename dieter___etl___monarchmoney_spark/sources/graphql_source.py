@@ -210,28 +210,17 @@ class GraphQLJsonReader(DataSourceReader):
 
 
 def register(spark) -> None:
-    """Idempotent format registration. Same by-value shipping contract
-    as paged_source.register: this module AND json_ingest (whose
-    ``with_retries`` the reader calls on executors) are registered for
-    by-value pickling with PySpark's VENDORED cloudpickle — the one
-    ``pyspark.serializers`` dumps with; the standalone package's
-    registry is invisible to it — so read tasks never depend on the
-    package being importable from the worker's cwd/sys.path."""
+    """Idempotent format registration. This module AND json_ingest
+    (whose ``with_retries`` the reader calls on executors) ship to
+    Python workers by value (see ``session.register_data_source``)."""
     import sys
 
-    from pyspark import cloudpickle as _spark_cloudpickle
-
+    from dieter___etl___monarchmoney_spark.session import register_data_source
     from dieter___etl___monarchmoney_spark.sources import json_ingest
 
-    for m in (sys.modules[__name__], json_ingest):
-        _spark_cloudpickle.register_pickle_by_value(m)
-        try:
-            import cloudpickle
-
-            cloudpickle.register_pickle_by_value(m)
-        except ImportError:
-            pass  # standalone cloudpickle optional; Spark uses vendored
-    spark.dataSource.register(GraphQLJsonDataSource)
+    register_data_source(
+        spark, GraphQLJsonDataSource, sys.modules[__name__], json_ingest
+    )
 
 
 # --------------------------------------------------------------------------

@@ -99,6 +99,20 @@ def current_table_dir(root: str) -> str | None:
     return vdir if version and os.path.isdir(vdir) else None
 
 
+def point_current(root: str, version: str) -> None:
+    """Publish ``root/version`` by atomically replacing the one-line
+    ``root/CURRENT`` pointer — the single commit point of every
+    versioned table: ``os.replace`` of a file over a file is atomic on
+    POSIX, so a crash at any instant leaves either the prior pointer or
+    the new one, never a missing or half-written one. The temp name is
+    unique per call, so racing publishers never write into each
+    other's pointer file."""
+    tmp = os.path.join(root, f".CURRENT.{uuid.uuid4().hex[:12]}")
+    with open(tmp, "w") as f:
+        f.write(version)
+    os.replace(tmp, os.path.join(root, "CURRENT"))
+
+
 def shared_materialized(
     spark: SparkSession,
     sf_dir: str,
@@ -141,10 +155,7 @@ def shared_materialized(
             version = "v_" + uuid.uuid4().hex[:12]
             vdir = os.path.join(root, version)
             os.rename(tmp_table, vdir)
-            ptr_tmp = os.path.join(stage, "CURRENT")
-            with open(ptr_tmp, "w") as f:
-                f.write(version)
-            os.rename(ptr_tmp, os.path.join(root, "CURRENT"))
+            point_current(root, version)
         finally:
             shutil.rmtree(stage, ignore_errors=True)
         _prune_stale_versions(root, keep=os.path.basename(vdir))

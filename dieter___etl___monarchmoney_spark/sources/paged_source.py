@@ -241,36 +241,14 @@ class PushdownPagedJsonReader(PagedJsonReader):
 
 
 def register(spark) -> None:
-    """Idempotent registration of the format with a session.
-
-    The class ships to Python workers BY VALUE
-    (register_pickle_by_value): a by-reference pickle would require
-    this package on every worker's import path, which a host harness
-    driving an arbitrary cwd/session may not provide. The registration
-    MUST target PySpark's VENDORED cloudpickle (``pyspark.cloudpickle``
-    — the module ``pyspark.serializers`` actually dumps with);
-    registering only the standalone ``cloudpickle`` package is a no-op
-    for Spark's serializer (found live: a bare session launched from a
-    cwd outside the repo failed worker-side with ModuleNotFoundError
-    despite the standalone registration). The standalone registration
-    is kept for any non-Spark pickle path."""
+    """Idempotent registration of the format with a session; the classes
+    ship to Python workers by value (see
+    ``session.register_data_source``)."""
     import sys
 
-    mod = sys.modules[__name__]
-    from pyspark import cloudpickle as _spark_cloudpickle
+    from dieter___etl___monarchmoney_spark.session import register_data_source
 
-    _spark_cloudpickle.register_pickle_by_value(mod)
-    try:
-        import cloudpickle
-
-        cloudpickle.register_pickle_by_value(mod)
-    except ImportError:
-        pass  # standalone cloudpickle is optional; Spark uses vendored
-    try:
-        spark.dataSource.register(PagedJsonDataSource)
-    except Exception as exc:  # already registered in this session
-        if "already" not in str(exc).lower():
-            raise
+    register_data_source(spark, PagedJsonDataSource, sys.modules[__name__])
 
 
 def export_documents(spark, sf_dir: str, prefix: str) -> str:
@@ -326,6 +304,53 @@ class PagePartFile(WriterCommitMessage):
         self.n_rows = n_rows
 
 
+def _write_part(staging: str, fields: list[str], iterator) -> PagePartFile:
+    """Task side of both writers: write this task's rows as JSON lines to
+    ``staging/part-<pid>-<uuid>.jsonl``.
+
+    The zero-padded PARTITION id prefix lets the commit-side merge
+    reproduce partition order (the reference's ordered-sheet contract,
+    O1/O2) — sorting uuid-only names is arbitrary and differs run to
+    run, so a re-delivered stream batch would replace its epoch file
+    with the same rows differently ordered. The uuid suffix keeps
+    concurrent attempts of the same partition (speculation, task retry)
+    from colliding mid-write; Spark commits exactly one message per
+    partition, so the suffix never decides the order."""
+    import os
+    import uuid
+
+    from pyspark import TaskContext
+
+    os.makedirs(staging, exist_ok=True)
+    pid = TaskContext.get().partitionId()
+    part = os.path.join(staging, f"part-{pid:05d}-{uuid.uuid4().hex[:12]}.jsonl")
+    n = 0
+    with open(part, "w") as f:
+        for row in iterator:
+            rec = {name: row[name] for name in fields}
+            f.write(json.dumps(rec, default=str) + "\n")
+            n += 1
+    return PagePartFile(part, n)
+
+
+def _merge_parts(messages, tmp: str, target: str) -> list[str]:
+    """Driver side of both writers: concatenate the committed part files
+    into ``tmp`` in partition-id order (the PARSED id — see
+    :func:`_part_pid`), streaming each part rather than buffering it,
+    then ``os.replace`` it onto ``target`` (atomic on POSIX; readers
+    never see halves). Returns the merged part paths."""
+    import os
+    import shutil
+
+    parts = sorted((m.part_path for m in messages if m is not None), key=_part_pid)
+    with open(tmp, "wb") as out:
+        for part in parts:
+            with open(part, "rb") as src:
+                shutil.copyfileobj(src, out)
+    os.replace(tmp, target)
+    return parts
+
+
 class PagedJsonWriter(DataSourceWriter):
     """Tasks write JSON-lines part files into a staging directory; the
     driver-side ``commit`` merges them into the single payload file the
@@ -357,46 +382,14 @@ class PagedJsonWriter(DataSourceWriter):
         self.staging = f"{self.path}.staging-{uuid.uuid4().hex[:12]}"
 
     def write(self, iterator) -> PagePartFile:
-        import os
-        import uuid
-
-        from pyspark import TaskContext
-
-        os.makedirs(self.staging, exist_ok=True)
-        # zero-padded PARTITION id prefix: the commit-side sort must
-        # reproduce partition order (the reference's ordered-sheet
-        # contract, O1/O2) — sorting uuid-only names is arbitrary and
-        # differs run to run. The uuid suffix keeps concurrent attempts
-        # of the same partition (speculation, task retry) from
-        # colliding mid-write; Spark commits exactly one message per
-        # partition, so the suffix never decides the order.
-        pid = TaskContext.get().partitionId()
-        part = os.path.join(
-            self.staging, f"part-{pid:05d}-{uuid.uuid4().hex[:12]}.jsonl"
-        )
-        n = 0
-        with open(part, "w") as f:
-            for row in iterator:
-                rec = {name: row[name] for name in self.fields}
-                f.write(json.dumps(rec, default=str) + "\n")
-                n += 1
-        return PagePartFile(part, n)
+        return _write_part(self.staging, self.fields, iterator)
 
     def commit(self, messages) -> None:
         import os
         import shutil
 
         tmp = f"{self.path}.tmp-{os.path.basename(self.staging)}"
-        with open(tmp, "wb") as out:
-            # deterministic merge order: the PARSED partition id (int,
-            # not the lexicographic basename — see _part_pid)
-            for m in sorted(
-                (m for m in messages if m is not None),
-                key=lambda m: _part_pid(m.part_path),
-            ):
-                with open(m.part_path, "rb") as src:
-                    shutil.copyfileobj(src, out)
-        os.replace(tmp, self.path)  # atomic on POSIX; readers never see halves
+        _merge_parts(messages, tmp, self.path)
         shutil.rmtree(self.staging, ignore_errors=True)
 
     def abort(self, messages) -> None:
@@ -424,41 +417,16 @@ class PagedJsonStreamWriter(DataSourceStreamWriter):
 
     def write(self, iterator) -> PagePartFile:
         import os
-        import uuid
 
-        from pyspark import TaskContext
-
-        staging = os.path.join(self.path, ".staging")
-        os.makedirs(staging, exist_ok=True)
-        # partition-id prefix (see PagedJsonWriter.write): without it a
-        # re-delivered batch merges its fresh uuid-named parts in a
-        # DIFFERENT sorted order, replacing epoch-N.jsonl with the same
-        # rows differently ordered — which breaks the "identical
-        # content" half of the idempotent-epoch exactly-once claim.
-        pid = TaskContext.get().partitionId()
-        part = os.path.join(staging, f"part-{pid:05d}-{uuid.uuid4().hex[:12]}.jsonl")
-        n = 0
-        with open(part, "w") as f:
-            for row in iterator:
-                rec = {name: row[name] for name in self.fields}
-                f.write(json.dumps(rec, default=str) + "\n")
-                n += 1
-        return PagePartFile(part, n)
+        return _write_part(os.path.join(self.path, ".staging"), self.fields, iterator)
 
     def commit(self, messages, batchId: int) -> None:
         import os
-        import shutil
 
         tmp = os.path.join(self.path, f".tmp-epoch-{batchId}")
-        with open(tmp, "wb") as out:
-            for m in sorted(
-                (m for m in messages if m is not None),
-                key=lambda m: _part_pid(m.part_path),
-            ):
-                with open(m.part_path, "rb") as src:
-                    shutil.copyfileobj(src, out)  # stream, don't buffer whole parts
-                os.remove(m.part_path)
-        os.replace(tmp, os.path.join(self.path, f"epoch-{batchId}.jsonl"))
+        target = os.path.join(self.path, f"epoch-{batchId}.jsonl")
+        for part in _merge_parts(messages, tmp, target):
+            os.remove(part)
 
     def abort(self, messages, batchId: int) -> None:
         import os

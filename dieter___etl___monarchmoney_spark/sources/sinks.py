@@ -9,6 +9,8 @@ partitions (dynamic partitionOverwriteMode) instead of the whole table.
 
 from __future__ import annotations
 
+from collections.abc import Sequence
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -37,31 +39,28 @@ def _hadoop_fs(spark: SparkSession, path: str):
     return fs, jpath, jvm
 
 
-def staged_swap(spark: SparkSession, staging: str, path: str) -> None:
-    """Delete-then-rename a fully-written staging directory onto the
-    target — the shared tail of every staged rewrite (staged_overwrite,
-    compact_table, run_incremental_load). Hadoop rename reports failure
-    via its boolean, not an exception — and at that point the old
-    target is already gone, so a silent False (cross-filesystem
-    staging, concurrent writer) would lose the table without a trace;
-    raise instead."""
-    fs, target, jvm = _hadoop_fs(spark, path)
-    staging_path = jvm.org.apache.hadoop.fs.Path(staging)
-    if fs.exists(target):
-        fs.delete(target, True)
-    if not fs.rename(staging_path, target):
-        raise IOError(f"rename {staging} -> {path} failed; table left in staging")
-
-
-def staged_overwrite(df: DataFrame, path: str) -> None:
+def staged_overwrite(
+    df: DataFrame, path: str, partition_by: Sequence[str] = ()
+) -> None:
     """K1 for self-referencing rewrites: a path can't be overwritten
     while a plan still reads it, so stage to a sibling directory and
     swap via the Hadoop FileSystem API (portable to HDFS/object stores;
     a lakehouse deployment would use Delta ``replaceWhere``/MERGE and
-    skip the swap entirely)."""
+    skip the swap entirely). The one staged rewrite of the package:
+    ``api.save`` (flat entity tables) and ``compact_table`` (flat, or
+    ``partition_by`` its hive partition columns).
+
+    Hadoop rename reports failure via its boolean, not an exception —
+    and at that point the old target is already gone, so a silent False
+    (cross-filesystem staging, concurrent writer) would lose the table
+    without a trace; raise instead."""
     staging = path.rstrip("/") + "._staging"
-    df.write.mode("overwrite").parquet(staging)
-    staged_swap(df.sparkSession, staging, path)
+    df.write.mode("overwrite").partitionBy(*partition_by).parquet(staging)
+    fs, target, jvm = _hadoop_fs(df.sparkSession, path)
+    if fs.exists(target):
+        fs.delete(target, True)
+    if not fs.rename(jvm.org.apache.hadoop.fs.Path(staging), target):
+        raise IOError(f"rename {staging} -> {path} failed; table left in staging")
 
 
 def delete_path(spark: SparkSession, path: str) -> bool:
@@ -217,14 +216,7 @@ def compact_table(spark: SparkSession, path: str, target_files: int = 8) -> dict
     part_cols = _partition_cols_of(spark, path)
     df = spark.read.parquet(path)
     if part_cols:
-        staging = path.rstrip("/") + "._staging"
-        (
-            df.repartition(*[F.col(c) for c in part_cols])
-            .write.mode("overwrite")
-            .partitionBy(*part_cols)
-            .parquet(staging)
-        )
-        staged_swap(spark, staging, path)
+        staged_overwrite(df.repartition(*part_cols), path, part_cols)
     else:
         staged_overwrite(df.coalesce(target_files), path)
     after = _count_parquet_files(spark, path)
@@ -246,13 +238,6 @@ def expire_partitions(
     for v in dropped:
         delete_path(spark, f"{path}/{partition_col}={v}")
     return {"dropped": dropped, "kept": [v for v in values if v >= keep_from]}
-
-
-def _list_files(spark: SparkSession, path: str) -> list[str]:
-    fs, jpath, _ = _hadoop_fs(spark, path)
-    if not fs.exists(jpath):
-        return []
-    return [s.getPath().getName() for s in fs.listStatus(jpath)]
 
 
 def save_bucketed_table(

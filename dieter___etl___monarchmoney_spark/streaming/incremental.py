@@ -7,11 +7,11 @@ existing rows strictly before the window start, replace everything inside
 it, then advance the watermark. Late/changed data is handled because the
 window restarts at the watermark day (T2) — re-runs are idempotent.
 
-Spark mapping: the keep/replace merge is a filter + unionByName (exactly
-the reference's `kept + txn_norm`); at scale the sink should be
-date-partitioned so the same operation is a partition overwrite
-(``replaceWhere``) touching only the window's partitions, never a full
-rewrite. Both forms are provided.
+Spark mapping: the sink is month-partitioned, so keep/replace is a
+partition overwrite touching only the window's partitions, never a full
+rewrite (:func:`run_incremental_load`). The relational form of the same
+merge — a filter + unionByName, exactly the reference's
+`kept + txn_norm` — is :func:`replace_window_merge`.
 """
 
 from __future__ import annotations
@@ -32,8 +32,7 @@ def read_watermark(spark: SparkSession, control_path: str) -> dt.datetime | None
     MonarchMoneyMain-v3.py:1218-1225). Control is a tiny key/value
     parquet table (FIXTURES.md §9).
 
-    Absence is an EXISTENCE check, never an exception catch — the same
-    doctrine :func:`run_incremental_load` applies to the sink probe: a
+    Absence is an EXISTENCE check, never an exception catch: a
     missing control table legitimately means "first run, backfill",
     but a transient read failure on an EXISTING control (corrupt
     footer, storage hiccup, permissions) must surface. Swallowed, it
@@ -174,59 +173,34 @@ def run_incremental_load(
     date_col: str,
     now: dt.datetime,
     backfill_days: int = 3650,
-    advance_on_empty: bool = True,
 ) -> dict:
-    """The full T1→T4 lifecycle against parquet paths (§3.1 steps 5-10).
+    """The full T1→T4 lifecycle against a month-partitioned parquet sink
+    (§3.1 steps 5-10): watermark → window → partition overwrite of the
+    window → advance the watermark.
 
-    Returns a small manifest dict (window, row counts) for observability.
-    The watermark write happens after the sink write — same non-atomicity
-    as the reference (§3.1 step 10), safe for the same reason: re-runs
+    The window start widens to its month (:func:`month_floor`): the
+    boundary partition is re-extracted whole, so pre-window partitions
+    are never read, listed, or rewritten (T2 at scale). The watermark
+    write happens after the sink write — same non-atomicity as the
+    reference (§3.1 step 10), safe for the same reason: re-runs
     re-extract and replace the whole window.
+
+    Returns the window and the partition manifest of
+    :func:`overwrite_window_partitions`.
     """
     wm = read_watermark(spark, control_path)
     start, end = derive_window(wm, now, backfill_days=backfill_days)
+    part_start = month_floor(start)
     fresh = source.filter(
-        (F.col(date_col) >= F.lit(start.isoformat()))
+        (F.col(date_col) >= F.lit(part_start.isoformat()))
         & (F.col(date_col) <= F.lit(end.date().isoformat()))
     )
-    from dieter___etl___monarchmoney_spark.sources.sinks import _hadoop_fs
-
-    # Absence is an EXISTENCE check, never an exception catch: a
-    # transient read failure (corrupt footer, storage hiccup,
-    # permissions) on an existing sink must surface, not silently
-    # reclassify ten years of history as "no sink" and replace the
-    # whole table with one reload window.
-    fs_probe, target_probe, _ = _hadoop_fs(spark, sink_path)
-    if fs_probe.exists(target_probe):
-        existing = spark.read.parquet(sink_path)
-        merged = replace_window_merge(existing, fresh, date_col, start)
-    else:
-        merged = fresh
-    # can't overwrite a path we're still reading: stage then swap via the
-    # Hadoop FileSystem API — works on object stores, unlike shutil (a
-    # lakehouse deployment would use Delta replaceWhere / MERGE instead;
-    # the date-partitioned form of this lifecycle is etl.py's
-    # transactions_stage over overwrite_window_partitions, which touches
-    # only the window's partitions). Write FIRST, count from the staged
-    # parquet after: counting the unmaterialized plan would scan the
-    # source once per count and then again for the write — at scale that
-    # triples the extract cost; parquet counts come from row-group
-    # metadata, not a data scan.
-    from dieter___etl___monarchmoney_spark.sources.sinks import staged_swap
-
-    staging = sink_path.rstrip("/") + "._staging"
-    merged.write.mode("overwrite").parquet(staging)
-    staged = spark.read.parquet(staging)
-    n = staged.count()
-    fresh_n = staged.filter(F.col(date_col) >= F.lit(start.isoformat())).count()
-    staged_swap(spark, staging, sink_path)
-    if fresh_n > 0 or advance_on_empty:
-        write_watermark(spark, control_path, end)
+    partitions = overwrite_window_partitions(fresh, sink_path, date_col, part_start)
+    write_watermark(spark, control_path, end)
     return {
         "window_start": start.isoformat(),
-        "window_end": end.isoformat(),
-        "fresh_rows": fresh_n,
-        "total_rows": n,
+        "partition_start": part_start.isoformat(),
+        "partitions": partitions,
     }
 
 

@@ -65,11 +65,15 @@ def daily_rollup_stream(events: DataFrame, watermark: str = "1 day") -> DataFram
     )
 
 
+#: state-store count of every stateful streaming operator (fixed per
+#: checkpoint at first start from ``spark.sql.shuffle.partitions``)
+STATE_PARTITIONS = 8
+
+
 def run_available_now(
     stream_df: DataFrame,
     name: str,
     output_mode: str = "complete",
-    state_partitions: int | None = None,
 ) -> DataFrame:
     """Execute a streaming DataFrame with the availableNow trigger into
     an in-memory sink and return the materialized result. ``complete``
@@ -77,20 +81,18 @@ def run_available_now(
     batch-complete sources; stateful non-aggregate operators (streaming
     dedup) require ``append``.
 
-    ``state_partitions`` sizes the stateful operators' store count
-    (fixed per checkpoint at first start from
-    ``spark.sql.shuffle.partitions``): each state partition carries
-    fixed provider/commit overhead per micro-batch, so a stream-stream
-    join at demo scale runs ~4× faster at 8 stores than 32, while a
-    production deployment sizes it to cluster cores ÷ queries. The conf
-    is set scoped — saved and restored around the run, never leaked
-    into the session. Likewise the temp view the memory sink registers
-    under ``name`` is dropped once the result frame is analysed: the
-    frame holds the sink itself, not the name."""
+    The stateful operators run with :data:`STATE_PARTITIONS` stores:
+    each state partition carries fixed provider/commit overhead per
+    micro-batch, so a stream-stream join at demo scale runs ~4× faster
+    at 8 stores than 32, while a production deployment sizes it to
+    cluster cores ÷ queries. The conf is set scoped — saved and
+    restored around the run, never leaked into the session. Likewise
+    the temp view the memory sink registers under ``name`` is dropped
+    once the result frame is analysed: the frame holds the sink itself,
+    not the name."""
     spark = stream_df.sparkSession
     old = spark.conf.get("spark.sql.shuffle.partitions")
-    if state_partitions is not None:
-        spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
+    spark.conf.set("spark.sql.shuffle.partitions", str(STATE_PARTITIONS))
     try:
         q = (
             stream_df.writeStream.format("memory")
@@ -101,8 +103,7 @@ def run_available_now(
         )
         q.awaitTermination()
     finally:
-        if state_partitions is not None:
-            spark.conf.set("spark.sql.shuffle.partitions", old)
+        spark.conf.set("spark.sql.shuffle.partitions", old)
     result = spark.table(name)
     spark.catalog.dropTempView(name)
     return result

@@ -33,6 +33,7 @@ if str(REPO) not in sys.path:
 
 from dieter___etl___monarchmoney_spark import pins, registry  # noqa: E402
 from dieter___etl___monarchmoney_spark.session import get_spark  # noqa: E402
+from dieter___etl___monarchmoney_spark.sources.parquet import DEFAULT_SF_DIR  # noqa: E402
 
 #: passes disagreeing by more than this trigger the tie-break third pass
 TIEBREAK_RATIO = 1.5
@@ -138,7 +139,7 @@ def sf_of(sf_dir: str) -> float:
 
 def main() -> None:
     rounds = int(sys.argv[1])
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    sf_dir = DEFAULT_SF_DIR
     queries, _ = registry.load()
     names = select(queries, sys.argv[2:])
     spark = session("ab_queries")

@@ -117,7 +117,7 @@ def test_connector_queries_on_bare_subprocess_session(tmp_path):
     workers can import the package via '' on sys.path and the test
     cannot see a broken by-value shipping contract — exactly how the
     standalone-vs-vendored cloudpickle registration no-op stayed
-    invisible (sources/paged_source.register docstring). From a
+    invisible (session.register_data_source docstring). From a
     neutral cwd the connector classes MUST arrive by value."""
     script = _BARE_SCRIPT.format(
         repo=str(REPO), names=list(CONNECTOR_QUERIES), sf=SF_SMOKE

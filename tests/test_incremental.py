@@ -105,34 +105,40 @@ def test_replace_window_merge_semantics(spark):
 def test_run_incremental_load_idempotent(spark, tmp_path):
     sink = str(tmp_path / "sink")
     ctl = str(tmp_path / "ctl")
+    # the events all fall in 2024-01: spread them back over the three
+    # months before it, so the re-run has earlier months to keep
+    shift = (F.col("event_id") % 90).cast("int")
     events = load_table(spark, "events", SF_SMOKE).select(
-        "event_id", F.col("ts").cast("date").alias("d"), "value"
+        "event_id", F.date_sub(F.col("ts").cast("date"), shift).alias("d"), "value"
     )
-    m1 = run_incremental_load(
-        spark,
-        source=events,
-        sink_path=sink,
-        control_path=ctl,
-        date_col="d",
-        now=dt.datetime(2024, 1, 20),
-        backfill_days=3650,
-    )
+
+    def load():
+        return run_incremental_load(
+            spark,
+            source=events,
+            sink_path=sink,
+            control_path=ctl,
+            date_col="d",
+            now=dt.datetime(2024, 1, 20),
+            backfill_days=3650,
+        )
+
+    m1 = load()
     n1 = spark.read.parquet(sink).count()
-    assert m1["fresh_rows"] == n1 > 0
-    # second run from the new watermark re-extracts only the last day's
-    # window and replaces it — total row count must be unchanged
-    m2 = run_incremental_load(
-        spark,
-        source=events,
-        sink_path=sink,
-        control_path=ctl,
-        date_col="d",
-        now=dt.datetime(2024, 1, 20),
-        backfill_days=3650,
-    )
+    assert n1 > 0
+    # first run: a backfill into an empty sink keeps and clears nothing
+    assert m1["partitions"]["kept"] == [] and m1["partitions"]["cleared"] == []
+    # second run from the new watermark re-extracts only the watermark's
+    # month and overwrites its partition — every earlier month is kept
+    # untouched and the total row count is unchanged
+    m2 = load()
     n2 = spark.read.parquet(sink).count()
     assert n2 == n1
-    assert m2["fresh_rows"] < m1["fresh_rows"]
     assert m2["window_start"] == "2024-01-20"
+    assert m2["partition_start"] == "2024-01-01"
+    months = m1["partitions"]["replaced"]
+    assert m2["partitions"]["kept"] == [p for p in months if p < "2024-01"] != []
+    assert m2["partitions"]["replaced"] == [p for p in months if p >= "2024-01"]
+    assert m2["partitions"]["cleared"] == []
     # watermark advanced
     assert read_watermark(spark, ctl) == dt.datetime(2024, 1, 20)

@@ -48,3 +48,22 @@ def test_each_decision_has_one_owner():
     assert arrays == STRING_OR_CAST_ARRAYS, (
         f"per-element array literals outside functions/literals.py: {arrays}"
     )
+
+
+def _modules(pattern: str) -> set[str]:
+    return {h.split(":")[0] for h in _hits(pattern)}
+
+
+def test_each_commit_protocol_has_one_owner():
+    """The staged swap is spelled only in sources/sinks.py, the versioned
+    ``CURRENT`` pointer is read and written only in sources/materialize.py,
+    by-value pickling of Python data sources is registered in one module,
+    and the state-store count is the stream runner's, not each query's."""
+    staging = _modules(r"\._staging")
+    assert staging == {"sources/sinks.py"}, f"staged swap spelled in: {staging}"
+    pointer = _modules(r'"CURRENT"')
+    assert pointer == {"sources/materialize.py"}, f"CURRENT pointer I/O in: {pointer}"
+    by_value = _modules(r"register_pickle_by_value")
+    assert len(by_value) == 1, f"by-value registration in: {by_value}"
+    state = [h for h in _hits(r"state_partitions") if h.startswith("queries/")]
+    assert not state, f"state-store count set per query: {state}"

@@ -182,7 +182,6 @@ def test_ewma_stream_state_carries_across_microbatches(spark, tmp_path):
         ewma_stream(stream),
         f"ewma_multibatch_{os.path.basename(str(tmp_path))}",
         output_mode="append",
-        state_partitions=4,
     )
     stream_rows = {
         (r["event_type"], r["d"]): (r["daily_mean"], r["ewma"]) for r in out.collect()
