@@ -64,16 +64,6 @@ def month_end(col: Column | str, months_ahead: int = 0) -> Column:
     return F.last_day(F.add_months(c, months_ahead))
 
 
-def month_window(anchor: Column, months_back: int, months_forward: int) -> tuple[Column, Column]:
-    """F6 — the budget fetch window: first day of the month
-    ``months_back`` ago through last day of the month ``months_forward``
-    ahead (MonarchMoneyMain-v3.py:1117-1142, BUDGET_MONTHS=6)."""
-    return (
-        F.trunc(F.add_months(anchor, -months_back), "month"),
-        F.last_day(F.add_months(anchor, months_forward)),
-    )
-
-
 #: candidate date-key names, in the reference's probe order
 #: (_find_txn_date_key MonarchMoneyMain-v3.py:189-201)
 DATE_KEY_CANDIDATES = ("date", "txn_date", "transactionDate", "Date", "postedDate")

@@ -62,13 +62,6 @@ def scalarize_to_json(col: Column | str) -> Column:
     return F.to_json(c)
 
 
-def parse_stringified_struct(col: Column | str, schema: T.StructType) -> Column:
-    """F11 fallback — json.loads a stringified struct
-    (MonarchMoneyMain-v3.py:444-449)."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.from_json(c, schema)
-
-
 def unwrap_connection(df: DataFrame, edges_col: str = "edges", node_field: str = "node") -> DataFrame:
     """F14 — GraphQL connection unwrap: explode edges[] and lift node.*
     (_extract_connection MonarchMoneyMain-v3.py:306-342; holdings scan

@@ -131,17 +131,3 @@ def monthly_rollup(
         money_sum(F.col(value_col)).alias("total_value"),
         F.count(F.lit(1)).alias("n_points"),
     )
-
-
-def counts_by_key(df: DataFrame, key: str, alias: str = "transactionsCount") -> DataFrame:
-    """A7 — per-dimension transaction counts maintained as a dim attribute
-    (merchant.transactionsCount monarchmoney.py:1490, tag.transactionCount
-    1914)."""
-    return df.groupBy(key).agg(F.count(F.lit(1)).alias(alias))
-
-
-def with_total_count(df: DataFrame, page: DataFrame) -> tuple[int, DataFrame]:
-    """A8 — totalCount alongside page results (allTransactions{totalCount
-    results} monarchmoney.py:1444-1452). Returns (count, page); the count
-    is computed *with*, not instead of, the page."""
-    return df.count(), page

@@ -541,45 +541,20 @@ def _propagate_min_labels(edges: DataFrame, max_iter: int) -> DataFrame:
     return labels
 
 
-def simhash32(col: Column | str) -> Column:
-    """32-bit SimHash: each token votes its md5-derived bits up/down;
-    signature bit b is 1 iff the vote sum is positive. Expressed as a
-    fold over the token array (no explode, no UDF): per token we take
-    the first 8 hex chars of md5 as a 32-bit int, and accumulate
-    2·bit−1 votes per position into a 32-slot array."""
-    toks = tokens(col)
-    hashes = F.transform(toks, lambda t: F.conv(F.substring(F.md5(t), 1, 8), 16, 10).cast("long"))
-    sig = F.lit(0).cast("long")
-    # static unroll over the 32 bit positions: each bit's vote sum is a
-    # fold over the token hashes, then the bit is set iff votes > 0
-    def _vote_merge(mask):
-        # factory, not a default arg: pyspark requires exactly 2 lambda params
-        def merge(acc, h):
-            return acc + F.when(h.bitwiseAND(mask) != 0, F.lit(1)).otherwise(F.lit(-1))
-
-        return merge
-
-    for i in range(32):
-        mask = F.lit(1 << i).cast("long")
-        votes_i = F.aggregate(hashes, F.lit(0).cast("long"), _vote_merge(mask))
-        sig = sig + F.when(votes_i > 0, mask).otherwise(F.lit(0).cast("long"))
-    return sig
-
-
 def simhash_signatures(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     """One 32-bit SimHash signature per document: ``(_id, simhash)``.
 
-    Implementation: explode tokens → one vectorized hash-aggregate with
-    32 conditional sums (map-side partial agg), then assemble the
-    signature from the sign of each vote. ~6× faster than folding the
-    token array 32 times per row (the `simhash32` expression form) while
-    producing identical signatures.
+    Each token votes its md5-derived bits up/down (the first 8 hex chars
+    of its md5 as a 32-bit int); signature bit b is 1 iff the vote sum
+    is positive. Implementation: explode tokens → one vectorized
+    hash-aggregate with 32 conditional sums (map-side partial agg), then
+    assemble the signature from the sign of each vote — ~6× faster than
+    folding the token array 32 times per row.
 
     ``explode_outer``, not ``explode``: a NULL-text or zero-token doc
-    must surface as one NULL-token row (every vote -1 → signature 0,
-    exactly what ``simhash32`` computes for it), not silently vanish
-    from the signature table — a dedup pass keyed on these buckets
-    must never lose documents.
+    must surface as one NULL-token row (every vote -1 → signature 0),
+    not silently vanish from the signature table — a dedup pass keyed
+    on these buckets must never lose documents.
     """
     toks = df.select(
         F.col(id_col).alias("_id"), F.explode_outer(tokens(text_col)).alias("tok")

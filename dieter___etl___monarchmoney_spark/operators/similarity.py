@@ -93,6 +93,19 @@ def lsh_signature(vec: Column, planes: np.ndarray) -> Column:
     return F.aggregate(bits, F.lit(0).cast("bigint"), lambda acc, x: acc + x)
 
 
+def _query_signature(
+    query_vec: Sequence[float], bits: int, seed: int
+) -> tuple[np.ndarray, int]:
+    """The seeded hyperplanes and the query's LSH signature under them.
+    ``_fold_dot``, NOT np.dot: the engine's lsh_signature and the DuckDB
+    oracle both evaluate the plane dot as a strict left fold; BLAS
+    pairwise summation can flip the sign of a near-zero dot in the last
+    ulp, silently shifting every probe_radius off the oracle's."""
+    planes = _hyperplanes(len(query_vec), bits, seed)
+    qv = np.asarray(query_vec, dtype=float)
+    return planes, sum(1 << i for i, p in enumerate(planes) if _fold_dot(qv, p) > 0)
+
+
 def lsh_ann_topk(
     vectors: DataFrame,
     query_vec: Sequence[float],
@@ -109,13 +122,7 @@ def lsh_ann_topk(
     by ``bucket`` so the probe is partition-pruned I/O, not a full scan."""
     import itertools
 
-    planes = _hyperplanes(len(query_vec), bits, seed)
-    qv = np.asarray(query_vec, dtype=float)
-    # _fold_dot, NOT np.dot: the engine's lsh_signature and the DuckDB
-    # oracle both evaluate the plane dot as a strict left fold; BLAS
-    # pairwise summation can flip the sign of a near-zero dot in the
-    # last ulp, silently shifting every probe_radius off the oracle's
-    qsig = sum(1 << i for i, p in enumerate(planes) if _fold_dot(qv, p) > 0)
+    planes, qsig = _query_signature(query_vec, bits, seed)
     # multi-probe: all buckets within hamming distance `multiprobe`
     probe = {qsig}
     for h in range(1, multiprobe + 1):
@@ -152,13 +159,7 @@ def lsh_scored_candidates(
     therefore needs ONE pass over the vector table instead of one per
     radius — at 100 TB that is the difference between one table scan
     and five."""
-    planes = _hyperplanes(len(query_vec), bits, seed)
-    qv = np.asarray(query_vec, dtype=float)
-    # _fold_dot, NOT np.dot: the engine's lsh_signature and the DuckDB
-    # oracle both evaluate the plane dot as a strict left fold; BLAS
-    # pairwise summation can flip the sign of a near-zero dot in the
-    # last ulp, silently shifting every probe_radius off the oracle's
-    qsig = sum(1 << i for i, p in enumerate(planes) if _fold_dot(qv, p) > 0)
+    planes, qsig = _query_signature(query_vec, bits, seed)
     q = const_vec(query_vec)
     return vectors.withColumn(
         "bucket", lsh_signature(F.col(vec_col), planes)

@@ -27,7 +27,7 @@ from dieter___etl___monarchmoney_spark.operators.dedup import (
 )
 from dieter___etl___monarchmoney_spark.operators.rank import exact_group_ntile
 from dieter___etl___monarchmoney_spark.operators.similarity import (
-    dot,
+    cosine,
     embedding_neardup_pairs,
 )
 from dieter___etl___monarchmoney_spark.pins import pin, scope
@@ -92,13 +92,7 @@ def q_knn_batch_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "query_id",
             "vec_id",
-            (
-                dot(F.col("embedding"), F.col("qv"))
-                / (
-                    F.sqrt(dot(F.col("embedding"), F.col("embedding")))
-                    * F.sqrt(dot(F.col("qv"), F.col("qv")))
-                )
-            ).alias("similarity"),
+            cosine(F.col("embedding"), F.col("qv")).alias("similarity"),
         )
         .withColumn("_salt", F.pmod(F.hash("vec_id"), F.lit(16)))
     )

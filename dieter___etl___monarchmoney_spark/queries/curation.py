@@ -35,7 +35,12 @@ from dieter___etl___monarchmoney_spark.queries.llm_pipeline import (
     _hexparse_sql,
 )
 from dieter___etl___monarchmoney_spark.registry import query
-from dieter___etl___monarchmoney_spark.sources.parquet import load_table, sf_tag
+from dieter___etl___monarchmoney_spark.sources.materialize import source_fingerprint
+from dieter___etl___monarchmoney_spark.sources.parquet import (
+    load_table,
+    table_files,
+    table_path,
+)
 
 # --------------------------------------------------------------------------
 # Deterministic split assignment
@@ -1123,10 +1128,14 @@ def q_schema_evolution_merge_read(spark: SparkSession, sf_dir: str) -> DataFrame
     own physical schema and projects missing columns as nulls) — no
     data rewrite, no shuffle; this is exactly how a 100 TB table
     absorbs additive schema changes without migration. The fixture is
-    cached per sf_dir (layout, not computation); production note: pin
+    cached per events content (layout, not computation; keyed on the
+    source fingerprint, so a dataset regenerated at the same path gets
+    a fresh copy); production note: pin
     mergeSchema per-table (table property / spark.sql.parquet.
     mergeSchema) rather than rewriting history."""
-    out = os.path.join(tempfile.gettempdir(), f"schema_evo_{sf_tag(sf_dir, 10)}")
+    out = os.path.join(
+        tempfile.gettempdir(), f"schema_evo_{source_fingerprint(sf_dir, 'events')}"
+    )
     marker = os.path.join(out, "_SUCCESS_LAYOUT")
     if not os.path.exists(marker):
         shutil.rmtree(out, ignore_errors=True)
@@ -1501,18 +1510,13 @@ _EDGE_GATE_BYTES = 512 * 1024 * 1024
 
 def _input_bytes(sf_dir: str, table: str) -> int:
     """Driver-side size probe of a parquet table (file or directory) —
-    no Spark job, just the filesystem metadata the gate needs."""
-    path = os.path.join(sf_dir, f"{table}.parquet")
-    if os.path.isdir(path):
-        total = 0
-        for root, _dirs, files in os.walk(path):
-            for f in files:
-                total += os.path.getsize(os.path.join(root, f))
-        return total
+    no Spark job, just the filesystem metadata the gate needs; 0 for a
+    missing table."""
     try:
-        return os.path.getsize(path)
-    except OSError:
+        return sum(size for _name, size, _mtime in table_files(table_path(sf_dir, table)))
+    except FileNotFoundError:
         return 0
+
 
 _LI_KEY_MD5 = (
     "md5(CAST(l_orderkey AS VARCHAR) || '-' || CAST(l_linenumber AS VARCHAR))"

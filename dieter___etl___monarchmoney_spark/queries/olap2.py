@@ -47,7 +47,9 @@ from dieter___etl___monarchmoney_spark.functions.money import (
 )
 from dieter___etl___monarchmoney_spark.queries.llm_pipeline import _hexparse_sql
 from dieter___etl___monarchmoney_spark.registry import query
+from dieter___etl___monarchmoney_spark.sources.materialize import source_fingerprint
 from dieter___etl___monarchmoney_spark.sources.parquet import load_table, sf_tag
+from dieter___etl___monarchmoney_spark.sources.sinks import save_bucketed_table
 
 
 # --------------------------------------------------------------------------
@@ -607,17 +609,16 @@ def bucketed_tables(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
     every downstream join. Returns the (lineitem_agg, orders) table
     names (md5-suffixed per sf_dir so scale factors never collide).
 
-    Layout contract: same bucket count and same single bucket column on
-    both sides, sortBy the key inside each bucket — exactly what Spark
-    requires to plan SortMergeJoin with NO Exchange and NO per-task
-    Sort on either side."""
+    Layout contract (``sinks.save_bucketed_table``): same bucket count
+    and same single bucket column on both sides, one file per bucket
+    sorted on the key — exactly what Spark requires to plan
+    SortMergeJoin with NO Exchange and NO per-task Sort on either
+    side."""
     tag = sf_tag(sf_dir)
     li_tbl, ord_tbl = f"li_by_order_{tag}", f"orders_by_order_{tag}"
-    # The warehouse DIRECTORY outlives the in-memory catalog (a fresh
-    # session forgets the table but the files remain), and saveAsTable
-    # refuses to claim a location it didn't register — so drop both the
-    # catalog entry AND any orphaned location before writing.
-    import shutil
+    # The table DIRECTORY outlives the in-memory catalog (a fresh
+    # session forgets the table but the files remain), so drop both the
+    # catalog entry AND any orphaned files before writing.
     from urllib.parse import urlparse
 
     wh = urlparse(spark.conf.get("spark.sql.warehouse.dir", "spark-warehouse")).path
@@ -638,31 +639,11 @@ def bucketed_tables(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
             F.count(F.lit(1)).alias("n_lines"),
         )
     )
-    # ONE file per bucket: Spark only trusts (and reuses) the bucket's
-    # sortBy order when a bucket is a single file, and a spray of
-    # per-task files per bucket is the small-files antipattern at scale
-    # anyway. repartition on the bucket column with numPartitions ==
-    # numBuckets uses the same murmur3 hash as the bucket assignment,
-    # so each write task holds exactly one whole bucket.
-    (
-        li_agg.repartition(_N_BUCKETS, F.col("l_orderkey"))
-        .write.mode("overwrite")
-        .format("parquet")
-        .bucketBy(_N_BUCKETS, "l_orderkey")
-        .sortBy("l_orderkey")
-        .saveAsTable(li_tbl)
-    )
+    save_bucketed_table(li_agg, li_tbl, f"{wh}/{li_tbl}", "l_orderkey", _N_BUCKETS)
     orders = load_table(spark, "orders", sf_dir).select(
         "o_orderkey", "o_orderpriority"
     )
-    (
-        orders.repartition(_N_BUCKETS, F.col("o_orderkey"))
-        .write.mode("overwrite")
-        .format("parquet")
-        .bucketBy(_N_BUCKETS, "o_orderkey")
-        .sortBy("o_orderkey")
-        .saveAsTable(ord_tbl)
-    )
+    save_bucketed_table(orders, ord_tbl, f"{wh}/{ord_tbl}", "o_orderkey", _N_BUCKETS)
     return li_tbl, ord_tbl
 
 
@@ -1461,11 +1442,14 @@ ORDER BY e.event_date
 
 
 def _partitioned_events(spark: SparkSession, sf_dir: str) -> str:
-    """Materialize (once per sf_dir) a copy of events partitioned by
-    event_date — the layout a warehouse would maintain; cached across
+    """Materialize (once per events content) a copy of events partitioned
+    by event_date — the layout a warehouse would maintain; cached across
     invocations because the partitioned copy IS the fixture, not the
-    operator under test."""
-    out = os.path.join(tempfile.gettempdir(), f"events_bydate_{sf_tag(sf_dir, 10)}")
+    operator under test. Keyed on the source fingerprint, so a dataset
+    regenerated at the same path gets a fresh copy."""
+    out = os.path.join(
+        tempfile.gettempdir(), f"events_bydate_{source_fingerprint(sf_dir, 'events')}"
+    )
     marker = os.path.join(out, "_SUCCESS_LAYOUT")
     if not os.path.exists(marker):
         shutil.rmtree(out, ignore_errors=True)

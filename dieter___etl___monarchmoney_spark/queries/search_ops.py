@@ -17,7 +17,7 @@ from dieter___etl___monarchmoney_spark.functions.money import (
     MONEY_DECIMAL,
     MONEY_DECIMAL_SQL,
 )
-from dieter___etl___monarchmoney_spark.operators.similarity import dot, lsh_signature
+from dieter___etl___monarchmoney_spark.operators.similarity import cosine, lsh_signature
 from dieter___etl___monarchmoney_spark.pins import pin, scope
 from dieter___etl___monarchmoney_spark.queries.llm_pipeline import _dot_sql
 from dieter___etl___monarchmoney_spark.registry import query
@@ -643,13 +643,7 @@ def q_knn_label_noise_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
             "own_label",
             "vec_id",
             "label",
-            (
-                dot(F.col("embedding"), F.col("qv"))
-                / (
-                    F.sqrt(dot(F.col("embedding"), F.col("embedding")))
-                    * F.sqrt(dot(F.col("qv"), F.col("qv")))
-                )
-            ).alias("similarity"),
+            cosine(F.col("embedding"), F.col("qv")).alias("similarity"),
         )
         .withColumn("_salt", F.pmod(F.hash("vec_id"), F.lit(16)))
     )
@@ -1272,7 +1266,6 @@ def q_reciprocal_rank_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     cosine scan against a broadcast query vector); the fusion join is
     id-keyed; at 100 TB each leg would be its own index-backed top-K
     and the fusion cost stays K-sized.""".format(k=_RRF_K, n=_RRF_TOPN)
-    from dieter___etl___monarchmoney_spark.operators.similarity import dot
 
     docs = load_table(spark, "documents", sf_dir)
     toks = F.array_remove(F.split(F.lower(F.trim(F.col("text"))), r"\s+"), "")
@@ -1293,10 +1286,7 @@ def q_reciprocal_rank_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     emb = load_table(spark, "embeddings", sf_dir)
     qv = emb.filter(F.col("vec_id") == 0).select(F.col("embedding").alias("qv"))
-    cos = dot(F.col("embedding"), F.col("qv")) / (
-        F.sqrt(dot(F.col("embedding"), F.col("embedding")))
-        * F.sqrt(dot(F.col("qv"), F.col("qv")))
-    )
+    cos = cosine(F.col("embedding"), F.col("qv"))
     vec = (
         emb.crossJoin(F.broadcast(qv))
         .select(

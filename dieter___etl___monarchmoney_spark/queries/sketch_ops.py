@@ -24,7 +24,7 @@ family (corpus statistics at scale).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from dieter___etl___monarchmoney_spark.functions.literals import const_vec
@@ -43,6 +43,56 @@ _HLL_ALPHA_M2 = 0.7213 / (1.0 + 1.079 / _HLL_M) * _HLL_M * _HLL_M
 #: 2^(60 - M_j) as an exact BIGINT (M_j <= 57 so the shift never
 #: overflows), summed as DECIMAL so no double-summation-order flake.
 _HLL_K = 60
+
+
+def _hll_hashed(events: DataFrame, *keys) -> tuple[DataFrame, Column]:
+    """The one HLL-256 register builder: ``events`` projected to
+    ``keys`` plus ``reg_idx`` (the first md5 byte of ``user_id``) and
+    ``w`` (its next 56 bits), with ``rho``, the register rank of ``w``
+    (its leading-zero count + 1 via binary-digit length — no floating
+    log2). A register is ``max(rho)`` over its (group, reg_idx)."""
+    h = F.md5(F.col("user_id").cast("string").cast("binary"))
+    hashed = events.select(
+        *keys,
+        F.conv(F.substring(h, 1, 2), 16, 10).cast("bigint").alias("reg_idx"),
+        F.conv(F.substring(h, 3, 14), 16, 10).cast("bigint").alias("w"),
+    )
+    rho = F.when(F.col("w") == 0, F.lit(57)).otherwise(
+        F.lit(57) - F.length(F.conv(F.col("w").cast("string"), 10, 2))
+    )
+    return hashed, rho
+
+
+def _register_term() -> Column:
+    """A register ``m_j``'s exact contribution 2^(K - m_j) to the sum."""
+    return F.expr(f"CAST(shiftleft(CAST(1 AS BIGINT), {_HLL_K} - m_j) AS DECIMAL(38,0))")
+
+
+def _hll_estimate(folded: DataFrame) -> tuple[DataFrame, Column]:
+    """The one HLL-256 estimator over per-group ``n_registers_hit`` and
+    ``s_present`` (the sum of the hit registers' terms): ``folded`` with
+    ``s_total`` (every missing register adds 2^K), and the estimate —
+    linear counting in the small range, the raw estimate above it,
+    rounded to 2dp so a <=1-ulp ``ln`` difference between libm and the
+    JVM cannot flake the hash."""
+    two_k = F.expr(f"CAST(shiftleft(CAST(1 AS BIGINT), {_HLL_K}) AS DECIMAL(38,0))")
+    est = folded.withColumn(
+        "s_total",
+        (
+            F.col("s_present")
+            + (F.lit(_HLL_M) - F.col("n_registers_hit")).cast("decimal(38,0)") * two_k
+        ).cast("decimal(38,0)"),
+    )
+    e_raw = (
+        F.lit(_HLL_ALPHA_M2)
+        * F.expr(f"CAST(shiftleft(CAST(1 AS BIGINT), {_HLL_K}) AS DOUBLE)")
+        / F.col("s_total").cast("double")
+    )
+    small_range = (e_raw <= 2.5 * _HLL_M) & (F.col("n_registers_hit") < _HLL_M)
+    linear_count = F.lit(float(_HLL_M)) * F.log(
+        F.lit(float(_HLL_M)) / (F.lit(_HLL_M) - F.col("n_registers_hit")).cast("double")
+    )
+    return est, F.round(F.when(small_range, linear_count).otherwise(e_raw), 2)
 
 _HLL_SQL = f"""
 WITH hashed AS (
@@ -121,52 +171,23 @@ def q_hll_distinct_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     union with the watermark increment instead of rescanning history.
     """
     events = load_table(spark, "events", sf_dir)
-    h = F.md5(F.col("user_id").cast("string").cast("binary"))
-    hashed = events.select(
-        "event_type",
-        "user_id",
-        F.conv(F.substring(h, 1, 2), 16, 10).cast("bigint").alias("reg_idx"),
-        F.conv(F.substring(h, 3, 14), 16, 10).cast("bigint").alias("w"),
-    )
-    rho = F.when(F.col("w") == 0, F.lit(57)).otherwise(
-        F.lit(57) - F.length(F.conv(F.col("w").cast("string"), 10, 2))
-    )
+    hashed, rho = _hll_hashed(events, "event_type", "user_id")
     registers = hashed.groupBy("event_type", "reg_idx").agg(
         F.max(rho).alias("m_j"),
         F.countDistinct("user_id").alias("d_part"),
     )
     folded = registers.groupBy("event_type").agg(
         F.count("*").alias("n_registers_hit"),
-        F.sum(
-            F.expr(f"CAST(shiftleft(CAST(1 AS BIGINT), {_HLL_K} - m_j) AS DECIMAL(38,0))")
-        ).alias("s_present"),
+        F.sum(_register_term()).alias("s_present"),
         F.sum("d_part").alias("exact_distinct"),
     )
-    two_k = F.expr(f"CAST(shiftleft(CAST(1 AS BIGINT), {_HLL_K}) AS DECIMAL(38,0))")
-    est = folded.withColumn(
-        "s_total",
-        (
-            F.col("s_present")
-            + (F.lit(_HLL_M) - F.col("n_registers_hit")).cast("decimal(38,0)") * two_k
-        ).cast("decimal(38,0)"),
-    )
-    e_raw = (
-        F.lit(_HLL_ALPHA_M2)
-        * F.expr(f"CAST(shiftleft(CAST(1 AS BIGINT), {_HLL_K}) AS DOUBLE)")
-        / F.col("s_total").cast("double")
-    )
-    small_range = (e_raw <= 2.5 * _HLL_M) & (F.col("n_registers_hit") < _HLL_M)
-    linear_count = F.lit(float(_HLL_M)) * F.log(
-        F.lit(float(_HLL_M)) / (F.lit(_HLL_M) - F.col("n_registers_hit")).cast("double")
-    )
+    est, estimate = _hll_estimate(folded)
     return (
         est.select(
             "event_type",
             F.col("n_registers_hit").cast("int").alias("n_registers_hit"),
             F.col("s_total").cast("string").alias("register_sum"),
-            F.round(F.when(small_range, linear_count).otherwise(e_raw), 2).alias(
-                "est_distinct"
-            ),
+            estimate.alias("est_distinct"),
             F.col("exact_distinct").cast("bigint").alias("exact_distinct"),
         )
         .orderBy("event_type")
@@ -318,27 +339,14 @@ def q_hll_daily_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     incremental_agg_merge, whose sums merge by +; registers merge by
     max)."""
     events = load_table(spark, "events", sf_dir)
-    h = F.md5(F.col("user_id").cast("string").cast("binary"))
-    hashed = events.select(
-        "event_type",
-        F.col("ts").cast("date").alias("d"),
-        F.conv(F.substring(h, 1, 2), 16, 10).cast("bigint").alias("reg_idx"),
-        F.conv(F.substring(h, 3, 14), 16, 10).cast("bigint").alias("w"),
-    )
-    rho = F.when(F.col("w") == 0, F.lit(57)).otherwise(
-        F.lit(57) - F.length(F.conv(F.col("w").cast("string"), 10, 2))
-    )
+    hashed, rho = _hll_hashed(events, "event_type", F.col("ts").cast("date").alias("d"))
     daily = hashed.groupBy("event_type", "d", "reg_idx").agg(F.max(rho).alias("m_day"))
     merged = daily.groupBy("event_type", "reg_idx").agg(F.max("m_day").alias("m_j"))
     return (
         merged.groupBy("event_type")
         .agg(
             F.count("*").cast("int").alias("n_registers_hit"),
-            F.sum(
-                F.expr(
-                    f"CAST(shiftleft(CAST(1 AS BIGINT), {_HLL_K} - m_j) AS DECIMAL(38,0))"
-                )
-            )
+            F.sum(_register_term())
             .cast("string")
             .alias("register_sum"),
         )
@@ -464,16 +472,7 @@ def q_rolling_distinct_users_7d(spark: SparkSession, sf_dir: str) -> DataFrame:
     (hll_daily_merge's contract) and derives any window — 7d, 28d,
     month-to-date — from the same table without touching raw data."""
     events = load_table(spark, "events", sf_dir)
-    h = F.md5(F.col("user_id").cast("string").cast("binary"))
-    hashed = events.select(
-        "event_type",
-        F.col("ts").cast("date").alias("d"),
-        F.conv(F.substring(h, 1, 2), 16, 10).cast("bigint").alias("reg_idx"),
-        F.conv(F.substring(h, 3, 14), 16, 10).cast("bigint").alias("w"),
-    )
-    rho = F.when(F.col("w") == 0, F.lit(57)).otherwise(
-        F.lit(57) - F.length(F.conv(F.col("w").cast("string"), 10, 2))
-    )
+    hashed, rho = _hll_hashed(events, "event_type", F.col("ts").cast("date").alias("d"))
     daily_regs = hashed.groupBy("event_type", "d", "reg_idx").agg(
         F.max(rho).alias("m_day")
     )
@@ -495,35 +494,15 @@ def q_rolling_distinct_users_7d(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     folded = rolled.groupBy("event_type", "d").agg(
         F.count("*").alias("n_registers_hit"),
-        F.sum(
-            F.expr(f"CAST(shiftleft(CAST(1 AS BIGINT), {_HLL_K} - m_j) AS DECIMAL(38,0))")
-        ).alias("s_present"),
+        F.sum(_register_term()).alias("s_present"),
     )
-    two_k = F.expr(f"CAST(shiftleft(CAST(1 AS BIGINT), {_HLL_K}) AS DECIMAL(38,0))")
-    est = folded.withColumn(
-        "s_total",
-        (
-            F.col("s_present")
-            + (F.lit(_HLL_M) - F.col("n_registers_hit")).cast("decimal(38,0)") * two_k
-        ).cast("decimal(38,0)"),
-    )
-    e_raw = (
-        F.lit(_HLL_ALPHA_M2)
-        * F.expr(f"CAST(shiftleft(CAST(1 AS BIGINT), {_HLL_K}) AS DOUBLE)")
-        / F.col("s_total").cast("double")
-    )
-    small_range = (e_raw <= 2.5 * _HLL_M) & (F.col("n_registers_hit") < _HLL_M)
-    linear_count = F.lit(float(_HLL_M)) * F.log(
-        F.lit(float(_HLL_M)) / (F.lit(_HLL_M) - F.col("n_registers_hit")).cast("double")
-    )
+    est, estimate = _hll_estimate(folded)
     return (
         est.select(
             "event_type",
             "d",
             F.col("n_registers_hit").cast("int").alias("n_registers_hit"),
-            F.round(F.when(small_range, linear_count).otherwise(e_raw), 2).alias(
-                "est_distinct_7d"
-            ),
+            estimate.alias("est_distinct_7d"),
         )
         .orderBy("event_type", "d")
     )

@@ -1,3 +1,3 @@
-from dieter___etl___monarchmoney_spark.sources.parquet import TABLES, load_table, load_tables
+from dieter___etl___monarchmoney_spark.sources.parquet import TABLES, load_table
 
-__all__ = ["TABLES", "load_table", "load_tables"]
+__all__ = ["TABLES", "load_table"]

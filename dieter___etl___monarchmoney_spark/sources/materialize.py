@@ -49,30 +49,22 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
+from dieter___etl___monarchmoney_spark.sources.parquet import table_files, table_path
+
 
 def source_fingerprint(sf_dir: str, *tables: str) -> str:
-    """Size+mtime fingerprint of the given parquet tables under
-    ``sf_dir`` (recursive for directory tables), hashed with the path.
+    """Size+mtime fingerprint of the given tables under ``sf_dir``
+    (every file of a directory table, recursively — see
+    ``parquet.table_files``), hashed with the path.
 
-    A named table that does not exist raises: silently omitting it
-    would yield a fingerprint that never changes with the data —
-    exactly the stale-derived-rows hazard the fingerprint exists to
-    prevent (a typo'd ``source_tables`` entry must fail loudly)."""
+    A named table that does not exist raises FileNotFoundError: silently
+    omitting it would yield a fingerprint that never changes with the
+    data — exactly the stale-derived-rows hazard the fingerprint exists
+    to prevent (a typo'd ``source_tables`` entry must fail loudly)."""
     parts = [sf_dir]
     for table in tables:
-        src = os.path.join(sf_dir, f"{table}.parquet")
-        if os.path.isdir(src):
-            for root, _dirs, files in os.walk(src):
-                for f in sorted(files):
-                    st = os.stat(os.path.join(root, f))
-                    parts.append(f"{f}:{st.st_size}:{st.st_mtime_ns}")
-        elif os.path.exists(src):
-            st = os.stat(src)
-            parts.append(f"{table}:{st.st_size}:{st.st_mtime_ns}")
-        else:
-            raise FileNotFoundError(
-                f"source_fingerprint: source table {src!r} does not exist"
-            )
+        for name, size, mtime_ns in table_files(table_path(sf_dir, table)):
+            parts.append(f"{name}:{size}:{mtime_ns}")
     return hashlib.md5("|".join(parts).encode()).hexdigest()[:12]
 
 

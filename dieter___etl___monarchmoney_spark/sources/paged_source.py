@@ -12,9 +12,10 @@ downstream operators consume a normal DataFrame.
 
 The payload here is a JSON-lines file standing in for the remote API
 (the container has no network; the page slicing, partition planning, and
-schema contract are the real thing). A live deployment swaps
-``_fetch_page`` for the HTTP call — with the T6 retry wrapper
-(json_ingest.with_retries) around it — and nothing else changes.
+schema contract are the real thing). A live deployment swaps the file
+seek in ``PagedJsonReader.read`` (the executor-side page fetch) for the
+HTTP call — with the T6 retry wrapper (json_ingest.with_retries) around
+it — and nothing else changes.
 """
 
 from __future__ import annotations

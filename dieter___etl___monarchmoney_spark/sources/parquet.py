@@ -15,6 +15,7 @@ are small enough to broadcast at any scale factor; fact tables
 from __future__ import annotations
 
 import os
+import stat
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -32,9 +33,6 @@ TABLES = (
     "embeddings",
 )
 
-#: small dimensions safe to broadcast-hint in joins at any SF
-DIM_TABLES = frozenset({"region", "nation", "customer", "supplier", "part"})
-
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 #: inferred-schema memo for the immutable input tables. Footer-based
@@ -44,8 +42,8 @@ DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 #: re-loads the same ten tables thousands of times it was the single
 #: largest fixed overhead on the suite. A catalog/metastore table
 #: carries its schema for exactly this reason; this memo is the
-#: path-table equivalent. Keyed on the file fingerprint (path, size,
-#: mtime_ns — directories fold in their parquet children) plus every
+#: path-table equivalent. Keyed on the path and its
+#: :func:`table_files` listing (size, mtime_ns of every file) plus every
 #: session conf that can change what inference returns, so a swapped
 #: data file or a differently-configured session re-infers instead of
 #: reading with a stale schema. Schemas are METADATA: every query still
@@ -68,28 +66,35 @@ _SCHEMA_CONFS = (
 )
 
 
-def _path_fingerprint(path: str) -> tuple:
-    """(path, sizes, mtimes) of the table file — or, for a directory,
-    of every file under it RECURSIVELY (ADVICE r12 #2: a partitioned
-    layout nests data files in subdirectories; fingerprinting only the
-    direct children would miss a changed partition file). os.walk's
-    deterministic sort keeps the key stable across calls."""
+def table_path(sf_dir: str, name: str) -> str:
+    """Where table ``name`` of a scale-factor directory lives on disk:
+    ``<sf_dir>/<name>.parquet``, one file or a directory of part files."""
+    return os.path.join(sf_dir, f"{name}.parquet")
+
+
+def table_files(path: str) -> tuple[tuple[str, int, int], ...]:
+    """``(name, size, mtime_ns)`` of the table at ``path``: the file
+    itself, or every file under the directory RECURSIVELY, named
+    relative to it (ADVICE r12 #2: a partitioned layout nests data files
+    in subdirectories; listing only the direct children would miss a
+    changed partition file). os.walk's sorted order keeps the listing
+    stable across calls. A missing table raises FileNotFoundError."""
     st = os.stat(path)
-    if os.path.isdir(path):
-        children = []
-        for root, dirs, files in os.walk(path):
-            dirs.sort()
-            for f in sorted(files):
-                fst = os.stat(os.path.join(root, f))
-                rel = os.path.relpath(os.path.join(root, f), path)
-                children.append((rel, fst.st_size, fst.st_mtime_ns))
-        return (path, st.st_mtime_ns, tuple(children))
-    return (path, st.st_size, st.st_mtime_ns)
+    if not stat.S_ISDIR(st.st_mode):
+        return ((os.path.basename(path), st.st_size, st.st_mtime_ns),)
+    files = []
+    for root, dirs, names in os.walk(path):
+        dirs.sort()
+        for f in sorted(names):
+            full = os.path.join(root, f)
+            st = os.stat(full)
+            files.append((os.path.relpath(full, path), st.st_size, st.st_mtime_ns))
+    return tuple(files)
 
 
 def _cached_schema(spark: SparkSession, path: str):
     confs = tuple(spark.conf.get(c, None) for c in _SCHEMA_CONFS)
-    key = (_path_fingerprint(path), confs)
+    key = (path, table_files(path), confs)
     schema = _SCHEMA_CACHE.get(key)
     if schema is None:
         schema = spark.read.parquet(path).schema
@@ -114,7 +119,7 @@ def load_table(spark: SparkSession, name: str, sf_dir: str = DEFAULT_SF_DIR) -> 
     """
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; expected one of {TABLES}")
-    path = os.path.join(sf_dir, f"{name}.parquet")
+    path = table_path(sf_dir, name)
     # explicit (memoized) schema: skips the per-call footer inference;
     # the schema IS the inferred one, so the read is byte-identical
     df = spark.read.schema(_cached_schema(spark, path)).parquet(path)
@@ -143,17 +148,6 @@ def _normalize_event_time(df: DataFrame) -> DataFrame:
             "ts_ns", F.unix_micros(F.col("ts")) * F.lit(1000)
         )
     raise TypeError(f"events.ts has unsupported dtype {dtype}")
-
-
-def load_tables(spark: SparkSession, sf_dir: str = DEFAULT_SF_DIR) -> dict[str, DataFrame]:
-    """Read every star-schema table; keys are table names."""
-    return {name: load_table(spark, name, sf_dir) for name in TABLES}
-
-
-def register_views(spark: SparkSession, sf_dir: str = DEFAULT_SF_DIR) -> None:
-    """Register every table as a temp view so ``spark.sql`` works on it."""
-    for name in TABLES:
-        load_table(spark, name, sf_dir).createOrReplaceTempView(name)
 
 
 def sf_tag(sf_dir: str, length: int = 8) -> str:

@@ -1,10 +1,6 @@
 """Sinks (SURVEY.md §2.1 K1-K6): the reference's Google-Sheets
 clear-and-write becomes mode("overwrite") table writes; the Control
 watermark cell becomes a one-row parquet table.
-
-Scale: ``write_table`` takes an optional date partition column — the
-incremental loader's replace-window then overwrites only the window's
-partitions (dynamic partitionOverwriteMode) instead of the whole table.
 """
 
 from __future__ import annotations
@@ -15,19 +11,10 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 
-def write_table(
-    df: DataFrame,
-    path: str,
-    *,
-    partition_by: str | None = None,
-    fmt: str = "parquet",
-) -> None:
+def write_table(df: DataFrame, path: str) -> None:
     """K1 — truncate+overwrite sheet write (ws.clear(); ws.update(...)
     MonarchMoneyMain-v3.py:1097-1099, 1171-1174, 1330-1332)."""
-    w = df.write.mode("overwrite").format(fmt)
-    if partition_by:
-        w = w.option("partitionOverwriteMode", "dynamic").partitionBy(partition_by)
-    w.save(path)
+    df.write.mode("overwrite").parquet(path)
 
 
 def _hadoop_fs(spark: SparkSession, path: str):
@@ -241,25 +228,29 @@ def expire_partitions(
 
 
 def save_bucketed_table(
-    df: DataFrame,
-    name: str,
-    path: str,
-    bucket_key: str,
-    n_buckets: int = 32,
-    sort: bool = True,
+    df: DataFrame, name: str, path: str, bucket_key: str, n_buckets: int = 32
 ) -> None:
-    """Write a catalog table bucketed (and sorted) by ``bucket_key``.
+    """Write a catalog table bucketed and sorted by ``bucket_key``.
 
     The co-located-join primitive: two facts bucketed the same way join
     WITHOUT any exchange — at 100 TB the shuffle of a fact-fact join is
     usually the single largest cost in the plan, and pre-bucketing both
     sides on the join key amortizes it into the write path once instead
-    of paying it per query. ``sort=True`` additionally pre-sorts within
-    buckets so the sort-merge join skips its sort step.
+    of paying it per query.
+
+    ONE file per bucket: Spark only trusts (and reuses) a bucket's
+    sortBy order when the bucket is a single file, and a spray of
+    per-task files per bucket is the small-files antipattern at scale
+    anyway. A repartition on the key with numPartitions == n_buckets
+    uses the same murmur3 hash as the bucket assignment, so each write
+    task holds exactly one whole bucket.
     test_plans.py::test_bucketed_join_needs_no_exchange pins the
     exchange-free plan."""
-    w = df.write.mode("overwrite").option("path", path)
-    w = w.bucketBy(n_buckets, bucket_key)
-    if sort:
-        w = w.sortBy(bucket_key)
-    w.saveAsTable(name)
+    (
+        df.repartition(n_buckets, F.col(bucket_key))
+        .write.mode("overwrite")
+        .option("path", path)
+        .bucketBy(n_buckets, bucket_key)
+        .sortBy(bucket_key)
+        .saveAsTable(name)
+    )

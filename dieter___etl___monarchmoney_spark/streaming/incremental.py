@@ -18,10 +18,9 @@ from __future__ import annotations
 
 import datetime as dt
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
-from dieter___etl___monarchmoney_spark.pins import pin, scope
 from dieter___etl___monarchmoney_spark.sources.local import local_frame
 
 WATERMARK_KEY = "last_run_utc"
@@ -134,26 +133,20 @@ def overwrite_window_partitions(
     spark = fresh.sparkSession
     part_start = window_start.strftime("%Y-%m")
     before = list_partition_values(spark, sink_path, PARTITION_COL)
-    windowed = fresh.filter(
-        F.col(date_col) >= F.lit(window_start.isoformat())
-    ).withColumn(PARTITION_COL, F.date_format(F.col(date_col), _PARTITION_FMT))
-    # the window extract is read twice (write + replaced-partition
-    # manifest), so pin it: at scale a reload window is a sliver of
-    # the table (a day/month of data), cheap to hold across the two uses.
-    with scope():
-        windowed = pin(windowed)
-        (
-            windowed.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy(PARTITION_COL)
-            .parquet(sink_path)
-        )
-        # partitions that actually received fresh rows — asked of the
-        # extract itself (post-write directory listings would conflate
-        # replaced with stale-but-still-present partitions).
-        replaced = sorted(
-            r[0] for r in windowed.select(PARTITION_COL).distinct().collect()
-        )
+    # the partitions that received fresh rows are observed on the write
+    # itself (post-write directory listings would conflate replaced with
+    # stale-but-still-present partitions), so the extract is read once
+    written = Observation()
+    (
+        fresh.filter(F.col(date_col) >= F.lit(window_start.isoformat()))
+        .withColumn(PARTITION_COL, F.date_format(F.col(date_col), _PARTITION_FMT))
+        .observe(written, F.sort_array(F.collect_set(PARTITION_COL)).alias("replaced"))
+        .write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy(PARTITION_COL)
+        .parquet(sink_path)
+    )
+    replaced = written.get["replaced"]
     stale = [p for p in before if p >= part_start and p not in replaced]
     for p in stale:
         delete_path(spark, f"{sink_path}/{PARTITION_COL}={p}")

@@ -14,7 +14,6 @@ Two implementations of identical semantics (30-min-gap sessions):
 
 from __future__ import annotations
 
-import datetime as dt
 from collections.abc import Iterator
 
 import pandas as pd
@@ -23,8 +22,6 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.window import Window
-
-SESSION_GAP = dt.timedelta(minutes=30)
 
 SESSION_SCHEMA = T.StructType(
     [

@@ -14,7 +14,7 @@ from dieter___etl___monarchmoney_spark.operators.dedup import (
     minhash_lsh_dedup_pairs,
     neardup_clusters,
     shingles,
-    simhash32,
+    simhash_signatures,
 )
 from dieter___etl___monarchmoney_spark.operators.multimodal import (
     decode_stub,
@@ -46,7 +46,7 @@ def test_simhash_identical_and_near(spark):
     near = base + " extra"
     far = "completely different words about spark partitions and shuffles everywhere"
     df = spark.createDataFrame([(1, base), (2, base), (3, near), (4, far)], ["id", "text"])
-    sh = {r["id"]: r["h"] for r in df.select("id", simhash32("text").alias("h")).collect()}
+    sh = {r["_id"]: r["simhash"] for r in simhash_signatures(df, "text", "id").collect()}
     assert sh[1] == sh[2]  # identical text -> identical signature
     ham_near = bin(sh[1] ^ sh[3]).count("1")
     ham_far = bin(sh[1] ^ sh[4]).count("1")

@@ -67,3 +67,18 @@ def test_each_commit_protocol_has_one_owner():
     assert len(by_value) == 1, f"by-value registration in: {by_value}"
     state = [h for h in _hits(r"state_partitions") if h.startswith("queries/")]
     assert not state, f"state-store count set per query: {state}"
+
+
+def test_each_storage_decision_has_one_owner():
+    """The dynamic partition overwrite is spelled only in the incremental
+    loader, which caches nothing; the bucketed layout is written only by
+    sources/sinks.py; and a table's path under its scale-factor
+    directory is built only in sources/parquet.py."""
+    dynamic = _modules(r"partitionOverwriteMode")
+    assert dynamic == {"streaming/incremental.py"}, f"dynamic overwrite in: {dynamic}"
+    bucketed = _modules(r"\.bucketBy\(")
+    assert bucketed == {"sources/sinks.py"}, f"bucketed writes in: {bucketed}"
+    paths = _modules(r"\}\.parquet[\"']|\+ *[\"']\.parquet[\"']")
+    assert paths == {"sources/parquet.py"}, f"table path built in: {paths}"
+    pins = [h for h in _hits(r"\bpins\b") if h.startswith("streaming/incremental.py:")]
+    assert not pins, f"the incremental loader imports pins: {pins}"

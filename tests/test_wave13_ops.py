@@ -161,6 +161,40 @@ def test_schema_evolution_backfills_nulls(spark):
     }
 
 
+def test_layout_fixtures_follow_regenerated_events(spark, tmp_path):
+    """The partitioned and two-batch copies of events are cached per
+    events CONTENT: a dataset regenerated at the same path must be
+    re-laid-out, never served from the copy of the old rows."""
+    import datetime as dt
+
+    path = str(tmp_path / "events.parquet")
+
+    def write_events(day: dt.datetime, event_type: str, n: int) -> None:
+        rows = [
+            (i, day + dt.timedelta(days=i % 4), i % 3, event_type, float(i), "{}")
+            for i in range(n)
+        ]
+        spark.createDataFrame(
+            rows,
+            "event_id long, ts timestamp, user_id long, event_type string, "
+            "value double, props string",
+        ).write.mode("overwrite").parquet(path)
+
+    def results():
+        dpp = QUERIES["dpp_top_days_rollup"](spark, str(tmp_path)).collect()
+        evo = QUERIES["schema_evolution_merge_read"](spark, str(tmp_path)).collect()
+        return (
+            {r.event_date.month for r in dpp},
+            sum(r.n_events for r in evo),
+            {r.channel for r in evo if r.channel},
+        )
+
+    write_events(dt.datetime(2024, 1, 1), "click", 10)
+    assert results() == ({1}, 10, {"click"})
+    write_events(dt.datetime(2024, 2, 1), "view", 14)
+    assert results() == ({2}, 14, {"view"})
+
+
 def test_transition_matrix_equals_grouped_map_twin(spark):
     """The registered JVM (LAG-window) form vs the grouped-map
     applyInPandas lane — the wave-13 twin discipline with the roles
