@@ -15,8 +15,6 @@ not just each stage alone.
 from __future__ import annotations
 
 import os
-import shutil
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -35,7 +33,7 @@ from dieter___etl___monarchmoney_spark.queries.llm_pipeline import (
     _hexparse_sql,
 )
 from dieter___etl___monarchmoney_spark.registry import query
-from dieter___etl___monarchmoney_spark.sources.materialize import source_fingerprint
+from dieter___etl___monarchmoney_spark.sources.materialize import layout_fixture
 from dieter___etl___monarchmoney_spark.sources.parquet import (
     load_table,
     table_files,
@@ -1128,17 +1126,12 @@ def q_schema_evolution_merge_read(spark: SparkSession, sf_dir: str) -> DataFrame
     own physical schema and projects missing columns as nulls) — no
     data rewrite, no shuffle; this is exactly how a 100 TB table
     absorbs additive schema changes without migration. The fixture is
-    cached per events content (layout, not computation; keyed on the
-    source fingerprint, so a dataset regenerated at the same path gets
-    a fresh copy); production note: pin
-    mergeSchema per-table (table property / spark.sql.parquet.
+    cached per dataset (layout, not computation; rebuilt by
+    ``materialize.layout_fixture`` when events change); production
+    note: pin mergeSchema per-table (table property / spark.sql.parquet.
     mergeSchema) rather than rewriting history."""
-    out = os.path.join(
-        tempfile.gettempdir(), f"schema_evo_{source_fingerprint(sf_dir, 'events')}"
-    )
-    marker = os.path.join(out, "_SUCCESS_LAYOUT")
-    if not os.path.exists(marker):
-        shutil.rmtree(out, ignore_errors=True)
+
+    def build(out: str) -> None:
         ev = load_table(spark, "events", sf_dir)
         v1 = ev.filter(F.col("event_id") % 2 == 0).select("event_id", "value")
         v2 = ev.filter(F.col("event_id") % 2 == 1).select(
@@ -1146,8 +1139,8 @@ def q_schema_evolution_merge_read(spark: SparkSession, sf_dir: str) -> DataFrame
         )
         v1.write.mode("overwrite").parquet(os.path.join(out, "batch=1"))
         v2.write.mode("overwrite").parquet(os.path.join(out, "batch=2"))
-        with open(marker, "w") as fh:
-            fh.write("ok")
+
+    out = layout_fixture(sf_dir, "schema_evo", build)
     merged = spark.read.option("mergeSchema", "true").parquet(
         os.path.join(out, "batch=1"), os.path.join(out, "batch=2")
     )

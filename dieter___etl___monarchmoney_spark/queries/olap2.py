@@ -32,9 +32,7 @@ repo maps the reference's entities onto (FIXTURES.md).
 
 from __future__ import annotations
 
-import os
 import shutil
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -47,7 +45,7 @@ from dieter___etl___monarchmoney_spark.functions.money import (
 )
 from dieter___etl___monarchmoney_spark.queries.llm_pipeline import _hexparse_sql
 from dieter___etl___monarchmoney_spark.registry import query
-from dieter___etl___monarchmoney_spark.sources.materialize import source_fingerprint
+from dieter___etl___monarchmoney_spark.sources.materialize import layout_fixture
 from dieter___etl___monarchmoney_spark.sources.parquet import load_table, sf_tag
 from dieter___etl___monarchmoney_spark.sources.sinks import save_bucketed_table
 
@@ -1442,17 +1440,12 @@ ORDER BY e.event_date
 
 
 def _partitioned_events(spark: SparkSession, sf_dir: str) -> str:
-    """Materialize (once per events content) a copy of events partitioned
-    by event_date — the layout a warehouse would maintain; cached across
-    invocations because the partitioned copy IS the fixture, not the
-    operator under test. Keyed on the source fingerprint, so a dataset
-    regenerated at the same path gets a fresh copy."""
-    out = os.path.join(
-        tempfile.gettempdir(), f"events_bydate_{source_fingerprint(sf_dir, 'events')}"
-    )
-    marker = os.path.join(out, "_SUCCESS_LAYOUT")
-    if not os.path.exists(marker):
-        shutil.rmtree(out, ignore_errors=True)
+    """A copy of events partitioned by event_date — the layout a
+    warehouse would maintain; cached across invocations because the
+    partitioned copy IS the fixture, not the operator under test
+    (``materialize.layout_fixture`` rebuilds it when events change)."""
+
+    def build(out: str) -> None:
         (
             load_table(spark, "events", sf_dir)
             .withColumn("event_date", F.col("ts").cast("date"))
@@ -1460,9 +1453,8 @@ def _partitioned_events(spark: SparkSession, sf_dir: str) -> str:
             .partitionBy("event_date")
             .parquet(out)
         )
-        with open(marker, "w") as fh:
-            fh.write("ok")
-    return out
+
+    return layout_fixture(sf_dir, "events_bydate", build)
 
 
 @query("dpp_top_days_rollup", _DPP_SQL)

@@ -49,7 +49,7 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
-from dieter___etl___monarchmoney_spark.sources.parquet import table_files, table_path
+from dieter___etl___monarchmoney_spark.sources.parquet import sf_tag, table_files, table_path
 
 
 def source_fingerprint(sf_dir: str, *tables: str) -> str:
@@ -66,6 +66,31 @@ def source_fingerprint(sf_dir: str, *tables: str) -> str:
         for name, size, mtime_ns in table_files(table_path(sf_dir, table)):
             parts.append(f"{name}:{size}:{mtime_ns}")
     return hashlib.md5("|".join(parts).encode()).hexdigest()[:12]
+
+
+def layout_fixture(sf_dir: str, prefix: str, build: Callable[[str], None]) -> str:
+    """A re-laid-out copy of ``sf_dir``'s events (a query's fixture, not
+    its operator) at ``<tmp>/<prefix>_<sf_tag>``, built by ``build(out)``.
+
+    The directory is named by the dataset path, so a dataset leaves one
+    copy behind however often it is regenerated; the ``_SUCCESS_LAYOUT``
+    marker holds the events fingerprint the copy was built from, and a
+    different fingerprint (a dataset regenerated at the same path)
+    rebuilds the copy instead of serving the old rows."""
+    out = os.path.join(tempfile.gettempdir(), f"{prefix}_{sf_tag(sf_dir, 10)}")
+    marker = os.path.join(out, "_SUCCESS_LAYOUT")
+    fingerprint = source_fingerprint(sf_dir, "events")
+    try:
+        with open(marker) as fh:
+            if fh.read() == fingerprint:
+                return out
+    except OSError:
+        pass
+    shutil.rmtree(out, ignore_errors=True)
+    build(out)
+    with open(marker, "w") as fh:
+        fh.write(fingerprint)
+    return out
 
 
 def cache_path(sf_dir: str, tag: str, source_tables: tuple[str, ...]) -> str:

@@ -161,12 +161,16 @@ def test_schema_evolution_backfills_nulls(spark):
     }
 
 
-def test_layout_fixtures_follow_regenerated_events(spark, tmp_path):
+def test_layout_fixtures_follow_regenerated_events(spark, tmp_path, monkeypatch):
     """The partitioned and two-batch copies of events are cached per
     events CONTENT: a dataset regenerated at the same path must be
     re-laid-out, never served from the copy of the old rows."""
     import datetime as dt
+    import tempfile
 
+    # The copies land in tmp_path too, so the test leaves none behind.
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path / "fixtures"))
+    (tmp_path / "fixtures").mkdir()
     path = str(tmp_path / "events.parquet")
 
     def write_events(day: dt.datetime, event_type: str, n: int) -> None:
